@@ -240,7 +240,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val watchdogSec = envInt("SPARK_GRAFT_WATCHDOG_SEC", 120)
     val softDeadlineSec = envInt("SPARK_GRAFT_SOFT_DEADLINE_SEC", 1500)
     val hardDeadlineSec = envInt("SPARK_GRAFT_HARD_DEADLINE_SEC", 2100)
@@ -271,13 +270,7 @@ object Bench {
       waitedSec = (System.nanoTime() - waitStart) / 1e9
     }
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start(Session.Bench)
     // warm the session (codegen compiler, shuffle service, FS client) so
     // the first timed query doesn't pay JVM/session init. The second
     // warmup is a 256-row untimed miniature of the suite's first query

@@ -519,7 +519,7 @@ object CubeQueries {
         // two-phase plan would otherwise drag all 46 partials through
         // the (groups x orderkey) pre-aggregate).
         //
-        // Shape probed at sf0.1 (Q11Probe): zero spill at 32 partitions,
+        // Shape probed at sf0.1 (round 7): zero spill at 32 partitions,
         // ONE shuffle of ~89k wide partial rows (34 MiB), distinct adds
         // 1.1 s — the remaining cost is CPU in the 46 decimal partial
         // accumulations over the 6M-row scan (whole-stage-codegen

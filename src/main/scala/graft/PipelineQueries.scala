@@ -78,6 +78,18 @@ object PipelineQueries {
   /** The sales_channel aggregation, exposed for the Orchestrator (which
     * applies the slicer window via `pre` before the aggregate — filter
     * first, aggregate the pruned fact).
+    *
+    * Its ×10 shape (r18, measured per exchange of the executed plan at
+    * sf0.1 and ×10, Deploy posture): at base the countDistinct
+    * aggregate's two exchanges carry all 1.2M shuffle records (dims, and
+    * dims + l_orderkey — the grain is near-unique, so map-side combine
+    * removes almost nothing) and the TY/LY join broadcasts the LY side.
+    * At ×10 those two exchanges grow exactly ×10, and AQE flips the join
+    * to a sort-merge join that shuffles ONLY the LY side — the cached
+    * TY aggregate's hash(dims) partitioning already satisfies it. So
+    * SCALECHECK's ×15 records for ×10 data is linear growth plus a
+    * one-time broadcast→SMJ transition, not a defect; the ×30 row
+    * (53.87M = 36M + 17.9M) is linear above the transition.
     */
   private[graft] def salesChannelAgg(s: org.apache.spark.sql.SparkSession, dir: String,
       pre: DataFrame => DataFrame = identity, salts: Int = 0): DataFrame = {

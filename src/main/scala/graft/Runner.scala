@@ -174,26 +174,7 @@ object Runner {
     val sfDir = opts.getOrElse("sf", "/root/testdata/sf0.001")
     val which = opts.getOrElse("query", "all")
     val out = opts.get("out")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the deployment posture the scale harness measures (r18 verdict
-      // #3): start shuffles wide and let AQE coalesce to byte-sized
-      // partitions — at production scale a core-count-pinned shuffle
-      // holds GBs per partition and sort-spills; at CLI scale AQE
-      // coalesces straight back down, so this is free. The advisory
-      // TARGET is left at Spark's default here (it should track the
-      // deployment's per-task memory, not this harness's 8 GB local
-      // heap — see ScaleCheck for the measured local sizing).
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 16).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName(s"graft-$which")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start(Session.Deploy, appName = Some(s"graft-$which"))
 
     // --bpe-merges <path>: bind the session's bpe_tokens/bpe_token_id
     // kernels to a real model vocabulary (standard merges.txt format)

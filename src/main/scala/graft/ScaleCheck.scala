@@ -250,21 +250,16 @@ object ScaleCheck {
       // wall with flat shuffle shape (r16 verdict #3)
       "t15_bpe_byte_encode"))
     val scaleDir = s"/tmp/graft_scale/x$factor"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val watchdogSec = sys.env.get("SPARK_GRAFT_WATCHDOG_SEC").map(_.toInt).getOrElse(600)
 
-    val builder = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // let AQE right-size every shuffle by bytes instead of pinning it
-      // to the core count: at 30× a 32-way shuffle holds ~17M rows per
-      // partition and sort-spills locally (measured 7.2 GB on d02) —
-      // the same run a real cluster absorbs by having more reducers.
-      // Starting high and coalescing down is exactly how the engine
-      // should be deployed at scale, so the harness measures that.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 16).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    // the Deploy posture lets AQE right-size every shuffle by bytes
+    // instead of pinning it to the core count: at 30× a 32-way shuffle
+    // holds ~17M rows per partition and sort-spills locally (measured
+    // 7.2 GB on d02) — the same run a real cluster absorbs by having
+    // more reducers. Starting high and coalescing down is exactly how
+    // the engine should be deployed at scale, so the harness measures
+    // that.
+    val spark = Session.start(Session.Deploy)
     // REDUCE-side byte TARGET (r18 verdict #3 evaluation, measured):
     // initialPartitionNum only raises the starting count — AQE
     // coalesces back to the 64 MB ADVISORY target, and 64 MB of
@@ -281,14 +276,8 @@ object ScaleCheck {
     // memory removes: the 48 GB deploy-conf artifact measures it at
     // spill 0. A real executor fleet brings both levers: cluster-sized
     // advisory targets and executor heap.
-    builder.config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
+    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes",
       sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "8m"))
-    // scan-split sizing stays env-gated for A/Bs (measured: no effect
-    // on either spill — the map-side term is total-bytes, not per-task)
-    sys.env.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
-      .foreach(v => builder.config("spark.sql.files.maxPartitionBytes", v))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     synthesize(spark, baseDir, scaleDir, factor)
@@ -446,7 +435,7 @@ object ScaleCheck {
       case _ => 0.0
     }
     val artifact = s"""{"factor":$factor,"base_dir":"$baseDir","scale_dir":"$scaleDir",""" +
-      f""""cpus":$cpus,"steal":$stealCores%.2f,"guard":"external+steal",""" +
+      f""""cpus":${Session.cpus},"steal":$stealCores%.2f,"guard":"external+steal",""" +
       s""""queries":{${rows.mkString(",")}}}"""
     val w = new java.io.PrintWriter(outJson); try w.println(artifact) finally w.close()
     System.err.println(s"[scale] artifact -> $outJson")

@@ -2,9 +2,8 @@ package graft.catalyst
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DateType, IntegerType}
 
@@ -66,28 +65,17 @@ case class FiscalWeekExpr(child: Expression) extends FiscalUnary {
 
 /** Register on an existing session (tests, notebooks). */
 object FiscalFunctions {
-  private val fns: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "fiscal_period" -> (children => FiscalPeriodExpr(children.head)),
-    "fiscal_week" -> (children => FiscalWeekExpr(children.head)))
+  val kernels: Seq[Kernel] = Seq(
+    Kernel("fiscal_period", classOf[FiscalPeriodExpr], c => FiscalPeriodExpr(c.head)),
+    Kernel("fiscal_week", classOf[FiscalWeekExpr], c => FiscalWeekExpr(c.head)))
 
-  def register(spark: SparkSession): Unit = fns.foreach { case (name, builder) =>
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo(classOf[FiscalPeriodExpr].getName, name),
-      builder)
-  }
+  def register(spark: SparkSession): Unit = Kernel.register(spark, kernels)
 }
 
 /** `spark.sql.extensions=graft.catalyst.GraftExtensions` — session-build
   * injection for cluster deployments.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("fiscal_period"),
-      new ExpressionInfo(classOf[FiscalPeriodExpr].getName, "fiscal_period"),
-      (children: Seq[Expression]) => FiscalPeriodExpr(children.head)))
-    ext.injectFunction((FunctionIdentifier("fiscal_week"),
-      new ExpressionInfo(classOf[FiscalWeekExpr].getName, "fiscal_week"),
-      (children: Seq[Expression]) => FiscalWeekExpr(children.head)))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    FiscalFunctions.kernels.foreach(k => ext.injectFunction((k.id, k.info, k.build)))
 }

@@ -414,8 +414,9 @@ object SignatureStore {
     * consumer (measured 2× on the bench before pinning).
     */
   /** @param onStage dev-hook: called with (stage-label, seconds) after
-    *   each materialization point, so profilers ([[graft.IngestProbe]])
-    *   time THIS code path rather than a drift-prone reimplementation.
+    *   each materialization point, so profilers (the perfbench
+    *   `--trace 1` run's `dedup.stage.*` metrics) time THIS code path
+    *   rather than a drift-prone reimplementation.
     *   Failure note: an exception mid-ingest (including during the
     *   appends) can leave PARTIAL appends behind — callers that must
     *   preserve the store take a [[snapshot]] first and [[rollback]] on
@@ -466,7 +467,7 @@ object SignatureStore {
     // index and bands are INDEPENDENT aggregates over the pinned shingle
     // pass — overlap their materializations (guide §2.6; same pattern
     // and thread-inheritance rationale as [[appendFrom]]'s writes). The
-    // r20 IngestProbe split had them at 0.53 s + 0.43 s sequential.
+    // r20 stage split had them at 0.53 s + 0.43 s sequential.
     //
     // MinHash signatures are per-document (corpus-independent), so the
     // batch's bands are aggregated ONCE and every later consumer —

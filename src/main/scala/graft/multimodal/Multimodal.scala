@@ -774,40 +774,20 @@ case class Mp4MetaExpr(child: org.apache.spark.sql.catalyst.expressions.Expressi
   override def prettyName: String = "mp4_meta"
 }
 
-/** Session registration for the media kernels (the `FiscalFunctions`
-  * pattern — idempotent, callable from any query path).
+/** Session registration for the media kernels — bound once per
+  * session, so any query path may call it.
   */
 object MediaFunctions {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("wav_sum_sq"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[WavSumSqExpr].getName, "wav_sum_sq"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        WavSumSqExpr(children.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("wav_frame_stats"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[WavFrameStatsExpr].getName, "wav_frame_stats"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        WavFrameStatsExpr(children.head, children(1)))
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("png_resize_stats"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[PngResizeStatsExpr].getName, "png_resize_stats"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        PngResizeStatsExpr(children.head, children(1)))
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("jpeg_sof"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[JpegSofExpr].getName, "jpeg_sof"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        JpegSofExpr(children.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("mp4_meta"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[Mp4MetaExpr].getName, "mp4_meta"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        Mp4MetaExpr(children.head))
-  }
+  import graft.catalyst.Kernel
+  private val kernels: Seq[Kernel] = Seq(
+    Kernel("wav_sum_sq", classOf[WavSumSqExpr], c => WavSumSqExpr(c.head)),
+    Kernel("wav_frame_stats", classOf[WavFrameStatsExpr],
+      c => WavFrameStatsExpr(c.head, c(1))),
+    Kernel("png_resize_stats", classOf[PngResizeStatsExpr],
+      c => PngResizeStatsExpr(c.head, c(1))),
+    Kernel("jpeg_sof", classOf[JpegSofExpr], c => JpegSofExpr(c.head)),
+    Kernel("mp4_meta", classOf[Mp4MetaExpr], c => Mp4MetaExpr(c.head)))
+
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+    Kernel.register(spark, kernels)
 }

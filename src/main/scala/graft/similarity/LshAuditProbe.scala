@@ -2,10 +2,10 @@ package graft.similarity
 
 import org.apache.spark.sql.functions._
 
-/** Decision-record probe (the `ShingleProbe` pattern): the LSH bucket
-  * histogram of the d05 corpus at a scale factor — run against a
-  * ScaleCheck scratch dir to record whether the adaptive geometry's
-  * buckets stay cap-free as the corpus grows.
+/** Decision-record probe: the LSH bucket histogram of the d05 corpus
+  * at a scale factor — run against a ScaleCheck scratch dir to record
+  * whether the adaptive geometry's buckets stay cap-free as the corpus
+  * grows.
   *
   * {{{ runMain graft.similarity.LshAuditProbe /tmp/graft_scale/x30 }}}
   *
@@ -36,10 +36,7 @@ object LshAuditProbe {
     val factor = args.lift(1).map(_.toInt).getOrElse(1)
     val correlated = args.contains("correlated")
     val runPairs = args.contains("pairs")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.start(graft.Session.Bench)
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val scaled = (0 until factor).map { c =>
       val shifted = emb.select((col("vec_id") + lit(c * Stride)).as("vec_id"),

@@ -467,15 +467,14 @@ case class LshBandHashesExpr(
   override def prettyName: String = "lsh_band_hashes"
 }
 
-/** Session registration for the LSH kernel (the `MediaFunctions`
-  * pattern — idempotent, callable from any query path).
+/** Session registration for the LSH kernel — bound once per session,
+  * so any query path may call it.
   */
 object LshFunctions {
+  import graft.catalyst.Kernel
+  private val kernels = Seq(Kernel("lsh_band_hashes", classOf[LshBandHashesExpr],
+    c => LshBandHashesExpr(c.head, c(1), c(2))))
+
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("lsh_band_hashes"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[LshBandHashesExpr].getName, "lsh_band_hashes"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        LshBandHashesExpr(children.head, children(1), children(2)))
+    Kernel.register(spark, kernels)
 }

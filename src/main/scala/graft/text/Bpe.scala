@@ -526,26 +526,18 @@ case class BpeTokenIdExpr(child: org.apache.spark.sql.catalyst.expressions.Expre
   override def prettyName: String = "bpe_token_id"
 }
 
-/** Session registration for the BPE kernels (the `MediaFunctions`
-  * pattern — idempotent, callable from any query path). Passing a
-  * loaded [[Bpe.Vocab]] re-binds `bpe_tokens`/`bpe_token_id` to that
-  * vocabulary for the session (`Runner --bpe-merges`); the oracle-bound
-  * t14 query always re-registers the pinned default before running.
+/** Session registration for the BPE kernels. Unlike the constant
+  * kernels this always replaces: passing a loaded [[Bpe.Vocab]] re-binds
+  * `bpe_tokens`/`bpe_token_id` to that vocabulary for the session
+  * (`Runner --bpe-merges`), and the oracle-bound t14 query re-registers
+  * the pinned default before running.
   */
 object BpeFunctions {
+  import graft.catalyst.Kernel
   def register(spark: org.apache.spark.sql.SparkSession,
-      vocab: Bpe.Vocab = Bpe.default): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("bpe_tokens"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[BpeTokensExpr].getName, "bpe_tokens"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        BpeTokensExpr(children.head, vocab))
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("bpe_token_id"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[BpeTokenIdExpr].getName, "bpe_token_id"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        BpeTokenIdExpr(children.head, vocab))
-  }
+      vocab: Bpe.Vocab = Bpe.default): Unit =
+    Kernel.register(spark, Seq(
+      Kernel("bpe_tokens", classOf[BpeTokensExpr], c => BpeTokensExpr(c.head, vocab)),
+      Kernel("bpe_token_id", classOf[BpeTokenIdExpr], c => BpeTokenIdExpr(c.head, vocab))),
+      replace = true)
 }

@@ -1,8 +1,12 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
-import graft.catalyst.FiscalFunctions
+import graft.catalyst.{FiscalFunctions, FiscalWeekExpr}
 import graft.cube.FiscalCalendar
+import graft.multimodal.MediaFunctions
+import graft.similarity.LshFunctions
 
 /** Native fiscal-calendar expressions: SQL-registered, codegen'd, and
   * property-checked against the Column-level implementations over a
@@ -34,5 +38,24 @@ class CatalystSpec extends SparkSpec {
     assert(r.getInt(0) == 13)
     assert(r.getInt(1) == 1)
     assert(r.isNullAt(2))
+  }
+
+  test("fiscal_week is registered as FiscalWeekExpr") {
+    FiscalFunctions.register(spark)
+    assert(spark.sessionState.functionRegistry.lookupFunction(
+      FunctionIdentifier("fiscal_week")).get.getClassName == classOf[FiscalWeekExpr].getName)
+  }
+
+  test("constant kernels register once per session") {
+    val registry = spark.sessionState.functionRegistry
+    Seq[(SparkSession => Unit, String)](
+      (FiscalFunctions.register, "fiscal_period"),
+      (LshFunctions.register, "lsh_band_hashes"),
+      (MediaFunctions.register, "jpeg_sof")).foreach { case (register, name) =>
+      register(spark)
+      val first = registry.lookupFunction(FunctionIdentifier(name)).get
+      register(spark)
+      assert(registry.lookupFunction(FunctionIdentifier(name)).get eq first, name)
+    }
   }
 }
