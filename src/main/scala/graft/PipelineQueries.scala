@@ -77,7 +77,9 @@ object PipelineQueries {
     */
   /** The sales_channel aggregation, exposed for the Orchestrator (which
     * applies the slicer window via `pre` before the aggregate — filter
-    * first, aggregate the pruned fact).
+    * first, aggregate the pruned fact). `onPersist` receives the
+    * persisted TY aggregate, so a caller outside the clearCache()-per-query
+    * harness can release it once done.
     *
     * Its ×10 shape (r18, measured per exchange of the executed plan at
     * sf0.1 and ×10, Deploy posture): at base the countDistinct
@@ -92,7 +94,8 @@ object PipelineQueries {
     * (53.87M = 36M + 17.9M) is linear above the transition.
     */
   private[graft] def salesChannelAgg(s: org.apache.spark.sql.SparkSession, dir: String,
-      pre: DataFrame => DataFrame = identity, salts: Int = 0): DataFrame = {
+      pre: DataFrame => DataFrame = identity, salts: Int = 0,
+      onPersist: DataFrame => Unit = _ => ()): DataFrame = {
     val dayPart = (col("l_linenumber") % 3).cast("int")
     // r20 (guide §2.3 "narrower types"): the aggregate, the cached TY
     // relation, and the TY/LY merge join all key on the NARROW native
@@ -125,7 +128,10 @@ object PipelineQueries {
     // relation is group-grain (≪ fact size) and MEMORY_AND_DISK, so it
     // spills rather than OOMs at scale; Bench/Verify clearCache() after
     // each query so timings stay honest and caches never leak across
-    // queries. PlanSpec pins that both join inputs read the cache.
+    // queries, and the Orchestrator unpersists it (via `onPersist`) after
+    // each sync — left cached, the next sync in the same session matches
+    // it by plan and serves the old fact. PlanSpec pins that both join
+    // inputs read the cache.
     //
     // `salts > 1` opts into SkewAgg's salted two-phase shape for
     // real-world skew (the reference's 45 stores with one flagship:
@@ -154,6 +160,7 @@ object PipelineQueries {
           sum(col("disc_p")).cast("double").as("Discounts USD"))
     }
     val ty = (if (salts > 1) tySalted else tyUnsalted).persist()
+    onPersist(ty)
     val ly = ty.select(
       col("__store"), date_add(col("CalendarDate"), 364).as("CalendarDate"),
       col("SourceActor"), col("SourceChannel"), col("__daypart"),

@@ -105,15 +105,22 @@ object Orchestrator {
     * 47 oracle-verified q11 measures positionally to the mapping's 47
     * captions (the real cube measures aren't derivable from TPC-H — the
     * aggregate set is the engine's, the mapping surface the reference's).
+    *
+    * `onPersist` receives each intermediate frame the plan persists
+    * (sales_channel's TY aggregate). A caller must unpersist them once
+    * done, or the next sync in the same session reads them by plan match
+    * and publishes the old fact's numbers.
     */
-  def source(spark: SparkSession, sfDir: String, pipeline: String, slice: Slice): DataFrame = {
+  def source(spark: SparkSession, sfDir: String, pipeline: String, slice: Slice,
+      onPersist: DataFrame => Unit = _ => ()): DataFrame = {
     import graft.{CubeQueries, PipelineQueries, Tables}
     val pre: DataFrame => DataFrame = df =>
       applySlice(df, if (pipeline == "clock_in_out") col("ts") else col("l_shipdate"),
         pipeline, slice)
     val spec = SpecLoader.fromResource(pipeline)
     val agg = pipeline match {
-      case "sales_channel" => PipelineQueries.salesChannelAgg(spark, sfDir, pre)
+      case "sales_channel" =>
+        PipelineQueries.salesChannelAgg(spark, sfDir, pre, onPersist = onPersist)
       case "offers" => PipelineQueries.offersAgg(spark, sfDir, pre)
       case "inventory" => PipelineQueries.inventoryAgg(spark, sfDir, pre)
       case "clock_in_out" => PipelineQueries.clockInOutAgg(spark, sfDir, pre)
@@ -129,7 +136,15 @@ object Orchestrator {
       case other => sys.error(
         s"unknown pipeline '$other'. Available: ${pipelines.mkString(", ")}")
     }
+    // The syncs persist this frame. Spark plans a cached frame with
+    // AQE's final-stage coalescing off, so it keeps the width of its
+    // last exchange: 16×cpus under the Deploy posture, for a few
+    // thousand rows, i.e. that many tasks per action on it and that many
+    // files per merge. A narrow coalesce (no shuffle) sizes it to
+    // `spark.sql.shuffle.partitions`, the cores that run it; the
+    // session's `numShufflePartitions` returns the initial width instead.
     Pipeline.compile(spec, agg, refreshedAt = Some(current_timestamp()))
+      .coalesce(spark.sessionState.conf.defaultNumShufflePartitions)
   }
 
   final case class RunResult(
@@ -213,7 +228,10 @@ object Orchestrator {
     * than a separate `isEmpty`: a limit-1 action consumes its partition
     * partially, which aborts cache-block materialization — the count
     * both answers the check and fully materializes the cache. `OpsSpec`
-    * pins the single scan by filesystem bytes read.
+    * pins the single scan by filesystem bytes read. The persisted frame
+    * holds at most `spark.sql.shuffle.partitions` partitions (see
+    * [[source]]), and it and every frame `source` persisted on the way
+    * are unpersisted when the run ends.
     */
   def run(spark: SparkSession, sfDir: String, pipeline: String, slice: Slice,
       notifier: Option[Notifier.Config] = None,
@@ -222,7 +240,8 @@ object Orchestrator {
     val slicer = mdxSlicer(pipeline, slice)
     val result =
       try {
-        val out = source(spark, sfDir, pipeline, slice).persist()
+        val cached = Seq.newBuilder[DataFrame]
+        val out = source(spark, sfDir, pipeline, slice, cached += _).persist()
         try {
           val rows = out.count()
           if (rows == 0) sys.error("No data returned from source")
@@ -233,7 +252,7 @@ object Orchestrator {
           sink.merge(spark, pipeline, out)
           RunResult(pipeline, slicer, rows, created, rows - created,
             (System.nanoTime() - t0) / 1e9, None)
-        } finally out.unpersist()
+        } finally (out +: cached.result()).foreach(_.unpersist())
       } catch {
         case e: Exception =>
           RunResult(pipeline, slicer, 0, 0, 0, (System.nanoTime() - t0) / 1e9,
@@ -295,8 +314,10 @@ object Orchestrator {
         RefreshResult(pipeline, fyYears, Map.empty, 0,
           (System.nanoTime() - t0) / 1e9, dryRun = true, None)
       else try {
+        val cached = Seq.newBuilder[DataFrame]
         val perFy = fyYears.map(y =>
-          source(spark, sfDir, pipeline, Fiscal(y, None)).withColumn("__fy", lit(y)))
+          source(spark, sfDir, pipeline, Fiscal(y, None), cached += _)
+            .withColumn("__fy", lit(y)))
         val out = perFy.reduce(_.unionByName(_)).persist()
         try {
           val rowsByFy = out.groupBy("__fy").count()
@@ -317,7 +338,7 @@ object Orchestrator {
               partitionCols = parts, onBeforePublish = sink.onBeforePublish)
           RefreshResult(pipeline, fyYears, rowsByFy, rows,
             (System.nanoTime() - t0) / 1e9, dryRun = false, None)
-        } finally out.unpersist()
+        } finally (out +: cached.result()).foreach(_.unpersist())
       } catch {
         case e: Exception =>
           RefreshResult(pipeline, fyYears, Map.empty, 0,

@@ -291,11 +291,16 @@ object VersionedTable {
   /** Compact small-file partitions — the read-amplification bound of the
     * log-structured design (Delta's OPTIMIZE / Iceberg's
     * rewrite_data_files, reduced to the same rename-atomic protocol
-    * `merge` uses). A merge writes each touched partition through the
-    * shuffle, so a partition carries up to `spark.sql.shuffle.partitions`
-    * files per rewrite — for a daily-sync or streaming-micro-batch table
-    * that is hundreds of tiny files per hot partition, and every reader
-    * pays a file-open + footer-parse per file. `compact` rewrites each
+    * `merge` uses). A merge writes each touched partition from the union
+    * of the read-back target rows and the updates, so a partition gains
+    * up to one file per task of that union per rewrite: the read-back's
+    * file splits plus the updates' partitions. The Orchestrator's syncs
+    * coalesce their frame to `spark.sql.shuffle.partitions`; an
+    * uncoalesced cached frame keeps its last exchange's width,
+    * `initialPartitionNum` (16×cpus) under the Deploy posture. Either
+    * way a daily-sync or streaming-micro-batch table gathers hundreds of
+    * small files per hot partition over time, and every reader pays a
+    * file-open + footer-parse per file. `compact` rewrites each
     * partition whose live file count exceeds its bin-packed target
     * (`ceil(bytes / targetFileBytes)`, min 1) into a fresh commit and
     * publishes the swap as one new version; right-sized partitions are
