@@ -383,21 +383,13 @@ object DedupQueries {
     * of history (the cost an operator pays monthly in the compaction
     * window, not per batch). d08's snapshot+rollback restores the store
     * to exactly this post-build state after every ingest, which is what
-    * lets read-only d07 share it. The post-build file-set snapshot is
-    * taken INSIDE the build block, so it can never go stale against a
-    * rebuild under the same name.
+    * lets read-only d07 share it ([[SignatureStore.builtOnce]]).
     */
-  private val storeSnaps = scala.collection.concurrent.TrieMap.empty[String, Set[String]]
-
   private[graft] def dedupStore(s: SparkSession, dir: String): (String, Set[String]) = {
     val slug = OncePerJvm.slug(dir)
     val name = s"graft_dedup_sigstore_$slug"
-    OncePerJvm(name, slug) {
-      SignatureStore.build(s,
-        Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0), name)
-      storeSnaps.put(name, SignatureStore.snapshot(s, name)); ()
-    }
-    (name, storeSnaps.getOrElseUpdate(name, SignatureStore.snapshot(s, name)))
+    (name, SignatureStore.builtOnce(s, name, slug)(SignatureStore.build(s,
+      Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0), name)))
   }
 
   val d07 = QueryDef(

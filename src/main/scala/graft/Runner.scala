@@ -221,17 +221,12 @@ object Runner {
       // persisted pre-ingest snapshot and release its lock (no-op when
       // nothing is pending — a writer that died in build/drop leaves no
       // pending file and is released with the store API's unlock)
-      def report(store: String, recovered: Boolean): Unit =
-        println(if (recovered)
+      graft.ops.Orchestrator.storesOf(opts.get("corpus-recover").toSeq,
+          opts.get("corpus-recover-emb").toSeq).foreach { case (st, store) =>
+        st.ensureRegistered(spark, store)
+        println(if (st.recover(spark, store))
           s"[corpus] $store: crashed ingest rolled back, lock released"
         else s"[corpus] $store: nothing pending — store is clean")
-      opts.get("corpus-recover").foreach { store =>
-        graft.dedup.SignatureStore.ensureRegistered(spark, store)
-        report(store, graft.dedup.SignatureStore.recover(spark, store))
-      }
-      opts.get("corpus-recover-emb").foreach { store =>
-        graft.similarity.EmbeddingStore.ensureRegistered(spark, store)
-        report(store, graft.similarity.EmbeddingStore.recover(spark, store))
       }
       spark.stop()
       return
@@ -275,11 +270,10 @@ object Runner {
       }
       def report(store: String, flagsRoot: String): Unit = {
         val flags = spark.read.parquet(flagsRoot)
-        val idCol = if (flags.columns.contains("doc_id")) "doc_id" else "vec_id"
         val batches = flags.select("batch_id").distinct().count()
         val dups = flags.filter(org.apache.spark.sql.functions.col("is_dup")).count()
         println(s"[stream] $store drained: flag log $batches batches, " +
-          s"${flags.select(idCol).count()} rows, $dups flagged dup")
+          s"${flags.count()} rows, $dups flagged dup")
       }
       opts.get("corpus-stream").foreach { store =>
         graft.streaming.CorpusStream.ingestStream(
@@ -316,31 +310,15 @@ object Runner {
       // ingests is ~365 files/bucket with no remediation — the store
       // analog of --maintain's versioned-root compaction). Runs under
       // the store lock, so it fails fast against a live ingest.
-      def report(store: String, tables: Seq[String], run: () => Unit): Unit = {
+      graft.ops.Orchestrator.storesOf(opts.get("maintain-store").toSeq,
+          opts.get("maintain-store-emb").toSeq).foreach { case (st, store) =>
+        st.ensureRegistered(spark, store)
+        val tables = st.dataTables(store)
         def files = tables.map(graft.dedup.StoreGuard.dataFileCount(spark, _)).sum
         val before = files
-        run()
+        st.maintain(spark, store).foreach(note => println(s"[maintain-store] $store $note"))
         println(f"[maintain-store] $store%-14s data files $before%4d -> $files%4d " +
           s"(${tables.size} tables)")
-      }
-      opts.get("maintain-store").foreach { store =>
-        graft.dedup.SignatureStore.ensureRegistered(spark, store)
-        import graft.dedup.SignatureStore._
-        report(store, Seq(bandsTable(store), shinglesTable(store), sizesTable(store)),
-          () => compact(spark, store))
-      }
-      opts.get("maintain-store-emb").foreach { store =>
-        graft.similarity.EmbeddingStore.ensureRegistered(spark, store)
-        import graft.similarity.EmbeddingStore._
-        report(store, Seq(bandsTable(store), vecsTable(store)), () => {
-          // re-band FIRST (widens the key space when the store outgrew
-          // its build-time geometry, and lands the bands table at the
-          // file floor), then compact sweeps what remains (the vectors)
-          val rebanded = reband(spark, store)
-          if (rebanded) println(s"[maintain-store] $store re-banded to the " +
-            "adaptive geometry for its current size")
-          compact(spark, store)
-        })
       }
       // hot-bucket remediation: --corpus-retune <store> [--bands N
       // --rows R --max-df D --k K] [--corpus-path <dir|table>] rebuilds

@@ -17,10 +17,19 @@ object Session {
   /** The posture the CLI ships (Runner) and the scale harness measures
     * (ScaleCheck): shuffles start 16× wide and AQE coalesces them down to
     * byte-sized partitions. At production scale a core-count-pinned
-    * shuffle holds GBs per partition and sort-spills; at CLI scale AQE
-    * coalesces straight back down, so this is free. The advisory target
-    * stays at Spark's default: it should track the deployment's per-task
-    * memory (ScaleCheck sets its own measured local target).
+    * shuffle holds GBs per partition and sort-spills. At CLI scale AQE
+    * coalesces most shuffles straight back down, but not all of them, so
+    * the width is not free:
+    *  - an exchange that repartitions by number
+    *    (`Tables.fanOut`/`fanOutBy`, the csv fixture in `SourceQueries`)
+    *    asks for `numShufflePartitions`, which is `initialPartitionNum`
+    *    under this posture, and runs 16×cpus tasks;
+    *  - a cached frame keeps the width it was planned with, because the
+    *    cache plans without AQE's final-stage coalescing (each later
+    *    write of it runs, and writes files from, that many tasks).
+    * The advisory target stays at Spark's default: it should track the
+    * deployment's per-task memory (ScaleCheck sets its own measured
+    * local target).
     */
   case object Deploy extends Posture
 

@@ -498,20 +498,14 @@ object SimilarityQueries {
     * d07/d08 pattern): ONE history store per JVM per data dir, warmed
     * by the bench's `prepare` hook so the published number times the
     * daily ingest; the post-build snapshot restores the store after
-    * every run.
+    * every run ([[graft.similarity.EmbeddingStore.builtOnce]]).
     */
-  private val estoreSnaps = scala.collection.concurrent.TrieMap.empty[String, Set[String]]
-
   private def embStore(s: SparkSession, dir: String): (String, Set[String]) = {
     import graft.similarity.EmbeddingStore
     val slug = OncePerJvm.slug(dir)
     val name = s"graft_embstore_$slug"
-    OncePerJvm(name, slug) {
-      EmbeddingStore.build(s,
-        Tables.embeddings(s, dir).filter(col("vec_id") % 3 =!= 0), name)
-      estoreSnaps.put(name, EmbeddingStore.snapshot(s, name)); ()
-    }
-    (name, estoreSnaps.getOrElseUpdate(name, EmbeddingStore.snapshot(s, name)))
+    (name, EmbeddingStore.builtOnce(s, name, slug)(EmbeddingStore.build(s,
+      Tables.embeddings(s, dir).filter(col("vec_id") % 3 =!= 0), name)))
   }
 
   /** Incremental embedding near-dup against a persisted store

@@ -257,8 +257,8 @@ object Dedup {
     * cluster a reliable `checkpoint()` (HDFS dir) trades executor-loss
     * tolerance for the same truncation. Convergence is `require`d,
     * never silently partial.
-    */
-  /** @param onRounds accounting hook: called once with the number of
+    *
+    * @param onRounds accounting hook: called once with the number of
     *   label-propagation rounds the labeling took — the observable the
     *   O(log diameter) claim is spec-pinned on (DedupSpec drives a
     *   diameter-1000 chain and asserts the count stays logarithmic).

@@ -9,8 +9,7 @@ package graft.dedup
   * InheritableThreadLocal localProperties (job group, cancellation
   * scope) propagate from the caller: a harness cancelling the caller's
   * job group cancels the overlapped jobs with it, instead of leaking
-  * stragglers that race a later rollback (the same rationale documented
-  * at SignatureStore.appendFrom's concurrent writes).
+  * stragglers that race a later rollback.
   */
 private[graft] object Overlap {
 
@@ -33,8 +32,7 @@ private[graft] object Overlap {
     * one), await both. On a failure of either, the sibling is STILL
     * awaited before the exception propagates — returning early would
     * leave a straggler job racing whatever compensating action (a
-    * rollback's file deletes) the caller unwinds into; exactly the
-    * await-all-before-rethrow discipline of appendFrom's writes.
+    * rollback's file deletes) the caller unwinds into.
     */
   def overlapped2[A, B](a: => A, b: => B): (A, B) = {
     val fa = overlapped(a)
@@ -42,6 +40,16 @@ private[graft] object Overlap {
       try b
       catch { case t: Throwable => drain(fa); throw t }
     (fa(), bv)
+  }
+
+  /** Run every action concurrently (the last on this thread) and await
+    * them all; as in [[overlapped2]], a failure rethrows only after every
+    * sibling has finished — the store ingests' keeper appends.
+    */
+  def overlappedAll(fs: Seq[() => Unit]): Unit = {
+    val handles = fs.init.map(f => overlapped(f()))
+    val last = scala.util.Try(fs.last())
+    (handles.map(h => scala.util.Try(h())) :+ last).foreach(_.get)
   }
 
   /** Await a handle for its side effects only, suppressing its failure

@@ -32,12 +32,11 @@ import Overlap.{overlapped, overlapped2}
   * standard incremental approximation, replayed exactly by the d07
   * oracle.
   *
-  * Lifecycle: [[build]] once over history → [[ingest]] per batch (flag
-  * dups against store + within batch, append survivors so the store
-  * grows) → periodic [[build]] rebuild in the maintenance window to
-  * compact appended files and re-apply the df cap corpus-wide.
+  * Lifecycle and writer safety are [[BandedStore]]'s; the periodic
+  * [[build]] rebuild in the maintenance window also re-applies the df
+  * cap corpus-wide.
   */
-object SignatureStore {
+object SignatureStore extends BandedStore {
 
   /** @param rows minhash rows per band ([[Dedup.minhashBands]]) — the
     *   band-selectivity knob [[retune]] raises when the band audit
@@ -66,7 +65,7 @@ object SignatureStore {
     * band_key, delivered through ingest's `onAudit` as its own action.
     */
   final case class IngestAudit(nBatch: Long, bands: Int,
-      occupiedBuckets: Long, maxBucket: Long) {
+      occupiedBuckets: Long, maxBucket: Long) extends BandedStore.Audit {
     def json: String =
       s"""{"n_batch":$nBatch,"bands":$bands,""" +
         s""""occupied_buckets":$occupiedBuckets,"max_bucket":$maxBucket}"""
@@ -75,126 +74,18 @@ object SignatureStore {
   def bandsTable(name: String): String = s"${name}_bands"
   def shinglesTable(name: String): String = s"${name}_shingles"
   def sizesTable(name: String): String = s"${name}_sizes"
-  def metaTable(name: String): String = s"${name}_meta"
 
-  private def allTables(name: String): Seq[String] =
-    Seq(bandsTable(name), shinglesTable(name), sizesTable(name), metaTable(name))
-
-  // ---- concurrent-writer guard ----------------------------------------
-  // The single-writer discipline (lock file, generation markers,
-  // pending-snapshot crash recovery) lives in [[StoreGuard]] so every
-  // mutating store pays the same guarantees; this store's public
-  // API below delegates per name.
-
-  private def guard(name: String): StoreGuard =
-    StoreGuard(metaTable(name), allTables(name))
-
-  /** Crash recovery — see [[StoreGuard.recover]]. */
-  def recover(spark: SparkSession, name: String): Boolean =
-    guard(name).recover(spark)
-
-  /** Owner-arbitrated crash recovery for automated callers — see
-    * [[StoreGuard.recoverArbitrated]].
-    */
-  def recoverArbitrated(spark: SparkSession, name: String): Boolean =
-    guard(name).recoverArbitrated(spark)
-
-  /** Discharge a dead writer's recovery state WITHOUT rolling back —
-    * for a caller holding durable proof the writer's mutation fully
-    * committed (a commit marker written by ingest's `onCommitted` hook).
-    * `markerOwner` is the identity stamped into that marker: the marker
-    * only proves the MARKER WRITER's batch committed, so the pending
-    * found now is moot residue only when ITS stamp matches — a foreign
-    * dead writer's mid-mutation pending is rolled back instead, and a
-    * live one is left alone. Full arbitration table in
-    * [[StoreGuard.dischargeCommitted]]; protocol context in
-    * [[graft.streaming.CorpusStream]].
-    */
-  def dischargeCommitted(spark: SparkSession, name: String,
-      markerOwner: Option[StoreGuard.LockOwner] = None): Unit =
-    guard(name).dischargeCommitted(spark, markerOwner)
-
-  /** Re-register the store's tables from their durable warehouse
-    * locations into THIS session's catalog. The catalog is per-process
-    * (in-memory) while the bucketed table dirs are durable, so a store
-    * built by yesterday's JVM is invisible to today's until re-declared
-    * — exactly the daily Runner-CLI cadence (`--corpus-init` one day,
-    * `--corpus-ingest` the next). Schemas come from the parquet files
-    * when any exist and fall back to the store's canonical layout for
-    * a still-empty table (a freshly initialized store has no data
-    * files to infer from); the bucket spec is re-declared from the
-    * meta row so re-registered reads keep their shuffle-free bucketed
-    * joins. No-op when the tables are already registered.
-    */
-  def ensureRegistered(spark: SparkSession, name: String): Unit = {
-    if (allTables(name).forall(spark.catalog.tableExists)) return
-    val conf = spark.sparkContext.hadoopConfiguration
-    def loc(t: String): org.apache.hadoop.fs.Path =
-      new org.apache.hadoop.fs.Path(
-        spark.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(t)))
-    val metaP = loc(metaTable(name))
-    require(metaP.getFileSystem(conf).exists(metaP),
-      s"no signature store '$name' on disk at $metaP — build/corpusInit it first")
-    def register(t: String, bucketCol: Option[String], fallback: String,
-        buckets: => Int): Unit =
-      if (!spark.catalog.tableExists(t)) {
-        val p = loc(t)
-        val cols =
-          // UNABLE_TO_INFER_SCHEMA: a freshly initialized store has no
-          // data files. PATH_NOT_FOUND: a compactor died between its
-          // entry reset and the swap — the data lives in the staged
-          // `__compacting` sibling and the table dir is gone. Register
-          // over the canonical layout in both cases so maintenance can
-          // reach compact()'s resume-at-the-swap branch (refusing here
-          // would leave the store unreadable until an operator
-          // hand-renamed the staged dir).
-          try spark.read.parquet(p.toString).schema.fields
-            .map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
-          catch { case e: Exception if e.getMessage != null &&
-              (e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") ||
-               e.getMessage.contains("PATH_NOT_FOUND") ||
-               e.getMessage.contains("Path does not exist")) => fallback }
-        val cluster = bucketCol
-          .map(c => s"CLUSTERED BY (`$c`) SORTED BY (`$c`) INTO $buckets BUCKETS")
-          .getOrElse("")
-        spark.sql(s"CREATE TABLE `$t` ($cols) USING parquet $cluster LOCATION '$p'")
-      }
-    register(metaTable(name), None,
-      "`k` INT, `bands` INT, `max_df` INT, `buckets` INT, `rows` INT", 0)
-    lazy val buckets = spark.table(metaTable(name)).head().getAs[Int]("buckets")
-    register(bandsTable(name), Some("band_key"),
-      "`doc_id` BIGINT, `band` INT, `band_hash` STRING, `band_key` STRING", buckets)
-    register(shinglesTable(name), Some("doc_id"),
-      "`shingle` STRING, `doc_id` BIGINT", buckets)
-    register(sizesTable(name), Some("doc_id"),
-      "`doc_id` BIGINT, `n_sh` BIGINT", buckets)
-  }
-
-  /** Release a crashed writer's lock — see [[StoreGuard.unlock]]. */
-  def unlock(spark: SparkSession, name: String): Unit =
-    guard(name).unlock(spark)
-
-  /** Discharge the store's lock only when its stamped owner is
-    * verifiably dead — see [[StoreGuard.dischargeDeadLock]].
-    */
-  def dischargeDeadLock(spark: SparkSession, name: String,
-      strict: Boolean): Boolean =
-    guard(name).dischargeDeadLock(spark, strict)
-
-  /** Run `f` as the store's single writer — see [[StoreGuard.locked]]. */
-  def locked[A](spark: SparkSession, name: String)(f: => A): A =
-    guard(name).locked(spark)(f)
-
-  /** Drop a store table from the catalog AND clear its default warehouse
-    * location. The session catalog is per-process but the warehouse
-    * directory is durable, so a table written by a previous JVM is an
-    * orphaned location to this one — `saveAsTable` would refuse to
-    * CREATE over it (LOCATION_ALREADY_EXISTS). A store rebuild must own
-    * both halves.
-    */
-  private def reset(spark: SparkSession, table: String): Unit =
-    StoreGuard.resetTable(spark, table)
+  def kind: String = "signature"
+  def idCol: String = "doc_id"
+  def auditFile: String = "_band_audit.json"
+  protected def initCall: String = "build/corpusInit"
+  protected def metaSuffix: String = "_meta"
+  protected def metaSchema: String =
+    "`k` INT, `bands` INT, `max_df` INT, `buckets` INT, `rows` INT"
+  protected def layout: Seq[(String, String, String)] = Seq(
+    ("_bands", "band_key", "`doc_id` BIGINT, `band` INT, `band_hash` STRING, `band_key` STRING"),
+    ("_shingles", "doc_id", "`shingle` STRING, `doc_id` BIGINT"),
+    ("_sizes", "doc_id", "`doc_id` BIGINT, `n_sh` BIGINT"))
 
   /** Hash, band, and index the historical corpus into the store's
     * bucketed tables. One pass over `history` for signatures and one for
@@ -208,34 +99,17 @@ object SignatureStore {
     // SIBLING of the table dirs, so the reset below cannot remove it)
     import spark.implicits._
     require(spec.rows >= 1 && spec.bands >= 1, s"invalid banding geometry $spec")
-    allTables(name).foreach(reset(spark, _))
-    // repartition onto the bucket key before every bucketed write:
-    // Spark's bucketed writer emits one file per (task, bucket-present-
-    // in-task), so writing straight from a W-way shuffle produces up to
-    // W×buckets near-empty files PER WRITE — a small-files problem that
-    // compounds with every append and taxes every later store read and
-    // file listing. The repartition uses the same Murmur3 hash family as
-    // the bucket spec, so each task holds exactly one bucket: `buckets`
-    // files per write, at the cost of one extra |input| shuffle in the
-    // (monthly) build / (per-batch) append — the right trade at any
-    // scale.
-    Dedup.minhashBands(history, spec.k, spec.bands, spec.rows)
-      .withColumn("band_key", concat_ws(":", col("band"), col("band_hash")))
-      .repartition(buckets, col("band_key"))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, "band_key").sortBy("band_key")
-      .saveAsTable(bandsTable(name))
+    allTables(name).foreach(StoreGuard.resetTable(spark, _))
+    BandedStore.writeBucketed(
+      Dedup.minhashBands(history, spec.k, spec.bands, spec.rows)
+        .withColumn("band_key", BandedStore.bandKey),
+      bandsTable(name), "band_key", buckets)
     val index = Dedup.shingleIndex(history, spec.k, spec.maxDf)
       .repartition(buckets, col("doc_id")).persist()
     try {
-      index.write.mode("overwrite").format("parquet")
-        .bucketBy(buckets, "doc_id").sortBy("doc_id")
-        .saveAsTable(shinglesTable(name))
-      index.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-        .repartition(buckets, col("doc_id"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(buckets, "doc_id").sortBy("doc_id")
-        .saveAsTable(sizesTable(name))
+      BandedStore.saveBucketed(index, shinglesTable(name), "doc_id", buckets)
+      BandedStore.writeBucketed(index.groupBy("doc_id").agg(count(lit(1)).as("n_sh")),
+        sizesTable(name), "doc_id", buckets)
     } finally index.unpersist()
     Seq((spec.k, spec.bands, spec.maxDf, buckets, spec.rows))
       .toDF("k", "bands", "max_df", "buckets", "rows")
@@ -275,169 +149,26 @@ object SignatureStore {
     guard(name).clearStreak(spark)
   }
 
-  /** Maintenance compaction (`Runner --maintain-store`): rewrite the
-    * store's bucketed tables down to ~`buckets` files each WITHOUT
-    * changing content — a year of daily ingests is ~365 files per
-    * bucket otherwise, taxing every probe's file listing. Runs under
-    * the single-writer lock (a live ingest fails fast against it and
-    * vice versa) and bumps the generation marker once, after all three
-    * tables swapped: compaction deletes old files, so pre-compaction
-    * snapshots become non-rollbackable — rollback's missing-file
-    * refusal turns that into a loud error instead of a silent
-    * store-emptying. Content-preserving by construction (one bucketed
-    * rewrite per table, same bucket spec), so probe/ingest results are
-    * unchanged; the monthly [[build]] from the full corpus remains the
-    * deeper maintenance that also re-applies the df cap corpus-wide.
-    */
-  def compact(spark: SparkSession, name: String): Unit = locked(spark, name) {
-    val buckets = spark.table(metaTable(name)).head().getAs[Int]("buckets")
-    Seq(bandsTable(name) -> "band_key", shinglesTable(name) -> "doc_id",
-        sizesTable(name) -> "doc_id").foreach { case (t, c) =>
-      StoreGuard.compactTable(spark, t, c, buckets)
-    }
-    guard(name).bumpGen(spark)
-  }
-
-  /** Drop the store's tables and their locations (idempotent). */
-  def drop(spark: SparkSession, name: String): Unit = locked(spark, name) {
-    allTables(name).foreach(reset(spark, _))
-    guard(name).clearPending(spark) // a dropped store has nothing to recover
-    guard(name).clearStreak(spark) // ...and no audit history either
-  }
-
-  /** Durable audit-alert breach streak (sidecar next to the meta dir —
-    * see [[StoreGuard.readStreak]]): the consecutive-breach counter the
-    * orchestrated cadences persist across the one-JVM-per-run cron
-    * cadence, and the monthly sweep's opt-in remediation reads.
-    */
-  def readAuditStreak(spark: SparkSession, name: String): Int =
-    guard(name).readStreak(spark)
-  def writeAuditStreak(spark: SparkSession, name: String, n: Int): Unit =
-    guard(name).writeStreak(spark, n)
-  def clearAuditStreak(spark: SparkSession, name: String): Unit =
-    guard(name).clearStreak(spark)
-
-  /** File-level snapshot of the store — see [[StoreGuard.snapshot]]. */
-  def snapshot(spark: SparkSession, name: String): Set[String] =
-    guard(name).snapshot(spark)
-
-  /** Undo every append since `snap` — see [[StoreGuard.rollback]]
-    * (stale-snapshot refusal, generation-marker restore, recursive
-    * delete of aborted `_temporary` staging dirs).
-    */
-  def rollback(spark: SparkSession, name: String, snap: Set[String]): Unit =
-    guard(name).rollback(spark, snap)
-
-  /** Append an (already deduplicated) document set's signatures to the
-    * store — bucketed `mode("append")` writes, so each ingest adds at
-    * most `buckets` files per table and reads keep their shuffle-free
-    * bucketing (more files per bucket, same bucket pruning/join keys).
-    * File proliferation across many ingests is bounded by the monthly
-    * maintenance rebuild ([[build]] from the full corpus), which also
-    * re-applies the df cap corpus-wide. Takes precomputed bands/index
-    * (both derived from the ingest's single shingle pass).
-    */
-  private def appendFrom(bands: DataFrame, index: DataFrame, name: String,
-      buckets: Int): Unit = {
-    // The three table appends are independent jobs over already-pinned
-    // inputs (callers checkpoint `index`; `bands` filters a checkpointed
-    // table) — submit them concurrently and let the scheduler interleave
-    // their small stages instead of paying three sequential job
-    // latencies. The executor threads are created HERE, per call — not
-    // taken from a shared pool — so Spark's InheritableThreadLocal
-    // localProperties (job group, cancellation scope) propagate from the
-    // caller: a harness cancelling the caller's job group cancels these
-    // writes with it, instead of leaking stragglers that race a later
-    // rollback.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try {
-      val writes = Seq(
-        Future {
-          bands
-            .withColumn("band_key", concat_ws(":", col("band"), col("band_hash")))
-            .repartition(buckets, col("band_key"))
-            .write.mode("append").format("parquet")
-            .bucketBy(buckets, "band_key").sortBy("band_key")
-            .saveAsTable(bandsTable(name))
-        },
-        Future {
-          index.repartition(buckets, col("doc_id"))
-            .write.mode("append").format("parquet")
-            .bucketBy(buckets, "doc_id").sortBy("doc_id")
-            .saveAsTable(shinglesTable(name))
-        },
-        Future {
-          index.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-            .repartition(buckets, col("doc_id"))
-            .write.mode("append").format("parquet")
-            .bucketBy(buckets, "doc_id").sortBy("doc_id")
-            .saveAsTable(sizesTable(name))
-        })
-      // await ALL three before returning or rethrowing: if one write
-      // fails while siblings are still running, returning early would
-      // leave stragglers committing files AFTER a caller's rollback
-      // listed the directories — exactly the partial-append pollution
-      // the rollback exists to prevent
-      val results = writes.map(w => scala.util.Try(Await.result(w, Duration.Inf)))
-      results.foreach(_.get)
-    } finally pool.shutdown()
-  }
-
-  /** One full cycle of the daily cadence: flag the batch's duplicates,
-    * APPEND the survivors' signatures to the store (so the next batch
-    * dedupes against them — history grows), and return one row per
-    * batch doc: (doc_id, is_dup, dup_of).
+  /** One full cycle of the daily cadence ([[BandedStore]] has the dup
+    * resolution order and the hook contract): flag the batch's
+    * duplicates, APPEND the survivors' bands, shingles and sizes to the
+    * store (so the next batch dedupes against them — history grows),
+    * and return one row per batch doc: (doc_id, is_dup, dup_of).
     *
-    * Dup resolution order:
-    *  1. a batch doc that near-dups ANY stored doc is a duplicate
-    *     (`dup_of` = the smallest matching stored id);
-    *  2. the remaining docs are LSH'd against each other and resolved to
-    *     connected components ([[Dedup.clusters]]) — each component's
-    *     min-id member survives, the rest carry `dup_of` = that id.
-    * A doc that only near-dups a step-1 duplicate is NOT removed:
-    * Jaccard is not transitive, and its content is no longer represented
-    * by any surviving doc — dropping it would over-delete.
+    * Scale shape: the batch's text is scanned and exploded ONCE
+    * ([[Dedup.shingles]], eager checkpoint); history-pass bands/index,
+    * survivor-pass bands/index (df cap re-applied within the
+    * survivors), and the appended signatures are all aggregates over
+    * that one pass. `histDup` and `flags` are also eagerly
+    * checkpointed: each feeds 2–3 downstream consumers, and an unpinned
+    * histDup re-executes the whole store-join subtree per consumer
+    * (measured 2× on the bench before pinning).
     *
-    * Scale shape: every stage is O(batch) — the history side contributes
-    * only bucketed, never-reshuffled reads in step 1; step 2 is LSH over
-    * the batch alone; the append shuffles only survivors. Nothing
-    * rewrites or rescans the accumulated corpus. The batch's text is
-    * scanned and exploded ONCE ([[Dedup.shingles]], eager checkpoint);
-    * history-pass bands/index, survivor-pass bands/index (df cap
-    * re-applied within the survivors), and the appended signatures are
-    * all aggregates over that one pass. `histDup` and `flags` are also
-    * eagerly checkpointed: each feeds 2–3 downstream consumers, and an
-    * unpinned histDup re-executes the whole store-join subtree per
-    * consumer (measured 2× on the bench before pinning).
-    */
-  /** @param onStage dev-hook: called with (stage-label, seconds) after
+    * @param onStage dev-hook: called with (stage-label, seconds) after
     *   each materialization point, so profilers (the perfbench
     *   `--trace 1` run's `dedup.stage.*` metrics) time THIS code path
     *   rather than a drift-prone reimplementation.
-    *   Failure note: an exception mid-ingest (including during the
-    *   appends) can leave PARTIAL appends behind — callers that must
-    *   preserve the store take a [[snapshot]] first and [[rollback]] on
-    *   failure, which restores it bit-for-bit.
-    */
-  /** @param onFlags commit hook: called with the (checkpointed) flag
-    *   frame AFTER it is final but BEFORE any append mutates the store —
-    *   a caller that persists flags here (the streaming ingest log) gets
-    *   "flags before appends" ordering, so a crash mid-append leaves
-    *   flags a rollback-then-rerun reproduces identically.
-    * @param onCommitted commit hook: called after the appends and the
-    *   generation bump, BEFORE the pending file clears — the one point
-    *   where "this ingest fully happened" can be marked durably with no
-    *   window against the crash-recovery authorization (marker present +
-    *   pending present reads as committed; marker absent + pending
-    *   present rolls back).
-    */
-  /** @param onAudit accounting hook: called with the batch's
-    *   [[IngestAudit]] band-bucket histogram before any append —
-    *   the orchestrated/streaming cadences file it in their run
-    *   reports (same contract as the embedding store's audit).
+    * @param onAudit the batch's [[IngestAudit]] band-bucket histogram.
     */
   def ingest(spark: SparkSession, batch: DataFrame, name: String,
       threshold: Double = 0.5,
@@ -446,17 +177,8 @@ object SignatureStore {
       onCommitted: () => Unit = () => (),
       onAudit: IngestAudit => Unit = _ => ()): DataFrame =
     locked(spark, name) { // single-writer: a concurrent ingest fails fast
-    // persist the pre-ingest snapshot for the duration: if this WRITER
-    // dies (not merely throws — a live failure clears it below), a
-    // fresh process can restore the store via [[recover]]
-    guard(name).writePending(spark, snapshot(spark, name))
-    locally {
-    def staged[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      onStage(label, (System.nanoTime() - t0) / 1e9)
-      r
-    }
+    beginIngest(spark, name)
+    def staged[A](label: String)(f: => A): A = BandedStore.staged(onStage, label)(f)
     val meta = spark.table(metaTable(name)).head()
     val spec = specOf(meta)
     val buckets = meta.getAs[Int]("buckets")
@@ -466,8 +188,8 @@ object SignatureStore {
     val bsh = staged("shingle pass")(Dedup.shingles(batch, spec.k).localCheckpoint(true))
     // index and bands are INDEPENDENT aggregates over the pinned shingle
     // pass — overlap their materializations (guide §2.6; same pattern
-    // and thread-inheritance rationale as [[appendFrom]]'s writes). The
-    // r20 stage split had them at 0.53 s + 0.43 s sequential.
+    // and thread-inheritance rationale as [[Overlap]]). The r20 stage
+    // split had them at 0.53 s + 0.43 s sequential.
     //
     // MinHash signatures are per-document (corpus-independent), so the
     // batch's bands are aggregated ONCE and every later consumer —
@@ -490,8 +212,7 @@ object SignatureStore {
         // occupancy over the band_keys this batch touches, batch∪store
         // members — the store side is a semi-join INTO its bucketing
         // (only the small key set shuffles), never a full-store aggregate
-        val batchCnt = bBands
-          .select(concat_ws(":", col("band"), col("band_hash")).as("band_key"))
+        val batchCnt = bBands.select(BandedStore.bandKey.as("band_key"))
           .groupBy("band_key").agg(count(lit(1)).as("n_batch"))
         batchCnt
           .join(spark.table(bandsTable(name))
@@ -530,34 +251,18 @@ object SignatureStore {
           Dedup.indexFromShingles(ssh, spec.maxDf), threshold),
         survIds)
     }
-    val flags = staged("flags") {
-      ids
-        .join(histDup, Seq("doc_id"), "left")
-        .join(comp.select(col("doc_id"), col("cluster"), col("is_rep")), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          (col("hist_dup_of").isNotNull || col("is_rep") === false).as("is_dup"),
-          coalesce(col("hist_dup_of"),
-            when(col("is_rep") === false, col("cluster"))).as("dup_of"))
-        .localCheckpoint(true) // returned to the caller — must not pin the cache manager
+    commitIngest(spark, name, buckets, ids, histDup, comp,
+        onStage, onFlags, onCommitted) { keepIds =>
+      // the keepers' index feeds two appends — pinned once
+      val index = Dedup.indexFromShingles(bsh.join(keepIds, "doc_id"), spec.maxDf)
+        .localCheckpoint(true)
+      Seq(
+        (bBands.join(keepIds, "doc_id").withColumn("band_key", BandedStore.bandKey),
+          bandsTable(name), "band_key"),
+        (index, shinglesTable(name), "doc_id"),
+        (index.groupBy("doc_id").agg(count(lit(1)).as("n_sh")), sizesTable(name), "doc_id"))
     }
-    onFlags(flags) // before any append — see the param doc
-    val keepIds = flags.filter(!col("is_dup")).select("doc_id")
-    val ksh = bsh.join(keepIds, "doc_id")
-    staged("appends") {
-      appendFrom(bBands.join(keepIds, "doc_id"),
-        Dedup.indexFromShingles(ksh, spec.maxDf).localCheckpoint(true), // 2 writes read it
-        name, buckets)
     }
-    guard(name).bumpGen(spark) // completed mutation — stale snapshots now refuse
-    onCommitted() // durable "fully happened" mark, still under the pending authorization
-    // pending clears ONLY on success (or when a rollback completes —
-    // StoreGuard.doRollback clears it): a live failure keeps the
-    // authorization on disk until the caller's compensating rollback
-    // finishes, so a crash DURING that rollback is still recoverable
-    guard(name).clearPending(spark)
-    flags
-    }
-  }
 
   /** Cross-corpus near-dup pairs of a new batch against the store:
     * (hist_id, new_id, jaccard ≥ threshold). Only the batch is hashed
@@ -591,7 +296,7 @@ object SignatureStore {
     val h = spark.table(bandsTable(name))
       .select(col("band_key"), col("doc_id").as("hist_id"))
     val b = batchBands
-      .select(concat_ws(":", col("band"), col("band_hash")).as("band_key"),
+      .select(BandedStore.bandKey.as("band_key"),
         col("doc_id").as("new_id"))
     val cand = h.join(b, "band_key").select("hist_id", "new_id").distinct()
     val batchSizes = batchIndex.groupBy(col("doc_id").as("new_id"))

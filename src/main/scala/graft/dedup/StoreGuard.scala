@@ -27,24 +27,20 @@ import org.apache.spark.sql.SparkSession
   *    store from it and releases the lock.
   */
 private[graft] final case class StoreGuard(metaTable: String, tables: Seq[String]) {
-  import StoreGuard.{GenRe, heldLocks, ownGens}
-
-  private def tableLoc(spark: SparkSession, t: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.defaultTablePath(
-        org.apache.spark.sql.catalyst.TableIdentifier(t)))
+  import StoreGuard.{GenRe, heldLocks, ownGens, tableLocation}
 
   private def metaLoc(spark: SparkSession): org.apache.hadoop.fs.Path =
-    tableLoc(spark, metaTable)
+    tableLocation(spark, metaTable)
 
-  private def lockPath(spark: SparkSession): org.apache.hadoop.fs.Path = {
+  /** `<meta-dir><suffix>`: a sibling of the meta dir, so no table
+    * rewrite can delete it (the lock, pending and streak files).
+    */
+  private[graft] def sibling(spark: SparkSession, suffix: String): org.apache.hadoop.fs.Path = {
     val m = metaLoc(spark)
-    new org.apache.hadoop.fs.Path(m.getParent, m.getName + ".lock")
+    new org.apache.hadoop.fs.Path(m.getParent, m.getName + suffix)
   }
-  private def pendingPath(spark: SparkSession): org.apache.hadoop.fs.Path = {
-    val m = metaLoc(spark)
-    new org.apache.hadoop.fs.Path(m.getParent, m.getName + ".pending")
-  }
+  private def lockPath(spark: SparkSession) = sibling(spark, ".lock")
+  private def pendingPath(spark: SparkSession) = sibling(spark, ".pending")
 
   /** Current (generation, uuid) marker of the store, if any. */
   private def genMarker(spark: SparkSession): Option[(Int, String)] = {
@@ -110,10 +106,7 @@ private[graft] final case class StoreGuard(metaTable: String, tables: Seq[String
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false); ()
   }
 
-  private def streakPath(spark: SparkSession): org.apache.hadoop.fs.Path = {
-    val m = metaLoc(spark)
-    new org.apache.hadoop.fs.Path(m.getParent, m.getName + ".streak")
-  }
+  private def streakPath(spark: SparkSession) = sibling(spark, ".streak")
 
   /** The store's DURABLE consecutive-breach streak (the audit-alert
     * counter) — a tiny sidecar next to the meta dir, like the lock and
@@ -296,7 +289,7 @@ private[graft] final case class StoreGuard(metaTable: String, tables: Seq[String
   def snapshot(spark: SparkSession): Set[String] = {
     val conf = spark.sparkContext.hadoopConfiguration
     tables.flatMap { t =>
-      val loc = tableLoc(spark, t)
+      val loc = tableLocation(spark, t)
       val fs = loc.getFileSystem(conf)
       if (!fs.exists(loc)) Nil
       else fs.listStatus(loc).map(_.getPath.toString).toSeq
@@ -333,7 +326,7 @@ private[graft] final case class StoreGuard(metaTable: String, tables: Seq[String
       // markers are exempt — a legitimate bump deletes the old marker
       // and the restore loop below re-creates it from its name.
       val missing = tables.flatMap { t =>
-        val loc = tableLoc(spark, t)
+        val loc = tableLocation(spark, t)
         val fs = loc.getFileSystem(conf)
         val present: Set[String] =
           if (!fs.exists(loc)) Set.empty
@@ -350,7 +343,7 @@ private[graft] final case class StoreGuard(metaTable: String, tables: Seq[String
           "restore deleted files; rebuild the store from the source corpus instead")
     }
     tables.foreach { t =>
-      val loc = tableLoc(spark, t)
+      val loc = tableLocation(spark, t)
       val fs = loc.getFileSystem(conf)
       if (fs.exists(loc)) {
         val added = fs.listStatus(loc).map(_.getPath)
@@ -380,23 +373,6 @@ private[graft] final case class StoreGuard(metaTable: String, tables: Seq[String
     clearPending(spark)
   }
 
-  /** Crash recovery: when a writer DIED mid-ingest it left the lock and
-    * its persisted pre-ingest snapshot behind — restore the store to
-    * that snapshot (the pending file is the on-disk authorization that
-    * those appends belong to the dead writer, so the staleness gate is
-    * bypassed), then release the lock. Returns whether anything was
-    * recovered; a no-op (false) when there is no pending ingest —
-    * WITHOUT touching the lock, which may belong to a live build/drop
-    * that writes no pending file (a writer that died in build/drop is
-    * released with an explicit [[unlock]]).
-    *
-    * The rollback runs UNDER the dead writer's still-present lock (it
-    * is never released-then-reacquired), so no third writer can slip in
-    * and have its fresh appends deleted mid-recovery. The operator owns
-    * the "is it actually dead?" judgment — files alone cannot
-    * distinguish a dead writer from a slow one, and recovering a LIVE
-    * ingest deletes its in-flight appends.
-    */
   /** [[recover]] gated on owner arbitration — the form AUTOMATED
     * callers (the streaming replay arms) must use. `recover` itself
     * trusts the pending file as proof of a DEAD writer and leaves the
@@ -419,6 +395,23 @@ private[graft] final case class StoreGuard(metaTable: String, tables: Seq[String
     recover(spark)
   }
 
+  /** Crash recovery: when a writer DIED mid-ingest it left the lock and
+    * its persisted pre-ingest snapshot behind — restore the store to
+    * that snapshot (the pending file is the on-disk authorization that
+    * those appends belong to the dead writer, so the staleness gate is
+    * bypassed), then release the lock. Returns whether anything was
+    * recovered; a no-op (false) when there is no pending ingest —
+    * WITHOUT touching the lock, which may belong to a live build/drop
+    * that writes no pending file (a writer that died in build/drop is
+    * released with an explicit [[unlock]]).
+    *
+    * The rollback runs UNDER the dead writer's still-present lock (it
+    * is never released-then-reacquired), so no third writer can slip in
+    * and have its fresh appends deleted mid-recovery. The operator owns
+    * the "is it actually dead?" judgment — files alone cannot
+    * distinguish a dead writer from a slow one, and recovering a LIVE
+    * ingest deletes its in-flight appends.
+    */
   def recover(spark: SparkSession): Boolean = {
     val p = pendingPath(spark)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -825,7 +818,6 @@ private[graft] object StoreGuard {
     */
   def compactTable(spark: SparkSession, table: String, bucketCol: String,
       buckets: Int): Unit = {
-    import org.apache.spark.sql.functions.col
     stagedSwap(spark, table, s"${table}__compacting", bucketCol, buckets,
         // already at the write-time floor (one file per bucket per
         // write) — nothing to compact, and skipping keeps the
@@ -841,11 +833,8 @@ private[graft] object StoreGuard {
       // "compaction" would INCREASE nothing but still miss the floor.
       // A raw read has unknown partitioning: the bucket-aligned shuffle
       // survives and each task writes exactly one bucket file.
-      spark.read.parquet(tableLocation(spark, table).toString)
-        .repartition(buckets, col(bucketCol))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(buckets, bucketCol).sortBy(bucketCol)
-        .saveAsTable(staged)
+      BandedStore.writeBucketed(spark.read.parquet(tableLocation(spark, table).toString),
+        staged, bucketCol, buckets)
     }
     ()
   }

@@ -438,15 +438,12 @@ object Orchestrator {
           auditPolicy, (w, f) => isolated(w)(f()), onMaintain, notifier)
         // the corpus stores ride the same monthly slot: a year of daily
         // ingests is ~365 bucket-aligned files per bucket otherwise
-        corpusStores.foreach(s => isolated(s"signature store $s") {
-          graft.dedup.SignatureStore.ensureRegistered(spark, s)
-          graft.dedup.SignatureStore.compact(spark, s)
-        })
-        embeddingStores.foreach(s => isolated(s"embedding store $s") {
-          graft.similarity.EmbeddingStore.ensureRegistered(spark, s)
-          graft.similarity.EmbeddingStore.reband(spark, s)
-          graft.similarity.EmbeddingStore.compact(spark, s)
-        })
+        storesOf(corpusStores, embeddingStores).foreach { case (st, s) =>
+          isolated(s"${st.kind} store $s") {
+            st.ensureRegistered(spark, s)
+            st.maintain(spark, s)
+          }
+        }
         // IVF indexes take the same monthly slot: retrain settles the
         // frozen-centroid drift and delta proliferation a month of
         // appends accumulates (nlist self-derived from the published
@@ -487,18 +484,16 @@ object Orchestrator {
     }
     remediations.foreach { case (s, act) =>
       isolated(s"remediation $s", () => {
-        val n =
-          if (corpusStores.contains(s))
-            graft.dedup.SignatureStore.readAuditStreak(spark, s)
-          else graft.similarity.EmbeddingStore.readAuditStreak(spark, s)
+        val st: graft.dedup.BandedStore =
+          if (corpusStores.contains(s)) graft.dedup.SignatureStore
+          else graft.similarity.EmbeddingStore
+        val n = st.readAuditStreak(spark, s)
         if (n >= auditPolicy.consecutive) {
           // this pass runs FIRST in the sweep, so in a fresh JVM (the
           // cron cadence) no other unit has registered the store's
           // catalog entries yet — register from disk before acting
           // (the streak read above is file-based and needs no catalog)
-          if (corpusStores.contains(s))
-            graft.dedup.SignatureStore.ensureRegistered(spark, s)
-          else graft.similarity.EmbeddingStore.ensureRegistered(spark, s)
+          st.ensureRegistered(spark, s)
           act()
           onMaintain(MaintainResult(
             s"remediation $s (AUDIT ALERT: $n consecutive breaches — remediation scheduled and run)",
@@ -515,6 +510,14 @@ object Orchestrator {
       })
     }
   }
+
+  /** The sweep's stores, each paired with its store kind: the text
+    * stores, then the embedding stores.
+    */
+  private[graft] def storesOf(corpusStores: Seq[String],
+      embeddingStores: Seq[String]): Seq[(graft.dedup.BandedStore, String)] =
+    corpusStores.map(graft.dedup.SignatureStore -> _) ++
+      embeddingStores.map(graft.similarity.EmbeddingStore -> _)
 
   final case class MaintainResult(pipeline: String, root: String,
       compactedPartitions: Int, retainedVersions: Int, skipped: Boolean,
@@ -611,19 +614,9 @@ object Orchestrator {
     import graft.dedup.SignatureStore
     val audit = new java.util.concurrent.atomic.AtomicReference[
       Option[SignatureStore.IngestAudit]](None)
-    runStoreIngest(spark, store, "doc_id", "corpus-ingest",
-      ensure = () => SignatureStore.ensureRegistered(spark, store),
-      locked = SignatureStore.locked(spark, store)(_),
-      takeSnapshot = () => SignatureStore.snapshot(spark, store),
-      runIngest = () => SignatureStore.ingest(spark, batch, store,
-        onAudit = a => audit.set(Some(a))),
-      doRollback = snap => SignatureStore.rollback(spark, store, snap),
-      notifier, sink,
-      streak = durableStreak(() => SignatureStore.readAuditStreak(spark, store),
-        n => SignatureStore.writeAuditStreak(spark, store, n),
-        () => SignatureStore.clearAuditStreak(spark, store)),
-      policy = policy,
-      finish = r => r.copy(bandAudit = audit.get()))
+    runStoreIngest(spark, SignatureStore, store, "corpus-ingest", notifier, sink, policy,
+      finish = r => r.copy(bandAudit = audit.get()))(
+      SignatureStore.ingest(spark, batch, store, onAudit = a => audit.set(Some(a))))
   }
 
   /** The embedding twin of [[corpusInit]]: an empty embedding store
@@ -654,21 +647,12 @@ object Orchestrator {
     import graft.similarity.EmbeddingStore
     val audit = new java.util.concurrent.atomic.AtomicReference[
       Option[EmbeddingStore.IngestAudit]](None)
-    runStoreIngest(spark, store, "vec_id", "corpus-ingest-emb",
-      ensure = () => EmbeddingStore.ensureRegistered(spark, store),
-      locked = EmbeddingStore.locked(spark, store)(_),
-      takeSnapshot = () => EmbeddingStore.snapshot(spark, store),
-      runIngest = () => EmbeddingStore.ingest(spark, batch, store,
-        bucketCap = bucketCap, onAudit = a => audit.set(Some(a))),
-      doRollback = snap => EmbeddingStore.rollback(spark, store, snap),
-      notifier, sink,
-      streak = durableStreak(() => EmbeddingStore.readAuditStreak(spark, store),
-        n => EmbeddingStore.writeAuditStreak(spark, store, n),
-        () => EmbeddingStore.clearAuditStreak(spark, store)),
-      policy = policy,
+    runStoreIngest(spark, EmbeddingStore, store, "corpus-ingest-emb", notifier, sink, policy,
       // fires for failed runs too: the audit lands before any append,
       // so a batch that died mid-append still reports its drop counts
-      finish = r => r.copy(lshAudit = audit.get()))
+      finish = r => r.copy(lshAudit = audit.get()))(
+      EmbeddingStore.ingest(spark, batch, store,
+        bucketCap = bucketCap, onAudit = a => audit.set(Some(a))))
   }
 
   /** The store-agnostic ingest unit both corpus cadences share: the
@@ -680,19 +664,15 @@ object Orchestrator {
     * writer's appends). Any failure rolls the store back; a rollback
     * failure rides along as suppressed instead of replacing the root
     * cause (the partial appends then still exist — the error says so).
+    * `finish` attaches the ingest's audit to the result; `runIngest` is
+    * the store's ingest of the batch.
     */
-  private def runStoreIngest(spark: SparkSession, store: String, idCol: String,
-      jobLabel: String,
-      ensure: () => Unit,
-      locked: (=> CorpusResult) => CorpusResult,
-      takeSnapshot: () => Set[String],
-      runIngest: () => DataFrame,
-      doRollback: Set[String] => Unit,
+  private def runStoreIngest(spark: SparkSession, st: graft.dedup.BandedStore,
+      store: String, jobLabel: String,
       notifier: Option[Notifier.Config],
       sink: Sink,
-      streak: StreakStore,
-      policy: AuditPolicy = AuditPolicy(),
-      finish: CorpusResult => CorpusResult = identity): CorpusResult = {
+      policy: AuditPolicy,
+      finish: CorpusResult => CorpusResult)(runIngest: => DataFrame): CorpusResult = {
     val t0 = System.nanoTime()
     val result =
       try {
@@ -700,17 +680,17 @@ object Orchestrator {
         // CorpusResult error (and fire the notifier), not an uncaught
         // exception that skips the monitoring path — so the cross-JVM
         // re-registration runs INSIDE this try
-        ensure()
-        locked {
-          val snap = takeSnapshot()
+        st.ensureRegistered(spark, store)
+        st.locked(spark, store) {
+          val snap = st.snapshot(spark, store)
           try {
-            val flags = runIngest()
+            val flags = runIngest
             val batchRows = flags.count()
             if (batchRows == 0) sys.error("Empty batch — nothing to ingest")
             val dups = flags.filter(col("is_dup")).count()
             val out = flags.select(
-              col(idCol).cast("string").as("business_key"),
-              col(idCol), col("is_dup"), col("dup_of"))
+              col(st.idCol).cast("string").as("business_key"),
+              col(st.idCol), col("is_dup"), col("dup_of"))
               .withColumn("refreshed_at", current_timestamp())
             sink.merge(spark, corpusPipeline(store), out)
             // the escalation verdict is stamped INSIDE the critical
@@ -720,10 +700,10 @@ object Orchestrator {
             recordAuditAlert(finish(
               CorpusResult(store, batchRows, dups, batchRows - dups,
                 (System.nanoTime() - t0) / 1e9, None)),
-              policy, streak)
+              policy, durableStreak(spark, st, store))
           } catch {
             case e: Throwable =>
-              try doRollback(snap) // store unchanged
+              try st.rollback(spark, store, snap) // store unchanged
               catch { case rb: Throwable => e.addSuppressed(rb) }
               throw e
           }
@@ -812,11 +792,11 @@ object Orchestrator {
     * read-modify-written inside the ingest's single-writer lock (the
     * reentrant `locked` bracket in [[runStoreIngest]]).
     */
-  private def durableStreak(readF: () => Int, writeF: Int => Unit,
-      clearF: () => Unit): StreakStore = new StreakStore {
-    def read(): Int = readF()
-    def write(n: Int): Unit = writeF(n)
-    def clear(): Unit = clearF()
+  private def durableStreak(spark: SparkSession, st: graft.dedup.BandedStore,
+      store: String): StreakStore = new StreakStore {
+    def read(): Int = st.readAuditStreak(spark, store)
+    def write(n: Int): Unit = st.writeAuditStreak(spark, store, n)
+    def clear(): Unit = st.clearAuditStreak(spark, store)
   }
 
   /** Record this ingest against the store's breach streak and stamp the

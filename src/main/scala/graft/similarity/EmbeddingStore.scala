@@ -2,7 +2,7 @@ package graft.similarity
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.dedup.{Dedup, StoreGuard}
+import graft.dedup.{BandedStore, Dedup, Overlap, StoreGuard}
 
 /** Persisted sign-bit LSH store for INCREMENTAL embedding near-dup —
   * the embedding twin of [[graft.dedup.SignatureStore]], and the only
@@ -27,11 +27,13 @@ import graft.dedup.{Dedup, StoreGuard}
   * exactly what full-corpus LSH would produce, with no stored
   * projection state beyond the spec row.
   *
-  * Writer safety is [[StoreGuard]]'s single-writer discipline (lock
-  * file, generation markers, pending-snapshot crash recovery) — the
-  * same guarantees as the signature store.
+  * Lifecycle and writer safety are [[graft.dedup.BandedStore]]'s, as
+  * for the signature store.
   */
-object EmbeddingStore {
+object EmbeddingStore extends BandedStore {
+
+  private def specOf(meta: org.apache.spark.sql.Row): Spec =
+    Spec(meta.getAs[Int]("planes"), meta.getAs[Int]("band_bits"))
 
   /** Unique suffix for ingest's observed-metric names — observations
     * are matched per query execution; a reused name across concurrent
@@ -65,7 +67,7 @@ object EmbeddingStore {
     * candidate generation actually skipped. Delivered through ingest's
     * `onAudit` hook; since r20 the aggregates ride the occupancy
     * checkpoint's job as observed metrics WITH an explicit recompute
-    * fallback ([[graft.dedup.Overlap.observedRow]]) — observe alone is
+    * fallback ([[Overlap.observedRow]]) — observe alone is
     * best-effort under AQE empty-relation propagation (SURVEY note 23),
     * so the fallback job keeps the counts lossless while the happy path
     * stops paying a separate agg().head() job. The orchestrated
@@ -73,7 +75,7 @@ object EmbeddingStore {
     */
   final case class IngestAudit(nBatch: Long, planes: Int, bandBits: Int,
       occupiedBuckets: Long, cappedBuckets: Long, cappedRows: Long,
-      maxBucket: Long, bucketCap: Long = 0L) {
+      maxBucket: Long, bucketCap: Long = 0L) extends BandedStore.Audit {
     def json: String =
       s"""{"n_batch":$nBatch,"planes":$planes,"band_bits":$bandBits,""" +
         s""""occupied_buckets":$occupiedBuckets,"capped_buckets":$cappedBuckets,""" +
@@ -83,13 +85,17 @@ object EmbeddingStore {
 
   def bandsTable(name: String): String = s"${name}_ebands"
   def vecsTable(name: String): String = s"${name}_evecs"
-  def metaTable(name: String): String = s"${name}_emeta"
 
-  private def allTables(name: String): Seq[String] =
-    Seq(bandsTable(name), vecsTable(name), metaTable(name))
-
-  private def guard(name: String): StoreGuard =
-    StoreGuard(metaTable(name), allTables(name))
+  def kind: String = "embedding"
+  def idCol: String = "vec_id"
+  def auditFile: String = "_lsh_audit.json"
+  protected def initCall: String = "build/corpusInitEmbeddings"
+  protected def metaSuffix: String = "_emeta"
+  protected def metaSchema: String =
+    "`planes` INT, `band_bits` INT, `buckets` INT, `dims` INT, `kernel` INT"
+  protected def layout: Seq[(String, String, String)] = Seq(
+    ("_ebands", "band_key", "`vec_id` BIGINT, `band` INT, `band_hash` INT, `band_key` STRING"),
+    ("_evecs", "vec_id", "`vec_id` BIGINT, `emb` ARRAY<DOUBLE>, `ns` DOUBLE"))
 
   /** LSH kernel version the store's bands were hashed with. Stores
     * created before the column existed default to 1 (the exact-decimal
@@ -158,10 +164,8 @@ object EmbeddingStore {
     * (like the lock and pending files) so no table rewrite can delete
     * it; re-running reband completes the sequence and clears it.
     */
-  private def rebandMarkerPath(spark: SparkSession, name: String): org.apache.hadoop.fs.Path = {
-    val m = StoreGuard.tableLocation(spark, metaTable(name))
-    new org.apache.hadoop.fs.Path(m.getParent, m.getName + ".rebanding")
-  }
+  private def rebandMarkerPath(spark: SparkSession, name: String): org.apache.hadoop.fs.Path =
+    guard(name).sibling(spark, ".rebanding")
   private def rebandInFlight(spark: SparkSession, name: String): Boolean = {
     val p = rebandMarkerPath(spark, name)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
@@ -184,78 +188,6 @@ object EmbeddingStore {
         "disagree on band geometry, so batch bands could silently miss stored " +
         "near-dups — re-run reband (Runner --maintain-store-emb) to complete " +
         "it (recover/unlock first if the writer died holding the lock)")
-
-  def snapshot(spark: SparkSession, name: String): Set[String] =
-    guard(name).snapshot(spark)
-  def rollback(spark: SparkSession, name: String, snap: Set[String]): Unit =
-    guard(name).rollback(spark, snap)
-  def recover(spark: SparkSession, name: String): Boolean =
-    guard(name).recover(spark)
-  /** Owner-arbitrated recovery for automated callers — see
-    * [[graft.dedup.StoreGuard.recoverArbitrated]].
-    */
-  def recoverArbitrated(spark: SparkSession, name: String): Boolean =
-    guard(name).recoverArbitrated(spark)
-  def locked[A](spark: SparkSession, name: String)(f: => A): A =
-    guard(name).locked(spark)(f)
-
-  /** Re-register the store's durable bucketed tables into THIS
-    * session's catalog (the catalog is per-process, the data is not) —
-    * the cross-JVM daily-CLI cadence, same contract as
-    * [[graft.dedup.SignatureStore.ensureRegistered]].
-    */
-  def ensureRegistered(spark: SparkSession, name: String): Unit = {
-    if (allTables(name).forall(spark.catalog.tableExists)) return
-    val conf = spark.sparkContext.hadoopConfiguration
-    def loc(t: String): org.apache.hadoop.fs.Path =
-      new org.apache.hadoop.fs.Path(
-        spark.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(t)))
-    val metaP = loc(metaTable(name))
-    require(metaP.getFileSystem(conf).exists(metaP),
-      s"no embedding store '$name' on disk at $metaP — build/corpusInitEmbeddings it first")
-    def register(t: String, bucketCol: Option[String], fallback: String,
-        buckets: => Int): Unit =
-      if (!spark.catalog.tableExists(t)) {
-        val p = loc(t)
-        val cols =
-          // missing-dir fallback mirrors SignatureStore.ensureRegistered:
-          // a compactor dead between reset and swap leaves the only copy
-          // in the `__compacting` sibling — register the canonical
-          // layout so compact()'s resume branch stays reachable
-          try spark.read.parquet(p.toString).schema.fields
-            .map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
-          catch { case e: Exception if e.getMessage != null &&
-              (e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") ||
-               e.getMessage.contains("PATH_NOT_FOUND") ||
-               e.getMessage.contains("Path does not exist")) => fallback }
-        val cluster = bucketCol
-          .map(c => s"CLUSTERED BY (`$c`) SORTED BY (`$c`) INTO $buckets BUCKETS")
-          .getOrElse("")
-        spark.sql(s"CREATE TABLE `$t` ($cols) USING parquet $cluster LOCATION '$p'")
-      }
-    register(metaTable(name), None,
-      "`planes` INT, `band_bits` INT, `buckets` INT, `dims` INT, `kernel` INT", 0)
-    lazy val buckets = spark.table(metaTable(name)).head().getAs[Int]("buckets")
-    register(bandsTable(name), Some("band_key"),
-      "`vec_id` BIGINT, `band` INT, `band_hash` INT, `band_key` STRING", buckets)
-    register(vecsTable(name), Some("vec_id"),
-      "`vec_id` BIGINT, `emb` ARRAY<DOUBLE>, `ns` DOUBLE", buckets)
-  }
-
-  /** Maintenance compaction (`Runner --maintain-store-emb`): rewrite the
-    * bands and vectors tables down to ~`buckets` files each without
-    * changing content — the same cadence and guarantees as
-    * [[graft.dedup.SignatureStore.compact]] (single-writer lock, one
-    * generation bump after both swaps, pre-compaction snapshots become
-    * non-rollbackable by rollback's missing-file refusal).
-    */
-  def compact(spark: SparkSession, name: String): Unit = locked(spark, name) {
-    val buckets = spark.table(metaTable(name)).head().getAs[Int]("buckets")
-    Seq(bandsTable(name) -> "band_key", vecsTable(name) -> "vec_id")
-      .foreach { case (t, c) => StoreGuard.compactTable(spark, t, c, buckets) }
-    guard(name).bumpGen(spark)
-  }
 
   /** Maintenance RE-BANDING: re-derive the band geometry from the
     * store's CURRENT size and rewrite the bands table from the stored
@@ -283,7 +215,7 @@ object EmbeddingStore {
   def reband(spark: SparkSession, name: String): Boolean = locked(spark, name) {
     val bandsT = bandsTable(name)
     val meta = spark.table(metaTable(name)).head()
-    val spec = Spec(meta.getAs[Int]("planes"), meta.getAs[Int]("band_bits"))
+    val spec = specOf(meta)
     val buckets = meta.getAs[Int]("buckets")
     val dims = meta.getAs[Int]("dims")
     val n = spark.table(vecsTable(name)).count()
@@ -307,11 +239,9 @@ object EmbeddingStore {
       // a dead rebander's staged sibling holding the ONLY copy resumes
       // inside stagedSwap (the bands content is already the DERIVED
       // spec — the meta re-derivation below recommits it)
-      bandsOf(spark.table(vecsTable(name)).select("vec_id", "emb"), spec2)
-        .repartition(buckets, col("band_key"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(buckets, "band_key").sortBy("band_key")
-        .saveAsTable(staged)
+      BandedStore.writeBucketed(
+        bandsOf(spark.table(vecsTable(name)).select("vec_id", "emb"), spec2),
+        staged, "band_key", buckets)
     }
     val changed =
       if (!swapped && !outdated) false
@@ -334,23 +264,20 @@ object EmbeddingStore {
     changed
   }
 
-  /** Drop the store's tables and their locations (idempotent). */
-  def drop(spark: SparkSession, name: String): Unit = locked(spark, name) {
-    allTables(name).foreach(StoreGuard.resetTable(spark, _))
-    guard(name).clearPending(spark)
-    guard(name).clearStreak(spark) // a dropped store has no audit history
-    setRebandMarker(spark, name, on = false) // no store, no window
+  /** Re-band ([[reband]]) first — it widens the key space when the
+    * store outgrew its build-time geometry and lands the bands table at
+    * the file floor — then compact sweeps what remains (the vectors).
+    */
+  override def maintain(spark: SparkSession, name: String): Option[String] = {
+    val rebanded = reband(spark, name)
+    compact(spark, name)
+    if (rebanded) Some("re-banded to the adaptive geometry for its current size") else None
   }
 
-  /** Durable audit-alert breach streak — the embedding twin of
-    * [[graft.dedup.SignatureStore.readAuditStreak]].
-    */
-  def readAuditStreak(spark: SparkSession, name: String): Int =
-    guard(name).readStreak(spark)
-  def writeAuditStreak(spark: SparkSession, name: String, n: Int): Unit =
-    guard(name).writeStreak(spark, n)
-  def clearAuditStreak(spark: SparkSession, name: String): Unit =
-    guard(name).clearStreak(spark)
+  override def drop(spark: SparkSession, name: String): Unit = locked(spark, name) {
+    super.drop(spark, name)
+    setRebandMarker(spark, name, on = false) // no store, no window
+  }
 
   /** Canonical (vec_id, emb array<double>) projection of a corpus. */
   private def baseOf(df: DataFrame, idCol: String, vecCol: String): DataFrame =
@@ -364,7 +291,7 @@ object EmbeddingStore {
     */
   private def bandsOf(base: DataFrame, spec: Spec): DataFrame =
     Similarity.signBitBands(base, spec.planes, spec.bandBits)
-      .withColumn("band_key", concat_ws(":", col("band"), col("band_hash")))
+      .withColumn("band_key", BandedStore.bandKey)
 
   /** Band-bucket candidates of `bBands` against the store, re-verified
     * with the exact decimal cosine against the stored full-precision
@@ -378,10 +305,20 @@ object EmbeddingStore {
       .join(spark.table(bandsTable(name))
         .select(col("band_key"), col("vec_id").as("other_id")), "band_key")
       .select("new_id", "other_id").distinct()
+    verified(cand, v, spark.table(vecsTable(name)), threshold)
+  }
+
+  /** Exact decimal cosine of candidate (new_id, other_id) pairs, `new_id`
+    * looked up in the batch's normed vectors `v` and `other_id` in
+    * `others` (vec_id, emb, ns): the cheap approximate dot prunes first,
+    * within 1e-6 of the threshold.
+    */
+  private def verified(cand: DataFrame, v: DataFrame, others: DataFrame,
+      threshold: Double): DataFrame =
     cand
       .join(v.select(col("vec_id").as("new_id"), col("emb").as("ea"),
         col("ns").as("na")), "new_id")
-      .join(spark.table(vecsTable(name))
+      .join(others
         .select(col("vec_id").as("other_id"), col("emb").as("eb"), col("ns").as("nb")),
         "other_id")
       .withColumn("cos_approx",
@@ -392,7 +329,6 @@ object EmbeddingStore {
         Similarity.cosine(Similarity.dot(col("ea"), col("eb")),
           col("na"), col("nb")))
       .filter(col("cosine") >= threshold)
-  }
 
   /** Read-only cross-store near-dup pairs of a batch against the store:
     * (hist_id, new_id, cosine) — the embedding analog of
@@ -405,7 +341,7 @@ object EmbeddingStore {
     requireNoRebandWindow(spark, name)
     val meta = spark.table(metaTable(name)).head()
     requireCurrentKernel(name, meta)
-    val spec = Spec(meta.getAs[Int]("planes"), meta.getAs[Int]("band_bits"))
+    val spec = specOf(meta)
     val base = baseOf(batch, idCol, vecCol)
     val v = base.withColumn("ns", Similarity.normSq(col("emb")))
     crossVerified(spark, name, v, bandsOf(base, spec), threshold)
@@ -431,28 +367,15 @@ object EmbeddingStore {
       else probeRow.getInt(1)
     val spec0 = spec.resolve(probeRow.getLong(0))
     if (dims > 0) {
-      bandsOf(base, spec0)
-        .repartition(buckets, col("band_key"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(buckets, "band_key").sortBy("band_key")
-        .saveAsTable(bandsTable(name))
-      base.withColumn("ns", Similarity.normSq(col("emb")))
-        .repartition(buckets, col("vec_id"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(buckets, "vec_id").sortBy("vec_id")
-        .saveAsTable(vecsTable(name))
+      BandedStore.writeBucketed(bandsOf(base, spec0), bandsTable(name), "band_key", buckets)
+      BandedStore.writeBucketed(base.withColumn("ns", Similarity.normSq(col("emb"))),
+        vecsTable(name), "vec_id", buckets)
     } else {
       // empty history still needs the table shells so ingest can append
-      Seq.empty[(Long, Int, Int, String)]
-        .toDF("vec_id", "band", "band_hash", "band_key")
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(buckets, "band_key").sortBy("band_key")
-        .saveAsTable(bandsTable(name))
-      Seq.empty[(Long, Array[Double], Double)]
-        .toDF("vec_id", "emb", "ns")
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(buckets, "vec_id").sortBy("vec_id")
-        .saveAsTable(vecsTable(name))
+      BandedStore.saveBucketed(Seq.empty[(Long, Int, Int, String)]
+        .toDF("vec_id", "band", "band_hash", "band_key"), bandsTable(name), "band_key", buckets)
+      BandedStore.saveBucketed(Seq.empty[(Long, Array[Double], Double)]
+        .toDF("vec_id", "emb", "ns"), vecsTable(name), "vec_id", buckets)
     }
     writeMeta(spark, name, spec0, buckets, dims)
     guard(name).bumpGen(spark)
@@ -463,22 +386,13 @@ object EmbeddingStore {
 
   /** Dedup `batch` against the store and within itself; append the
     * survivors' bands and vectors so the store grows O(batch). Returns
-    * one flag row per batch vector: (vec_id, is_dup, dup_of) — `dup_of`
-    * is the smallest matching stored id for cross-store dups, the
-    * cluster representative for within-batch dups (the same two-step
-    * policy, with the same non-transitivity rationale, as
-    * [[graft.dedup.SignatureStore.ingest]]).
+    * one flag row per batch vector: (vec_id, is_dup, dup_of), with the
+    * dup resolution order and the hook contract of [[BandedStore]].
     *
     * Scale shape: the batch bands aggregate ONCE (checkpointed) and
     * every consumer — store join, within-batch LSH, survivor append —
-    * filters that table; the store side of both joins is read on its
-    * bucket key and never reshuffles; the exact re-verify touches only
-    * banded candidates. Nothing rescans or rewrites the history.
-    */
-  /** `onFlags`/`onCommitted` are the streaming-ingest commit hooks —
-    * same contract as [[graft.dedup.SignatureStore.ingest]]: flags
-    * surface BEFORE any append, the committed mark lands after the
-    * generation bump and before the pending clear.
+    * filters that table; the exact re-verify touches only banded
+    * candidates.
     *
     * `bucketCap`/`onAudit`: a band bucket whose combined batch+store
     * occupancy exceeds `bucketCap` is SKIPPED by candidate generation —
@@ -502,7 +416,7 @@ object EmbeddingStore {
     requireNoRebandWindow(spark, name)
     val meta = spark.table(metaTable(name)).head()
     requireCurrentKernel(name, meta)
-    val spec = Spec(meta.getAs[Int]("planes"), meta.getAs[Int]("band_bits"))
+    val spec = specOf(meta)
     val buckets = meta.getAs[Int]("buckets")
     // the dims probe and the batch count ride base's checkpoint as
     // observed metrics (r20) instead of paying their own agg jobs —
@@ -513,7 +427,7 @@ object EmbeddingStore {
       .observe(baseObs, max(size(col("emb"))).as("dims"), count(lit(1)).as("n"))
       .localCheckpoint(true)
     val ids = base.select("vec_id")
-    val dimsRow = graft.dedup.Overlap.observedRow(baseObs,
+    val dimsRow = Overlap.observedRow(baseObs,
       base.agg(max(size(col("emb"))), count(lit(1))).head())
     // emptiness check BEFORE the pending snapshot: an empty batch
     // mutates nothing, so writing (and then never clearing) a pending
@@ -522,7 +436,7 @@ object EmbeddingStore {
     if (dimsRow.isNullAt(0))
       return ids.select(col("vec_id"), lit(false).as("is_dup"),
         lit(null).cast("long").as("dup_of")).limit(0)
-    guard(name).writePending(spark, snapshot(spark, name))
+    beginIngest(spark, name)
     locally {
       val dims = dimsRow.getInt(0)
       // an empty-history build pins dims = -1; the effective store dims
@@ -544,7 +458,7 @@ object EmbeddingStore {
       // normed vectors and band signatures are INDEPENDENT projections
       // of the pinned base — overlap their materializations (guide
       // §2.6, same pattern as SignatureStore.ingest).
-      val (v, bBands) = graft.dedup.Overlap.overlapped2(
+      val (v, bBands) = Overlap.overlapped2(
         base.withColumn("ns", Similarity.normSq(col("emb"))).localCheckpoint(true),
         bandsOf(base, spec).localCheckpoint(true))
 
@@ -570,7 +484,7 @@ object EmbeddingStore {
           (col("n_batch") + coalesce(col("n_store"), lit(0L))).as("occ"))
         .observe(occObs, occAudit.head, occAudit.tail: _*)
         .localCheckpoint(true) // audit metrics + hot-key filter both ride it
-      val auditRow = graft.dedup.Overlap.observedRow(occObs,
+      val auditRow = Overlap.observedRow(occObs,
         occ.agg(occAudit.head, occAudit.tail: _*).head())
       onAudit(IngestAudit(dimsRow.getLong(1), spec.planes, spec.bandBits,
         auditRow.getLong(0),
@@ -587,21 +501,6 @@ object EmbeddingStore {
       val hotKeys = occ.filter(col("occ") > bucketCap).select("band_key")
       val bBandsOk = bBands.join(hotKeys, Seq("band_key"), "left_anti")
 
-      // exact decimal cosine between candidate (new, hist-or-new) pairs
-      def verified(cand: DataFrame, hist: DataFrame): DataFrame =
-        cand
-          .join(v.select(col("vec_id").as("new_id"), col("emb").as("ea"),
-            col("ns").as("na")), "new_id")
-          .join(hist, "other_id")
-          .withColumn("cos_approx",
-            Similarity.cosine(Similarity.dotApprox(col("ea"), col("eb")),
-              col("na"), col("nb")))
-          .filter(col("cos_approx") >= threshold - 1e-6)
-          .withColumn("cosine",
-            Similarity.cosine(Similarity.dot(col("ea"), col("eb")),
-              col("na"), col("nb")))
-          .filter(col("cosine") >= threshold)
-
       // 1. against the store: candidates from a band_key equi-join INTO
       // the store's bucketing (only the batch side shuffles)
       val histDup = crossVerified(spark, name, v, bBandsOk, threshold)
@@ -616,68 +515,17 @@ object EmbeddingStore {
         .join(sBands.select(col("band_key"), col("vec_id").as("other_id")), "band_key")
         .filter(col("new_id") < col("other_id"))
         .select("new_id", "other_id").distinct()
-      val selfPairs = verified(selfCand,
-          v.select(col("vec_id").as("other_id"), col("emb").as("eb"), col("ns").as("nb")))
+      val selfPairs = verified(selfCand, v, v, threshold)
         .select(col("new_id").as("doc_a"), col("other_id").as("doc_b"))
       val comp = Dedup.clusters(selfPairs, survIds.select(col("vec_id").as("doc_id")))
 
-      val flags = ids
-        .join(histDup, Seq("vec_id"), "left")
-        .join(comp.select(col("doc_id").as("vec_id"), col("cluster"), col("is_rep")),
-          Seq("vec_id"), "left")
-        .select(col("vec_id"),
-          (col("hist_dup_of").isNotNull || col("is_rep") === false).as("is_dup"),
-          coalesce(col("hist_dup_of"),
-            when(col("is_rep") === false, col("cluster"))).as("dup_of"))
-        .localCheckpoint(true)
-
-      onFlags(flags) // before any append — see SignatureStore.ingest
-      val keepIds = flags.filter(!col("is_dup")).select("vec_id")
-      // the two table appends are independent jobs over already-pinned
-      // inputs — overlap them (r20; the exact pattern and rationale of
-      // SignatureStore.appendFrom: awaited together before returning
-      // OR rethrowing, so no straggler write can race a caller's
-      // rollback; any partial state a crash leaves is what the
-      // pending-snapshot rollback already restores)
-      graft.dedup.Overlap.overlapped2(
-        bBands.join(keepIds, "vec_id")
-          .select("vec_id", "band", "band_hash", "band_key")
-          .repartition(buckets, col("band_key"))
-          .write.mode("append").format("parquet")
-          .bucketBy(buckets, "band_key").sortBy("band_key")
-          .saveAsTable(bandsTable(name)),
-        v.join(keepIds, "vec_id")
-          .select("vec_id", "emb", "ns")
-          .repartition(buckets, col("vec_id"))
-          .write.mode("append").format("parquet")
-          .bucketBy(buckets, "vec_id").sortBy("vec_id")
-          .saveAsTable(vecsTable(name)))
-      guard(name).bumpGen(spark)
-      onCommitted() // durable "fully happened" mark, still under the pending authorization
-      // pending clears ONLY on success or on a completed rollback
-      // (StoreGuard.doRollback) — see SignatureStore.ingest
-      guard(name).clearPending(spark)
-      flags
+      commitIngest(spark, name, buckets, ids, histDup, comp,
+          (_, _) => (), onFlags, onCommitted) { keepIds =>
+        Seq(
+          (bBands.join(keepIds, "vec_id").select("vec_id", "band", "band_hash", "band_key"),
+            bandsTable(name), "band_key"),
+          (v.join(keepIds, "vec_id").select("vec_id", "emb", "ns"), vecsTable(name), "vec_id"))
+      }
     }
   }
-
-  /** Discharge a dead writer's recovery state WITHOUT rolling back —
-    * same contract and owner arbitration as
-    * [[graft.dedup.SignatureStore.dischargeCommitted]] (shared
-    * implementation: [[graft.dedup.StoreGuard.dischargeCommitted]]).
-    */
-  def dischargeCommitted(spark: SparkSession, name: String,
-      markerOwner: Option[graft.dedup.StoreGuard.LockOwner] = None): Unit =
-    guard(name).dischargeCommitted(spark, markerOwner)
-
-  /** Release a crashed writer's lock — see [[StoreGuard.unlock]]. */
-  def unlock(spark: SparkSession, name: String): Unit =
-    guard(name).unlock(spark)
-
-  /** Discharge the store's lock only when its stamped owner is
-    * verifiably dead — see [[graft.dedup.StoreGuard.dischargeDeadLock]].
-    */
-  def dischargeDeadLock(spark: SparkSession, name: String,
-      strict: Boolean): Boolean =
-    guard(name).dischargeDeadLock(spark, strict)
 }

@@ -325,8 +325,8 @@ object IvfIndex {
 
   /** [[train]] + [[build]]: quantize the corpus in-engine, then build
     * the persisted index over the trained cells.
-    */
-  /** @param onStage dev-hook (the SignatureStore.ingest pattern):
+    *
+    * @param onStage dev-hook (the SignatureStore.ingest pattern):
     *   called with (phase, seconds) after each of the three cost
     *   phases — "train" (sampled Lloyd iterations), "assign" (the
     *   full-corpus cell assignment, materialized into the cache), and

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.dedup.SignatureStore
+import graft.dedup.{BandedStore, SignatureStore}
 import graft.similarity.EmbeddingStore
 
 /** Structured-Streaming runtime for CONTINUOUS corpus ingestion — the
@@ -81,22 +81,31 @@ object CorpusStream {
     * don't infer — the driver-table schema is fixed up front).
     */
   def read(spark: SparkSession, dir: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val schema = "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG"
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    readParquet(spark, dir, maxFilesPerTrigger,
+      "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
+
+  private def readParquet(spark: SparkSession, dir: String,
+      maxFilesPerTrigger: Option[Int], schema: String): DataFrame = {
     val r = spark.readStream.schema(schema)
     maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
     r.parquet(dir)
   }
 
-  /** The commit-marker protocol around one store ingest (see class
-    * doc) — shared by both store flavors. `run(partition, onCommitted)`
-    * executes the store ingest with the two hooks bound.
+  /** One committed micro-batch of either store (see class doc): the
+    * commit-marker protocol around `ingest(onFlags, onCommitted,
+    * onAudit)`, the store's ingest with its three hooks bound. The flag
+    * partition is written first, then the audit sidecar
+    * (`store.auditFile`, underscore-prefixed so parquet readers of the
+    * flag log skip it — a continuously-running query has no daily
+    * notification mail, so the flag log IS its run report), before any
+    * append; the `_COMMITTED` marker after the generation bump.
     */
-  private def committed(spark: SparkSession, flagsRoot: String, batchId: Long,
-      autoRecover: Boolean, recoverStore: () => Boolean,
-      discharge: Option[graft.dedup.StoreGuard.LockOwner] => Unit,
-      dischargeDead: Boolean => Boolean)
-      (run: (String, () => Unit) => Unit): Unit = {
+  private def committedBatch(spark: SparkSession, store: BandedStore, storeName: String,
+      flagsRoot: String, batchId: Long, autoRecover: Boolean,
+      onFlagsWritten: () => Unit, onMarkerWritten: () => Unit)
+      (ingest: (DataFrame => Unit, () => Unit, BandedStore.Audit => Unit) => DataFrame): Unit = {
+    store.ensureRegistered(spark, storeName)
     val part = new Path(s"$flagsRoot/batch_id=$batchId")
     val marker = new Path(part, "_COMMITTED")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -119,7 +128,7 @@ object CorpusStream {
                     finally in.close()
             graft.dedup.StoreGuard.parseOwner(s)
           } catch { case _: java.io.FileNotFoundException => None }
-        discharge(markerOwner)
+        store.dischargeCommitted(spark, storeName, markerOwner)
         // a writer dead one step LATER — between the pending clear and
         // its own unlock — leaves marker + no pending + a dead lock,
         // which the pending-gated discharge above cannot touch. The
@@ -130,11 +139,11 @@ object CorpusStream {
         // released (an AvailableNow stream whose LAST batch died there
         // would otherwise stay locked until a manual unlock), live or
         // unverifiable ⇒ left alone, exactly as before
-        dischargeDead(false)
+        store.dischargeDeadLock(spark, storeName, strict = false)
       }
       return
     }
-    if (autoRecover && !recoverStore()) {
+    if (autoRecover && !store.recoverArbitrated(spark, storeName)) {
       // recover() found no pending file and deliberately left any lock
       // alone (it could belong to a live build/drop). A predecessor of
       // THIS stream that died between lock acquisition and the pending
@@ -146,17 +155,45 @@ object CorpusStream {
       // with instructions (strict) — a live maintenance writer sharing
       // the store keeps its mutual exclusion instead of having its lock
       // silently deleted
-      dischargeDead(true)
+      store.dischargeDeadLock(spark, storeName, strict = true)
     }
     // the marker carries ITS writer's owner stamp so a later replay can
     // tell this batch's post-commit residue from a foreign writer's
     // mid-mutation state (see the marker-present arm above)
-    run(part.toString, () => {
-      val out = fs.create(marker, true)
-      try out.write(graft.dedup.StoreGuard.ownerStamp.getBytes("UTF-8"))
-      finally out.close()
-    })
+    val audit = new java.util.concurrent.atomic.AtomicReference[
+      Option[BandedStore.Audit]](None)
+    ingest(
+      f => {
+        f.write.mode("overwrite").parquet(part.toString)
+        audit.get().foreach { a =>
+          val out = fs.create(new Path(part, store.auditFile), true)
+          try out.write(a.json.getBytes("UTF-8")) finally out.close()
+        }
+        onFlagsWritten()
+      },
+      () => {
+        val out = fs.create(marker, true)
+        try out.write(graft.dedup.StoreGuard.ownerStamp.getBytes("UTF-8"))
+        finally out.close()
+        onMarkerWritten()
+      },
+      a => audit.set(Some(a)))
+    ()
   }
+
+  /** The continuous ingest query over `df`: each micro-batch runs
+    * `perBatch(batch, batchId)`.
+    */
+  private def stream(df: DataFrame, checkpoint: String,
+      trigger: org.apache.spark.sql.streaming.Trigger)
+      (perBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+    df.writeStream
+      .option("checkpointLocation", checkpoint)
+      .trigger(trigger)
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+        perBatch(batch.toDF(), batchId)
+      }
+      .start()
 
   /** One micro-batch of the document ingest stream, factored out so the
     * exactly-once contract is testable without a streaming query:
@@ -176,33 +213,12 @@ object CorpusStream {
         * halting there leaves the marker→pending-clear residue window.
         */
       onFlagsWritten: () => Unit = () => (),
-      onMarkerWritten: () => Unit = () => ()): Unit = {
-    SignatureStore.ensureRegistered(spark, storeName)
-    committed(spark, flagsRoot, batchId, autoRecover,
-      () => SignatureStore.recoverArbitrated(spark, storeName),
-      owner => SignatureStore.dischargeCommitted(spark, storeName, owner),
-      strict => SignatureStore.dischargeDeadLock(spark, storeName, strict)) { (part, mark) =>
-      // band-bucket histogram persisted per batch as the embedding
-      // twin persists `_lsh_audit.json` — after the flags parquet
-      // (whose overwrite clears the partition), before the marker
-      val audit = new java.util.concurrent.atomic.AtomicReference[
-        Option[SignatureStore.IngestAudit]](None)
+      onMarkerWritten: () => Unit = () => ()): Unit =
+    committedBatch(spark, SignatureStore, storeName, flagsRoot, batchId, autoRecover,
+        onFlagsWritten, onMarkerWritten) { (onFlags, onCommitted, onAudit) =>
       SignatureStore.ingest(spark, batch, storeName, threshold,
-        onFlags = f => {
-          f.write.mode("overwrite").parquet(part)
-          audit.get().foreach { a =>
-            val p = new Path(part, "_band_audit.json")
-            val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            val out = fs.create(p, true)
-            try out.write(a.json.getBytes("UTF-8")) finally out.close()
-          }
-          onFlagsWritten()
-        },
-        onCommitted = () => { mark(); onMarkerWritten() },
-        onAudit = a => audit.set(Some(a)))
-      ()
+        onFlags = onFlags, onCommitted = onCommitted, onAudit = onAudit)
     }
-  }
 
   /** The continuous ingest query: documents stream in, flags stream out
     * at `flagsRoot` (read the log with `spark.read.parquet(flagsRoot)` —
@@ -218,66 +234,33 @@ object CorpusStream {
       onFlagsWritten: () => Unit = () => (),
       onMarkerWritten: () => Unit = () => ())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        ingestBatch(batch.sparkSession, batch.toDF(), storeName, flagsRoot,
-          batchId, threshold, autoRecover, onFlagsWritten, onMarkerWritten)
-      }
-      .start()
+    stream(docs, checkpoint, trigger) { (batch, batchId) =>
+      ingestBatch(batch.sparkSession, batch, storeName, flagsRoot,
+        batchId, threshold, autoRecover, onFlagsWritten, onMarkerWritten)
+    }
 
   // ---- embedding twin (the s06 cadence, same contract throughout) ----
 
   /** File-source stream over parquet embedding files. */
   def readEmbeddings(spark: SparkSession, dir: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val schema = "vec_id LONG, embedding ARRAY<FLOAT>, label INT"
-    val r = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
-    r.parquet(dir)
-  }
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    readParquet(spark, dir, maxFilesPerTrigger, "vec_id LONG, embedding ARRAY<FLOAT>, label INT")
 
   /** One micro-batch of the embedding ingest stream — the
-    * [[EmbeddingStore]] twin of [[ingestBatch]], same protocol. The
-    * ingest's LSH bucket audit is persisted as `_lsh_audit.json` inside
-    * the batch's flag partition (underscore-prefixed, so parquet
-    * readers of the flag log skip it): cap drops are recall loss, and a
-    * continuously-running query has no daily notification mail — the
-    * flag log IS its run report. Written after the flags parquet (whose
-    * overwrite clears the partition dir) and before the `_COMMITTED`
-    * marker, so a committed batch always carries its accounting and a
-    * crashed one is rewritten on the re-run.
+    * [[EmbeddingStore]] twin of [[ingestBatch]], same protocol; the
+    * audit sidecar is `_lsh_audit.json` (cap drops are recall loss).
     */
   def ingestEmbeddingsBatch(spark: SparkSession, batch: DataFrame, storeName: String,
       flagsRoot: String, batchId: Long, threshold: Double = 0.9,
       autoRecover: Boolean = true, bucketCap: Int = 1000,
       onFlagsWritten: () => Unit = () => (),
-      onMarkerWritten: () => Unit = () => ()): Unit = {
-    EmbeddingStore.ensureRegistered(spark, storeName)
-    committed(spark, flagsRoot, batchId, autoRecover,
-      () => EmbeddingStore.recoverArbitrated(spark, storeName),
-      owner => EmbeddingStore.dischargeCommitted(spark, storeName, owner),
-      strict => EmbeddingStore.dischargeDeadLock(spark, storeName, strict)) { (part, mark) =>
-      val audit = new java.util.concurrent.atomic.AtomicReference[
-        Option[EmbeddingStore.IngestAudit]](None)
+      onMarkerWritten: () => Unit = () => ()): Unit =
+    committedBatch(spark, EmbeddingStore, storeName, flagsRoot, batchId, autoRecover,
+        onFlagsWritten, onMarkerWritten) { (onFlags, onCommitted, onAudit) =>
       EmbeddingStore.ingest(spark, batch, storeName, threshold = threshold,
-        onFlags = f => {
-          f.write.mode("overwrite").parquet(part)
-          audit.get().foreach { a =>
-            val p = new Path(part, "_lsh_audit.json")
-            val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            val out = fs.create(p, true)
-            try out.write(a.json.getBytes("UTF-8")) finally out.close()
-          }
-          onFlagsWritten()
-        },
-        onCommitted = () => { mark(); onMarkerWritten() },
-        bucketCap = bucketCap,
-        onAudit = a => audit.set(Some(a)))
-      ()
+        onFlags = onFlags, onCommitted = onCommitted, bucketCap = bucketCap,
+        onAudit = onAudit)
     }
-  }
 
   /** The continuous embedding-ingest query — [[ingestStream]]'s twin. */
   def ingestEmbeddingsStream(vecs: DataFrame, storeName: String, flagsRoot: String,
@@ -288,13 +271,9 @@ object CorpusStream {
       onFlagsWritten: () => Unit = () => (),
       onMarkerWritten: () => Unit = () => ())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        ingestEmbeddingsBatch(batch.sparkSession, batch.toDF(), storeName,
-          flagsRoot, batchId, threshold, autoRecover, bucketCap,
-          onFlagsWritten, onMarkerWritten)
-      }
-      .start()
+    stream(vecs, checkpoint, trigger) { (batch, batchId) =>
+      ingestEmbeddingsBatch(batch.sparkSession, batch, storeName,
+        flagsRoot, batchId, threshold, autoRecover, bucketCap,
+        onFlagsWritten, onMarkerWritten)
+    }
 }
