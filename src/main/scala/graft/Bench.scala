@@ -702,15 +702,6 @@ object Bench {
     case Left(_) => loadSeen > loadBar && !requieted
   }
 
-  /** Parse the per-query timings out of a prior round's artifact line
-    * (pure — BenchSpec pins it against [[renderLine]]'s own output).
-    * Only the `"queries":{...}` object is read: name→seconds pairs,
-    * `-1` failure placeholders dropped. Queries that rolled into
-    * `fast_n`/`fast_sec` in that round are simply absent — the caller
-    * treats absence as "was fast last round" ([[driftMovers]]).
-    * Returns empty on anything unparseable (a missing or truncated
-    * prior artifact must never break the current round's artifact).
-    */
   /** Unescape the driver's BENCH_rNN.json wrapper form — the artifact
     * line embedded as an ESCAPED JSON string inside a `"tail"` field
     * (`\"queries\":{...}`). The r19 baseline run silently skipped drift
@@ -724,6 +715,15 @@ object Bench {
     if (raw.contains("\"queries\":{")) raw
     else raw.replace("\\\\", "\u0000").replace("\\\"", "\"").replace('\u0000', '\\')
 
+  /** Parse the per-query timings out of a prior round's artifact line
+    * (pure — BenchSpec pins it against [[renderLine]]'s own output).
+    * Only the `"queries":{...}` object is read: name→seconds pairs,
+    * `-1` failure placeholders dropped. Queries that rolled into
+    * `fast_n`/`fast_sec` in that round are simply absent — the caller
+    * treats absence as "was fast last round" ([[driftMovers]]).
+    * Returns empty on anything unparseable (a missing or truncated
+    * prior artifact must never break the current round's artifact).
+    */
   private[graft] def parseQueryTimes(raw: String): Map[String, Double] = {
     val line = unescapeWrapper(raw)
     val start = line.indexOf("\"queries\":{")

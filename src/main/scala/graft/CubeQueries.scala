@@ -395,14 +395,6 @@ object CubeQueries {
       WHERE big_qty_sales IS NOT NULL OR deep_disc_sales IS NOT NULL
     """.stripMargin.trim))
 
-  /** G1 at full width — the daily_sales "47 measures on Axis0" shape
-    * (`pipelines.yaml:20-67`): one wide agg at (supplier × fiscal
-    * period) grain with exactly 47 sum/avg/count/count-distinct/
-    * conditional measures generated from a single spec, exactly how the
-    * engine compiles a mapping file. One shuffle regardless of measure
-    * count — partial aggregation combines map-side, so the shuffle
-    * carries one 47-column partial row per (group × task).
-    */
   /** The 47-measure daily_sales set as (name, spark aggregate, duckdb
     * mirror) triples — q11 verifies it against the oracle; the
     * Orchestrator binds it positionally to the 47 captions of the
@@ -492,6 +484,14 @@ object CubeQueries {
       perFlag ++ perStatus ++ discBuckets ++ extremes // 8+3+4+18+6+3+5 = 47
   }
 
+  /** G1 at full width — the daily_sales "47 measures on Axis0" shape
+    * (`pipelines.yaml:20-67`): one wide agg at (supplier × fiscal
+    * period) grain with exactly 47 sum/avg/count/count-distinct/
+    * conditional measures generated from a single spec, exactly how the
+    * engine compiles a mapping file. One shuffle regardless of measure
+    * count — partial aggregation combines map-side, so the shuffle
+    * carries one 47-column partial row per (group × task).
+    */
   val q11: QueryDef = {
     val all = dailySalesMeasures
     QueryDef(

@@ -365,16 +365,6 @@ object DedupQueries {
       WHERE dot / (sqrt(na.ns) * sqrt(nb.ns)) >= 0.9
     """.stripMargin.trim))
 
-  /** Incremental dedup against a persisted signature store: history
-    * (doc_id % 10 ≠ 0) is hashed once into bucketed store tables
-    * ([[graft.dedup.SignatureStore]]), then the new batch
-    * (doc_id % 10 = 0) dedupes against it — candidates from a band-key
-    * equi-join into the store's bucketing, exact-Jaccard re-verify
-    * against the store's df-capped inverted index. At 100 TB this is the
-    * only affordable dedup cadence: daily cost tracks the batch, the
-    * history side is read pre-bucketed and never reshuffled. The oracle
-    * replays the identical recipe over the two corpora side by side.
-    */
   /** Build-once/probe-many lifecycle shared by d07 AND d08: ONE history
     * store per JVM per data dir ([[graft.OncePerJvm]], keyed by the
     * dir's slug so path aliases like a trailing slash can't trigger a
@@ -392,6 +382,16 @@ object DedupQueries {
       Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0), name)))
   }
 
+  /** Incremental dedup against a persisted signature store: history
+    * (doc_id % 10 ≠ 0) is hashed once into bucketed store tables
+    * ([[graft.dedup.SignatureStore]]), then the new batch
+    * (doc_id % 10 = 0) dedupes against it — candidates from a band-key
+    * equi-join into the store's bucketing, exact-Jaccard re-verify
+    * against the store's df-capped inverted index. At 100 TB this is the
+    * only affordable dedup cadence: daily cost tracks the batch, the
+    * history side is read pre-bucketed and never reshuffled. The oracle
+    * replays the identical recipe over the two corpora side by side.
+    */
   val d07 = QueryDef(
     "d07_incremental_dedup",
     (s, dir) => {
@@ -432,8 +432,8 @@ object DedupQueries {
     * sub-corpus (df cap re-applied WITHIN the survivors, exactly like
     * the engine's second LSH pass), the within-survivor pair recipe,
     * and the recursive min-label components.
-    */
-  /** Same shared store as d07 — but `ingest` MUTATES it (appends the
+    *
+    * Same shared store as d07 — but `ingest` MUTATES it (appends the
     * batch's survivors), so each execution rolls the appends back to the
     * memoized post-build snapshot after the flags are materialized
     * ([[graft.dedup.SignatureStore.rollback]]). The timed path is one
@@ -613,14 +613,6 @@ object DedupQueries {
       GROUP BY 1
     """.stripMargin.trim))
 
-  /** Exact substring-level dedup (`Dedup.duplicatedSpans`): maximal
-    * ≥15-token spans whose every 5-gram also occurs in another document
-    * — the Lee-et-al "remove any duplicated span" pass, and the only
-    * dedup mode here that is fully LINEAR (gram-hash aggregate +
-    * semi-join + per-doc interval merge; no pair space anywhere). The
-    * oracle replays tokenization, the 60-bit gram hashes, cross-doc
-    * sharedness, and the gaps-and-islands merge position for position.
-    */
   /** The positional-gram → shared-gram → gaps-and-islands CTE chain of
     * the substring-dedup recipe, ending in `fspans(doc_id, s, e)` — the
     * ≥15-token maximal duplicated intervals. Shared by d12 (publishes
@@ -651,6 +643,14 @@ object DedupQueries {
         FROM isl GROUP BY doc_id, island),
       fspans AS (SELECT doc_id, s, e FROM spansx WHERE e - s >= 15)"""
 
+  /** Exact substring-level dedup (`Dedup.duplicatedSpans`): maximal
+    * ≥15-token spans whose every 5-gram also occurs in another document
+    * — the Lee-et-al "remove any duplicated span" pass, and the only
+    * dedup mode here that is fully LINEAR (gram-hash aggregate +
+    * semi-join + per-doc interval merge; no pair space anywhere). The
+    * oracle replays tokenization, the 60-bit gram hashes, cross-doc
+    * sharedness, and the gaps-and-islands merge position for position.
+    */
   val d12 = QueryDef(
     "d12_substring_dedup",
     (s, dir) => Dedup.duplicatedSpans( // fan-out: see d02 (r19);

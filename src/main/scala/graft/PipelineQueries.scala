@@ -74,8 +74,8 @@ object PipelineQueries {
     * the 364-day-aligned prior year (G7): the same aggregate shifted one
     * retail year forward and left-joined — no second fact scan shape at
     * scale beyond the self-join on the aggregate (group-grain-small).
-    */
-  /** The sales_channel aggregation, exposed for the Orchestrator (which
+    *
+    * The sales_channel aggregation, exposed for the Orchestrator (which
     * applies the slicer window via `pre` before the aggregate — filter
     * first, aggregate the pruned fact). `onPersist` receives the
     * persisted TY aggregate, so a caller outside the clearCache()-per-query

@@ -528,28 +528,10 @@ object Runner {
       val p = opts("pipeline")
       val slice = Orchestrator.sliceFor(
         opts.getOrElse("length", "2wk"), opts.get("fy").map(_.toInt), opts.get("fp").map(_.toInt))
-      // crash-atomic versioned sink by default; --sink managed opts into
-      // the catalog table (stock spark.table readers, non-atomic commit)
-      val sink: Orchestrator.Sink = opts.getOrElse("sink", "versioned") match {
-        case "versioned" => Orchestrator.VersionedSink()
-        case "managed" => Orchestrator.ManagedSink()
-        case other => sys.error(s"unknown --sink '$other' (versioned|managed)")
-      }
+      // every sync lands in its pipeline's crash-atomic versioned root
+      val sink = Orchestrator.VersionedSink()
       val selected = if (p == "all") Orchestrator.pipelines else Seq(p)
-      sink match {
-        case vs: Orchestrator.VersionedSink =>
-          // the default moved from catalog tables to versioned roots: a
-          // graft_sync_* table left by an earlier managed-sink run will NOT
-          // see these updates any more — say so instead of silently forking
-          selected.foreach { pl =>
-            if (spark.catalog.tableExists(s"graft_sync_$pl"))
-              println(s"[sync] WARNING: legacy managed table graft_sync_$pl exists and " +
-                s"will not be updated; this sync writes ${vs.rootOf(spark, pl)} " +
-                "(read it with VersionedTable.read, or pass --sink managed)")
-            else println(s"[sync] $pl -> ${vs.rootOf(spark, pl)}")
-          }
-        case _ => ()
-      }
+      selected.foreach(pl => println(s"[sync] $pl -> ${sink.rootOf(spark, pl)}"))
       val results =
         if (p == "all") Orchestrator.runAll(spark, sfDir, slice, sink = sink)
         else Seq(Orchestrator.run(spark, sfDir, p, slice, sink = sink))

@@ -410,6 +410,20 @@ object TextQueries {
       FROM r GROUP BY 1
     """.stripMargin.trim))
 
+  /** O(m) exclusive prefix sum over a control-plane-sized array — the
+    * TOP level of [[packSequences]]'s distributed cumsum. A Scala
+    * closure, but NEVER in the hot path: it runs exactly once per
+    * query, over one row holding the superbucket totals (corpus /
+    * 10^6 elements — 8 MB of longs at a trillion documents). Spark has
+    * no builtin scan/prefix HOF, and the `aggregate`/`transform`
+    * emulations are O(m²) in either time or array-copy churn.
+    */
+  private val exclusivePrefix =
+    udf((totals: Seq[Long]) => {
+      var acc = 0L
+      totals.map { t => val out = acc; acc += t; out }
+    })
+
   /** Sequence packing: assign every document its token offset in the
     * doc_id-ordered concatenation of the corpus, the fixed-budget
     * training sequence it lands in (`seq_id = offset div 2048`), and
@@ -426,8 +440,8 @@ object TextQueries {
     * scale — take one O(m) array prefix on a single collected row,
     * broadcast back. Integer addition is associative, so the result is
     * bit-identical to the oracle's single global cumsum.
-    */
-  /** The packing recipe over ANY (doc_id, n_tokens) frame — t11 feeds
+    *
+    * The packing recipe over ANY (doc_id, n_tokens) frame — t11 feeds
     * it whitespace-token counts (the oracle-checked default); feed it
     * real encoder counts for REAL model-token budgets (the opt-in mode
     * a production packer uses once a tokenizer is pinned —
@@ -440,20 +454,6 @@ object TextQueries {
     * most merges dead and silently inflates every count — the exact
     * failure `Bpe.loadVocab`'s arbitration exists to prevent.
     */
-  /** O(m) exclusive prefix sum over a control-plane-sized array — the
-    * TOP level of [[packSequences]]'s distributed cumsum. A Scala
-    * closure, but NEVER in the hot path: it runs exactly once per
-    * query, over one row holding the superbucket totals (corpus /
-    * 10^6 elements — 8 MB of longs at a trillion documents). Spark has
-    * no builtin scan/prefix HOF, and the `aggregate`/`transform`
-    * emulations are O(m²) in either time or array-copy churn.
-    */
-  private val exclusivePrefix =
-    udf((totals: Seq[Long]) => {
-      var acc = 0L
-      totals.map { t => val out = acc; acc += t; out }
-    })
-
   def packSequences(d0: org.apache.spark.sql.DataFrame,
       budget: Int = 2048): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -584,8 +584,8 @@ object TextQueries {
     * the token array materializes ONCE (HOF-hygiene rule), chunk ids
     * explode from a sequence, and each chunk is a slice — no shuffle
     * anywhere, linear in corpus size.
-    */
-  /** The chunking recipe over ANY (doc_id, toks array<string>) frame —
+    *
+    * The chunking recipe over ANY (doc_id, toks array<string>) frame —
     * t13 feeds it whitespace tokens (the oracle-checked default); feed
     * it encoder output for chunks measured in REAL model tokens
     * (opt-in, spec-verified in TextSpec): `bpe_tokens(norm)` under the

@@ -125,18 +125,6 @@ object Dedup {
   private def perm(h: Column, i: Int): Column =
     (h * (2 * i + 1) + (7919 * i + 1)) % MinhashP
 
-  /** MinHash band signatures, b bands × 2 rows: 2b permuted min-hashes,
-    * band key = the band's two mins. Returns (doc_id, band, band_hash)
-    * — the LSH bucket key. Candidate probability for similarity s is
-    * 1 − (1−s²)^b — the r=2 rows kill the long tail of weak single-hash
-    * collisions (r=1 gave 82k candidates on 5k docs; r=2 gives ~1.5k)
-    * while keeping ~90% recall at s=0.5. Candidates are re-verified
-    * with exact Jaccard, so precision is decided there, not here.
-    *
-    * Shape: explode shingles once, one md5 + mod-P base hash per
-    * shingle, then ONE hash-aggregate computing all 2b mins (codegen'd,
-    * map-side partial) — a single narrow shuffle on doc_id.
-    */
   /** [[minhashBands]] over pre-exploded shingle rows. */
   def bandsFromShingles(sh: DataFrame, bands: Int = 8, rows: Int = 2): DataFrame = {
     val hashed = sh
@@ -151,7 +139,19 @@ object Dedup {
             col(s"__m${rows * b + r}").cast("string")): _*)): _*)).as(Seq("band", "band_hash")))
   }
 
-  /** @param rows minhash rows per band — the band-bucket SELECTIVITY
+  /** MinHash band signatures, b bands × 2 rows: 2b permuted min-hashes,
+    * band key = the band's two mins. Returns (doc_id, band, band_hash)
+    * — the LSH bucket key. Candidate probability for similarity s is
+    * 1 − (1−s²)^b — the r=2 rows kill the long tail of weak single-hash
+    * collisions (r=1 gave 82k candidates on 5k docs; r=2 gives ~1.5k)
+    * while keeping ~90% recall at s=0.5. Candidates are re-verified
+    * with exact Jaccard, so precision is decided there, not here.
+    *
+    * Shape: explode shingles once, one md5 + mod-P base hash per
+    * shingle, then ONE hash-aggregate computing all 2b mins (codegen'd,
+    * map-side partial) — a single narrow shuffle on doc_id.
+    *
+    * @param rows minhash rows per band — the band-bucket SELECTIVITY
     *   knob: a band collides with probability J^rows, so raising rows
     *   from the default 2 (the oracle-pinned geometry every d-query
     *   replays) to 3+ is the remediation when a boilerplate-heavy
@@ -513,31 +513,6 @@ object Dedup {
       .withColumn("flagged", when(col("n_maybe_hits") > 0, 1).otherwise(0))
   }
 
-  /** Exact substring-level dedup (the Lee et al. 2021 "deduplicating
-    * training data" pass): per document, the MAXIMAL token intervals
-    * every position of which starts a k-gram that also occurs in at
-    * least one OTHER document — i.e. the spans a substring-dedup pass
-    * would cut. Published per span: 0-based token offsets
-    * `[span_start, span_end)`, the token count, and an md5 fingerprint
-    * of the span's canonical text (so downstream can group identical
-    * cut spans across the corpus without re-reading the documents).
-    *
-    * Semantics: a k-gram occurrence is duplicated iff its gram VALUE
-    * appears in ≥2 distinct documents (within-doc repetition alone is
-    * repetition, not duplication — t07 measures that); duplicated
-    * gram START positions merge into one span while consecutive starts
-    * are ≤ k apart (their k-token coverages overlap or abut), and only
-    * spans of ≥ `minTokens` tokens are kept.
-    *
-    * Scale shape — this pass is LINEAR, unlike any pairwise dedup:
-    * gram sharedness is one aggregate on the 60-bit gram hash (never a
-    * doc-list or pair join; a gram shared by a million docs still
-    * produces ONE row on the build side of the 1:1 semi-join), the
-    * interval merge is a per-document window over that document's
-    * duplicated positions only, and no operator touches a pair space.
-    * Grams travel as 60-bit md5-prefix longs (8 bytes, engine-portable
-    * so the DuckDB oracle replays sharedness bit-for-bit).
-    */
   /** Tokenized corpus: (doc_id, __toks) with the canonical token array
     * materialized (HOF hygiene — see TextFunctions.shinglesOf).
     */
@@ -584,6 +559,31 @@ object Dedup {
           slice(col("__toks"), col("__s") + 1, col("__e") - col("__s"))))
           .as("span_fp"))
 
+  /** Exact substring-level dedup (the Lee et al. 2021 "deduplicating
+    * training data" pass): per document, the MAXIMAL token intervals
+    * every position of which starts a k-gram that also occurs in at
+    * least one OTHER document — i.e. the spans a substring-dedup pass
+    * would cut. Published per span: 0-based token offsets
+    * `[span_start, span_end)`, the token count, and an md5 fingerprint
+    * of the span's canonical text (so downstream can group identical
+    * cut spans across the corpus without re-reading the documents).
+    *
+    * Semantics: a k-gram occurrence is duplicated iff its gram VALUE
+    * appears in ≥2 distinct documents (within-doc repetition alone is
+    * repetition, not duplication — t07 measures that); duplicated
+    * gram START positions merge into one span while consecutive starts
+    * are ≤ k apart (their k-token coverages overlap or abut), and only
+    * spans of ≥ `minTokens` tokens are kept.
+    *
+    * Scale shape — this pass is LINEAR, unlike any pairwise dedup:
+    * gram sharedness is one aggregate on the 60-bit gram hash (never a
+    * doc-list or pair join; a gram shared by a million docs still
+    * produces ONE row on the build side of the 1:1 semi-join), the
+    * interval merge is a per-document window over that document's
+    * duplicated positions only, and no operator touches a pair space.
+    * Grams travel as 60-bit md5-prefix longs (8 bytes, engine-portable
+    * so the DuckDB oracle replays sharedness bit-for-bit).
+    */
   def duplicatedSpans(docs: DataFrame, k: Int = 5, minTokens: Int = 15): DataFrame = {
     val toks = tokenized(docs)
     val grams = positionalGrams(toks, k)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.cube.FiscalCalendar
 import graft.etl.{Pipeline, SpecLoader}
-import graft.sinks.{TableManager, VersionedTable}
+import graft.sinks.VersionedTable
 
 /** E1 depth — the one-command pipeline orchestration of the reference's
   * CLI (`/root/reference/modules/olap_sync.py:192-468`): pick the slicer
@@ -14,7 +14,7 @@ import graft.sinks.{TableManager, VersionedTable}
   * pipeline's native aggregation with the slicer window pushed BELOW the
   * aggregate (filter-then-aggregate — the engine's form of "the cube only
   * aggregates the sliced cells"), compile the shipped mapping YAML, MERGE
-  * into the managed keyed table, and notify.
+  * into the versioned keyed table, and notify.
   *
   * `--length 1wk|2wk` maps to the reference's MyView IDs (81 = 7 days,
   * 82 = 14 days, `modules/mdx_queries.py:14-18`): a rolling window
@@ -151,35 +151,13 @@ object Orchestrator {
       pipeline: String, slicer: String, rows: Long,
       created: Long, updated: Long, elapsedSec: Double, error: Option[String])
 
-  /** Where an orchestrated sync lands. Two implementations, one contract:
-    * expose the pre-merge key set (for the created/updated accounting)
-    * and MERGE by business key.
-    */
-  sealed trait Sink {
-    /** Column-pruned pre-merge `business_key` set; empty on first run. */
-    def existingKeys(spark: SparkSession, pipeline: String, schema: StructType): DataFrame
-    def merge(spark: SparkSession, pipeline: String, out: DataFrame): Unit
-  }
-
-  /** Catalog-managed keyed table (`TableManager`) — stock `spark.table`
-    * readers, but the INSERT OVERWRITE commit is not crash-atomic.
-    */
-  final case class ManagedSink(tableFor: String => String = p => s"graft_sync_$p")
-      extends Sink {
-    def existingKeys(spark: SparkSession, pipeline: String, schema: StructType): DataFrame = {
-      TableManager.ensureKeyedTable(spark, tableFor(pipeline), schema, "business_key")
-      spark.table(tableFor(pipeline)).select("business_key")
-    }
-    def merge(spark: SparkSession, pipeline: String, out: DataFrame): Unit =
-      TableManager.mergeInto(spark, tableFor(pipeline), out, "business_key")
-  }
-
-  /** Crash-atomic versioned table ([[VersionedTable]]) — the DEFAULT for
-    * the production sync: the reference's sink is per-row atomic (PATCH by
-    * alternate key, `modules/dataverse.py:88`), so the engine's daily path
-    * must not be able to leave a half-overwritten table. A relative root
-    * resolves under the session warehouse dir. `onBeforePublish` is the
-    * crash-test seam threaded through to `VersionedTable.merge`.
+  /** Where every orchestrated sync lands: a crash-atomic versioned table
+    * ([[VersionedTable]]) per pipeline. The reference's sink is per-row
+    * atomic (PATCH by alternate key, `modules/dataverse.py:88`), so the
+    * engine's daily path must not be able to leave a half-overwritten
+    * table. A relative root resolves under the session warehouse dir.
+    * `onBeforePublish` is the crash-test seam threaded through to
+    * `VersionedTable.merge` and `VersionedTable.overwrite`.
     *
     * The table is partitioned by `p_fy = year(calendar_date)` when the
     * pipeline output carries the fact date — a daily sync then reads back
@@ -191,13 +169,14 @@ object Orchestrator {
     * `removeMovedKeys`.
     */
   final case class VersionedSink(rootFor: String => String = p => s"graft_versioned_$p",
-      onBeforePublish: () => Unit = () => ()) extends Sink {
+      onBeforePublish: () => Unit = () => ()) {
     def rootOf(spark: SparkSession, pipeline: String): String = {
       val r = new org.apache.hadoop.fs.Path(rootFor(pipeline))
       if (r.isAbsolute) r.toString
       else new org.apache.hadoop.fs.Path(
         new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir")), r).toString
     }
+    /** Column-pruned pre-merge `business_key` set; empty on first run. */
     def existingKeys(spark: SparkSession, pipeline: String, schema: StructType): DataFrame = {
       val root = rootOf(spark, pipeline)
       if (VersionedTable.version(spark, root) == 0)
@@ -205,14 +184,22 @@ object Orchestrator {
           StructType(Seq(schema("business_key"))))
       else VersionedTable.read(spark, root).select("business_key")
     }
+    /** MERGE `out` by business key. */
     def merge(spark: SparkSession, pipeline: String, out: DataFrame): Unit = {
-      val (data, parts) =
-        if (out.columns.contains("calendar_date"))
-          (out.withColumn("p_fy", year(col("calendar_date"))), Seq("p_fy"))
-        else (out, Seq.empty[String])
+      val (data, parts) = laidOut(out)
       VersionedTable.merge(spark, rootOf(spark, pipeline), data, "business_key",
         partitionCols = parts, onBeforePublish = onBeforePublish)
     }
+    /** Replace the whole table with `out` in one new version. */
+    def overwrite(spark: SparkSession, pipeline: String, out: DataFrame): Unit = {
+      val (data, parts) = laidOut(out)
+      VersionedTable.overwrite(spark, rootOf(spark, pipeline), data,
+        partitionCols = parts, onBeforePublish = onBeforePublish)
+    }
+    private def laidOut(out: DataFrame): (DataFrame, Seq[String]) =
+      if (out.columns.contains("calendar_date"))
+        (out.withColumn("p_fy", year(col("calendar_date"))), Seq("p_fy"))
+      else (out, Seq.empty[String])
   }
 
   /** Run one pipeline end-to-end: source → mapping → keyed MERGE →
@@ -235,7 +222,7 @@ object Orchestrator {
     */
   def run(spark: SparkSession, sfDir: String, pipeline: String, slice: Slice,
       notifier: Option[Notifier.Config] = None,
-      sink: Sink = VersionedSink()): RunResult = {
+      sink: VersionedSink = VersionedSink()): RunResult = {
     val t0 = System.nanoTime()
     val slicer = mdxSlicer(pipeline, slice)
     val result =
@@ -258,19 +245,16 @@ object Orchestrator {
           RunResult(pipeline, slicer, 0, 0, 0, (System.nanoTime() - t0) / 1e9,
             Some(s"${e.getClass.getSimpleName}: ${e.getMessage}"))
       }
-    notifier.foreach { cfg =>
-      val (subject, body) = Notifier.format(Notifier.RunSummary(
-        s"$pipeline [$slicer]", result.created, result.updated,
-        if (result.error.isDefined) 1 else 0, result.elapsedSec, result.error))
-      Notifier.send(cfg, subject, body) // never fails the run
-    }
+    sendSummary(notifier, Notifier.RunSummary(
+      s"$pipeline [$slicer]", result.created, result.updated,
+      if (result.error.isDefined) 1 else 0, result.elapsedSec, result.error))
     result
   }
 
   /** `--query all` — every pipeline through the same entry point. */
   def runAll(spark: SparkSession, sfDir: String, slice: Slice,
       notifier: Option[Notifier.Config] = None,
-      sink: Sink = VersionedSink()): Seq[RunResult] =
+      sink: VersionedSink = VersionedSink()): Seq[RunResult] =
     pipelines.map(run(spark, sfDir, _, slice, notifier, sink))
 
   final case class RefreshResult(
@@ -324,18 +308,9 @@ object Orchestrator {
             .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
           val rows = rowsByFy.values.sum
           if (rows == 0) sys.error("No data returned from source for any fiscal year")
-          val data0 = out.drop("__fy")
-          val (data, parts) =
-            if (data0.columns.contains("calendar_date"))
-              (data0.withColumn("p_fy", year(col("calendar_date"))), Seq("p_fy"))
-            else (data0, Seq.empty[String])
-          if (skipDelete)
-            VersionedTable.merge(spark, sink.rootOf(spark, pipeline), data,
-              "business_key", partitionCols = parts,
-              onBeforePublish = sink.onBeforePublish)
-          else
-            VersionedTable.overwrite(spark, sink.rootOf(spark, pipeline), data,
-              partitionCols = parts, onBeforePublish = sink.onBeforePublish)
+          val data = out.drop("__fy")
+          if (skipDelete) sink.merge(spark, pipeline, data)
+          else sink.overwrite(spark, pipeline, data)
           RefreshResult(pipeline, fyYears, rowsByFy, rows,
             (System.nanoTime() - t0) / 1e9, dryRun = false, None)
         } finally (out +: cached.result()).foreach(_.unpersist())
@@ -345,13 +320,10 @@ object Orchestrator {
             (System.nanoTime() - t0) / 1e9, dryRun = false,
             Some(s"${e.getClass.getSimpleName}: ${e.getMessage}"))
       }
-    notifier.foreach { cfg =>
-      val (subject, body) = Notifier.format(Notifier.RunSummary(
-        s"full-refresh $pipeline [FY ${fyYears.mkString(",")}]",
-        result.rows, 0, if (result.error.isDefined) 1 else 0,
-        result.elapsedSec, result.error))
-      Notifier.send(cfg, subject, body) // never fails the run
-    }
+    sendSummary(notifier, Notifier.RunSummary(
+      s"full-refresh $pipeline [FY ${fyYears.mkString(",")}]",
+      result.rows, 0, if (result.error.isDefined) 1 else 0,
+      result.elapsedSec, result.error))
     result
   }
 
@@ -416,11 +388,8 @@ object Orchestrator {
                 error = Some(err)))
               catch { case e2: Exception => System.err.println(
                 s"[maintenance] $what onMaintain failed: ${e2.getMessage}") }
-              notifier.foreach { cfg =>
-                val (subject, body) = Notifier.format(Notifier.RunSummary(
-                  s"maintenance $what", 0, 0, 1, 0.0, Some(err)))
-                Notifier.send(cfg, subject, body) // never fails the sweep
-              }
+              sendSummary(notifier, Notifier.RunSummary(
+                s"maintenance $what", 0, 0, 1, 0.0, Some(err)))
           }
         pipelines.foreach(p =>
           isolated(s"pipeline $p")(onMaintain(maintain(spark, p, retainVersions, sink))))
@@ -498,13 +467,8 @@ object Orchestrator {
           onMaintain(MaintainResult(
             s"remediation $s (AUDIT ALERT: $n consecutive breaches — remediation scheduled and run)",
             "", 0, 0, skipped = false))
-          notifier.foreach { cfg =>
-            val (subject, body) = Notifier.format(Notifier.RunSummary(
-              s"remediation $s", 0, 0, 0, 0.0, None))
-            Notifier.send(cfg,
-              subject, body + s"\nAUDIT ALERT: $n consecutive breaches — " +
-                "remediation scheduled and run")
-          }
+          sendSummary(notifier, Notifier.RunSummary(s"remediation $s", 0, 0, 0, 0.0, None),
+            Seq(s"AUDIT ALERT: $n consecutive breaches — remediation scheduled and run"))
         } else onMaintain(MaintainResult(s"remediation $s", "", 0, 0,
           skipped = true))
       })
@@ -601,7 +565,7 @@ object Orchestrator {
     */
   def corpusIngest(spark: SparkSession, store: String, batch: DataFrame,
       notifier: Option[Notifier.Config] = None,
-      sink: Sink = VersionedSink(),
+      sink: VersionedSink = VersionedSink(),
       /** The SAME policy object that configures the sweep's remediation
         * threshold ([[scheduledJobs]]' `auditPolicy`) must configure the
         * stamper here — a hardcoded default would let a deployment
@@ -638,7 +602,7 @@ object Orchestrator {
     */
   def corpusIngestEmbeddings(spark: SparkSession, store: String, batch: DataFrame,
       notifier: Option[Notifier.Config] = None,
-      sink: Sink = VersionedSink(),
+      sink: VersionedSink = VersionedSink(),
       bucketCap: Int = 1000,
       /** See [[corpusIngest]]'s policy note: one policy object for the
         * stamper and the sweep, or their thresholds silently diverge.
@@ -670,7 +634,7 @@ object Orchestrator {
   private def runStoreIngest(spark: SparkSession, st: graft.dedup.BandedStore,
       store: String, jobLabel: String,
       notifier: Option[Notifier.Config],
-      sink: Sink,
+      sink: VersionedSink,
       policy: AuditPolicy,
       finish: CorpusResult => CorpusResult)(runIngest: => DataFrame): CorpusResult = {
     val t0 = System.nanoTime()
@@ -720,15 +684,22 @@ object Orchestrator {
           finish(CorpusResult(store, 0, 0, 0, (System.nanoTime() - t0) / 1e9,
             Some(s"${e.getClass.getSimpleName}: ${e.getMessage}$rbNote")))
       }
-    notifier.foreach { cfg =>
-      val (subject, body) = Notifier.format(Notifier.RunSummary(
-        s"$jobLabel $store", result.survivors, result.dups,
-        if (result.error.isDefined) 1 else 0, result.elapsedSec, result.error))
-      Notifier.send(cfg, subject,
-        (body +: lshAuditLines(result)).mkString("\n")) // never fails the run
-    }
+    sendSummary(notifier, Notifier.RunSummary(
+      s"$jobLabel $store", result.survivors, result.dups,
+      if (result.error.isDefined) 1 else 0, result.elapsedSec, result.error),
+      lshAuditLines(result))
     result
   }
+
+  /** Mail one run summary, `extra` lines appended to its body. Never
+    * fails the caller: `Notifier.send` reports a failed POST as false.
+    */
+  private def sendSummary(notifier: Option[Notifier.Config], run: Notifier.RunSummary,
+      extra: Seq[String] = Nil): Unit =
+    notifier.foreach { cfg =>
+      val (subject, body) = Notifier.format(run)
+      Notifier.send(cfg, subject, (body +: extra).mkString("\n"))
+    }
 
   /** The notification's drop-accounting lines — next to the
     * survivor/dup counts so an operator reading the daily mail sees a
@@ -760,33 +731,17 @@ object Orchestrator {
   final case class AuditPolicy(embCapPct: Int = 80, textMaxBucket: Long = 1000,
       consecutive: Int = 3)
 
-  /** One store's consecutive-breach counter. TWO implementations:
-    * the in-memory map below (a scheduler daemon counting within its
-    * own process, and the back-compat default of the 2-arg
-    * [[recordAuditAlert]]), and the DURABLE per-store sidecar the
-    * corpus cadences use ([[durableStreak]]) — because the verified
-    * production mode is one fresh JVM per daily `Runner
-    * --corpus-ingest` (cron), where a process-lifetime counter resets
-    * every run and "K breaches in a row" is unreachable.
+  /** One store's consecutive-breach counter. The corpus cadences keep
+    * it DURABLE, in a per-store sidecar ([[durableStreak]]), because the
+    * production mode is one fresh JVM per daily `Runner --corpus-ingest`
+    * (cron), where a process-lifetime counter would reset every run and
+    * "K breaches in a row" would be unreachable.
     */
   trait StreakStore {
     def read(): Int
     def write(n: Int): Unit
     def clear(): Unit
   }
-
-  /** Process-lifetime streaks (back-compat / daemon counting). */
-  private val breachStreaks =
-    scala.collection.concurrent.TrieMap.empty[String, Int]
-
-  private def memStreak(store: String): StreakStore = new StreakStore {
-    def read(): Int = breachStreaks.getOrElse(store, 0)
-    def write(n: Int): Unit = { breachStreaks.update(store, n); () }
-    def clear(): Unit = { breachStreaks.remove(store); () }
-  }
-
-  private[graft] def resetAuditStreak(store: String): Unit =
-    { breachStreaks.remove(store); () }
 
   /** The corpus cadences' durable streak: the store's sidecar file,
     * read-modify-written inside the ingest's single-writer lock (the
@@ -842,9 +797,4 @@ object Orchestrator {
             "dominates the daily ingest")))
     }
   }
-
-  /** Back-compat / direct form over the in-memory streak map. */
-  def recordAuditAlert(result: CorpusResult,
-      policy: AuditPolicy = AuditPolicy()): CorpusResult =
-    recordAuditAlert(result, policy, memStreak(result.store))
 }

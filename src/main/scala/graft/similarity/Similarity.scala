@@ -42,28 +42,6 @@ object Similarity {
     */
   def dotApprox(a: Column, b: Column): Column = toCol(DotFastExpr(toExpr(a), toExpr(b)))
 
-  /** Banded sign-bit LSH near-dup pairs — the embedding near-dup
-    * operator at scale (SURVEY.md §2.H). Candidate generation is a
-    * bucket equi-join on (band, band-hash) — the same recall/precision
-    * split as the MinHash-LSH dedup (graft.dedup.Dedup.minhashLshPairs):
-    * LSH proposes, the exact decimal cosine disposes. No operator in the
-    * plan touches the n² pair space; the join is a shuffled hash/sort
-    * join on band keys, never a nested-loop/theta join.
-    *
-    * Tuning math (Goemans–Williamson): P[sign bits agree] =
-    * 1 − θ/π where θ = arccos(cosine). At a true near-dup threshold
-    * (0.9+, θ ≤ 26°) a bit agrees with p ≥ 0.856 while random pairs
-    * agree at only p ≈ 0.5 per bit — so widening a band sharpens
-    * precision exponentially faster than it erodes recall, and recall
-    * is then bought back with more bands. Below cosine ≈ 0.6 sign-bit
-    * LSH cannot separate near-dups from noise (p_bit ≈ 0.63 vs 0.5) —
-    * that regime is not a near-dup problem and callers should use
-    * `bruteCosinePairs` or an IVF restriction instead.
-    *
-    * `bucketCap` drops pathological hot buckets (all-zero vectors, mass
-    * duplicates) exactly like the df-cap on the shingle inverted index —
-    * cost tracks genuine collisions, never a skew blowup.
-    */
   /** Banded sign-bit signatures of a (vec_id, emb) frame:
     * (vec_id, band, band_hash) — a NARROW per-row map: the codegen'd
     * [[graft.similarity.LshMath.bandHashes]] kernel computes every band hash inside one
@@ -168,6 +146,28 @@ object Similarity {
         max(col("count")).as("max_bucket"))
   }
 
+  /** Banded sign-bit LSH near-dup pairs — the embedding near-dup
+    * operator at scale (SURVEY.md §2.H). Candidate generation is a
+    * bucket equi-join on (band, band-hash) — the same recall/precision
+    * split as the MinHash-LSH dedup (graft.dedup.Dedup.minhashLshPairs):
+    * LSH proposes, the exact decimal cosine disposes. No operator in the
+    * plan touches the n² pair space; the join is a shuffled hash/sort
+    * join on band keys, never a nested-loop/theta join.
+    *
+    * Tuning math (Goemans–Williamson): P[sign bits agree] =
+    * 1 − θ/π where θ = arccos(cosine). At a true near-dup threshold
+    * (0.9+, θ ≤ 26°) a bit agrees with p ≥ 0.856 while random pairs
+    * agree at only p ≈ 0.5 per bit — so widening a band sharpens
+    * precision exponentially faster than it erodes recall, and recall
+    * is then bought back with more bands. Below cosine ≈ 0.6 sign-bit
+    * LSH cannot separate near-dups from noise (p_bit ≈ 0.63 vs 0.5) —
+    * that regime is not a near-dup problem and callers should use
+    * `bruteCosinePairs` or an IVF restriction instead.
+    *
+    * `bucketCap` drops pathological hot buckets (all-zero vectors, mass
+    * duplicates) exactly like the df-cap on the shingle inverted index —
+    * cost tracks genuine collisions, never a skew blowup.
+    */
   def lshCosinePairs(emb: DataFrame, idCol: String, vecCol: String,
       threshold: Double, planes: Int = 0, bandBits: Int = 0,
       bucketCap: Int = 1000,
@@ -250,12 +250,6 @@ object Similarity {
       .select("va", "vb", "cosine")
   }
 
-  /** Brute-force cosine top-k: each query row against the whole corpus,
-    * rank by similarity (deterministic id tie-break). The query side is
-    * broadcast — the corpus streams through map tasks untouched, which
-    * is the right baseline shape at 100 TB (one pass, no corpus
-    * shuffle).
-    */
   /** Scalar-quantized (SQ8) top-k: the corpus is compressed to one
     * int8 code per dimension against per-dimension [min, max] ranges,
     * and queries score against the DEQUANTIZED midpoints (asymmetric
@@ -310,6 +304,12 @@ object Similarity {
       .select("q_id", "n_id", "cosine_sq8", "rank")
   }
 
+  /** Brute-force cosine top-k: each query row against the whole corpus,
+    * rank by similarity (deterministic id tie-break). The query side is
+    * broadcast — the corpus streams through map tasks untouched, which
+    * is the right baseline shape at 100 TB (one pass, no corpus
+    * shuffle).
+    */
   def bruteTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, k: Int): DataFrame = {
     val q = broadcast(queries.select(col(idCol).as("q_id"), col(vecCol).as("q_emb"))

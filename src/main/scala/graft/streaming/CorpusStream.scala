@@ -72,8 +72,7 @@ import graft.similarity.EmbeddingStore
   * batch fails fast with instructions instead of silently deleting the
   * live lock and interleaving with a staged table swap. Unverifiable
   * locks (foreign host, no stamp) also fail fast — deadness that can't
-  * be proven is treated as life. `autoRecover = false` turns off all
-  * automatic arbitration for operators who want it manual.
+  * be proven is treated as life.
   */
 object CorpusStream {
 
@@ -102,7 +101,7 @@ object CorpusStream {
     * append; the `_COMMITTED` marker after the generation bump.
     */
   private def committedBatch(spark: SparkSession, store: BandedStore, storeName: String,
-      flagsRoot: String, batchId: Long, autoRecover: Boolean,
+      flagsRoot: String, batchId: Long,
       onFlagsWritten: () => Unit, onMarkerWritten: () => Unit)
       (ingest: (DataFrame => Unit, () => Unit, BandedStore.Audit => Unit) => DataFrame): Unit = {
     store.ensureRegistered(spark, storeName)
@@ -110,40 +109,38 @@ object CorpusStream {
     val marker = new Path(part, "_COMMITTED")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(marker)) {
-      if (autoRecover) {
-        // fully committed: discharge only what a writer dead in the
-        // marker→pending-clear window still owes. dischargeCommitted is
-        // pending-gated, so a replay of a CLEANLY completed batch (no
-        // recovery state at all) is a strict no-op — it can never delete
-        // a lock some other writer holds. The marker's owner stamp rides
-        // along: the pending found now is that predecessor's moot
-        // residue ONLY when its own stamp matches — a foreign dead
-        // writer's mid-mutation pending (a manual ingest that crashed
-        // AFTER this batch committed) is recovered (rolled back), a
-        // live one left alone (arbitration: StoreGuard.dischargeCommitted)
-        val markerOwner =
-          try {
-            val in = fs.open(marker)
-            val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-                    finally in.close()
-            graft.dedup.StoreGuard.parseOwner(s)
-          } catch { case _: java.io.FileNotFoundException => None }
-        store.dischargeCommitted(spark, storeName, markerOwner)
-        // a writer dead one step LATER — between the pending clear and
-        // its own unlock — leaves marker + no pending + a dead lock,
-        // which the pending-gated discharge above cannot touch. The
-        // marker is durable proof the mutation fully committed, so that
-        // lock is pure leftovers — but only the owner stamp can tell it
-        // from a LIVE foreign writer's (maintenance sharing the store),
-        // hence the non-strict dead-owner discharge: verifiably dead ⇒
-        // released (an AvailableNow stream whose LAST batch died there
-        // would otherwise stay locked until a manual unlock), live or
-        // unverifiable ⇒ left alone, exactly as before
-        store.dischargeDeadLock(spark, storeName, strict = false)
-      }
+      // fully committed: discharge only what a writer dead in the
+      // marker→pending-clear window still owes. dischargeCommitted is
+      // pending-gated, so a replay of a CLEANLY completed batch (no
+      // recovery state at all) is a strict no-op — it can never delete
+      // a lock some other writer holds. The marker's owner stamp rides
+      // along: the pending found now is that predecessor's moot
+      // residue ONLY when its own stamp matches — a foreign dead
+      // writer's mid-mutation pending (a manual ingest that crashed
+      // AFTER this batch committed) is recovered (rolled back), a
+      // live one left alone (arbitration: StoreGuard.dischargeCommitted)
+      val markerOwner =
+        try {
+          val in = fs.open(marker)
+          val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
+                  finally in.close()
+          graft.dedup.StoreGuard.parseOwner(s)
+        } catch { case _: java.io.FileNotFoundException => None }
+      store.dischargeCommitted(spark, storeName, markerOwner)
+      // a writer dead one step LATER — between the pending clear and
+      // its own unlock — leaves marker + no pending + a dead lock,
+      // which the pending-gated discharge above cannot touch. The
+      // marker is durable proof the mutation fully committed, so that
+      // lock is pure leftovers — but only the owner stamp can tell it
+      // from a LIVE foreign writer's (maintenance sharing the store),
+      // hence the non-strict dead-owner discharge: verifiably dead ⇒
+      // released (an AvailableNow stream whose LAST batch died there
+      // would otherwise stay locked until a manual unlock), live or
+      // unverifiable ⇒ left alone, exactly as before
+      store.dischargeDeadLock(spark, storeName, strict = false)
       return
     }
-    if (autoRecover && !store.recoverArbitrated(spark, storeName)) {
+    if (!store.recoverArbitrated(spark, storeName)) {
       // recover() found no pending file and deliberately left any lock
       // alone (it could belong to a live build/drop). A predecessor of
       // THIS stream that died between lock acquisition and the pending
@@ -202,7 +199,6 @@ object CorpusStream {
     */
   def ingestBatch(spark: SparkSession, batch: DataFrame, storeName: String,
       flagsRoot: String, batchId: Long, threshold: Double = 0.5,
-      autoRecover: Boolean = true,
       /** Fault-injection seams for recovery DRILLS (the ops practice of
         * proving the crash arbitration on production shape, not just in
         * specs — Runner's `--inject-crash` wires `Runtime.halt` here):
@@ -214,7 +210,7 @@ object CorpusStream {
         */
       onFlagsWritten: () => Unit = () => (),
       onMarkerWritten: () => Unit = () => ()): Unit =
-    committedBatch(spark, SignatureStore, storeName, flagsRoot, batchId, autoRecover,
+    committedBatch(spark, SignatureStore, storeName, flagsRoot, batchId,
         onFlagsWritten, onMarkerWritten) { (onFlags, onCommitted, onAudit) =>
       SignatureStore.ingest(spark, batch, storeName, threshold,
         onFlags = onFlags, onCommitted = onCommitted, onAudit = onAudit)
@@ -224,11 +220,11 @@ object CorpusStream {
     * at `flagsRoot` (read the log with `spark.read.parquet(flagsRoot)` —
     * `batch_id` arrives as a partition column), the store grows by
     * survivors. AvailableNow by default: drain what exists, checkpoint,
-    * stop — the cron-to-streaming migration path, same as
-    * [[EventStream.upsertStream]].
+    * stop — the cron-to-streaming migration path, the same default as
+    * the event stream's versioned upsert ([[EventStream.upsertStream]]).
     */
   def ingestStream(docs: DataFrame, storeName: String, flagsRoot: String,
-      checkpoint: String, threshold: Double = 0.5, autoRecover: Boolean = true,
+      checkpoint: String, threshold: Double = 0.5,
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.AvailableNow(),
       onFlagsWritten: () => Unit = () => (),
@@ -236,7 +232,7 @@ object CorpusStream {
       : org.apache.spark.sql.streaming.StreamingQuery =
     stream(docs, checkpoint, trigger) { (batch, batchId) =>
       ingestBatch(batch.sparkSession, batch, storeName, flagsRoot,
-        batchId, threshold, autoRecover, onFlagsWritten, onMarkerWritten)
+        batchId, threshold, onFlagsWritten, onMarkerWritten)
     }
 
   // ---- embedding twin (the s06 cadence, same contract throughout) ----
@@ -252,10 +248,10 @@ object CorpusStream {
     */
   def ingestEmbeddingsBatch(spark: SparkSession, batch: DataFrame, storeName: String,
       flagsRoot: String, batchId: Long, threshold: Double = 0.9,
-      autoRecover: Boolean = true, bucketCap: Int = 1000,
+      bucketCap: Int = 1000,
       onFlagsWritten: () => Unit = () => (),
       onMarkerWritten: () => Unit = () => ()): Unit =
-    committedBatch(spark, EmbeddingStore, storeName, flagsRoot, batchId, autoRecover,
+    committedBatch(spark, EmbeddingStore, storeName, flagsRoot, batchId,
         onFlagsWritten, onMarkerWritten) { (onFlags, onCommitted, onAudit) =>
       EmbeddingStore.ingest(spark, batch, storeName, threshold = threshold,
         onFlags = onFlags, onCommitted = onCommitted, bucketCap = bucketCap,
@@ -264,8 +260,7 @@ object CorpusStream {
 
   /** The continuous embedding-ingest query — [[ingestStream]]'s twin. */
   def ingestEmbeddingsStream(vecs: DataFrame, storeName: String, flagsRoot: String,
-      checkpoint: String, threshold: Double = 0.9, autoRecover: Boolean = true,
-      bucketCap: Int = 1000,
+      checkpoint: String, threshold: Double = 0.9, bucketCap: Int = 1000,
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.AvailableNow(),
       onFlagsWritten: () => Unit = () => (),
@@ -273,7 +268,7 @@ object CorpusStream {
       : org.apache.spark.sql.streaming.StreamingQuery =
     stream(vecs, checkpoint, trigger) { (batch, batchId) =>
       ingestEmbeddingsBatch(batch.sparkSession, batch, storeName,
-        flagsRoot, batchId, threshold, autoRecover, bucketCap,
+        flagsRoot, batchId, threshold, bucketCap,
         onFlagsWritten, onMarkerWritten)
     }
 }

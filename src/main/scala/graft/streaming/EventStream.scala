@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -42,82 +41,26 @@ object EventStream {
     * by business key" (`truenas/cron-jobs.txt:12` daily, MyView windows)
     * — as an incremental stream: each micro-batch dedupes to
     * last-writer-wins per key and MERGEs into a `p_date`-partitioned
-    * parquet target. The merge is partition-scoped: only the dates
-    * present in the batch are read back and rewritten (dynamic partition
-    * overwrite); every other partition's files are untouched. At 100 TB
-    * a micro-batch touches the last day or two of a years-deep table —
-    * reading or rewriting the whole table per batch (the naive form)
-    * would be quadratic in history.
+    * [[graft.sinks.VersionedTable]] at `tableRoot`. The merge is
+    * partition-scoped: only the dates present in the batch are read back
+    * and rewritten, and every other partition's files stay referenced by
+    * the new manifest, untouched. At 100 TB a micro-batch touches the
+    * last day or two of a years-deep table — reading or rewriting the
+    * whole table per batch (the naive form) would be quadratic in
+    * history.
     *
-    * All filesystem access goes through Hadoop `FileSystem` resolved
-    * from the target path, and the merge output is staged on that same
-    * filesystem before the overwrite (the plan reads the partitions it
-    * replaces, and executors don't share driver-local temp dirs) — works
-    * unchanged on HDFS/S3, unlike `java.io.File` checks which silently
-    * misreport there. The business key makes redelivered batches
-    * idempotent, which is the whole exactly-once story this sink needs.
+    * The commit is crash-atomic: immutable commit dirs plus one manifest
+    * rename, so a crash mid-batch leaves the previous version fully
+    * readable. Read the result with `VersionedTable.read`, not
+    * `spark.read.parquet`. Checkpoint replay of a half-committed batch is
+    * idempotent: the merge is keyed by event_id, so re-applying the same
+    * updates republishes an identical state — the whole exactly-once
+    * story this sink needs.
+    *
+    * An event without an event time has no place on a date-partitioned
+    * timeline: a null `ts` is dropped.
     */
-  def upsertStream(events: DataFrame, targetPath: String, checkpoint: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val tPath = new Path(targetPath)
-        val fs = tPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val priorMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try {
-          // a null ts would land in __HIVE_DEFAULT_PARTITION__, which the
-          // isInCollection partition match can never name — the dynamic
-          // overwrite would then REPLACE that partition without merging
-          // it (silent data loss). An event without an event time has no
-          // place on a date-partitioned timeline: reject it.
-          val updates = graft.sinks.MergeWriter.latestPerKey(
-              batch.toDF(), Seq("event_id"), col("ts").desc)
-            .filter(col("ts").isNotNull)
-            .withColumn("p_date", to_date(col("ts")))
-          if (!fs.exists(tPath)) {
-            updates.write.mode("overwrite").partitionBy("p_date").parquet(targetPath)
-          } else {
-            // partition-scoped: read back only the dates this batch touches
-            // (isin on the partition column → directory pruning, no scan of
-            // the rest of the table)
-            val touchedDates = updates.select("p_date").distinct()
-              .collect().map(_.getDate(0)).toSeq
-            val target = spark.read.parquet(targetPath)
-            val touched = target.filter(col("p_date").isInCollection(touchedDates))
-            val merged = graft.sinks.MergeWriter.merge(
-              touched, updates.select(target.columns.toIndexedSeq.map(col): _*), Seq("event_id"))
-            // NOT dot-prefixed — Spark's file index ignores hidden paths
-            val staging = new Path(tPath.getParent, s"${tPath.getName}_staging_$batchId")
-            try {
-              merged.write.mode("overwrite").parquet(staging.toString)
-              spark.read.parquet(staging.toString)
-                .write.mode("overwrite").partitionBy("p_date").parquet(targetPath)
-            } finally fs.delete(staging, true) // never leak staging dirs on failure
-          }
-        } finally priorMode match {
-          case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-          case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
-        ()
-      }
-      .start()
-
-  /** `upsertStream` with the crash-atomic commit: each micro-batch MERGEs
-    * through [[graft.sinks.VersionedTable]] (immutable commit dirs + one
-    * atomic manifest rename), so a crash mid-batch leaves the previous
-    * version fully readable instead of a partial dynamic overwrite. Read
-    * the result with `VersionedTable.read`, not `spark.read.parquet`.
-    * Checkpoint replay of a half-committed batch is idempotent: the merge
-    * is keyed by event_id, so re-applying the same updates republishes an
-    * identical state.
-    */
-  def upsertStreamVersioned(events: DataFrame, tableRoot: String, checkpoint: String,
+  def upsertStream(events: DataFrame, tableRoot: String, checkpoint: String,
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -127,7 +70,7 @@ object EventStream {
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         val updates = graft.sinks.MergeWriter.latestPerKey(
             batch.toDF(), Seq("event_id"), col("ts").desc)
-          .filter(col("ts").isNotNull) // see upsertStream: no null dates on the timeline
+          .filter(col("ts").isNotNull)
           .withColumn("p_date", to_date(col("ts")))
         graft.sinks.VersionedTable.merge(batch.sparkSession, tableRoot, updates,
           businessKey = "event_id", partitionCols = Seq("p_date"))

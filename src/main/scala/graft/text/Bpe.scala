@@ -40,8 +40,8 @@ object Bpe {
     * serialized plan to every executor (driver-side mutable globals
     * would silently not propagate on a real cluster); the maps are
     * `@transient lazy`, rebuilt once per JVM on first use.
-    */
-  /** @param byteLevel GPT-2-style byte-level vocabulary: pre-tokenize
+    *
+    * @param byteLevel GPT-2-style byte-level vocabulary: pre-tokenize
     *   with the GPT-2 piece regex over the RAW text (case preserved),
     *   map each piece's UTF-8 bytes through the public byte↔unicode
     *   table (space → `Ġ`, newline → `Ċ`, …), and merge over the mapped

@@ -156,13 +156,12 @@ class OpsSpec extends SparkSpec {
     import java.net.InetSocketAddress
     import com.sun.net.httpserver.{HttpExchange, HttpServer}
     import graft.ops.{Notifier, Orchestrator}
-    def tableFor(p: String) = s"graft_sync_spec_$p"
-    Orchestrator.pipelines.foreach { p =>
-      TableManager.drop(spark, tableFor(p))
-      val loc = new java.io.File(spark.conf.get("spark.sql.warehouse.dir")
-        .stripPrefix("file:"), tableFor(p))
-      org.apache.commons.io.FileUtils.deleteQuietly(loc)
-    }
+    import graft.sinks.VersionedTable
+    val sink = Orchestrator.VersionedSink(p => s"graft_versioned_e2e_spec_$p")
+    def clear(): Unit = Orchestrator.pipelines.foreach(p =>
+      org.apache.commons.io.FileUtils.deleteQuietly(
+        new java.io.File(sink.rootOf(spark, p).stripPrefix("file:"))))
+    clear()
     val subjects = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     server.createContext("/sendMail", (ex: HttpExchange) => {
@@ -182,27 +181,27 @@ class OpsSpec extends SparkSpec {
           def token(): String = "t"; def refresh(): String = "t"
         })
       val results = Orchestrator.runAll(spark, sfDir,
-        Orchestrator.Rolling(14), Some(cfg), Orchestrator.ManagedSink(tableFor))
+        Orchestrator.Rolling(14), Some(cfg), sink)
       assert(results.map(_.pipeline) == Orchestrator.pipelines)
       results.foreach { r =>
         assert(r.error.isEmpty, s"${r.pipeline}: ${r.error}")
         assert(r.rows > 0 && r.created == r.rows, r)
-        assert(spark.table(tableFor(r.pipeline)).count() == r.rows)
+        assert(VersionedTable.read(spark, sink.rootOf(spark, r.pipeline)).count() == r.rows)
       }
       // every run notified, with the OK subject shape
       val sent = subjects.toArray(Array.empty[String]).toSeq
       assert(sent.size == 5 && sent.forall(_.startsWith("[OK] ")), sent)
       // re-running the same window is a pure update (idempotent upsert)
       val again = Orchestrator.run(spark, sfDir, "inventory",
-        Orchestrator.Rolling(14), Some(cfg), Orchestrator.ManagedSink(tableFor))
+        Orchestrator.Rolling(14), Some(cfg), sink)
       assert(again.error.isEmpty && again.created == 0 && again.updated == again.rows)
       // a 1wk window is a subset of the 2wk table — still only updates
       val wk1 = Orchestrator.run(spark, sfDir, "inventory",
-        Orchestrator.Rolling(7), None, Orchestrator.ManagedSink(tableFor))
+        Orchestrator.Rolling(7), None, sink)
       assert(wk1.error.isEmpty && wk1.created == 0 && wk1.rows < again.rows)
     } finally {
       server.stop(0)
-      Orchestrator.pipelines.foreach(p => TableManager.drop(spark, tableFor(p)))
+      clear()
     }
   }
 
@@ -427,7 +426,6 @@ class OpsSpec extends SparkSpec {
     org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(root.stripPrefix("file:")))
     EmbeddingStore.drop(spark, store)
-    Orchestrator.resetAuditStreak(store)
     try {
       Orchestrator.corpusInitEmbeddings(spark, store)
       def ingest(id: Long, cap: Int): Orchestrator.CorpusResult =
@@ -462,16 +460,21 @@ class OpsSpec extends SparkSpec {
       assert(!lines(b4).contains("AUDIT ALERT"), lines(b4))
       // near-full occupancy without drops also breaches (embCapPct):
       // maxBucket >= 80% of a cap of 1 with no capped rows is impossible
-      // on this fixture, so exercise the percent arm directly
+      // on this fixture, so exercise the percent arm directly, over a
+      // local streak that starts at 0
+      var pctStreak = 0
       val pctBreach = Orchestrator.recordAuditAlert(
         Orchestrator.CorpusResult(store + "_pct", 1, 0, 1, 0.0, None,
           lshAudit = Some(EmbeddingStore.IngestAudit(1, 16, 12, 10, 0, 0,
             maxBucket = 900, bucketCap = 1000))),
-        Orchestrator.AuditPolicy(consecutive = 1)).auditAlert
+        Orchestrator.AuditPolicy(consecutive = 1),
+        new Orchestrator.StreakStore {
+          def read(): Int = pctStreak
+          def write(n: Int): Unit = pctStreak = n
+          def clear(): Unit = pctStreak = 0
+        }).auditAlert
       assert(pctBreach.exists(_.contains("AUDIT ALERT")), pctBreach)
-      Orchestrator.resetAuditStreak(store + "_pct")
     } finally {
-      Orchestrator.resetAuditStreak(store)
       EmbeddingStore.drop(spark, store)
       org.apache.commons.io.FileUtils.deleteQuietly(
         new java.io.File(root.stripPrefix("file:")))
@@ -534,41 +537,38 @@ class OpsSpec extends SparkSpec {
         Orchestrator.corpusIngestEmbeddings(spark, store,
           Seq((id, vec(1))).toDF("vec_id", "embedding"), None, sink,
           bucketCap = cap)
-      // "fresh JVM": the daily cron cadence runs one process per ingest,
-      // so any process-lifetime state is wiped between runs — simulate
-      // by clearing the in-memory map; the DURABLE sidecar must carry
-      // the streak across these wipes or the alert can never fire
-      def freshJvm(): Unit = Orchestrator.resetAuditStreak(store)
+      // the daily cron cadence runs one process per ingest, so nothing
+      // of the process may carry the streak: the engine keeps no
+      // in-memory counter, and the DURABLE sidecar read below is the
+      // only state the alert can fire from
       ingest(99L, cap = 1000) // seed so later twins share buckets
       assert(EmbeddingStore.readAuditStreak(spark, store) == 0)
-      freshJvm(); val b1 = ingest(100L, cap = 1)
+      val b1 = ingest(100L, cap = 1)
       assert(b1.lshAudit.exists(_.cappedRows > 0), b1)
       assert(b1.auditAlert.isEmpty, b1)
       assert(EmbeddingStore.readAuditStreak(spark, store) == 1)
-      freshJvm(); val b2 = ingest(101L, cap = 1)
+      val b2 = ingest(101L, cap = 1)
       assert(b2.auditAlert.isEmpty, b2)
       assert(EmbeddingStore.readAuditStreak(spark, store) == 2)
       // an ERRORED ingest between breaches leaves the streak untouched:
       // its mutation rolled back, so it is evidence of nothing — and an
       // intermittently crashing store must still escalate
-      freshJvm()
       val err = Orchestrator.corpusIngestEmbeddings(spark, store,
         Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding"), None, sink)
       assert(err.error.isDefined, err)
       assert(err.auditAlert.isEmpty, err)
       assert(EmbeddingStore.readAuditStreak(spark, store) == 2,
         "an errored ingest must not touch the persisted streak")
-      freshJvm(); val b3 = ingest(102L, cap = 1)
+      val b3 = ingest(102L, cap = 1)
       assert(b3.auditAlert.exists(_.contains("AUDIT ALERT")),
         s"3rd consecutive breach across 3 'JVMs' must alert: $b3")
       assert(EmbeddingStore.readAuditStreak(spark, store) == 3)
       // a clean audited ingest resets the DURABLE counter
-      freshJvm(); val clean = ingest(200L, cap = 1000)
+      val clean = ingest(200L, cap = 1000)
       assert(clean.error.isEmpty && clean.auditAlert.isEmpty, clean)
       assert(EmbeddingStore.readAuditStreak(spark, store) == 0,
         "a clean ingest must reset the persisted streak")
     } finally {
-      Orchestrator.resetAuditStreak(store)
       EmbeddingStore.drop(spark, store)
       org.apache.commons.io.FileUtils.deleteQuietly(
         new java.io.File(root.stripPrefix("file:")))

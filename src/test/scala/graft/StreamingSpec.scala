@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import graft.sinks.VersionedTable
 import graft.streaming.EventStream
 
 /** Streaming specs: the incremental forms must agree with the
@@ -67,7 +68,7 @@ class StreamingSpec extends SparkSpec {
       target, ckpt)
     q.awaitTermination(120000)
     q.stop()
-    val got = spark.read.parquet(target)
+    val got = VersionedTable.read(spark, target)
     // every event upserted exactly once (event_id is the key)
     assert(got.count() == events.count())
     assert(got.select("event_id").distinct().count() == events.count())
@@ -87,7 +88,7 @@ class StreamingSpec extends SparkSpec {
     val ck1 = java.nio.file.Files.createTempDirectory("graft-upck1").toString
     EventStream.upsertStream(EventStream.read(spark, srcOld.toString), target, ck1)
       .awaitTermination(120000)
-    val oldFiles = spark.read.parquet(target).filter(col("p_date") < lit(cut))
+    val oldFiles = VersionedTable.read(spark, target).filter(col("p_date") < lit(cut))
       .select(input_file_name()).distinct().as[String].collect().toSet
     assert(oldFiles.nonEmpty)
     // now stream only the newer half — old partitions must not be rewritten
@@ -97,7 +98,7 @@ class StreamingSpec extends SparkSpec {
     val ck2 = java.nio.file.Files.createTempDirectory("graft-upck2").toString
     EventStream.upsertStream(EventStream.read(spark, srcNew.toString), target, ck2)
       .awaitTermination(120000)
-    val got = spark.read.parquet(target)
+    val got = VersionedTable.read(spark, target)
     assert(got.count() == events.count())
     val oldFilesAfter = got.filter(col("p_date") < lit(cut))
       .select(input_file_name()).distinct().as[String].collect().toSet
@@ -554,6 +555,50 @@ class StreamingSpec extends SparkSpec {
         "committed-batch replay must release a verifiably-dead predecessor's lock")
     } finally {
       Seq(sName, bName).foreach(SignatureStore.drop(spark, _))
+    }
+  }
+
+  test("embedding ingest crash window: death after appends recovers and re-runs to the batch-API flags, near-dups included") {
+    import graft.streaming.CorpusStream
+    import graft.similarity.EmbeddingStore
+    import TestVectors.{nearDup, vec}
+    val hist = (1L to 4L).map(i => (i, vec(i))).toDF("vec_id", "embedding")
+    // near-dups of two stored vectors, and a near-dup pair within the batch
+    val batch = Seq((101L, nearDup(1)), (102L, nearDup(3)), (103L, vec(7)), (104L, nearDup(7)))
+      .toDF("vec_id", "embedding")
+    val sName = "graft_estream_crash_spec"
+    val bName = "graft_ebatch_crash_spec"
+    Seq(sName, bName).foreach(EmbeddingStore.drop(spark, _))
+    EmbeddingStore.build(spark, hist, sName)
+    EmbeddingStore.build(spark, hist, bName)
+    val flagsRoot = java.nio.file.Files.createTempDirectory("graft-ecrash-flags").toString
+    val fs = new org.apache.hadoop.fs.Path(flagsRoot)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val part = s"$flagsRoot/batch_id=7"
+    val marker = new org.apache.hadoop.fs.Path(s"$part/_COMMITTED")
+    def flags(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select("vec_id", "is_dup", "dup_of").collect().map(_.toString).sorted.toSeq
+    try {
+      // the writer dies AFTER the appends and gen bump but BEFORE the
+      // commit marker: flags on disk, the store holds the batch, the
+      // pending snapshot still authorizes recovery
+      val e = intercept[RuntimeException](EmbeddingStore.ingest(spark, batch, sName,
+        onFlags = f => f.write.mode("overwrite").parquet(part),
+        onCommitted = () => sys.error("died before the marker")))
+      assert(e.getMessage.contains("died"), e.getMessage)
+      assert(!fs.exists(marker))
+      // the redelivered batch must roll the half-committed appends back
+      // and re-run to the IDENTICAL flags — re-deduping the batch
+      // against its own appended survivors would flag them all
+      CorpusStream.ingestEmbeddingsBatch(spark, batch, sName, flagsRoot, 7L)
+      assert(fs.exists(marker), "re-run must commit")
+      val got = flags(spark.read.parquet(part))
+      val want = flags(EmbeddingStore.ingest(spark, batch, bName))
+      assert(got == want, "recovered re-run must reproduce the batch-API flags")
+      val dups = spark.read.parquet(part).filter(col("is_dup")).count()
+      assert(dups >= 1, "fixture must flag near-duplicates")
+    } finally {
+      Seq(sName, bName).foreach(EmbeddingStore.drop(spark, _))
     }
   }
 

@@ -280,7 +280,7 @@ class VersionedTableSpec extends SparkSpec {
     assert(out2(3) == (("c2", None)) && out2(2) == (("b2", Some(9.5))), out2)
   }
 
-  test("upsertStreamVersioned: atomic micro-batch merge, idempotent state") {
+  test("upsertStream: atomic micro-batch merge, idempotent state") {
     val base = Files.createTempDirectory("graft-vt-stream")
     val root = base.resolve("table").toString
     val ev = Seq(
@@ -288,7 +288,7 @@ class VersionedTableSpec extends SparkSpec {
       (2L, java.sql.Timestamp.valueOf("2024-05-02 11:00:00"), 8L, "view", 2.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     ev.write.parquet(base.resolve("src1").toString)
-    EventStream.upsertStreamVersioned(
+    EventStream.upsertStream(
       EventStream.read(spark, base.resolve("src1").toString), root,
       base.resolve("ck1").toString)
       .awaitTermination(120000)
@@ -297,12 +297,31 @@ class VersionedTableSpec extends SparkSpec {
       (3L, java.sql.Timestamp.valueOf("2024-05-03 12:00:00"), 9L, "click", 3.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     upd.write.parquet(base.resolve("src2").toString)
-    EventStream.upsertStreamVersioned(
+    EventStream.upsertStream(
       EventStream.read(spark, base.resolve("src2").toString), root,
       base.resolve("ck2").toString)
       .awaitTermination(120000)
     val out = VersionedTable.read(spark, root)
       .select("event_id", "value").as[(Long, Double)].collect().toMap
     assert(out == Map(1L -> 1.0, 2L -> 9.0, 3L -> 3.0))
+  }
+
+  test("no dynamic partition overwrite in src/main/scala outside TableManager.scala and MergeWriter.scala") {
+    // every keyed write but the catalog-table merge commits through
+    // VersionedTable's manifest rename; a conf flip to dynamic partition
+    // overwrite elsewhere is a second, non-atomic commit path
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), root)
+    val walk = Files.walk(root)
+    val files =
+      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val allowed = Set("TableManager.scala", "MergeWriter.scala")
+    val hits = files
+      .filterNot(p => allowed.contains(p.getFileName.toString))
+      .filter(p => new String(Files.readAllBytes(p),
+        java.nio.charset.StandardCharsets.ISO_8859_1).contains("partitionOverwriteMode"))
+    assert(hits.isEmpty, s"partitionOverwriteMode in ${hits.mkString(", ")}")
   }
 }
