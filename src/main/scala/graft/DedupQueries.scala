@@ -375,7 +375,7 @@ object DedupQueries {
     * to exactly this post-build state after every ingest, which is what
     * lets read-only d07 share it ([[SignatureStore.builtOnce]]).
     */
-  private[graft] def dedupStore(s: SparkSession, dir: String): (String, Set[String]) = {
+  private[graft] def dedupStore(s: SparkSession, dir: String): (String, dedup.BandedStore.Snapshot) = {
     val slug = OncePerJvm.slug(dir)
     val name = s"graft_dedup_sigstore_$slug"
     (name, SignatureStore.builtOnce(s, name, slug)(SignatureStore.build(s,

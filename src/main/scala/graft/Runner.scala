@@ -16,7 +16,7 @@ import org.apache.spark.sql.SparkSession
   *   runMain graft.Runner --corpus-init mystore --sf ...
   *   runMain graft.Runner --corpus-ingest mystore --batch-mod 7 --batch-rem 0 \
   *     [--alert-max-bucket N --alert-cap-pct P --alert-consecutive K] --sf ...
-  *   runMain graft.Runner --corpus-recover mystore --sf ...   (crashed-ingest undo)
+  *   runMain graft.Runner --corpus-recover mystore --sf ...   (dead writer cleanup)
   *   runMain graft.Runner --corpus-retune mystore --rows 3 --bands 16 \
   *     [--corpus-path /data/corpus] --sf ...   (hot-bucket remediation)
   *   runMain graft.Runner --schedule --store mystore --auto-remediate --sf ...
@@ -137,13 +137,30 @@ object Runner {
     out.toSeq
   }
 
-  /** `--key value` pairs plus bare `--flag`s (recorded as "true"). */
+  /** Every option key some branch of [[main]] reads. */
+  private[graft] val knownKeys: Set[String] = Set(
+    "alert-cap-pct", "alert-consecutive", "alert-max-bucket", "auto-remediate", "bands",
+    "batch-mod", "batch-rem", "bpe-merges", "bucket-cap", "checkpoint", "confirm-delete",
+    "confirm-fy", "corpus-ingest", "corpus-ingest-emb", "corpus-init", "corpus-init-emb",
+    "corpus-path", "corpus-recover", "corpus-recover-emb", "corpus-retune", "corpus-stream",
+    "corpus-stream-emb", "dry-run", "fire-now", "flags-root", "fp", "full-refresh", "fy",
+    "fy-from", "fy-to", "inject-crash", "iters", "ivf-append", "ivf-build", "ivf-index",
+    "ivf-retrain", "k", "length", "log-file", "maintain", "maintain-store",
+    "maintain-store-emb", "max-df", "max-files", "max-fires", "nlist", "out", "pipeline",
+    "query", "retain", "rows", "sample-mod", "schedule", "sf", "skip-delete", "stage-docs",
+    "stage-emb", "store", "store-emb", "stream-src", "threshold")
+
+  /** `--key value` pairs plus bare `--flag`s (recorded as "true"). A key
+    * outside [[knownKeys]] fails: a retired or misspelt flag must not be
+    * silently ignored.
+    */
   private[graft] def parseOpts(args: Array[String]): Map[String, String] = {
     val m = scala.collection.mutable.LinkedHashMap[String, String]()
     var i = 0
     while (i < args.length) {
       val k = args(i)
       require(k.startsWith("--"), s"unexpected argument: $k")
+      require(knownKeys(k.drop(2)), s"unknown option: $k")
       if (i + 1 < args.length && !args(i + 1).startsWith("--")) {
         m(k.drop(2)) = args(i + 1); i += 2
       } else { m(k.drop(2)) = "true"; i += 1 }
@@ -217,16 +234,14 @@ object Runner {
     }
 
     if (opts.contains("corpus-recover") || opts.contains("corpus-recover-emb")) {
-      // crashed-ingest recovery: restore the store to the dead writer's
-      // persisted pre-ingest snapshot and release its lock (no-op when
-      // nothing is pending — a writer that died in build/drop leaves no
-      // pending file and is released with the store API's unlock)
+      // crashed-writer recovery: delete the commits a dead writer left
+      // unpublished and release its lock (a live writer's lock fails)
       graft.ops.Orchestrator.storesOf(opts.get("corpus-recover").toSeq,
           opts.get("corpus-recover-emb").toSeq).foreach { case (st, store) =>
         st.ensureRegistered(spark, store)
         println(if (st.recover(spark, store))
-          s"[corpus] $store: crashed ingest rolled back, lock released"
-        else s"[corpus] $store: nothing pending — store is clean")
+          s"[corpus] $store: unpublished commits deleted, dead lock released"
+        else s"[corpus] $store: nothing to recover — store is clean")
       }
       spark.stop()
       return
@@ -238,17 +253,17 @@ object Runner {
       // fresh JVM per run, the cron-to-streaming migration shape
       // ([[graft.streaming.CorpusStream]]): arriving files in
       // --stream-src become micro-batches, each runs the store ingest
-      // under the commit-marker protocol, flags land batch-partitioned
-      // at --flags-root, and the checkpoint makes a crashed run's batch
-      // redeliver on the next invocation. --stage-docs/--stage-emb
-      // write one day-slice parquet file into the source dir (the
-      // harness stand-in for files arriving from an upstream feed).
-      // --inject-crash after-flags|after-marker hard-halts the JVM at
-      // that point of the NEXT batch — the operator recovery DRILL that
-      // proves the crash arbitration on production shape: after-flags
-      // leaves lock + pending + unmarked flags (mid-mutation window),
-      // after-marker leaves the marker→pending-clear residue window;
-      // the following run must arbitrate, replay, and converge.
+      // and publishes it with the batch's tag, flags land
+      // batch-partitioned at --flags-root, and the checkpoint makes a
+      // crashed run's batch redeliver on the next invocation.
+      // --stage-docs/--stage-emb write one day-slice parquet file into
+      // the source dir (the harness stand-in for files arriving from an
+      // upstream feed). --inject-crash after-flags|after-marker
+      // hard-halts the JVM at that point of the NEXT batch — the
+      // operator recovery DRILL: after-flags leaves the lock and flags
+      // of an unpublished batch, after-marker a published batch whose
+      // lock was never released; the following run must replay or
+      // skip, and converge.
       def need(k: String): String =
         opts.getOrElse(k, sys.error(s"--corpus-stream needs --$k <dir>"))
       def crashHook(phase: String): () => Unit =
@@ -282,7 +297,7 @@ object Runner {
           store, need("flags-root"), need("checkpoint"),
           threshold = opts.getOrElse("threshold", "0.5").toDouble,
           onFlagsWritten = crashHook("after-flags"),
-          onMarkerWritten = crashHook("after-marker"))
+          onCommitted = crashHook("after-marker"))
           .awaitTermination()
         report(store, need("flags-root"))
       }
@@ -294,7 +309,7 @@ object Runner {
           threshold = opts.getOrElse("threshold", "0.9").toDouble,
           bucketCap = opts.getOrElse("bucket-cap", "1000").toInt,
           onFlagsWritten = crashHook("after-flags"),
-          onMarkerWritten = crashHook("after-marker"))
+          onCommitted = crashHook("after-marker"))
           .awaitTermination()
         report(store, need("flags-root"))
       }

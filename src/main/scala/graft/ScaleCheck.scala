@@ -99,7 +99,7 @@ object ScaleCheck {
     * Verify/Bench registry — its flags-equal-the-batch-API contract is
     * StreamingSpec's): the d08 store ingest THROUGH the streaming
     * micro-batch wrapper ([[streaming.CorpusStream.ingestBatch]]), so
-    * the wrapper's own overhead — commit-marker probe, recovery probe,
+    * the wrapper's own overhead — committed-batch probe, recovery,
     * flag-partition overwrite — is measured on top of the store ingest
     * d08 times directly. Each run uses a fresh batch id (a replayed id
     * would hit the skip arm and time nothing) and rolls the store back

@@ -500,7 +500,7 @@ object SimilarityQueries {
     * daily ingest; the post-build snapshot restores the store after
     * every run ([[graft.similarity.EmbeddingStore.builtOnce]]).
     */
-  private def embStore(s: SparkSession, dir: String): (String, Set[String]) = {
+  private def embStore(s: SparkSession, dir: String): (String, dedup.BandedStore.Snapshot) = {
     import graft.similarity.EmbeddingStore
     val slug = OncePerJvm.slug(dir)
     val name = s"graft_embstore_$slug"

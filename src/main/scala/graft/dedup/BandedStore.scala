@@ -13,10 +13,10 @@ import org.apache.spark.sql.functions._
   * geometry maintenance) stays in the store.
   *
   * Lifecycle: `build` once over history → `ingest` per batch →
-  * [[compact]] (or a rebuild) in the maintenance window. Every mutator
-  * runs inside [[locked]]; an ingest persists its pre-ingest snapshot
-  * (the pending file) for the whole mutation, so a fresh process can
-  * restore the store via [[recover]] after the writer died.
+  * [[compact]] (or a rebuild) in the maintenance window. Every table is
+  * partitioned by `commit` and keeps its bucket spec; each mutation
+  * writes fresh commits and publishes one manifest ([[StoreGuard]]), so
+  * an unpublished commit is never read.
   *
   * The ingest contract both stores keep (the tail is
   * [[commitIngest]]): one flag row per batch item, (id, is_dup,
@@ -38,19 +38,14 @@ import org.apache.spark.sql.functions._
   *    append (the orchestrated and streaming cadences file it in their
   *    run reports);
   *  - `onFlags` receives the checkpointed flag frame AFTER it is final
-  *    but BEFORE any append mutates the store — a caller that persists
-  *    flags here (the streaming ingest log) gets "flags before appends"
-  *    ordering, so a crash mid-append leaves flags a rollback-then-rerun
-  *    reproduces identically;
-  *  - `onCommitted` runs after the appends and the generation bump,
-  *    BEFORE the pending file clears — the one point where "this ingest
-  *    fully happened" can be marked durably with no window against the
-  *    crash-recovery authorization (marker present + pending present
-  *    reads as committed; marker absent + pending present rolls back).
-  * An exception mid-ingest (including during the appends) can leave
-  * partial appends behind: callers that must preserve the store take a
-  * [[snapshot]] first and [[rollback]] on failure, which restores it
-  * bit-for-bit.
+  *    but BEFORE any append — a caller that persists flags here (the
+  *    streaming ingest log) gets "flags before commit" ordering, so a
+  *    crash before the publish leaves flags a re-run reproduces;
+  *  - `onCommitted` runs right after the publish;
+  *  - `batchTag` (flag root, batch id) is recorded in the published
+  *    manifest, which is how a streaming replay knows the batch is in.
+  * A caller that must undo a completed ingest takes a [[snapshot]]
+  * first and [[rollback]]s to it.
   */
 trait BandedStore {
 
@@ -68,14 +63,11 @@ trait BandedStore {
 
   protected def metaSuffix: String
 
-  /** Fallback schema of the meta table (a table with no data files has
-    * nothing to infer a schema from).
-    */
+  /** Columns of the meta table. */
   protected def metaSchema: String
 
-  /** The bucketed data tables: (table suffix, bucket column, fallback
-    * schema). Every table shares the store's bucket count, pinned in
-    * the meta row.
+  /** The bucketed data tables: (table suffix, bucket column, columns).
+    * Every table shares the store's bucket count, pinned in the meta row.
     */
   protected def layout: Seq[(String, String, String)]
 
@@ -96,19 +88,15 @@ trait BandedStore {
   def recover(spark: SparkSession, name: String): Boolean =
     guard(name).recover(spark)
 
-  /** Owner-arbitrated crash recovery for automated callers — see
-    * [[StoreGuard.recoverArbitrated]].
-    */
+  /** The streaming replay's recovery; the same verb as [[recover]]. */
   def recoverArbitrated(spark: SparkSession, name: String): Boolean =
-    guard(name).recoverArbitrated(spark)
+    recover(spark, name)
 
-  /** Discharge a dead writer's recovery state WITHOUT rolling back, on
-    * the durable proof of a commit marker stamped `markerOwner` — see
-    * [[StoreGuard.dischargeCommitted]] and [[graft.streaming.CorpusStream]].
+  /** Whether the streaming batch `tag` (flag root, batch id) is committed
+    * — see [[StoreGuard.committed]].
     */
-  def dischargeCommitted(spark: SparkSession, name: String,
-      markerOwner: Option[StoreGuard.LockOwner] = None): Unit =
-    guard(name).dischargeCommitted(spark, markerOwner)
+  def committed(spark: SparkSession, name: String, tag: (String, Long)): Boolean =
+    guard(name).committed(spark, tag)
 
   /** Release a crashed writer's lock — see [[StoreGuard.unlock]]. */
   def unlock(spark: SparkSession, name: String): Unit =
@@ -125,15 +113,12 @@ trait BandedStore {
   def locked[A](spark: SparkSession, name: String)(f: => A): A =
     guard(name).locked(spark)(f)
 
-  /** File-level snapshot of the store — see [[StoreGuard.snapshot]]. */
-  def snapshot(spark: SparkSession, name: String): Set[String] =
+  /** The published manifest version and its live commits. */
+  def snapshot(spark: SparkSession, name: String): BandedStore.Snapshot =
     guard(name).snapshot(spark)
 
-  /** Undo every append since `snap` — see [[StoreGuard.rollback]]
-    * (stale-snapshot refusal, generation-marker restore, recursive
-    * delete of aborted `_temporary` staging dirs).
-    */
-  def rollback(spark: SparkSession, name: String, snap: Set[String]): Unit =
+  /** Republish `snap`'s commits — see [[StoreGuard.rollback]]. */
+  def rollback(spark: SparkSession, name: String, snap: BandedStore.Snapshot): Unit =
     guard(name).rollback(spark, snap)
 
   /** Durable audit-alert breach streak — see [[StoreGuard.readStreak]]. */
@@ -144,67 +129,98 @@ trait BandedStore {
   def clearAuditStreak(spark: SparkSession, name: String): Unit =
     guard(name).clearStreak(spark)
 
-  /** Re-register the store's tables from their durable warehouse
-    * locations into THIS session's catalog. The catalog is per-process
-    * (in-memory) while the bucketed table dirs are durable, so a store
-    * built by yesterday's JVM is invisible to today's until re-declared
-    * — exactly the daily Runner-CLI cadence (`--corpus-init` one day,
-    * `--corpus-ingest` the next). Schemas come from the parquet files
-    * when any exist and fall back to the store's canonical layout for
-    * a still-empty table (a freshly initialized store has no data
-    * files to infer from); the bucket spec is re-declared from the
-    * meta row so re-registered reads keep their shuffle-free bucketed
-    * joins. No-op when the tables are already registered.
+  /** Register the store's tables in THIS session's catalog and make
+    * their partitions the newest manifest's commits. The catalog is
+    * per-process (in-memory) while the tables and the manifest are
+    * durable, so a store built by yesterday's JVM is invisible to
+    * today's until declared — the daily Runner-CLI cadence. Tables are
+    * declared from [[layout]] with the bucket count of the meta row, so
+    * re-registered reads keep their shuffle-free bucketed joins. The
+    * partition sync runs on every call, so a long-running process sees
+    * what another JVM published.
     */
   def ensureRegistered(spark: SparkSession, name: String): Unit = {
-    if (allTables(name).forall(spark.catalog.tableExists)) return
-    val metaP = StoreGuard.tableLocation(spark, metaTable(name))
-    require(metaP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(metaP),
-      s"no $kind store '$name' on disk at $metaP — $initCall it first")
-    def register(t: String, bucketCol: Option[String], fallback: String,
-        buckets: => Int): Unit =
-      if (!spark.catalog.tableExists(t)) {
-        val p = StoreGuard.tableLocation(spark, t)
-        val cols =
-          // UNABLE_TO_INFER_SCHEMA: a freshly initialized store has no
-          // data files. PATH_NOT_FOUND: a compactor died between its
-          // entry reset and the swap — the data lives in the staged
-          // `__compacting` sibling and the table dir is gone. Register
-          // over the canonical layout in both cases so maintenance can
-          // reach compact()'s resume-at-the-swap branch (refusing here
-          // would leave the store unreadable until an operator
-          // hand-renamed the staged dir).
-          try spark.read.parquet(p.toString).schema.fields
-            .map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
-          catch { case e: Exception if e.getMessage != null &&
-              (e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") ||
-               e.getMessage.contains("PATH_NOT_FOUND") ||
-               e.getMessage.contains("Path does not exist")) => fallback }
-        val cluster = bucketCol
-          .map(c => s"CLUSTERED BY (`$c`) SORTED BY (`$c`) INTO $buckets BUCKETS")
-          .getOrElse("")
-        spark.sql(s"CREATE TABLE `$t` ($cols) USING parquet $cluster LOCATION '$p'")
-      }
-    register(metaTable(name), None, metaSchema, 0)
-    lazy val buckets = bucketsOf(spark, name)
-    layout.foreach { case (suffix, c, schema) =>
-      register(name + suffix, Some(c), schema, buckets)
-    }
+    val g = guard(name)
+    require(g.version(spark) > 0,
+      s"no $kind store '$name' on disk at ${g.manifestDir(spark)} — $initCall it first")
+    declare(spark, name, None)
   }
 
-  /** Maintenance compaction: rewrite each bucketed table down to
-    * ~`buckets` files WITHOUT changing content ([[StoreGuard.compactTable]];
-    * a year of daily ingests is ~365 files per bucket otherwise), under
-    * the single-writer lock, then bump the generation once: compaction
-    * deletes old files, so pre-compaction snapshots become
-    * non-rollbackable (rollback refuses them loudly).
+  /** Declare the store's tables where this session has no entry and
+    * sync their partitions. A build passes its bucket count (`rebuild`):
+    * every entry is dropped first — the files stay, every entry is
+    * EXTERNAL — so a changed count takes effect.
+    */
+  protected def declare(spark: SparkSession, name: String, rebuild: Option[Int]): Unit = {
+    def create(t: String, cols: String, cluster: => String): Unit =
+      if (!spark.catalog.tableExists(t)) {
+        val loc = StoreGuard.tableLocation(spark, t)
+        // CREATE ... LOCATION logs a stack trace for a missing dir
+        loc.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(loc)
+        spark.sql(s"CREATE TABLE `$t` ($cols, `commit` STRING) USING parquet " +
+          s"PARTITIONED BY (`commit`) $cluster LOCATION '$loc'")
+      }
+    if (rebuild.isDefined) allTables(name).foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    create(metaTable(name), metaSchema, "")
+    guard(name).sync(spark)
+    lazy val buckets = rebuild.getOrElse(bucketsOf(spark, name))
+    layout.foreach { case (suffix, c, cols) =>
+      create(name + suffix, cols, s"CLUSTERED BY (`$c`) SORTED BY (`$c`) INTO $buckets BUCKETS")
+    }
+    guard(name).sync(spark)
+  }
+
+  /** One mutation of store `name` — see [[StoreGuard.mutate]]. */
+  protected def mutate[A](spark: SparkSession, name: String,
+      batchTag: Option[(String, Long)] = None, onCommitted: () => Unit = () => ())
+      (write: StoreGuard.Commit => A): A = {
+    val g = guard(name)
+    g.mutate(spark, batchTag, onCommitted,
+      () => if (g.version(spark) > 0) ensureRegistered(spark, name))(write)
+  }
+
+  /** Write `row` as commit `commit` of the meta table — raw parquet (the
+    * meta table is not bucketed), so its columns land as given.
+    */
+  protected def writeMeta(spark: SparkSession, name: String, row: DataFrame,
+      commit: String): Unit =
+    row.write.parquet(guard(name).commitDir(spark, metaTable(name), commit).toString)
+
+  /** Replace the meta row with `row` as it stands: how specs fabricate
+    * a store pinned by an older engine.
+    */
+  private[graft] def pinMeta(spark: SparkSession, name: String, row: DataFrame): Unit =
+    mutate(spark, name) { c =>
+      c.replace(metaTable(name))
+      writeMeta(spark, name, row, c.id)
+    }
+
+  /** Maintenance compaction: rewrite each data table holding more than
+    * one commit into one commit of ~`buckets` files WITHOUT changing
+    * content (a year of daily ingests is ~365 files per bucket
+    * otherwise), all in one publish. Pre-compaction snapshots then
+    * refuse to roll back: their commits are gone.
     */
   def compact(spark: SparkSession, name: String): Unit = locked(spark, name) {
-    val buckets = bucketsOf(spark, name)
-    layout.foreach { case (suffix, c, _) =>
-      StoreGuard.compactTable(spark, name + suffix, c, buckets)
+    val live = snapshot(spark, name).commits
+    val todo = layout.filter { case (suffix, _, _) => live.getOrElse(name + suffix, Nil).size > 1 }
+    if (todo.nonEmpty) {
+      val buckets = bucketsOf(spark, name)
+      mutate(spark, name) { c =>
+        todo.foreach { case (suffix, bucketCol, _) =>
+          val t = name + suffix
+          c.replace(t)
+          // read the RAW commit dirs, not the catalog table: a bucketed
+          // scan reports HashPartitioning(bucketCol, buckets), which lets
+          // the planner drop writeBucketed's repartition as redundant
+          // while the scan's tasks are size-grouped file splits spanning
+          // many buckets — the rewrite would then miss the file floor
+          BandedStore.writeBucketed(spark.read.parquet(
+            live(t).map(guard(name).commitDir(spark, t, _).toString): _*),
+            t, bucketCol, buckets, c.id)
+        }
+      }
     }
-    guard(name).bumpGen(spark)
   }
 
   /** The store's routine monthly maintenance (the sweep and `Runner
@@ -223,7 +239,7 @@ trait BandedStore {
     * never go stale against a rebuild under the same name.
     */
   private[graft] def builtOnce(spark: SparkSession, name: String, slug: String)
-      (build: => Unit): Set[String] = {
+      (build: => Unit): BandedStore.Snapshot = {
     graft.OncePerJvm(name, slug) {
       build
       BandedStore.builtSnaps.put(name, snapshot(spark, name)); ()
@@ -231,32 +247,22 @@ trait BandedStore {
     BandedStore.builtSnaps.getOrElseUpdate(name, snapshot(spark, name))
   }
 
-  /** Drop the store's tables and their locations (idempotent). */
-  def drop(spark: SparkSession, name: String): Unit = locked(spark, name) {
-    allTables(name).foreach(StoreGuard.resetTable(spark, _))
-    guard(name).clearPending(spark) // a dropped store has nothing to recover
-    guard(name).clearStreak(spark) // ...and no audit history either
-  }
-
-  /** Persist the pre-ingest snapshot for the mutation's duration, so a
-    * fresh process can [[recover]] the store if this writer dies.
-    */
-  protected def beginIngest(spark: SparkSession, name: String): Unit =
-    guard(name).writePending(spark, snapshot(spark, name))
+  /** Drop the store's tables, manifests and streak (idempotent). */
+  def drop(spark: SparkSession, name: String): Unit = guard(name).drop(spark)
 
   /** The ingest tail from the two dedup steps to the commit: assemble
     * the flags from `histDup` (id, hist_dup_of) and the survivors'
     * components `comp` (doc_id, cluster, is_rep), hand them to
-    * `onFlags`, append the keepers — `keepers(keepIds)` lists
-    * (frame, table, bucket column), written concurrently through
-    * [[Overlap.overlappedAll]] — then bump the generation, call
-    * `onCommitted` and clear the pending file. `onStage` times "flags"
-    * and "appends".
+    * `onFlags`, then append the keepers as one commit —
+    * `keepers(keepIds)` lists (frame, table, bucket column), written
+    * concurrently through [[Overlap.overlappedAll]] — published with
+    * `batchTag`, and call `onCommitted`. `onStage` times "flags" and
+    * "appends".
     */
   protected def commitIngest(spark: SparkSession, name: String, buckets: Int,
       ids: DataFrame, histDup: DataFrame, comp: DataFrame,
       onStage: (String, Double) => Unit, onFlags: DataFrame => Unit,
-      onCommitted: () => Unit)
+      onCommitted: () => Unit, batchTag: Option[(String, Long)])
       (keepers: DataFrame => Seq[(DataFrame, String, String)]): DataFrame = {
     val flags = BandedStore.staged(onStage, "flags") {
       ids
@@ -271,52 +277,55 @@ trait BandedStore {
     }
     onFlags(flags) // before any append
     val keepIds = flags.filter(!col("is_dup")).select(idCol)
-    BandedStore.staged(onStage, "appends") {
-      Overlap.overlappedAll(keepers(keepIds).map { case (df, t, c) =>
-        () => BandedStore.writeBucketed(df, t, c, buckets, "append")
-      })
+    mutate(spark, name, batchTag, onCommitted) { c =>
+      BandedStore.staged(onStage, "appends") {
+        Overlap.overlappedAll(keepers(keepIds).map { case (df, t, bucketCol) =>
+          () => BandedStore.writeBucketed(df, t, bucketCol, buckets, c.id)
+        })
+      }
     }
-    guard(name).bumpGen(spark) // completed mutation — stale snapshots now refuse
-    onCommitted() // durable "fully happened" mark, still under the pending authorization
-    // pending clears ONLY on success (or when a rollback completes —
-    // StoreGuard.doRollback clears it): a live failure keeps the
-    // authorization on disk until the caller's compensating rollback
-    // finishes, so a crash DURING that rollback is still recoverable
-    guard(name).clearPending(spark)
     flags
   }
 }
 
 object BandedStore {
 
-  private val builtSnaps = scala.collection.concurrent.TrieMap.empty[String, Set[String]]
+  private val builtSnaps = scala.collection.concurrent.TrieMap.empty[String, Snapshot]
+
+  /** A store's published state: the manifest version and each table's
+    * live commits.
+    */
+  final case class Snapshot(version: Int, commits: Map[String, Seq[String]])
 
   /** A store's per-ingest audit, as the run reports file it. */
   trait Audit { def json: String }
 
-  /** The one bucketed store write. It repartitions onto the bucket key
-    * first: Spark's bucketed writer emits one file per (task,
-    * bucket-present-in-task), so writing straight from a W-way shuffle
-    * produces up to W×buckets near-empty files PER WRITE — a
-    * small-files problem that compounds with every append and taxes
-    * every later store read and file listing. The repartition uses the
-    * same Murmur3 hash family as the bucket spec, so each task holds
-    * exactly one bucket: `buckets` files per write, at the cost of one
-    * extra |input| shuffle.
+  /** The one bucketed store write: `df` lands as commit `commit` of
+    * `table`. It repartitions onto the bucket key first: Spark's
+    * bucketed writer emits one file per (task, bucket-present-in-task),
+    * so writing straight from a W-way shuffle produces up to W×buckets
+    * near-empty files PER WRITE — a small-files problem that compounds
+    * with every append and taxes every later store read and file
+    * listing. The repartition uses the same Murmur3 hash family as the
+    * bucket spec, so each task holds exactly one bucket: `buckets`
+    * files per write, at the cost of one extra |input| shuffle.
     */
   def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-      buckets: Int, mode: String = "overwrite"): Unit =
-    saveBucketed(df.repartition(buckets, col(bucketCol)), table, bucketCol, buckets, mode)
+      buckets: Int, commit: String): Unit =
+    saveBucketed(df.repartition(buckets, col(bucketCol)), table, commit)
 
-  /** [[writeBucketed]]'s save alone, for a frame that is already
-    * hash-partitioned on the bucket key into `buckets` (a pinned
-    * repartition read twice) or empty.
+  /** [[writeBucketed]]'s insert alone, for a frame that is already
+    * hash-partitioned on the bucket key into the table's bucket count
+    * (a pinned repartition read twice) or empty. Columns are matched by
+    * name; the table's bucket spec drives the write.
     */
-  def saveBucketed(df: DataFrame, table: String, bucketCol: String,
-      buckets: Int, mode: String = "overwrite"): Unit =
-    df.write.mode(mode).format("parquet")
-      .bucketBy(buckets, bucketCol).sortBy(bucketCol)
-      .saveAsTable(table)
+  def saveBucketed(df: DataFrame, table: String, commit: String): Unit = {
+    val cols = df.sparkSession.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
+      .dataSchema.fieldNames.toSeq
+    df.select(cols.map(col) :+ lit(commit).as("commit"): _*)
+      .write.mode("append").insertInto(table)
+  }
 
   /** `band:band_hash`, the LSH candidate join key every band table is
     * bucketed by.

@@ -48,12 +48,12 @@ object SignatureStore extends BandedStore {
   final case class Spec(k: Int = 3, bands: Int = 8, maxDf: Int = 100,
       rows: Int = 2)
 
-  /** Read the pinned build parameters back from the meta row (absent
-    * `rows` column = a pre-knob store = 2).
+  /** Read the pinned build parameters back from the meta row (a null
+    * `rows` = a meta written before the knob = 2).
     */
   private def specOf(meta: org.apache.spark.sql.Row): Spec =
     Spec(meta.getAs[Int]("k"), meta.getAs[Int]("bands"), meta.getAs[Int]("max_df"),
-      if (meta.schema.fieldNames.contains("rows")) meta.getAs[Int]("rows") else 2)
+      if (meta.isNullAt(meta.fieldIndex("rows"))) 2 else meta.getAs[Int]("rows"))
 
   /** Per-ingest band-bucket accounting — the text twin of
     * [[graft.similarity.EmbeddingStore.IngestAudit]]. The MinHash
@@ -94,27 +94,27 @@ object SignatureStore extends BandedStore {
     */
   def build(spark: SparkSession, history: DataFrame, name: String,
       spec: Spec = Spec(), buckets: Int = 16): Unit = locked(spark, name) {
-    // locked like every mutator: a rebuild racing a live ingest would
-    // delete the tables out from under its appends (the lock file is a
-    // SIBLING of the table dirs, so the reset below cannot remove it)
+    // locked like every mutator: a rebuild never interleaves with a live
+    // ingest; it replaces every table's commits in one publish
     import spark.implicits._
     require(spec.rows >= 1 && spec.bands >= 1, s"invalid banding geometry $spec")
-    allTables(name).foreach(StoreGuard.resetTable(spark, _))
-    BandedStore.writeBucketed(
-      Dedup.minhashBands(history, spec.k, spec.bands, spec.rows)
-        .withColumn("band_key", BandedStore.bandKey),
-      bandsTable(name), "band_key", buckets)
-    val index = Dedup.shingleIndex(history, spec.k, spec.maxDf)
-      .repartition(buckets, col("doc_id")).persist()
-    try {
-      BandedStore.saveBucketed(index, shinglesTable(name), "doc_id", buckets)
-      BandedStore.writeBucketed(index.groupBy("doc_id").agg(count(lit(1)).as("n_sh")),
-        sizesTable(name), "doc_id", buckets)
-    } finally index.unpersist()
-    Seq((spec.k, spec.bands, spec.maxDf, buckets, spec.rows))
-      .toDF("k", "bands", "max_df", "buckets", "rows")
-      .write.mode("overwrite").format("parquet").saveAsTable(metaTable(name))
-    guard(name).bumpGen(spark) // generation 1 — this build is "ours"
+    declare(spark, name, Some(buckets))
+    mutate(spark, name) { c =>
+      allTables(name).foreach(c.replace)
+      BandedStore.writeBucketed(
+        Dedup.minhashBands(history, spec.k, spec.bands, spec.rows)
+          .withColumn("band_key", BandedStore.bandKey),
+        bandsTable(name), "band_key", buckets, c.id)
+      val index = Dedup.shingleIndex(history, spec.k, spec.maxDf)
+        .repartition(buckets, col("doc_id")).persist()
+      try {
+        BandedStore.saveBucketed(index, shinglesTable(name), c.id)
+        BandedStore.writeBucketed(index.groupBy("doc_id").agg(count(lit(1)).as("n_sh")),
+          sizesTable(name), "doc_id", buckets, c.id)
+      } finally index.unpersist()
+      writeMeta(spark, name, Seq((spec.k, spec.bands, spec.maxDf, buckets, spec.rows))
+        .toDF("k", "bands", "max_df", "buckets", "rows"), c.id)
+    }
   }
 
   /** Hot-bucket REMEDIATION — the operator response when the band
@@ -175,9 +175,9 @@ object SignatureStore extends BandedStore {
       onStage: (String, Double) => Unit = (_, _) => (),
       onFlags: DataFrame => Unit = _ => (),
       onCommitted: () => Unit = () => (),
-      onAudit: IngestAudit => Unit = _ => ()): DataFrame =
+      onAudit: IngestAudit => Unit = _ => (),
+      batchTag: Option[(String, Long)] = None): DataFrame =
     locked(spark, name) { // single-writer: a concurrent ingest fails fast
-    beginIngest(spark, name)
     def staged[A](label: String)(f: => A): A = BandedStore.staged(onStage, label)(f)
     val meta = spark.table(metaTable(name)).head()
     val spec = specOf(meta)
@@ -252,7 +252,7 @@ object SignatureStore extends BandedStore {
         survIds)
     }
     commitIngest(spark, name, buckets, ids, histDup, comp,
-        onStage, onFlags, onCommitted) { keepIds =>
+        onStage, onFlags, onCommitted, batchTag) { keepIds =>
       // the keepers' index feeds two appends — pinned once
       val index = Dedup.indexFromShingles(bsh.join(keepIds, "doc_id"), spec.maxDf)
         .localCheckpoint(true)

@@ -554,9 +554,9 @@ object Orchestrator {
     * a re-run of the same batch MERGEs idempotently instead of
     * duplicating flag rows), and notify — created/updated reporting
     * survivors-appended/dups-flagged. The store append and the flag
-    * merge commit together: any failure rolls the store back to its
-    * pre-ingest snapshot (bit-for-bit file undo), so a crashed batch
-    * leaves neither half-appended signatures nor unflagged appends —
+    * merge commit together: any failure republishes the store's
+    * pre-ingest snapshot, so a crashed batch leaves neither
+    * half-appended signatures nor unflagged appends —
     * the same no-partial-state discipline the versioned sink gives the
     * reference pipelines. Daily cost is O(batch) (store history is
     * read pre-bucketed, never reshuffled); [[maintain]] with

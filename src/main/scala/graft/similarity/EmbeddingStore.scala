@@ -2,7 +2,7 @@ package graft.similarity
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.dedup.{BandedStore, Dedup, Overlap, StoreGuard}
+import graft.dedup.{BandedStore, Dedup, Overlap}
 
 /** Persisted sign-bit LSH store for INCREMENTAL embedding near-dup —
   * the embedding twin of [[graft.dedup.SignatureStore]], and the only
@@ -122,72 +122,12 @@ object EmbeddingStore extends BandedStore {
 
   /** The one spec row every probe reads back — geometry, bucketing,
     * width, and the banding-kernel version all pinned together.
-    *
-    * An EXISTING meta table is rewritten with INSERT OVERWRITE
-    * (`insertInto`), never `saveAsTable(Overwrite)`: the table identity
-    * must survive the rewrite. In the JVM that built the store the
-    * entry is MANAGED and either form works — but after a fresh JVM's
-    * [[ensureRegistered]] the entry is EXTERNAL (`CREATE TABLE ...
-    * LOCATION`), and saveAsTable's overwrite DROPS that entry (leaving
-    * the external files in place) then refuses to create a managed
-    * table over the surviving location — LOCATION_ALREADY_EXISTS,
-    * killing every cross-JVM reband/compact (found by the r17 CLI
-    * remediation proof: the cron-cadence sweep runs in a fresh JVM by
-    * design, so the monthly reband ALWAYS hit this in production shape).
     */
-  private def writeMeta(spark: SparkSession, name: String, spec: Spec,
-      buckets: Int, dims: Int): Unit = {
+  private def metaRow(spark: SparkSession, spec: Spec, buckets: Int, dims: Int): DataFrame = {
     import spark.implicits._
-    val df = Seq((spec.planes, spec.bandBits, buckets, dims, Similarity.LshKernelVersion))
+    Seq((spec.planes, spec.bandBits, buckets, dims, Similarity.LshKernelVersion))
       .toDF("planes", "band_bits", "buckets", "dims", "kernel")
-    val t = metaTable(name)
-    if (spark.catalog.tableExists(t) &&
-        spark.table(t).schema.fieldNames.sameElements(df.schema.fieldNames))
-      df.write.mode("overwrite").insertInto(t)
-    else {
-      // schema evolution (a pre-kernel 4-column meta being upgraded) or
-      // no live entry: replace the table outright — resetTable clears
-      // BOTH the catalog entry and the warehouse location, so the
-      // create never refuses over a surviving dir (an orphaned meta dir
-      // from another JVM would otherwise be LOCATION_ALREADY_EXISTS too)
-      StoreGuard.resetTable(spark, t)
-      df.write.mode("overwrite").format("parquet").saveAsTable(t)
-    }
   }
-
-  /** `<meta-dir>.rebanding` sibling marker: present exactly while a
-    * reband's commit sequence may have the bands table and `_emeta`
-    * DISAGREEING on geometry (bands rewritten, meta not yet
-    * overwritten). Without it that crash window is silent: probe is
-    * lock-free and ingest's band keys simply stop colliding with the
-    * stored bands — zero matches, no error. A sibling of the meta dir
-    * (like the lock and pending files) so no table rewrite can delete
-    * it; re-running reband completes the sequence and clears it.
-    */
-  private def rebandMarkerPath(spark: SparkSession, name: String): org.apache.hadoop.fs.Path =
-    guard(name).sibling(spark, ".rebanding")
-  private def rebandInFlight(spark: SparkSession, name: String): Boolean = {
-    val p = rebandMarkerPath(spark, name)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-  private def setRebandMarker(spark: SparkSession, name: String, on: Boolean): Unit = {
-    val p = rebandMarkerPath(spark, name)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (on) { fs.mkdirs(p.getParent); fs.createNewFile(p); () }
-    else { fs.delete(p, false); () }
-  }
-
-  /** Refuse to band a batch (or probe) while an unfinished reband may
-    * have left bands and meta on different geometries — banding with
-    * the stale spec would MISS stored near-dups silently.
-    */
-  private def requireNoRebandWindow(spark: SparkSession, name: String): Unit =
-    require(!rebandInFlight(spark, name),
-      s"embedding store '$name' has an unfinished reband " +
-        s"(${rebandMarkerPath(spark, name)}): the bands table and _emeta may " +
-        "disagree on band geometry, so batch bands could silently miss stored " +
-        "near-dups — re-run reband (Runner --maintain-store-emb) to complete " +
-        "it (recover/unlock first if the writer died holding the lock)")
 
   /** Maintenance RE-BANDING: re-derive the band geometry from the
     * store's CURRENT size and rewrite the bands table from the stored
@@ -201,67 +141,42 @@ object EmbeddingStore extends BandedStore {
     * table at the file floor). Returns true when a rewrite happened;
     * no-op (false) when the derived geometry equals the pinned one.
     *
-    * Crash contract (a REBUILD-class mutation, like `build`): the slow
-    * staging writes to a `__rebanding` scratch sibling first; the
-    * commit sequence (reset → rename → re-declare → meta overwrite →
-    * gen bump) is short, and a compactor never resumes it (different
-    * staged suffix) — a re-run of reband itself heals: on entry, a
-    * staged sibling holding the only copy of the bands is swapped in
-    * before the (idempotent) meta re-derivation. Pre-reband snapshots
-    * become non-rollbackable (band files are deleted, and the meta
-    * overwrite restarts the generation history — both rollback gates
-    * refuse loudly, same as after a `build`).
+    * The new bands and the re-pinned meta row are one publish, so no
+    * reader ever sees bands and meta on different geometries; a
+    * rebander that dies before it leaves the store as it was.
+    * Pre-reband snapshots then refuse to roll back, as after a `build`.
     */
   def reband(spark: SparkSession, name: String): Boolean = locked(spark, name) {
-    val bandsT = bandsTable(name)
     val meta = spark.table(metaTable(name)).head()
     val spec = specOf(meta)
     val buckets = meta.getAs[Int]("buckets")
-    val dims = meta.getAs[Int]("dims")
     val n = spark.table(vecsTable(name)).count()
     val spec2 = Spec().resolve(n)
     // outgrown geometry OR a banding-arithmetic upgrade: both mean the
     // stored bands no longer match what this engine would hash, and
     // both are cured by the same vectors-to-bands rewrite
     val outdated = spec2 != spec || kernelOf(meta) != Similarity.LshKernelVersion
-    // the `.rebanding` marker brackets the whole mutation: from before
-    // the bands rewrite until AFTER the meta overwrite, bands and meta
-    // may disagree on geometry — ingest/probe refuse while it exists
-    // (requireNoRebandWindow) instead of silently missing matches. A
-    // dead rebander's marker survives its crash; this re-run completes
-    // the sequence and clears it below.
-    if (n > 0 && outdated) setRebandMarker(spark, name, on = true)
-    // an EMPTY store has no bands to rewrite (and a zero-file bucketed
-    // write stages no readable parquet — compactTable's floor guards
-    // the same edge): skip the swap, re-pin the meta below
-    val swapped = n > 0 && StoreGuard.stagedSwap(spark, bandsT,
-        s"${bandsT}__rebanding", "band_key", buckets, needed = outdated) { staged =>
-      // a dead rebander's staged sibling holding the ONLY copy resumes
-      // inside stagedSwap (the bands content is already the DERIVED
-      // spec — the meta re-derivation below recommits it)
-      BandedStore.writeBucketed(
-        bandsOf(spark.table(vecsTable(name)).select("vec_id", "emb"), spec2),
-        staged, "band_key", buckets)
-    }
-    val changed =
-      if (!swapped && !outdated) false
-      else {
-        writeMeta(spark, name, spec2, buckets, dims)
-        guard(name).bumpGen(spark)
-        // a geometry change is the remediation the AUDIT ALERT names
-        // for this store: old breach evidence describes bands that no
-        // longer exist, so the persisted streak resets WITH the reband
-        // — and only then; a no-op reband (geometry already current)
-        // leaves the alert condition armed, because rebanding cannot
-        // fix it and the remaining remedy (raise bucketCap) is the
-        // caller's knob
-        guard(name).clearStreak(spark)
-        true
+    if (outdated) {
+      mutate(spark, name) { c =>
+        // an EMPTY store has no bands to rewrite: re-pin the meta only
+        if (n > 0) {
+          c.replace(bandsTable(name))
+          BandedStore.writeBucketed(
+            bandsOf(spark.table(vecsTable(name)).select("vec_id", "emb"), spec2),
+            bandsTable(name), "band_key", buckets, c.id)
+        }
+        c.replace(metaTable(name))
+        writeMeta(spark, name, metaRow(spark, spec2, buckets, meta.getAs[Int]("dims")), c.id)
       }
-    // bands and meta agree again (or never disagreed) — also heals a
-    // predecessor dead between its meta overwrite and its own clear
-    setRebandMarker(spark, name, on = false)
-    changed
+      // a geometry change is the remediation the AUDIT ALERT names for
+      // this store: old breach evidence describes bands that no longer
+      // exist, so the persisted streak resets WITH the reband — and only
+      // then; a no-op reband leaves the alert condition armed, because a
+      // new geometry cannot fix it and the remaining remedy (raise
+      // bucketCap) is the caller's knob
+      clearAuditStreak(spark, name)
+    }
+    outdated
   }
 
   /** Re-band ([[reband]]) first — it widens the key space when the
@@ -272,11 +187,6 @@ object EmbeddingStore extends BandedStore {
     val rebanded = reband(spark, name)
     compact(spark, name)
     if (rebanded) Some("re-banded to the adaptive geometry for its current size") else None
-  }
-
-  override def drop(spark: SparkSession, name: String): Unit = locked(spark, name) {
-    super.drop(spark, name)
-    setRebandMarker(spark, name, on = false) // no store, no window
   }
 
   /** Canonical (vec_id, emb array<double>) projection of a corpus. */
@@ -338,7 +248,6 @@ object EmbeddingStore extends BandedStore {
   def incrementalPairs(spark: SparkSession, batch: DataFrame, name: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
       threshold: Double = 0.9): DataFrame = {
-    requireNoRebandWindow(spark, name)
     val meta = spark.table(metaTable(name)).head()
     requireCurrentKernel(name, meta)
     val spec = specOf(meta)
@@ -356,8 +265,7 @@ object EmbeddingStore extends BandedStore {
   def build(spark: SparkSession, history: DataFrame, name: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
       spec: Spec = Spec(), buckets: Int = 16): Unit = locked(spark, name) {
-    import spark.implicits._
-    allTables(name).foreach(StoreGuard.resetTable(spark, _))
+    declare(spark, name, Some(buckets))
     val base = baseOf(history, idCol, vecCol).localCheckpoint(true)
     // one control-plane probe: history size (drives the adaptive band
     // geometry) and width
@@ -366,22 +274,18 @@ object EmbeddingStore extends BandedStore {
       if (probeRow.isNullAt(1)) -1 // empty history: first ingest sets dims
       else probeRow.getInt(1)
     val spec0 = spec.resolve(probeRow.getLong(0))
-    if (dims > 0) {
-      BandedStore.writeBucketed(bandsOf(base, spec0), bandsTable(name), "band_key", buckets)
-      BandedStore.writeBucketed(base.withColumn("ns", Similarity.normSq(col("emb"))),
-        vecsTable(name), "vec_id", buckets)
-    } else {
-      // empty history still needs the table shells so ingest can append
-      BandedStore.saveBucketed(Seq.empty[(Long, Int, Int, String)]
-        .toDF("vec_id", "band", "band_hash", "band_key"), bandsTable(name), "band_key", buckets)
-      BandedStore.saveBucketed(Seq.empty[(Long, Array[Double], Double)]
-        .toDF("vec_id", "emb", "ns"), vecsTable(name), "vec_id", buckets)
+    mutate(spark, name) { c =>
+      allTables(name).foreach(c.replace)
+      // an empty history writes no data commit: the declared tables
+      // read empty and the first ingest appends
+      if (dims > 0) {
+        BandedStore.writeBucketed(bandsOf(base, spec0), bandsTable(name), "band_key",
+          buckets, c.id)
+        BandedStore.writeBucketed(base.withColumn("ns", Similarity.normSq(col("emb"))),
+          vecsTable(name), "vec_id", buckets, c.id)
+      }
+      writeMeta(spark, name, metaRow(spark, spec0, buckets, dims), c.id)
     }
-    writeMeta(spark, name, spec0, buckets, dims)
-    guard(name).bumpGen(spark)
-    // a full rebuild re-pins bands and meta together — any marker left
-    // by a rebander that died before this build is moot now
-    setRebandMarker(spark, name, on = false)
   }
 
   /** Dedup `batch` against the store and within itself; append the
@@ -412,8 +316,8 @@ object EmbeddingStore extends BandedStore {
       onFlags: DataFrame => Unit = _ => (),
       onCommitted: () => Unit = () => (),
       bucketCap: Int = 1000,
-      onAudit: IngestAudit => Unit = _ => ()): DataFrame = locked(spark, name) {
-    requireNoRebandWindow(spark, name)
+      onAudit: IngestAudit => Unit = _ => (),
+      batchTag: Option[(String, Long)] = None): DataFrame = locked(spark, name) {
     val meta = spark.table(metaTable(name)).head()
     requireCurrentKernel(name, meta)
     val spec = specOf(meta)
@@ -429,22 +333,16 @@ object EmbeddingStore extends BandedStore {
     val ids = base.select("vec_id")
     val dimsRow = Overlap.observedRow(baseObs,
       base.agg(max(size(col("emb"))), count(lit(1))).head())
-    // emptiness check BEFORE the pending snapshot: an empty batch
-    // mutates nothing, so writing (and then never clearing) a pending
-    // file here would make a later recover() falsely report a crashed
-    // ingest on a clean store
+    // an empty batch mutates nothing: no commit, no publish
     if (dimsRow.isNullAt(0))
       return ids.select(col("vec_id"), lit(false).as("is_dup"),
         lit(null).cast("long").as("dup_of")).limit(0)
-    beginIngest(spark, name)
     locally {
       val dims = dimsRow.getInt(0)
       // an empty-history build pins dims = -1; the effective store dims
       // are then whatever the ACCUMULATED vectors have (one-row probe of
       // the bucketed table). Deliberately NOT persisted back into meta:
-      // ingest must never REWRITE a pre-snapshot file — rollback/recover
-      // only undo appends and re-create empty gen markers, so a meta
-      // overwrite would be unrecoverable after a crash
+      // an ingest only appends
       val storedDims = meta.getAs[Int]("dims") match {
         case d if d > 0 => d
         case _ =>
@@ -520,7 +418,7 @@ object EmbeddingStore extends BandedStore {
       val comp = Dedup.clusters(selfPairs, survIds.select(col("vec_id").as("doc_id")))
 
       commitIngest(spark, name, buckets, ids, histDup, comp,
-          (_, _) => (), onFlags, onCommitted) { keepIds =>
+          (_, _) => (), onFlags, onCommitted, batchTag) { keepIds =>
         Seq(
           (bBands.join(keepIds, "vec_id").select("vec_id", "band", "band_hash", "band_key"),
             bandsTable(name), "band_key"),

@@ -162,11 +162,9 @@ object IvfIndex {
     // number and leaks one marker forever. A marker is provably orphaned
     // when its number has no published delta dir AND it is older than
     // the grace period (a LIVE writer's staging never outlives the
-    // grace; default 6 h is >> any append). fs.delete on a marker a racy
-    // peer also saw is idempotent — worst case both delete it, and the
-    // reservation loop below re-races cleanly on createNewFile.
-    val graceMs = sys.props.get("graft.ivf.reservedGraceMs").map(_.toLong)
-      .getOrElse(6L * 3600 * 1000)
+    // grace; [[ReservedGraceMs]] is >> any append). fs.delete on a marker
+    // a racy peer also saw is idempotent — worst case both delete it, and
+    // the reservation loop below re-races cleanly on createNewFile.
     val nowMs = System.currentTimeMillis()
     fs.listStatus(vd).foreach { st =>
       st.getPath.getName match {
@@ -180,7 +178,7 @@ object IvfIndex {
           // unpublished marker is orphaned only once it outlives the
           // grace period (a LIVE writer's staging never does).
           val published = fs.exists(new org.apache.hadoop.fs.Path(vd, s"delta-$n"))
-          if (published || nowMs - st.getModificationTime > graceMs)
+          if (published || nowMs - st.getModificationTime > ReservedGraceMs)
             fs.delete(st.getPath, false)
         case _ => ()
       }
@@ -219,6 +217,11 @@ object IvfIndex {
   }
 
   private val ResRe = raw"_delta-(\d{5})\.reserved".r
+
+  /** Age past which an unpublished delta reservation is a dead writer's
+    * orphan: 6 h, far longer than any append stages.
+    */
+  private val ReservedGraceMs = 6L * 3600 * 1000
 
   /** All vector dirs of a version — the base `vectors/` plus any
     * published `delta-<n>` appends, in publish order.

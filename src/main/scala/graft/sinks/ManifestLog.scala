@@ -1,0 +1,53 @@
+package graft.sinks
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+
+/** The numbered manifest files of a Delta-style log (Armbrust et al.,
+  * VLDB 2020): `manifest-v00000001.txt`, `manifest-v00000002.txt`, ...
+  * under one directory, each a complete list of what is live, and the
+  * highest-numbered one wins. [[VersionedTable]] and the corpus stores'
+  * [[graft.dedup.StoreGuard]] both commit through it; each encodes its
+  * own lines.
+  */
+private[graft] object ManifestLog {
+
+  private val ManifestRe = raw"manifest-v(\d{8})\.txt".r
+
+  def path(dir: Path, version: Int): Path = new Path(dir, f"manifest-v$version%08d.txt")
+
+  /** The version a file name carries, if it is a manifest's. */
+  def versionOf(fileName: String): Option[Int] = fileName match {
+    case ManifestRe(v) => Some(v.toInt)
+    case _ => None
+  }
+
+  /** Newest published version under `dir` (0 = nothing published yet). */
+  def currentVersion(fs: FileSystem, dir: Path): Int =
+    if (!fs.exists(dir)) 0
+    else fs.listStatus(dir).flatMap(st => versionOf(st.getPath.getName)).foldLeft(0)(math.max)
+
+  /** The non-empty lines of version `version`'s manifest. */
+  def read(fs: FileSystem, dir: Path, version: Int): Seq[String] = {
+    val in = fs.open(path(dir, version))
+    val text =
+      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+      finally in.close()
+    text.linesIterator.filter(_.nonEmpty).toSeq
+  }
+
+  /** Publish `lines` as version `version` — the single atomic step. The
+    * temp file is complete and flushed before the rename; rename onto a
+    * fresh versioned name either fully succeeds or fully fails.
+    */
+  def publish(fs: FileSystem, dir: Path, version: Int, lines: Seq[String]): Unit = {
+    val tmp = new Path(dir, s"tmp-manifest-${java.util.UUID.randomUUID()}")
+    val out = fs.create(tmp, false)
+    try out.write(lines.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    val target = path(dir, version)
+    if (!fs.rename(tmp, target)) {
+      fs.delete(tmp, false)
+      sys.error(s"concurrent commit: version $version already published at $dir")
+    }
+  }
+}

@@ -49,7 +49,6 @@ import org.apache.spark.sql.functions.{col, lit}
   */
 object VersionedTable {
 
-  private val ManifestRe = raw"manifest-v(\d{8})\.txt".r
   private val HiveDefaultPartition = "__HIVE_DEFAULT_PARTITION__"
 
   /** One live unit of data: a commit directory and a Hive-style partition
@@ -76,45 +75,17 @@ object VersionedTable {
       s"${escape(c)}=$vs"
     }.mkString("/")
 
-  private def currentVersion(fs: FileSystem, root: Path): Int =
-    if (!fs.exists(root)) 0
-    else fs.listStatus(root).flatMap { st =>
-      st.getPath.getName match {
-        case ManifestRe(v) => Some(v.toInt)
-        case _ => None
-      }
-    }.foldLeft(0)(math.max)
-
-  private def readManifest(fs: FileSystem, root: Path, version: Int): Seq[Entry] = {
-    val in = fs.open(new Path(root, f"manifest-v$version%08d.txt"))
-    val text =
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    text.linesIterator.filter(_.nonEmpty).map { line =>
+  private def readManifest(fs: FileSystem, root: Path, version: Int): Seq[Entry] =
+    ManifestLog.read(fs, root, version).map { line =>
       line.split('\t') match {
         case Array(c, r) => Entry(c, r)
         case Array(c) => Entry(c, "")
         case _ => sys.error(s"corrupt manifest line: $line")
       }
-    }.toSeq
-  }
-
-  /** Publish `entries` as version `v` — the single atomic step. The temp
-    * file is complete and flushed before the rename; rename onto a fresh
-    * versioned name either fully succeeds or fully fails.
-    */
-  private def publish(fs: FileSystem, root: Path, v: Int, entries: Seq[Entry]): Unit = {
-    val tmp = new Path(root, s"tmp-manifest-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write(entries.map(e => s"${e.commit}\t${e.relPath}").mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val target = new Path(root, f"manifest-v$v%08d.txt")
-    if (!fs.rename(tmp, target)) {
-      fs.delete(tmp, false)
-      sys.error(s"concurrent commit: version $v already published at $root")
     }
-  }
+
+  private def publish(fs: FileSystem, root: Path, v: Int, entries: Seq[Entry]): Unit =
+    ManifestLog.publish(fs, root, v, entries.map(e => s"${e.commit}\t${e.relPath}"))
 
   /** List the live leaf partition directories of a freshly written commit
     * (depth = number of partition columns; "" when unpartitioned).
@@ -148,14 +119,14 @@ object VersionedTable {
   /** Newest published version at `rootDir` (0 = nothing published yet). */
   def version(spark: SparkSession, rootDir: String): Int = {
     val root = new Path(rootDir)
-    currentVersion(fsOf(spark, root), root)
+    ManifestLog.currentVersion(fsOf(spark, root), root)
   }
 
   /** Read the table at its newest published version. */
   def read(spark: SparkSession, rootDir: String): DataFrame = {
     val root = new Path(rootDir)
     val fs = fsOf(spark, root)
-    val v = currentVersion(fs, root)
+    val v = ManifestLog.currentVersion(fs, root)
     require(v > 0, s"no published version at $rootDir")
     readEntries(spark, root, readManifest(fs, root, v))
   }
@@ -167,7 +138,7 @@ object VersionedTable {
   def readAt(spark: SparkSession, rootDir: String, version: Int): DataFrame = {
     val root = new Path(rootDir)
     val fs = fsOf(spark, root)
-    require(fs.exists(new Path(root, f"manifest-v$version%08d.txt")),
+    require(fs.exists(ManifestLog.path(root, version)),
       s"version $version not available at $rootDir (vacuumed or never published)")
     readEntries(spark, root, readManifest(fs, root, version))
   }
@@ -186,7 +157,7 @@ object VersionedTable {
       onBeforePublish: () => Unit = () => ()): Unit = {
     val root = new Path(rootDir)
     val fs = fsOf(spark, root)
-    val v = currentVersion(fs, root)
+    val v = ManifestLog.currentVersion(fs, root)
     val commitRel = s"commits/c-${java.util.UUID.randomUUID()}"
     val commitAbs = new Path(root, commitRel)
     val w = data.write.mode("errorifexists")
@@ -219,7 +190,7 @@ object VersionedTable {
       onBeforePublish: () => Unit = () => ()): Unit = {
     val root = new Path(rootDir)
     val fs = fsOf(spark, root)
-    val v = currentVersion(fs, root)
+    val v = ManifestLog.currentVersion(fs, root)
     val commitRel = s"commits/c-${java.util.UUID.randomUUID()}"
     val commitAbs = new Path(root, commitRel)
 
@@ -332,7 +303,7 @@ object VersionedTable {
       sortCols: Seq[String] = Nil): Int = {
     val root = new Path(rootDir)
     val fs = fsOf(spark, root)
-    val v = currentVersion(fs, root)
+    val v = ManifestLog.currentVersion(fs, root)
     require(v > 0, s"no published version at $rootDir")
     val current = readManifest(fs, root, v)
     def sub(base: Path, rel: String): Path =
@@ -394,20 +365,17 @@ object VersionedTable {
     require(retainVersions >= 1, "retainVersions must be >= 1")
     val root = new Path(rootDir)
     val fs = fsOf(spark, root)
-    val v = currentVersion(fs, root)
+    val v = ManifestLog.currentVersion(fs, root)
     require(v > 0, s"no published version at $rootDir")
     val oldest = math.max(1, v - retainVersions + 1)
-    val retained = (oldest to v).filter(ver =>
-      fs.exists(new Path(root, f"manifest-v$ver%08d.txt")))
+    val retained = (oldest to v).filter(ver => fs.exists(ManifestLog.path(root, ver)))
     val live = retained.flatMap(readManifest(fs, root, _)).distinct
     val liveByCommit = live.groupBy(_.commit)
     // manifests below the window + stray temp manifests
     fs.listStatus(root).foreach { st =>
-      st.getPath.getName match {
-        case ManifestRe(ver) if ver.toInt < oldest => fs.delete(st.getPath, false)
-        case n if n.startsWith("tmp-manifest-") => fs.delete(st.getPath, false)
-        case _ => ()
-      }
+      val n = st.getPath.getName
+      if (ManifestLog.versionOf(n).exists(_ < oldest) || n.startsWith("tmp-manifest-"))
+        fs.delete(st.getPath, false)
     }
     val commitsDir = new Path(root, "commits")
     if (fs.exists(commitsDir)) fs.listStatus(commitsDir).foreach { st =>

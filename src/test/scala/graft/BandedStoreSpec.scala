@@ -4,32 +4,33 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
-import graft.dedup.{SignatureStore, StoreGuard}
+import graft.dedup.{BandedStore, SignatureStore, StoreGuard}
 import graft.similarity.EmbeddingStore
 
 /** The lifecycle verbs both corpus stores share, driven for each store
-  * kind through its public API: the single-writer lock, owner-arbitrated
-  * recovery, the lock discharges, the rollback refusal after a
-  * compaction, and cross-process re-registration.
+  * kind through its public API: the single-writer lock, recovery of a
+  * dead writer's unpublished commits, the lock discharges, the rollback
+  * refusal after a compaction, and cross-process re-registration.
   */
 class BandedStoreSpec extends SparkSpec {
 
   /** One store kind's public verbs, bound to one store name. */
   private trait Kind {
     def label: String
+    def store: BandedStore
     def name: String
     def metaTable: String
     /** (table, bucket column) of each bucketed data table. */
     def tables: Seq[(String, String)]
     def build(buckets: Int): Unit
     /** Ingest the day-1 batch (ids ≡ 1 mod 5) against the day-0 build. */
-    def ingest(onCommitted: () => Unit = () => ()): Unit
+    def ingest(): Unit
     def locked(f: => Unit): Unit
     def recoverArbitrated(): Boolean
     def unlock(): Unit
     def dischargeDeadLock(strict: Boolean): Boolean
-    def snapshot(): Set[String]
-    def rollback(snap: Set[String]): Unit
+    def snapshot(): BandedStore.Snapshot
+    def rollback(snap: BandedStore.Snapshot): Unit
     def compact(): Unit
     def ensureRegistered(): Unit
     def drop(): Unit
@@ -40,6 +41,7 @@ class BandedStoreSpec extends SparkSpec {
 
   private val text: Kind = new Kind {
     val label = "signature store"
+    val store = SignatureStore
     val name = "graft_banded_spec_text"
     private lazy val docs = Tables.documents(spark, sfDir)
     def metaTable = SignatureStore.metaTable(name)
@@ -48,8 +50,8 @@ class BandedStoreSpec extends SparkSpec {
       SignatureStore.sizesTable(name) -> "doc_id")
     def build(buckets: Int): Unit =
       SignatureStore.build(spark, day(docs, "doc_id", 0), name, buckets = buckets)
-    def ingest(onCommitted: () => Unit): Unit = {
-      SignatureStore.ingest(spark, day(docs, "doc_id", 1), name, onCommitted = onCommitted)
+    def ingest(): Unit = {
+      SignatureStore.ingest(spark, day(docs, "doc_id", 1), name)
       ()
     }
     def locked(f: => Unit): Unit = SignatureStore.locked(spark, name)(f)
@@ -57,8 +59,8 @@ class BandedStoreSpec extends SparkSpec {
     def unlock(): Unit = SignatureStore.unlock(spark, name)
     def dischargeDeadLock(strict: Boolean): Boolean =
       SignatureStore.dischargeDeadLock(spark, name, strict)
-    def snapshot(): Set[String] = SignatureStore.snapshot(spark, name)
-    def rollback(snap: Set[String]): Unit = SignatureStore.rollback(spark, name, snap)
+    def snapshot(): BandedStore.Snapshot = SignatureStore.snapshot(spark, name)
+    def rollback(snap: BandedStore.Snapshot): Unit = SignatureStore.rollback(spark, name, snap)
     def compact(): Unit = SignatureStore.compact(spark, name)
     def ensureRegistered(): Unit = SignatureStore.ensureRegistered(spark, name)
     def drop(): Unit = SignatureStore.drop(spark, name)
@@ -66,6 +68,7 @@ class BandedStoreSpec extends SparkSpec {
 
   private val emb: Kind = new Kind {
     val label = "embedding store"
+    val store = EmbeddingStore
     val name = "graft_banded_spec_emb"
     private lazy val vecs = Tables.embeddings(spark, sfDir)
     def metaTable = EmbeddingStore.metaTable(name)
@@ -73,8 +76,8 @@ class BandedStoreSpec extends SparkSpec {
       EmbeddingStore.vecsTable(name) -> "vec_id")
     def build(buckets: Int): Unit =
       EmbeddingStore.build(spark, day(vecs, "vec_id", 0), name, buckets = buckets)
-    def ingest(onCommitted: () => Unit): Unit = {
-      EmbeddingStore.ingest(spark, day(vecs, "vec_id", 1), name, onCommitted = onCommitted)
+    def ingest(): Unit = {
+      EmbeddingStore.ingest(spark, day(vecs, "vec_id", 1), name)
       ()
     }
     def locked(f: => Unit): Unit = EmbeddingStore.locked(spark, name)(f)
@@ -82,8 +85,8 @@ class BandedStoreSpec extends SparkSpec {
     def unlock(): Unit = EmbeddingStore.unlock(spark, name)
     def dischargeDeadLock(strict: Boolean): Boolean =
       EmbeddingStore.dischargeDeadLock(spark, name, strict)
-    def snapshot(): Set[String] = EmbeddingStore.snapshot(spark, name)
-    def rollback(snap: Set[String]): Unit = EmbeddingStore.rollback(spark, name, snap)
+    def snapshot(): BandedStore.Snapshot = EmbeddingStore.snapshot(spark, name)
+    def rollback(snap: BandedStore.Snapshot): Unit = EmbeddingStore.rollback(spark, name, snap)
     def compact(): Unit = EmbeddingStore.compact(spark, name)
     def ensureRegistered(): Unit = EmbeddingStore.ensureRegistered(spark, name)
     def drop(): Unit = EmbeddingStore.drop(spark, name)
@@ -112,6 +115,12 @@ class BandedStoreSpec extends SparkSpec {
     try f finally { fs.delete(lockOf(k), false); k.drop() }
   }
 
+  /** The data columns of every data table of `k`, sorted. */
+  private def content(k: Kind): Seq[Seq[String]] =
+    k.tables.map { case (t, _) =>
+      spark.table(t).drop("commit").collect().map(_.toString).sorted.toSeq
+    }
+
   Seq(text, emb).foreach { k =>
 
     test(s"${k.label}: a second writer fails fast against locked") {
@@ -129,22 +138,28 @@ class BandedStoreSpec extends SparkSpec {
 
     test(s"${k.label}: recoverArbitrated restores the pending snapshot when the lock owner is dead") {
       withStore(k) {
+        k.ingest()
         val snap0 = k.snapshot()
-        // the writer dies after its appends and generation bump, before
-        // the pending file clears: lock released by the throw, so stamp
-        // a dead owner's lock back as a killed process would leave it
-        val e = intercept[RuntimeException](k.ingest(() => sys.error("writer died")))
-        assert(e.getMessage.contains("writer died"))
-        assert(k.snapshot() != snap0, "the dead writer's appends are on disk")
-        // a LIVE owner's in-flight pending is never rolled back
+        val rows0 = content(k)
+        // a writer died after its appends, before its publish: its
+        // commits are on disk, its stamped lock too, and no manifest
+        // names the commits — they are never read, here or in a fresh
+        // registration
+        val strays = k.tables.map { case (t, _) => strayCommit(t) }
+        assert(k.snapshot() == snap0 && content(k) == rows0)
+        freshRegistration(k.store, k.name)
+        assert(content(k) == rows0, "a fresh registration reads the published commits only")
+        // a LIVE owner's lock is never discharged, its commits never deleted
         fakeLock(k, StoreGuard.ownerStamp)
         val live = intercept[RuntimeException](k.recoverArbitrated())
-        assert(live.getMessage.contains("cannot be verified dead"), live.getMessage)
+        assert(live.getMessage.contains("STILL ALIVE"), live.getMessage)
+        assert(fs.exists(lockOf(k)) && strays.forall(fs.exists))
         fakeLock(k, StoreGuard.ownerStampFor(deadPid()))
-        assert(k.recoverArbitrated(), "a dead owner's pending must be recovered")
-        assert(k.snapshot() == snap0, "recovery restores the pre-ingest snapshot")
+        assert(k.recoverArbitrated(), "a dead owner's unpublished commits must be recovered")
+        assert(!strays.exists(fs.exists), "recovery deletes the unpublished commits")
+        assert(k.snapshot() == snap0 && content(k) == rows0)
         assert(!fs.exists(lockOf(k)), "recovery releases the dead lock")
-        assert(!k.recoverArbitrated(), "nothing pending after recovery")
+        assert(!k.recoverArbitrated(), "nothing left after recovery")
       }
     }
 
@@ -185,14 +200,11 @@ class BandedStoreSpec extends SparkSpec {
       withStore(k, buckets = 4) {
         k.ingest()
         val before = k.snapshot()
-        // unregister without deleting: DROP on a managed entry deletes
-        // its files, so move each dir aside across the DROP
+        val rows = content(k)
+        // a fresh JVM's catalog: no entries (dropping an EXTERNAL entry
+        // keeps its files)
         (k.tables.map(_._1) :+ k.metaTable).foreach { t =>
-          val loc = StoreGuard.tableLocation(spark, t)
-          val save = new Path(loc.getParent, loc.getName + ".aside")
-          assert(fs.rename(loc, save), s"stash $t")
           spark.sql(s"DROP TABLE IF EXISTS `$t`")
-          assert(fs.rename(save, loc), s"restore $t")
           assert(!spark.catalog.tableExists(t))
         }
         k.ensureRegistered()
@@ -201,7 +213,8 @@ class BandedStoreSpec extends SparkSpec {
           assert(spec.map(s => (s.numBuckets, s.bucketColumnNames, s.sortColumnNames)) ==
             Some((4, Seq(c), Seq(c))), s"$t: $spec")
         }
-        assert(k.snapshot() == before, "re-registration touches no file")
+        assert(k.snapshot() == before, "re-registration publishes nothing")
+        assert(content(k) == rows, "re-registration reads the same rows")
       }
     }
   }

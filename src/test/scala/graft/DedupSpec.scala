@@ -493,8 +493,16 @@ class DedupSpec extends SparkSpec {
       try {
         val probe = SignatureStore.incrementalPairs(spark,
           Seq((301L, mut(b105))).toDF("doc_id", "text"), name)
-        assert(probe.queryExecution.executedPlan.toString
-          .contains("SelectedBucketsCount: 16 out of 16"))
+        // two ingests later each table holds three commits: the scan
+        // stays bucketed across them, and the band_key join still
+        // shuffles the batch side only
+        val p = probe.queryExecution.executedPlan.toString
+        assert(p.contains("SelectedBucketsCount: 16 out of 16"),
+          p.linesIterator.take(40).mkString("\n"))
+        val bandKeyShuffles = raw"Exchange hashpartitioning\(band_key".r.findAllIn(p).size
+        assert(bandKeyShuffles == 1,
+          s"expected exactly one band_key shuffle (batch side), got $bandKeyShuffles:\n" +
+            p.linesIterator.take(60).mkString("\n"))
         assert(flagMap(probe.groupBy(col("new_id").as("doc_id"))
           .agg(min(col("hist_id")).as("dup_of"))
           .select(col("doc_id"), lit(true).as("is_dup"), col("dup_of")))
@@ -504,7 +512,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("snapshot/rollback undoes an ingest bit-for-bit; re-ingest is identical") {
-    import graft.dedup.SignatureStore
+    import graft.dedup.{SignatureStore, StoreGuard}
     def doc(i: Int): String =
       (0 until 24).map(w => s"w${i}_$w").mkString(" ")
     val hist = Seq((1L, doc(1)), (2L, doc(2))).toDF("doc_id", "text")
@@ -524,21 +532,19 @@ class DedupSpec extends SparkSpec {
       val f1 = run()
       assert(f1 == Map(11L -> ((true, Some(1L))), 12L -> ((false, None))), s"$f1")
       // the ingest appended the survivor — the store visibly grew
-      assert(SignatureStore.snapshot(spark, name) != snap)
+      assert(SignatureStore.snapshot(spark, name).commits != snap.commits)
       assert(spark.table(SignatureStore.sizesTable(name))
         .filter(col("doc_id") === 12L).count() == 1)
       SignatureStore.rollback(spark, name, snap)
-      // bit-for-bit: the exact pre-ingest file set, nothing extra
-      assert(SignatureStore.snapshot(spark, name) == snap)
+      // bit-for-bit: exactly the pre-ingest commits, nothing extra
+      assert(SignatureStore.snapshot(spark, name).commits == snap.commits)
       // bucket-aligned writes: a build emits at most `buckets` data
       // files per table (one per bucket), not one per (task, bucket) —
-      // the small-files regression guard
+      // the small-files regression guard; the rolled-back commit's files
+      // are gone
       Seq(SignatureStore.bandsTable(name), SignatureStore.shinglesTable(name),
         SignatureStore.sizesTable(name)).foreach { t =>
-        val loc = new java.io.File(
-          spark.sessionState.catalog.defaultTablePath(
-            org.apache.spark.sql.catalyst.TableIdentifier(t)))
-        val parts = loc.listFiles().count(f => f.getName.startsWith("part-"))
+        val parts = StoreGuard.dataFileCount(spark, t)
         assert(parts <= 16, s"$t has $parts data files after build (buckets=16)")
       }
       assert(spark.table(SignatureStore.sizesTable(name))
@@ -563,9 +569,11 @@ class DedupSpec extends SparkSpec {
     val fs = metaLoc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val lockFile = new org.apache.hadoop.fs.Path(
       metaLoc.getParent, metaLoc.getName + ".lock")
+    val manifests = new org.apache.hadoop.fs.Path(
+      metaLoc.getParent, metaLoc.getName + ".manifest")
     try {
       // a held lock (another writer mid-ingest) must fail FAST, not
-      // interleave appends — and the error must name the recovery path
+      // interleave commits — and the error must name the recovery path
       fs.createNewFile(lockFile)
       val e = intercept[RuntimeException](SignatureStore.ingest(spark, batch, name))
       assert(e.getMessage.contains("locked by a concurrent writer"))
@@ -576,16 +584,19 @@ class DedupSpec extends SparkSpec {
       SignatureStore.ingest(spark, batch, name)
       // our OWN completed trial ingest stays undoable (the d08 pattern)…
       SignatureStore.rollback(spark, name, snap)
-      assert(SignatureStore.snapshot(spark, name) == snap)
-      // …but a FOREIGN writer's completed generation bump (simulated by
-      // swapping the marker for one this process never wrote) must make
-      // rollback refuse: deleting files since snap would delete the
-      // other writer's appends
-      val marker = fs.listStatus(metaLoc).map(_.getPath)
-        .find(_.getName.startsWith("_gen-")).get
-      val gen = marker.getName.split("-")(1).toInt
-      fs.delete(marker, false)
-      fs.createNewFile(new org.apache.hadoop.fs.Path(metaLoc, s"_gen-${gen + 1}-feedf00d"))
+      assert(SignatureStore.snapshot(spark, name).commits == snap.commits)
+      // …but a version published by ANOTHER process since the snapshot
+      // (simulated by republishing the newest manifest under a writer
+      // tag this process never had) must make rollback refuse:
+      // republishing snap would drop that writer's commits
+      val v = SignatureStore.snapshot(spark, name).version
+      val in = fs.open(new org.apache.hadoop.fs.Path(manifests, f"manifest-v$v%08d.txt"))
+      val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      val out = fs.create(new org.apache.hadoop.fs.Path(manifests, f"manifest-v${v + 1}%08d.txt"))
+      try out.write(text.linesIterator
+        .map(l => if (l.startsWith("writer\t")) "writer\tfeedf00d" else l)
+        .mkString("\n").getBytes("UTF-8"))
+      finally out.close()
       val stale = intercept[RuntimeException](SignatureStore.rollback(spark, name, snap))
       assert(stale.getMessage.contains("stale snapshot"))
       // and the refusal must not leave the lock behind
@@ -593,57 +604,64 @@ class DedupSpec extends SparkSpec {
     } finally SignatureStore.drop(spark, name)
   }
 
-  test("recover restores a DEAD writer's partial ingest from the persisted pending snapshot") {
-    import graft.dedup.SignatureStore
+  test("recover deletes a DEAD writer's unpublished commits and releases its lock; the store reads its last publish") {
+    import graft.dedup.{SignatureStore, StoreGuard}
     def doc(i: Int): String = (0 until 24).map(w => s"r${i}_$w").mkString(" ")
     val name = "graft_recover_spec"
     SignatureStore.drop(spark, name)
     SignatureStore.build(spark, Seq((1L, doc(1))).toDF("doc_id", "text"), name)
-    val metaLoc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.defaultTablePath(
-        org.apache.spark.sql.catalyst.TableIdentifier(SignatureStore.metaTable(name))))
+    val metaLoc = StoreGuard.tableLocation(spark, SignatureStore.metaTable(name))
     val fs = metaLoc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val lockFile = new org.apache.hadoop.fs.Path(metaLoc.getParent, metaLoc.getName + ".lock")
-    val pendFile = new org.apache.hadoop.fs.Path(metaLoc.getParent, metaLoc.getName + ".pending")
+    val tables = SignatureStore.dataTables(name)
+    def rows(): Seq[Seq[String]] = tables.map(t =>
+      spark.table(t).drop("commit").collect().map(_.toString).sorted.toSeq)
     try {
       val preSnap = SignatureStore.snapshot(spark, name)
-      // simulate a writer that appended then DIED: run a real ingest
-      // (grows the store), then re-stage its crash artifacts — the held
-      // lock (STAMPED with the dead writer's identity, as locked()
-      // stamps every claim at acquisition) and the persisted pre-ingest
-      // snapshot
-      SignatureStore.ingest(spark, Seq((2L, doc(2))).toDF("doc_id", "text"), name)
-      assert(SignatureStore.snapshot(spark, name) != preSnap)
+      val rows0 = rows()
+      // a writer that fails in THIS JVM after its appends, before its
+      // publish: the store reads exactly its last published content and
+      // the failed commit is gone
+      val e = intercept[RuntimeException](SignatureStore.ingest(spark,
+        Seq((2L, doc(2))).toDF("doc_id", "text"), name,
+        onStage = (label, _) => if (label == "appends") sys.error("died after appends")))
+      assert(e.getMessage.contains("died after appends"))
+      assert(SignatureStore.snapshot(spark, name) == preSnap && rows() == rows0)
+      assert(tables.forall(t => fs.listStatus(StoreGuard.tableLocation(spark, t))
+        .count(_.getPath.getName.startsWith("commit=")) == 1), "the failed commit must be gone")
+      assert(!fs.exists(lockFile))
+      // a writer that DIED (hard halt) after its appends: its commits and
+      // its stamped lock stay on disk, and no manifest names the commits
+      val strays = tables.map(strayCommit)
       locally {
         val lo = fs.create(lockFile, true)
-        try lo.write(graft.dedup.StoreGuard.ownerStampFor(deadPid()).getBytes("UTF-8"))
+        try lo.write(StoreGuard.ownerStampFor(deadPid()).getBytes("UTF-8"))
         finally lo.close()
       }
-      val out = fs.create(pendFile, true)
-      out.write(preSnap.mkString("\n").getBytes("UTF-8")); out.close()
+      assert(rows() == rows0)
+      freshRegistration(SignatureStore, name)
+      assert(rows() == rows0, "a fresh registration reads the last publish only")
       // a live writer cannot get in while the corpse holds the lock
       intercept[RuntimeException](
         SignatureStore.ingest(spark, Seq((3L, doc(3))).toDF("doc_id", "text"), name))
-      // recover: restores the pre-ingest file set (even though this
-      // "writer's" generation bump is unknown to ownGens in a fresh
-      // JVM — the pending file authorizes it), releases the lock
+      // recover: deletes the unpublished commits, releases the lock
       assert(SignatureStore.recover(spark, name))
-      assert(SignatureStore.snapshot(spark, name) == preSnap)
-      assert(!fs.exists(lockFile) && !fs.exists(pendFile))
+      assert(!strays.exists(fs.exists) && !fs.exists(lockFile))
+      assert(SignatureStore.snapshot(spark, name) == preSnap && rows() == rows0)
       // and the store works again
       SignatureStore.ingest(spark, Seq((3L, doc(3))).toDF("doc_id", "text"), name)
-      // recover with nothing pending is a no-op
+      // recover with nothing to recover is a no-op
       assert(!SignatureStore.recover(spark, name))
     } finally SignatureStore.drop(spark, name)
   }
 
   test("recover judges the FENCED state: live-writer lock refuses, own lock proceeds") {
-    // the TOCTOU arm: between a caller's dead-writer judgment and the
-    // restore, a FRESH writer can claim the free lock and start its own
-    // ingest — recover must fail fast on that verifiably live owner
-    // instead of rolling the store back over its in-flight appends
-    // (pre-fix it read the snapshot first and ignored the claim's
-    // outcome). Its own lock, though, is a reentrant retry — proceeds.
+    // between a caller's dead-writer judgment and the cleanup, a FRESH
+    // writer can claim the free lock and start writing its commit —
+    // recover must fail fast on that verifiably live owner instead of
+    // deleting its unpublished commit. Under this thread's OWN lock
+    // (a caller bracketing recovery inside its critical section) it
+    // proceeds.
     import graft.dedup.{SignatureStore, StoreGuard}
     def doc(i: Int): String = (0 until 24).map(w => s"t${i}_$w").mkString(" ")
     val name = "graft_recover_live_spec"
@@ -652,17 +670,12 @@ class DedupSpec extends SparkSpec {
     val metaLoc = StoreGuard.tableLocation(spark, SignatureStore.metaTable(name))
     val fs = metaLoc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val lockFile = new org.apache.hadoop.fs.Path(metaLoc.getParent, metaLoc.getName + ".lock")
-    val pendFile = new org.apache.hadoop.fs.Path(metaLoc.getParent, metaLoc.getName + ".pending")
     try {
       val preSnap = SignatureStore.snapshot(spark, name)
-      SignatureStore.ingest(spark, Seq((2L, doc(2))).toDF("doc_id", "text"), name)
-      locally {
-        val out = fs.create(pendFile, true)
-        try out.write(preSnap.mkString("\n").getBytes("UTF-8")) finally out.close()
-      }
+      val strays = SignatureStore.dataTables(name).map(strayCommit)
       // a lock stamped by a LIVE pid with a foreign per-JVM uuid — what
       // a concurrent writer that claimed since the caller's probe looks
-      // like. Rolling back now would delete its in-flight appends.
+      // like. Deleting the unnamed commits now could delete its work.
       locally {
         val out = fs.create(lockFile, true)
         try out.write(StoreGuard.ownerStampFor(
@@ -670,27 +683,21 @@ class DedupSpec extends SparkSpec {
         finally out.close()
       }
       val live = intercept[RuntimeException](SignatureStore.recover(spark, name))
-      assert(live.getMessage.contains("LIVE"), live.getMessage)
-      assert(fs.exists(lockFile) && fs.exists(pendFile),
-        "the refused recovery must leave the live writer's lock and pending alone")
-      // the SAME state under our OWN stamp (pid AND per-JVM uuid) is a
-      // reentrant retry — recover proceeds and restores
-      locally {
-        val out = fs.create(lockFile, true)
-        try out.write(StoreGuard.ownerStamp.getBytes("UTF-8")) finally out.close()
+      assert(live.getMessage.contains("ALIVE"), live.getMessage)
+      assert(fs.exists(lockFile) && strays.forall(fs.exists),
+        "the refused recovery must leave the live writer's lock and commits alone")
+      fs.delete(lockFile, false)
+      // under this thread's own lock the recovery proceeds
+      SignatureStore.locked(spark, name) {
+        assert(SignatureStore.recover(spark, name))
+        assert(fs.exists(lockFile), "recover must not release a lock it joined")
       }
-      assert(SignatureStore.recover(spark, name))
+      assert(!strays.exists(fs.exists) && !fs.exists(lockFile))
       assert(SignatureStore.snapshot(spark, name) == preSnap)
-      assert(!fs.exists(lockFile) && !fs.exists(pendFile))
     } finally SignatureStore.drop(spark, name)
   }
 
   test("recover claim discipline: claims are stamped, unstamped survivors refuse, post-claim failures release the lock") {
-    // the r16 verdict's resurfaced TOCTOU: recover()'s claim was a bare
-    // createNewFile — a concurrent recoverer read it as lockOwner=None,
-    // passed the live-owner check, and both rollbacks interleaved; a
-    // recoverer crashed mid-rollback stranded an UNSTAMPED lock no
-    // discharger could verify dead. Four arms pin the closed contract.
     import graft.dedup.{SignatureStore, StoreGuard}
     def doc(i: Int): String = (0 until 24).map(w => s"c${i}_$w").mkString(" ")
     val name = "graft_recover_claim_spec"
@@ -699,112 +706,83 @@ class DedupSpec extends SparkSpec {
     val metaLoc = StoreGuard.tableLocation(spark, SignatureStore.metaTable(name))
     val fs = metaLoc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val lockFile = new org.apache.hadoop.fs.Path(metaLoc.getParent, metaLoc.getName + ".lock")
-    val pendFile = new org.apache.hadoop.fs.Path(metaLoc.getParent, metaLoc.getName + ".pending")
-    def writePend(snap: Set[String]): Unit = {
-      val out = fs.create(pendFile, true)
-      try out.write(snap.mkString("\n").getBytes("UTF-8")) finally out.close()
-    }
+    val manifests = new org.apache.hadoop.fs.Path(metaLoc.getParent, metaLoc.getName + ".manifest")
+    def strays(): Seq[org.apache.hadoop.fs.Path] = SignatureStore.dataTables(name).map(strayCommit)
     try {
-      val preSnap = SignatureStore.snapshot(spark, name)
       SignatureStore.ingest(spark, Seq((2L, doc(2))).toDF("doc_id", "text"), name)
+      val preSnap = SignatureStore.snapshot(spark, name)
 
-      // arm 1 — an UNSTAMPED surviving lock refuses (ADVICE: pre-fix,
-      // a lost claim with an unstamped lock proceeded as "operator
-      // authority", which is exactly what a concurrent recoverer's bare
-      // claim looked like). The refusal must leave lock AND pending
-      // untouched, and carry the legacy-vs-crashed guidance.
-      writePend(preSnap)
+      // arm 1 — an UNSTAMPED lock refuses: its owner's deadness cannot
+      // be verified. The refusal leaves lock AND commits untouched, and
+      // carries the legacy-vs-crashed guidance.
+      val s1 = strays()
       fs.create(lockFile, true).close() // bare, unstamped
       val unstamped = intercept[RuntimeException](SignatureStore.recover(spark, name))
       assert(unstamped.getMessage.contains("no owner stamp"), unstamped.getMessage)
-      assert(unstamped.getMessage.contains("pre-stamp legacy"), unstamped.getMessage)
-      assert(fs.exists(lockFile) && fs.exists(pendFile),
+      assert(unstamped.getMessage.contains("PRE-STAMP LEGACY"), unstamped.getMessage)
+      assert(fs.exists(lockFile) && s1.forall(fs.exists),
         "a refused recovery must leave the unverifiable state alone")
       fs.delete(lockFile, false)
 
-      // arm 2 — a FREE lock is claimed AND STAMPED before any restore
-      // work: the on-disk stamp mid-recovery is this process's own, so
-      // a recoverer that dies there leaves a lock a successor can
-      // verify dead (and a concurrent recoverer reads a LIVE owner and
-      // refuses — the dual-recover race closed). Observed via the
-      // claim hook; the recovery itself completes and restores.
+      // arm 2 — recovery claims a free lock the way every writer does,
+      // and that claim carries this process's stamp before any cleanup:
+      // a recoverer that dies mid-way leaves a lock a successor can
+      // verify dead, and a concurrent recoverer reads a LIVE owner
       var stampSeen: Option[StoreGuard.LockOwner] = None
-      StoreGuard.onRecoverClaimed = () => {
-        val in = fs.open(lockFile)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-                  finally in.close()
-        stampSeen = StoreGuard.parseOwner(txt)
-      }
-      try {
-        writePend(preSnap)
+      SignatureStore.locked(spark, name) {
+        stampSeen = SignatureStore.guard(name).lockOwner(spark)
         assert(SignatureStore.recover(spark, name))
-      } finally StoreGuard.onRecoverClaimed = () => ()
-      assert(stampSeen.exists(StoreGuard.ownerIsSelf),
-        s"recover's claim must carry this process's stamp, saw $stampSeen")
+      }
+      assert(stampSeen.exists(_.pid == ProcessHandle.current().pid()),
+        s"the claim must carry this process's stamp, saw $stampSeen")
+      assert(!s1.exists(fs.exists) && !fs.exists(lockFile))
       assert(SignatureStore.snapshot(spark, name) == preSnap)
-      assert(!fs.exists(lockFile) && !fs.exists(pendFile))
 
-      // arm 3 — the crashed-recoverer state (its stamped lock, its
-      // still-pending snapshot): a successor's recover() verifies the
-      // stamp dead and proceeds, and dischargeDeadLock can discharge
-      // the lock — no manual-unlock dead end remains
-      SignatureStore.ingest(spark, Seq((3L, doc(3))).toDF("doc_id", "text"), name)
-      val preSnap3 = SignatureStore.snapshot(spark, name)
-      SignatureStore.ingest(spark, Seq((4L, doc(4))).toDF("doc_id", "text"), name)
+      // arm 3 — the crashed-recoverer state (its stamped lock, the
+      // commits it did not get to): a successor's recover() verifies the
+      // stamp dead and proceeds — no manual-unlock dead end remains
+      val s3 = strays()
       locally {
         val out = fs.create(lockFile, true)
         try out.write(StoreGuard.ownerStampFor(deadPid()).getBytes("UTF-8"))
         finally out.close()
       }
-      writePend(preSnap3)
       assert(SignatureStore.recover(spark, name))
-      assert(SignatureStore.snapshot(spark, name) == preSnap3)
-      assert(!fs.exists(lockFile) && !fs.exists(pendFile))
+      assert(!s3.exists(fs.exists) && !fs.exists(lockFile))
+      assert(SignatureStore.snapshot(spark, name) == preSnap)
 
-      // arm 4 — a failure AFTER a successful claim releases the lock
-      // (ADVICE: pre-fix, a throw in the pending open/read leaked the
-      // fresh claim, and unstamped at that): an unreadable pending (a
-      // directory) makes the open throw — the claim must be gone
-      fs.mkdirs(pendFile)
+      // arm 4 — a failure AFTER a successful claim releases the lock: an
+      // unreadable newest manifest makes the cleanup throw
+      val s4 = strays()
+      val bad = new org.apache.hadoop.fs.Path(manifests,
+        f"manifest-v${preSnap.version + 1}%08d.txt")
+      locally {
+        val out = fs.create(bad, true)
+        try out.write("not a manifest line".getBytes("UTF-8")) finally out.close()
+      }
       intercept[Exception](SignatureStore.recover(spark, name))
       assert(!fs.exists(lockFile),
         "a post-claim failure must release the claimed lock, not strand it")
-      fs.delete(pendFile, true)
+      fs.delete(bad, false)
 
-      // arm 5 — the SAME failure while proceeding FENCED (claim lost to
-      // a dead same-host stamp) releases NOTHING (ADVICE r17): pre-fix
-      // the catch-all unlock deleted a fence this call never created
-      // while the pending remained, reopening the exact
-      // fresh-writer-overwrites-pending window the arbitration closes.
-      // The dead owner's lock must survive, stamp intact, for a retry.
-      val preSnap5 = SignatureStore.snapshot(spark, name)
-      SignatureStore.ingest(spark, Seq((5L, doc(5))).toDF("doc_id", "text"), name)
-      val deadStamp = StoreGuard.ownerStampFor(deadPid())
+      // arm 5 — the same failure after discharging a dead predecessor's
+      // lock leaves nothing a fresh writer can trip on: the commits it
+      // left are never read, and the next publish deletes them
       locally {
         val out = fs.create(lockFile, true)
-        try out.write(deadStamp.getBytes("UTF-8")) finally out.close()
+        try out.write(StoreGuard.ownerStampFor(deadPid()).getBytes("UTF-8"))
+        finally out.close()
+        val b = fs.create(bad, true)
+        try b.write("not a manifest line".getBytes("UTF-8")) finally b.close()
       }
-      fs.mkdirs(pendFile) // unreadable pending: the open throws mid-fence
       intercept[Exception](SignatureStore.recover(spark, name))
-      assert(fs.exists(lockFile),
-        "a fenced failure must leave the dead predecessor's lock in place")
-      locally {
-        val in = fs.open(lockFile)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-                  finally in.close()
-        assert(txt == deadStamp, "the surviving fence must keep the dead owner's stamp")
-      }
-      // the retry with a READABLE pending completes under that same
-      // fence and releases it — the transient failure cost nothing
-      fs.delete(pendFile, true)
-      writePend(preSnap5)
-      assert(SignatureStore.recover(spark, name))
-      assert(SignatureStore.snapshot(spark, name) == preSnap5)
-      assert(!fs.exists(lockFile) && !fs.exists(pendFile))
-    } finally {
-      StoreGuard.onRecoverClaimed = () => ()
-      SignatureStore.drop(spark, name)
-    }
+      assert(!fs.exists(lockFile))
+      fs.delete(bad, false)
+      assert(SignatureStore.snapshot(spark, name) == preSnap)
+      SignatureStore.ingest(spark, Seq((5L, doc(5))).toDF("doc_id", "text"), name)
+      assert(!s4.exists(fs.exists), "the next publish deletes the unnamed commits")
+      assert(!SignatureStore.recover(spark, name))
+    } finally SignatureStore.drop(spark, name)
   }
 
   test("cross-JVM maintenance: retune + compact run through ensureRegistered (EXTERNAL) entries") {

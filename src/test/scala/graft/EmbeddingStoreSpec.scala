@@ -44,9 +44,9 @@ class EmbeddingStoreSpec extends SparkSpec {
         Seq((21L, nearDup(12))).toDF("vec_id", "embedding"), name)
         .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
       assert(f2 == Map(21L -> 12L), f2)
-      // rollback undoes BOTH ingests bit-for-bit (own-trial gens allowed)
+      // rollback undoes BOTH ingests bit-for-bit (own-process versions allowed)
       EmbeddingStore.rollback(spark, name, snap)
-      assert(EmbeddingStore.snapshot(spark, name) == snap)
+      assert(EmbeddingStore.snapshot(spark, name).commits == snap.commits)
       assert(spark.table(EmbeddingStore.vecsTable(name)).count() == 3)
       // and a re-ingest against the restored store flags identically
       val again = EmbeddingStore.ingest(spark, batch, name)
@@ -66,19 +66,27 @@ class EmbeddingStoreSpec extends SparkSpec {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val batch = Seq((11L, nearDup(1)), (12L, vec(12))).toDF("vec_id", "embedding")
-      val pairs = EmbeddingStore.incrementalPairs(spark, batch, name)
-      assert(pairs.select("hist_id", "new_id").as[(Long, Long)].collect().toSet ==
-        Set((1L, 11L)))
-      val p = pairs.queryExecution.executedPlan.toString
-      // the 100 TB cadence property: the store's band and vector tables
-      // are read THROUGH their bucketing (no history-side reshuffle) —
-      // the batch side is the only exchange keyed on band_key
-      assert(p.contains("SelectedBucketsCount: 16 out of 16"),
-        p.linesIterator.take(40).mkString("\n"))
-      val bandKeyShuffles = raw"Exchange hashpartitioning\(band_key".r.findAllIn(p).size
-      assert(bandKeyShuffles == 1,
-        s"expected exactly one band_key shuffle (batch side), got $bandKeyShuffles:\n" +
-          p.linesIterator.take(60).mkString("\n"))
+      def probe(): Unit = {
+        val pairs = EmbeddingStore.incrementalPairs(spark, batch, name)
+        assert(pairs.select("hist_id", "new_id").as[(Long, Long)].collect().toSet ==
+          Set((1L, 11L)))
+        val p = pairs.queryExecution.executedPlan.toString
+        // the 100 TB cadence property: the store's band and vector tables
+        // are read THROUGH their bucketing (no history-side reshuffle) —
+        // the batch side is the only exchange keyed on band_key
+        assert(p.contains("SelectedBucketsCount: 16 out of 16"),
+          p.linesIterator.take(40).mkString("\n"))
+        val bandKeyShuffles = raw"Exchange hashpartitioning\(band_key".r.findAllIn(p).size
+        assert(bandKeyShuffles == 1,
+          s"expected exactly one band_key shuffle (batch side), got $bandKeyShuffles:\n" +
+            p.linesIterator.take(60).mkString("\n"))
+      }
+      probe()
+      // the same after an ingest: each table now holds two commits
+      EmbeddingStore.ingest(spark, Seq((5L, vec(5))).toDF("vec_id", "embedding"), name)
+      assert(EmbeddingStore.snapshot(spark, name).commits
+        .get(EmbeddingStore.vecsTable(name)).exists(_.size == 2))
+      probe()
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
       EmbeddingStore.drop(spark, name)
@@ -97,15 +105,15 @@ class EmbeddingStoreSpec extends SparkSpec {
       val pairs = EmbeddingStore.incrementalPairs(spark, empty, name)
       assert(pairs.columns.toSeq == Seq("hist_id", "new_id", "cosine"))
       assert(pairs.count() == 0)
-      // an empty-batch ingest mutates nothing and must not leave a
-      // pending file behind: a later recover() on the clean store is a
-      // no-op, not a false crashed-ingest report
+      // an empty-batch ingest mutates nothing: no publish, and a later
+      // recover() on the clean store is a no-op, not a false
+      // crashed-ingest report
       val before = EmbeddingStore.snapshot(spark, name)
       val flags = EmbeddingStore.ingest(spark, empty, name)
       assert(flags.count() == 0)
       assert(EmbeddingStore.snapshot(spark, name) == before)
       assert(!EmbeddingStore.recover(spark, name),
-        "empty-batch ingest left a stale pending file")
+        "empty-batch ingest left something to recover")
       // and the store still answers a real probe afterwards
       val live = EmbeddingStore.incrementalPairs(spark,
         Seq((11L, nearDup(1))).toDF("vec_id", "embedding"), name)
@@ -122,9 +130,8 @@ class EmbeddingStoreSpec extends SparkSpec {
       Seq((1L, vec(1)), (2L, vec(2))).toDF("vec_id", "embedding"), name)
     try {
       val snap = EmbeddingStore.snapshot(spark, name)
-      // an own-process rebuild DELETES the snapshot's files before
-      // writing fresh ones — the ownGens gate alone would let a rollback
-      // delete the rebuilt files too and silently empty the store
+      // an own-process rebuild drops the snapshot's commits and deletes
+      // their files — republishing them would name dirs that are gone
       EmbeddingStore.build(spark,
         Seq((3L, vec(3))).toDF("vec_id", "embedding"), name)
       val e = intercept[RuntimeException](EmbeddingStore.rollback(spark, name, snap))
@@ -166,11 +173,9 @@ class EmbeddingStoreSpec extends SparkSpec {
       // came from different arithmetic, so the missing column must read
       // back as v1 and every banding consumer must refuse
       val meta = spark.table(EmbeddingStore.metaTable(name)).head()
-      Seq((meta.getAs[Int]("planes"), meta.getAs[Int]("band_bits"),
-          meta.getAs[Int]("buckets"), meta.getAs[Int]("dims")))
-        .toDF("planes", "band_bits", "buckets", "dims")
-        .write.mode("overwrite").format("parquet")
-        .saveAsTable(EmbeddingStore.metaTable(name))
+      EmbeddingStore.pinMeta(spark, name, Seq((meta.getAs[Int]("planes"),
+          meta.getAs[Int]("band_bits"), meta.getAs[Int]("buckets"), meta.getAs[Int]("dims")))
+        .toDF("planes", "band_bits", "buckets", "dims"))
       val batch = Seq((11L, nearDup(1))).toDF("vec_id", "embedding")
       val e = intercept[Exception](EmbeddingStore.ingest(spark, batch, name))
       assert(e.getMessage.contains("kernel"), e.getMessage)
@@ -192,45 +197,24 @@ class EmbeddingStoreSpec extends SparkSpec {
   test("cross-JVM maintenance: reband re-pins the meta through an ensureRegistered (EXTERNAL) entry") {
     // the r17 CLI remediation proof's finding: the monthly sweep runs
     // in a FRESH JVM (the cron cadence), whose catalog entries come
-    // from ensureRegistered as EXTERNAL tables (CREATE ... LOCATION).
-    // writeMeta's old saveAsTable(Overwrite) DROPPED that entry
-    // (leaving the external files in place) and then refused to create
-    // a managed table over the surviving location —
-    // LOCATION_ALREADY_EXISTS — so every cross-JVM reband/compact
-    // failed in exactly the production shape. Simulate the fresh-JVM
-    // state in-process: unregister the managed entries WITHOUT
-    // deleting files (move each dir aside across the DROP), re-register
-    // via ensureRegistered, then drive the sweep's reband.
-    import graft.dedup.StoreGuard
+    // from ensureRegistered. A meta rewrite that replaced the catalog
+    // entry failed there with LOCATION_ALREADY_EXISTS, so every
+    // cross-JVM reband/compact failed in exactly the production shape.
+    // Simulate the fresh-JVM state in-process (drop the entries, keep
+    // the files, re-register), then drive the sweep's reband.
     val name = "graft_estore_xjvm_spec"
     EmbeddingStore.drop(spark, name)
     val hist = Seq((1L, vec(1)), (2L, vec(2)), (3L, vec(3))).toDF("vec_id", "embedding")
     EmbeddingStore.build(spark, hist, name)
     try {
       // make the stored geometry OUTDATED (band_bits off by one, kernel
-      // current, 5-column schema) so reband must rewrite bands AND
-      // re-pin the meta through the insert path — the meta table is
-      // still MANAGED here, so the fabrication itself is safe
+      // current) so reband must rewrite bands AND re-pin the meta
       val m = spark.table(EmbeddingStore.metaTable(name)).head()
-      Seq((m.getAs[Int]("planes"), m.getAs[Int]("band_bits") + 1,
-          m.getAs[Int]("buckets"), m.getAs[Int]("dims"),
+      EmbeddingStore.pinMeta(spark, name, Seq((m.getAs[Int]("planes"),
+          m.getAs[Int]("band_bits") + 1, m.getAs[Int]("buckets"), m.getAs[Int]("dims"),
           Similarity.LshKernelVersion))
-        .toDF("planes", "band_bits", "buckets", "dims", "kernel")
-        .write.mode("overwrite").format("parquet")
-        .saveAsTable(EmbeddingStore.metaTable(name))
-      // unregister-without-delete: DROP on a managed entry would delete
-      // the files, so move each dir aside across the DROP
-      val conf = spark.sparkContext.hadoopConfiguration
-      Seq(EmbeddingStore.bandsTable(name), EmbeddingStore.vecsTable(name),
-          EmbeddingStore.metaTable(name)).foreach { t =>
-        val loc = StoreGuard.tableLocation(spark, t)
-        val fs = loc.getFileSystem(conf)
-        val save = new org.apache.hadoop.fs.Path(loc.getParent, loc.getName + ".xjvm")
-        assert(fs.rename(loc, save), s"stash $t")
-        spark.sql(s"DROP TABLE IF EXISTS `$t`")
-        assert(fs.rename(save, loc), s"restore $t")
-      }
-      EmbeddingStore.ensureRegistered(spark, name) // the fresh-JVM entries
+        .toDF("planes", "band_bits", "buckets", "dims", "kernel"))
+      freshRegistration(EmbeddingStore, name) // the fresh-JVM entries
       // the sweep's maintenance sequence, as scheduledJobs runs it
       assert(EmbeddingStore.reband(spark, name),
         "reband must rewrite the outdated geometry through the external entry")

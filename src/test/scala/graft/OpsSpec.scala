@@ -290,7 +290,7 @@ class OpsSpec extends SparkSpec {
       val r3 = Orchestrator.corpusIngest(spark, store,
         Seq((21L, doc(21))).toDF("doc_id", "text"), None, crashing)
       assert(r3.error.isDefined, r3)
-      assert(SignatureStore.snapshot(spark, store) == preSnap)
+      assert(SignatureStore.snapshot(spark, store).commits == preSnap.commits)
       assert(VersionedTable.version(spark, root) == preVer)
       // and the day after the crash ingests cleanly against the intact store
       val r4 = Orchestrator.corpusIngest(spark, store,
@@ -336,7 +336,7 @@ class OpsSpec extends SparkSpec {
       val r3 = Orchestrator.corpusIngestEmbeddings(spark, store,
         Seq((21L, vec(21))).toDF("vec_id", "embedding"), None, crashing)
       assert(r3.error.isDefined, r3)
-      assert(EmbeddingStore.snapshot(spark, store) == preSnap)
+      assert(EmbeddingStore.snapshot(spark, store).commits == preSnap.commits)
       assert(VersionedTable.version(spark, root) == preVer)
     } finally {
       EmbeddingStore.drop(spark, store)
@@ -675,12 +675,10 @@ class OpsSpec extends SparkSpec {
       // outdated geometry (band_bits off by one, kernel current) — the
       // routine reband WOULD move it and clear the streak if it ran first
       val m = spark.table(EmbeddingStore.metaTable(store)).head()
-      Seq((m.getAs[Int]("planes"), m.getAs[Int]("band_bits") + 1,
-          m.getAs[Int]("buckets"), m.getAs[Int]("dims"),
+      EmbeddingStore.pinMeta(spark, store, Seq((m.getAs[Int]("planes"),
+          m.getAs[Int]("band_bits") + 1, m.getAs[Int]("buckets"), m.getAs[Int]("dims"),
           Similarity.LshKernelVersion))
-        .toDF("planes", "band_bits", "buckets", "dims", "kernel")
-        .write.mode("overwrite").format("parquet")
-        .saveAsTable(EmbeddingStore.metaTable(store))
+        .toDF("planes", "band_bits", "buckets", "dims", "kernel"))
       EmbeddingStore.writeAuditStreak(spark, store, 3)
       val maint = new java.util.concurrent.ConcurrentLinkedQueue[Orchestrator.MaintainResult]()
       val jobs = Orchestrator.scheduledJobs(spark, sfDir,
@@ -887,6 +885,9 @@ class OpsSpec extends SparkSpec {
       SignatureStore.drop(spark, n); SignatureStore.build(spark, docs, n)
     }
     try {
+      // a day's ingest puts the healthy store above its compaction floor
+      SignatureStore.ingest(spark,
+        Seq((100L, "nu nu xi omicron pi rho sigma tau upsilon")).toDF("doc_id", "text"), healthy)
       val before = SignatureStore.snapshot(spark, healthy)
       val entered = new java.util.concurrent.CountDownLatch(1)
       val release = new java.util.concurrent.CountDownLatch(1)
@@ -909,15 +910,40 @@ class OpsSpec extends SparkSpec {
           ivfIndexRoots = Seq("/tmp/graft-no-such-ivf-index", ivfRoot))
         jobs.find(_.name == "monthly_maintenance").get.run()
       } finally { release.countDown(); writer.join() }
-      // compact bumps the generation marker even at the file floor — the
-      // healthy store's snapshot must have moved, proving it was reached
-      assert(SignatureStore.snapshot(spark, healthy) != before,
+      // the healthy store's compaction published new commits, proving
+      // it was reached
+      assert(SignatureStore.snapshot(spark, healthy).commits != before.commits,
         "healthy store was starved by the locked one")
       // the healthy index was retrained in the same sweep (nlist derived
       // from its own centroid table), despite the bogus root before it
       assert(new java.io.File(s"$ivfRoot/v00002").isDirectory,
         "healthy ivf index was starved by the bogus root")
     } finally Seq(locked, healthy).foreach(SignatureStore.drop(spark, _))
+  }
+
+  test("Runner rejects a flag no branch reads; every documented flag parses") {
+    // a retired flag must fail loudly, not be ignored: an old
+    // `--sink managed` cron line used to exit 0
+    val e = intercept[IllegalArgumentException](Runner.parseOpts(Array(
+      "--pipeline", "inventory", "--length", "2wk", "--sink", "managed", "--sf", sfDir)))
+    assert(e.getMessage.contains("--sink"), e.getMessage)
+    // every flag the CLI documents parses: Runner's scaladoc usage
+    // block and README's `runMain graft.Runner` lines (with their
+    // backslash-continued lines)
+    def read(p: String): String =
+      new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")
+    val runner = read("src/main/scala/graft/Runner.scala")
+    val usage = runner.substring(0, runner.indexOf("object Runner"))
+    val readme = read("README.md").linesIterator
+      .foldLeft((Vector.empty[String], false)) { case ((acc, continued), l) =>
+        val take = continued || l.contains("runMain graft.Runner")
+        (if (take) acc :+ l else acc, take && l.trim.endsWith("\\"))
+      }._1.mkString("\n")
+    val flags = raw"(?<![\w-])--([a-z][a-z0-9-]*)".r
+      .findAllMatchIn(usage + "\n" + readme).map(_.group(1)).toSet
+    assert(flags.contains("corpus-stream-emb") && flags.contains("flags-root") &&
+      flags.contains("fire-now"), flags)
+    flags.foreach(f => Runner.parseOpts(Array(s"--$f")))
   }
 
   test("IVF CLI forms drive build->append->retrain through the parsed opts (E1)") {

@@ -24,6 +24,28 @@ trait SparkSpec extends AnyFunSuite {
     }
     pid
   }
+
+  /** What a writer that died before its publish leaves in store table
+    * `table`: a commit dir no manifest names (a copy of a live one).
+    */
+  def strayCommit(table: String): org.apache.hadoop.fs.Path = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val loc = graft.dedup.StoreGuard.tableLocation(spark, table)
+    val fs = loc.getFileSystem(conf)
+    val src = fs.listStatus(loc).map(_.getPath).find(_.getName.startsWith("commit=")).get
+    val dst = new org.apache.hadoop.fs.Path(loc, s"commit=c-stray${System.nanoTime()}")
+    assert(org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, conf), s"copy $src")
+    dst
+  }
+
+  /** A fresh JVM's view of store `name`: its catalog entries dropped
+    * (they are EXTERNAL, the files stay) and re-registered from disk.
+    */
+  def freshRegistration(store: graft.dedup.BandedStore, name: String): Unit = {
+    (store.dataTables(name) :+ store.metaTable(name))
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    store.ensureRegistered(spark, name)
+  }
 }
 
 object SparkSpec {

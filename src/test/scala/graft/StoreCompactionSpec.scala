@@ -1,36 +1,38 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.dedup.{SignatureStore, StoreGuard}
+import graft.dedup.{BandedStore, SignatureStore, StoreGuard}
 import graft.similarity.{EmbeddingStore, Similarity}
 import org.apache.hadoop.fs.Path
 
-/** Store-compaction lifecycle (the r11/r12 owed spec): N daily ingests
-  * → `compact` → file count back to the bucket floor with byte-identical
-  * probe results and ONE generation bump; pre-compaction snapshots are
-  * non-rollbackable (missing-file refusal); a live writer's lock makes
-  * compaction fail fast; and the two crash windows of
-  * [[StoreGuard.compactTable]] recover: a compactor dead between the
-  * entry reset and the rename resumes at the swap on the next
-  * maintenance run (via ensureRegistered's missing-dir fallback), and
-  * one dead after the rename but before the catalog re-declare recovers
-  * by plain re-registration.
+/** Store-compaction and reband lifecycle: N daily ingests → `compact`
+  * → file count back to the bucket floor with byte-identical probe
+  * results in ONE publish; pre-compaction snapshots refuse to roll back;
+  * a live writer's lock makes compaction fail fast; and a compaction or
+  * reband that dies before or after its publish leaves a store that
+  * reads the same content, here and in a fresh registration, and that
+  * the next run completes.
   */
 class StoreCompactionSpec extends SparkSpec {
   import spark.implicits._
 
-  private def loc(t: String): Path = new Path(
-    spark.sessionState.catalog.defaultTablePath(
-      org.apache.spark.sql.catalyst.TableIdentifier(t)))
+  private def loc(t: String): Path = StoreGuard.tableLocation(spark, t)
   private lazy val fs =
     loc("any").getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** (generation number, count of marker files) of a store's meta dir. */
-  private def gen(metaTable: String): (Int, Int) = {
-    val marks = fs.listStatus(loc(metaTable)).map(_.getPath.getName)
-      .filter(_.startsWith("_gen-"))
-    (marks.map(_.split("-")(1).toInt).max, marks.length)
+  /** Leave the lock a dead writer of `store` would leave. */
+  private def deadLock(store: BandedStore, name: String): Path = {
+    val m = loc(store.metaTable(name))
+    val p = new Path(m.getParent, m.getName + ".lock")
+    val out = fs.create(p, true)
+    try out.write(StoreGuard.ownerStampFor(deadPid()).getBytes("UTF-8")) finally out.close()
+    p
   }
+
+  /** Each data table's rows (data columns only), sorted. */
+  private def rows(store: BandedStore, name: String): Seq[Seq[String]] =
+    store.dataTables(name).map(t =>
+      spark.table(t).drop("commit").collect().map(_.toString).sorted.toSeq)
 
   test("signature store: ingests -> compact -> file floor, identical probe, one gen bump, stale snapshot refused, live lock fails fast") {
     val docs = Tables.documents(spark, sfDir)
@@ -39,8 +41,7 @@ class StoreCompactionSpec extends SparkSpec {
     SignatureStore.build(spark, docs.filter(col("doc_id") % 5 === 0), name)
     (1 to 4).foreach(d =>
       SignatureStore.ingest(spark, docs.filter(col("doc_id") % 5 === d), name))
-    val tables = Seq(SignatureStore.bandsTable(name),
-      SignatureStore.shinglesTable(name), SignatureStore.sizesTable(name))
+    val tables = SignatureStore.dataTables(name)
     assert(StoreGuard.dataFileCount(spark, tables.head) > 16,
       "ingests should have appended past the bucket floor")
     val probeBatch = docs.filter(col("doc_id") % 5 === 0)
@@ -50,18 +51,18 @@ class StoreCompactionSpec extends SparkSpec {
     val p0 = probe()
     assert(p0.nonEmpty)
     val preSnap = SignatureStore.snapshot(spark, name)
-    val (gen0, marks0) = gen(SignatureStore.metaTable(name))
-    assert(marks0 == 1)
 
     SignatureStore.compact(spark, name)
     tables.foreach(t => assert(StoreGuard.dataFileCount(spark, t) <= 16,
       s"$t not compacted to the floor"))
     assert(probe() == p0, "compaction must be content-preserving")
-    assert(gen(SignatureStore.metaTable(name)) == ((gen0 + 1, 1)),
-      "exactly one generation bump for the whole compaction")
+    val post = SignatureStore.snapshot(spark, name)
+    assert(post.version == preSnap.version + 1,
+      "exactly one publish for the whole compaction")
+    assert(tables.forall(t => post.commits(t).size == 1))
 
-    // compaction DELETED files, so the pre-compaction snapshot must be
-    // refused loudly instead of silently emptying the store
+    // compaction DELETED the old commits, so the pre-compaction snapshot
+    // must be refused loudly instead of naming dirs that are gone
     val e = intercept[RuntimeException](
       SignatureStore.rollback(spark, name, preSnap))
     assert(e.getMessage.contains("cannot roll back"), e.getMessage)
@@ -81,7 +82,7 @@ class StoreCompactionSpec extends SparkSpec {
     SignatureStore.drop(spark, name)
   }
 
-  test("compaction crash windows: dead between reset and rename resumes at the swap; dead before re-declare recovers by re-registration") {
+  test("compaction crash windows: dead before its publish the old commits stay read; dead after it the new ones; a fresh registration reads the same") {
     val docs = Tables.documents(spark, sfDir)
     val name = "graft_crash_spec"
     SignatureStore.drop(spark, name)
@@ -93,36 +94,48 @@ class StoreCompactionSpec extends SparkSpec {
       .incrementalPairs(spark, probeBatch, name)
       .collect().map(_.toString).sorted.toSeq
     val p0 = probe()
-    val bandsT = SignatureStore.bandsTable(name)
-    val staged = s"${bandsT}__compacting"
-    def stageAndReset(): Unit = {
-      // replay compactTable's staging verbatim, then die at its most
-      // dangerous point: the staged dir is the ONLY copy of the bands
-      spark.table(bandsT).repartition(16, col("band_key"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(16, "band_key").sortBy("band_key").saveAsTable(staged)
-      StoreGuard.resetTable(spark, bandsT)
+    val rows0 = rows(SignatureStore, name)
+    val tables = SignatureStore.dataTables(name)
+    val bucketCols = Seq("band_key", "doc_id", "doc_id")
+
+    // window 1: a compactor dead before its publish — its rewritten
+    // commits and its lock are on disk, no manifest names the commits.
+    // The next maintenance run registers the store (like Runner
+    // --maintain-store), recovers, and compacts.
+    tables.zip(bucketCols).foreach { case (t, c) =>
+      BandedStore.writeBucketed(spark.table(t).drop("commit"), t, c, 16, "c-deadcompactor")
     }
+    val lock = deadLock(SignatureStore, name)
+    freshRegistration(SignatureStore, name)
+    assert(probe() == p0 && rows(SignatureStore, name) == rows0,
+      "an unpublished compaction must never be read")
+    assert(SignatureStore.recover(spark, name))
+    assert(!fs.exists(lock))
+    assert(tables.forall(t => !fs.exists(new Path(loc(t), "commit=c-deadcompactor"))))
+    val live = SignatureStore.snapshot(spark, name).commits
 
-    // window 1: dead between reset and rename. The next maintenance run
-    // (ensureRegistered first, like Runner --maintain-store) must fall
-    // back over the missing dir, then resume at the swap — NOT read the
-    // husk as an empty store and strand the staged copy
-    stageAndReset()
-    SignatureStore.ensureRegistered(spark, name)
+    // window 2: a compactor dead right after its publish, before it
+    // deleted the commits the publish dropped — keep copies of the old
+    // commit dirs across a real compaction and put them back
+    val aside = new Path(loc(name).getParent, s"$name.aside")
+    fs.delete(aside, true)
+    val copies = tables.flatMap(t => live(t).map { c =>
+      val src = new Path(loc(t), s"commit=$c")
+      val dst = new Path(aside, s"$t/commit=$c")
+      assert(org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false,
+        spark.sparkContext.hadoopConfiguration))
+      (dst, src)
+    })
     SignatureStore.compact(spark, name)
-    assert(!fs.exists(loc(staged)), "staged dir must be consumed by the swap")
-    assert(probe() == p0, "resumed swap must restore the exact content")
-
-    // window 2: dead after the rename, before the catalog re-declare —
-    // the data is in place but the table entry is missing and the staged
-    // entry is stale
-    stageAndReset()
-    assert(fs.rename(loc(staged), loc(bandsT)))
-    SignatureStore.ensureRegistered(spark, name)
-    SignatureStore.compact(spark, name) // at the floor: early-returns
+    copies.foreach { case (dst, src) => assert(fs.rename(dst, src), s"restore $src") }
+    fs.delete(aside, true)
+    assert(probe() == p0 && rows(SignatureStore, name) == rows0)
+    freshRegistration(SignatureStore, name)
+    assert(probe() == p0 && rows(SignatureStore, name) == rows0,
+      "the dropped commits are never read again")
+    assert(SignatureStore.recover(spark, name), "recover deletes the dropped commits")
+    assert(copies.forall { case (_, src) => !fs.exists(src) })
     assert(probe() == p0)
-    StoreGuard.resetTable(spark, staged) // clear the stale staged entry
     SignatureStore.drop(spark, name)
   }
 
@@ -133,7 +146,7 @@ class StoreCompactionSpec extends SparkSpec {
     EmbeddingStore.build(spark, emb.filter(col("vec_id") % 3 === 0), name)
     (1 to 2).foreach(d =>
       EmbeddingStore.ingest(spark, emb.filter(col("vec_id") % 3 === d), name))
-    val tables = Seq(EmbeddingStore.bandsTable(name), EmbeddingStore.vecsTable(name))
+    val tables = EmbeddingStore.dataTables(name)
     assert(StoreGuard.dataFileCount(spark, tables.head) > 16)
     val probeBatch = emb.filter(col("vec_id") % 3 === 0)
     def probe(): Seq[String] = EmbeddingStore
@@ -141,30 +154,29 @@ class StoreCompactionSpec extends SparkSpec {
       .collect().map(_.toString).sorted.toSeq
     val p0 = probe()
     assert(p0.nonEmpty)
-    val (gen0, _) = gen(EmbeddingStore.metaTable(name))
+    val v0 = EmbeddingStore.snapshot(spark, name).version
 
+    // a compactor that died mid-rewrite of the vectors table: its
+    // commit is on disk, unpublished, and never read
+    val vecsT = EmbeddingStore.vecsTable(name)
+    BandedStore.writeBucketed(spark.table(vecsT).drop("commit"), vecsT, "vec_id", 16,
+      "c-deadcompactor")
+    freshRegistration(EmbeddingStore, name)
+    assert(probe() == p0)
+    assert(spark.table(vecsT).count() == spark.table(vecsT).select("vec_id").distinct().count(),
+      "no vector may be read twice")
+
+    // the next run completes the compaction and deletes the dead commit
     EmbeddingStore.compact(spark, name)
     tables.foreach(t => assert(StoreGuard.dataFileCount(spark, t) <= 16,
       s"$t not compacted to the floor"))
+    assert(!fs.exists(new Path(loc(vecsT), "commit=c-deadcompactor")))
     assert(probe() == p0)
-    assert(gen(EmbeddingStore.metaTable(name)) == ((gen0 + 1, 1)))
-
-    // reset->rename crash window on the vectors table
-    val vecsT = EmbeddingStore.vecsTable(name)
-    val staged = s"${vecsT}__compacting"
-    spark.table(vecsT).repartition(16, col("vec_id"))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(16, "vec_id").sortBy("vec_id").saveAsTable(staged)
-    StoreGuard.resetTable(spark, vecsT)
-    EmbeddingStore.ensureRegistered(spark, name)
-    EmbeddingStore.compact(spark, name)
-    assert(!fs.exists(loc(staged)))
-    assert(probe() == p0)
+    assert(EmbeddingStore.snapshot(spark, name).version == v0 + 1)
     EmbeddingStore.drop(spark, name)
   }
 
   test("embedding store reband: outgrown geometry widens from stored vectors; no-op when current; crash heals") {
-    import spark.implicits._
     val name = "graft_reband_spec"
     EmbeddingStore.drop(spark, name)
     // deterministic synthetic corpus: enough structure for the adaptive
@@ -192,6 +204,27 @@ class StoreCompactionSpec extends SparkSpec {
     EmbeddingStore.ingest(spark, vecs(100, 1200), name)
     val n = spark.table(EmbeddingStore.vecsTable(name)).count()
     assert(Similarity.lshSpecFor(n) != metaSpec(), "growth must outdate the pin")
+    val batch = vecs(5000, 5050)
+      .unionByName(vecs(100, 110).select((col("vec_id") + 9000000L).as("vec_id"),
+        col("embedding"))) // exact twins of stored vectors: guaranteed pairs
+    def probeOf(store: String) = EmbeddingStore
+      .incrementalPairs(spark, batch, store)
+      .collect().map(_.toString).sorted.toSeq
+
+    // crash window: a rebander dead before its publish — its bands
+    // commit and its lock are on disk, no manifest names the commit.
+    // Bands and meta are still both on the old geometry, and the store
+    // answers exactly as before, here and in a fresh registration.
+    val before = probeOf(name)
+    assert(before.nonEmpty)
+    val stray = strayCommit(EmbeddingStore.bandsTable(name))
+    val lock = deadLock(EmbeddingStore, name)
+    freshRegistration(EmbeddingStore, name)
+    assert(metaSpec() == Similarity.lshSpecFor(100) && probeOf(name) == before)
+    assert(EmbeddingStore.recover(spark, name))
+    assert(!fs.exists(stray) && !fs.exists(lock))
+
+    // the re-run heals: bands and meta move together
     assert(EmbeddingStore.reband(spark, name))
     assert(metaSpec() == Similarity.lshSpecFor(n))
     // the re-banded store answers probes exactly like a FRESH build of
@@ -201,119 +234,68 @@ class StoreCompactionSpec extends SparkSpec {
     EmbeddingStore.build(spark,
       spark.table(EmbeddingStore.vecsTable(name))
         .select(col("vec_id"), col("emb").as("embedding")), fresh)
-    val batch = vecs(5000, 5050)
-      .unionByName(vecs(100, 110).select((col("vec_id") + 9000000L).as("vec_id"),
-        col("embedding"))) // exact twins of stored vectors: guaranteed pairs
-    def probeOf(store: String) = EmbeddingStore
-      .incrementalPairs(spark, batch, store)
-      .collect().map(_.toString).sorted.toSeq
     assert(probeOf(name) == probeOf(fresh))
     assert(probeOf(name).nonEmpty)
-    // bands landed at the file floor; a follow-up compact is a no-op there
+    // bands landed at the file floor
     assert(StoreGuard.dataFileCount(spark, EmbeddingStore.bandsTable(name)) <= 16)
-
-    // crash window: die between the bands reset and the rename — the
-    // staged __rebanding sibling holds the only copy; a re-run heals
-    // both the swap AND the meta pin
-    val bandsT = EmbeddingStore.bandsTable(name)
-    val staged = s"${bandsT}__rebanding"
-    spark.table(bandsT).repartition(16, col("band_key"))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(16, "band_key").sortBy("band_key").saveAsTable(staged)
-    StoreGuard.resetTable(spark, bandsT)
-    EmbeddingStore.ensureRegistered(spark, name)
-    assert(EmbeddingStore.reband(spark, name), "resume must report a rewrite")
-    assert(!fs.exists(loc(staged)))
-    assert(metaSpec() == Similarity.lshSpecFor(n))
-    assert(probeOf(name) == probeOf(fresh))
     Seq(name, fresh).foreach(EmbeddingStore.drop(spark, _))
   }
 
-  test("reband crash window is DETECTABLE: the .rebanding marker makes ingest and probes refuse; completing reband heals") {
-    import spark.implicits._
+  test("reband publishes bands and meta together: a rebander dead before its publish leaves both on the old geometry; ingest and probes keep matching") {
     val name = "graft_reband_marker_spec"
     EmbeddingStore.drop(spark, name)
+    // a fixed legacy geometry the adaptive derivation will move away from
     EmbeddingStore.build(spark,
       (0L until 50L).map(i => (i, TestVectors.vec(i.toInt))).toDF("vec_id", "embedding"),
-      name)
-    val metaLoc = loc(EmbeddingStore.metaTable(name))
-    val markerP = new Path(metaLoc.getParent, metaLoc.getName + ".rebanding")
+      name, spec = EmbeddingStore.Spec(32, 8))
     try {
-      // a rebander dead anywhere between its bands rewrite and its meta
-      // overwrite leaves the marker on disk (it brackets the whole
-      // commit sequence) — bands and meta may then disagree on
-      // geometry, and a batch banded with the stale spec would miss
-      // stored near-dups with NO error. Both write and read paths must
-      // refuse loudly instead.
-      fs.createNewFile(markerP)
-      val batch = Seq((1000L, TestVectors.vec(1))).toDF("vec_id", "embedding")
-      val e1 = intercept[IllegalArgumentException](
-        EmbeddingStore.ingest(spark, batch, name))
-      assert(e1.getMessage.contains("unfinished reband"), e1.getMessage)
-      val e2 = intercept[IllegalArgumentException](
-        EmbeddingStore.incrementalPairs(spark, batch, name))
-      assert(e2.getMessage.contains("unfinished reband"), e2.getMessage)
-      // re-running reband completes the sequence (here a no-op — bands
-      // and meta in fact agree) and clears the marker
-      EmbeddingStore.reband(spark, name)
-      assert(!fs.exists(markerP), "reband must clear the marker on every exit")
-      val flags = EmbeddingStore.ingest(spark, batch, name)
-      assert(flags.count() == 1)
-      // a real reband leaves no marker behind either: outdate the pin
-      // (legacy fixed geometry), rewrite, and verify the window closed
-      val m = spark.table(EmbeddingStore.metaTable(name)).head()
-      Seq((32, 8, m.getAs[Int]("buckets"), m.getAs[Int]("dims"), Similarity.LshKernelVersion))
-        .toDF("planes", "band_bits", "buckets", "dims", "kernel")
-        .write.mode("overwrite").format("parquet")
-        .saveAsTable(EmbeddingStore.metaTable(name))
+      val twin = Seq((1000L, TestVectors.vec(1))).toDF("vec_id", "embedding")
+      def pairs(): Set[(Long, Long)] = EmbeddingStore.incrementalPairs(spark, twin, name)
+        .select("hist_id", "new_id").as[(Long, Long)].collect().toSet
+      val p0 = pairs()
+      assert(p0.contains((1L, 1000L)), p0)
+      // a rebander dead anywhere before its publish: whatever it wrote
+      // is unnamed, so bands and meta still agree and the twin still
+      // matches — no window where banding silently misses
+      val stray = strayCommit(EmbeddingStore.bandsTable(name))
+      val lock = deadLock(EmbeddingStore, name)
+      freshRegistration(EmbeddingStore, name)
+      assert(pairs() == p0)
+      assert(EmbeddingStore.recover(spark, name))
+      assert(!fs.exists(stray) && !fs.exists(lock))
+      // the completed reband moves bands and meta in one publish
+      val v0 = EmbeddingStore.snapshot(spark, name).version
       assert(EmbeddingStore.reband(spark, name))
-      assert(!fs.exists(markerP))
-      assert(EmbeddingStore.incrementalPairs(spark, batch, name).count() >= 0)
+      assert(EmbeddingStore.snapshot(spark, name).version == v0 + 1)
+      val m = spark.table(EmbeddingStore.metaTable(name)).head()
+      assert((m.getAs[Int]("planes"), m.getAs[Int]("band_bits")) == Similarity.lshSpecFor(50))
+      assert(pairs().contains((1L, 1000L)), "an exact twin matches on any geometry")
+      val flags = EmbeddingStore.ingest(spark, twin, name)
+        .select("vec_id", "is_dup").as[(Long, Boolean)].collect().toMap
+      assert(flags == Map(1000L -> true), flags)
     } finally EmbeddingStore.drop(spark, name)
   }
 
-  test("completed swaps clear stale staged siblings of BOTH suffix families (and the needed=false early return does too)") {
-    import spark.implicits._
+  test("unnamed commit dirs are never read, and the next publish deletes them") {
     val name = "graft_staged_gc_spec"
     EmbeddingStore.drop(spark, name)
     EmbeddingStore.build(spark,
       (0L until 40L).map(i => (i, TestVectors.vec(i.toInt))).toDF("vec_id", "embedding"),
       name)
     try {
-      val bandsT = EmbeddingStore.bandsTable(name)
-      // a compactor dead between stage-complete and its entry reset
-      // leaves a staged sibling WHILE the live table still has data —
-      // stale content, not a sole copy. If it lingers and a LATER
-      // crashed swap empties the table dir, the sole-copy resume would
-      // adopt these outdated bands over the store.
-      def plantStale(suffix: String): String = {
-        val staged = s"$bandsT$suffix"
-        spark.table(bandsT).limit(5).repartition(16, col("band_key"))
-          .write.mode("overwrite").format("parquet")
-          .bucketBy(16, "band_key").sortBy("band_key").saveAsTable(staged)
-        staged
-      }
-      // path 1: a REAL swap (reband after outdating the pin) clears the
-      // other family's leftover
-      val stale1 = plantStale("__compacting")
-      val m = spark.table(EmbeddingStore.metaTable(name)).head()
-      Seq((32, 8, m.getAs[Int]("buckets"), m.getAs[Int]("dims"), Similarity.LshKernelVersion))
-        .toDF("planes", "band_bits", "buckets", "dims", "kernel")
-        .write.mode("overwrite").format("parquet")
-        .saveAsTable(EmbeddingStore.metaTable(name))
-      assert(EmbeddingStore.reband(spark, name))
-      assert(!fs.exists(loc(stale1)),
-        "a completed reband must delete the stale __compacting sibling")
-      assert(!spark.catalog.tableExists(stale1))
-      // path 2: a no-op maintenance pass (compact with the table at its
-      // file floor -> needed=false early return) also clears leftovers
-      val stale2 = plantStale("__rebanding")
-      EmbeddingStore.compact(spark, name)
-      assert(!fs.exists(loc(stale2)),
-        "the needed=false early return must delete stale staged siblings")
-      assert(!spark.catalog.tableExists(stale2))
-      // the live table is untouched throughout
-      assert(spark.table(bandsT).count() > 0)
+      val rows0 = rows(EmbeddingStore, name)
+      // what any dead writer leaves: commit dirs beside the live ones
+      val strays = EmbeddingStore.dataTables(name).map(strayCommit)
+      assert(rows(EmbeddingStore, name) == rows0)
+      freshRegistration(EmbeddingStore, name)
+      assert(rows(EmbeddingStore, name) == rows0, "a fresh registration ignores them too")
+      // the next publish (here an ingest) deletes them; the live table
+      // is untouched throughout
+      val survivors = EmbeddingStore.ingest(spark,
+        Seq((100L, TestVectors.vec(100))).toDF("vec_id", "embedding"), name)
+        .filter(!col("is_dup")).count()
+      assert(!strays.exists(fs.exists), "a publish must delete unnamed commit dirs")
+      assert(spark.table(EmbeddingStore.vecsTable(name)).count() == 40 + survivors)
     } finally EmbeddingStore.drop(spark, name)
   }
 
@@ -325,20 +307,19 @@ class StoreCompactionSpec extends SparkSpec {
     try {
       // geometry and kernel current: nothing to do
       assert(!EmbeddingStore.reband(spark, name))
-      // a legacy fixed-geometry pin on an empty store: reband must
-      // re-pin the meta WITHOUT staging a zero-row bucketed rewrite (a
-      // zero-file bucketed write stages no readable parquet — that path
-      // crashed mid-commit with the bands table dropped, and every
-      // later maintenance fire repeated the crash)
+      // a legacy fixed-geometry pin on an empty store (a pre-kernel
+      // 4-column meta): reband must re-pin the meta WITHOUT writing a
+      // zero-row bands commit
       val m = spark.table(EmbeddingStore.metaTable(name)).head()
-      Seq((32, 8, m.getAs[Int]("buckets"), m.getAs[Int]("dims")))
-        .toDF("planes", "band_bits", "buckets", "dims")
-        .write.mode("overwrite").format("parquet")
-        .saveAsTable(EmbeddingStore.metaTable(name))
+      EmbeddingStore.pinMeta(spark, name,
+        Seq((32, 8, m.getAs[Int]("buckets"), m.getAs[Int]("dims")))
+          .toDF("planes", "band_bits", "buckets", "dims"))
       assert(EmbeddingStore.reband(spark, name))
       val m2 = spark.table(EmbeddingStore.metaTable(name)).head()
       assert((m2.getAs[Int]("planes"), m2.getAs[Int]("band_bits")) ==
         Similarity.lshSpecFor(0))
+      assert(!EmbeddingStore.snapshot(spark, name).commits
+        .contains(EmbeddingStore.bandsTable(name)), "no bands commit for an empty store")
       // the healed store still takes its first ingest
       val flags = EmbeddingStore.ingest(spark,
         Seq((1L, TestVectors.vec(1))).toDF("vec_id", "embedding"), name)

@@ -290,18 +290,14 @@ class StreamingSpec extends SparkSpec {
       assert(streamFlags == batchFlags)
       assert(streamFlags.exists(_._2), "fixture must contain duplicates")
 
-      // checkpoint-replay contract: a committed batch carries its
-      // _COMMITTED marker (written before the pending clear), so a
-      // replay SKIPS the ingest entirely — appends nothing, flags
-      // byte-identical
+      // checkpoint-replay contract: the store's manifest records every
+      // committed batch, so a replay SKIPS the ingest entirely — appends
+      // nothing, flags byte-identical
       val tables = Seq(SignatureStore.bandsTable(sName),
         SignatureStore.shinglesTable(sName), SignatureStore.sizesTable(sName))
       val b0 = batchIds.head
-      val fs = new org.apache.hadoop.fs.Path(flagsRoot)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      assert(batchIds.forall(b => fs.exists(
-        new org.apache.hadoop.fs.Path(s"$flagsRoot/batch_id=$b/_COMMITTED"))),
-        "every completed batch must carry its commit marker")
+      assert(batchIds.forall(b => SignatureStore.committed(spark, sName, (flagsRoot, b))),
+        "every completed batch must be recorded in the store's manifest")
       val before = spark.read.parquet(s"$flagsRoot/batch_id=$b0")
         .collect().map(_.toString).sorted.toSeq
       val files0 = tables.map(StoreGuard.dataFileCount(spark, _)).sum
@@ -426,6 +422,17 @@ class StreamingSpec extends SparkSpec {
     } finally EmbeddingStore.drop(spark, sName)
   }
 
+  /** Leave the lock a dead writer of store `name` would leave. */
+  private def deadLockOf(store: graft.dedup.BandedStore, name: String)
+      : org.apache.hadoop.fs.Path = {
+    import graft.dedup.StoreGuard
+    val m = StoreGuard.tableLocation(spark, store.metaTable(name))
+    val p = new org.apache.hadoop.fs.Path(m.getParent, m.getName + ".lock")
+    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
+    try out.write(StoreGuard.ownerStampFor(deadPid()).getBytes("UTF-8")) finally out.close()
+    p
+  }
+
   test("corpus ingest crash windows: death after appends recovers and re-runs identically; death before pending-clear discharges and skips") {
     import graft.streaming.CorpusStream
     import graft.dedup.{SignatureStore, StoreGuard}
@@ -441,48 +448,36 @@ class StreamingSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(flagsRoot)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val part = s"$flagsRoot/batch_id=7"
-    val marker = new org.apache.hadoop.fs.Path(s"$part/_COMMITTED")
+    val tables = SignatureStore.dataTables(sName)
+    def committed(b: Long) = SignatureStore.committed(spark, sName, (flagsRoot, b))
     try {
-      // window A: the writer dies AFTER the appends and gen bump but
-      // BEFORE the commit marker — flags are on disk, the store holds
-      // the batch, pending still authorizes recovery
+      // window A: the writer dies AFTER the appends, BEFORE the publish
+      // — flags are on disk, its commits and its dead lock too, and no
+      // manifest names the commits
       val e = intercept[RuntimeException](SignatureStore.ingest(spark, batch, sName,
         onFlags = f => f.write.mode("overwrite").parquet(part),
-        onCommitted = () => sys.error("died before the marker")))
+        onStage = (label, _) => if (label == "appends") sys.error("died before the publish")))
       assert(e.getMessage.contains("died"), e.getMessage)
-      assert(!fs.exists(marker))
-      // the redelivered batch must recover (undo the half-committed
-      // appends) and re-run to the IDENTICAL flags — never re-dedupe
-      // the batch against its own survivors
+      val strays = tables.map(strayCommit)
+      val lockP = deadLockOf(SignatureStore, sName)
+      assert(!committed(7L))
+      // the redelivered batch must clear the dead attempt and re-run to
+      // the IDENTICAL flags — never re-dedupe the batch against its own
+      // survivors
       CorpusStream.ingestBatch(spark, batch, sName, flagsRoot, 7L)
-      assert(fs.exists(marker), "re-run must commit")
+      assert(committed(7L), "re-run must commit")
+      assert(!strays.exists(fs.exists) && !fs.exists(lockP))
       val got = spark.read.parquet(part).collect().map(_.toString).sorted.toSeq
       val want = SignatureStore.ingest(spark, batch, bName)
         .collect().map(_.toString).sorted.toSeq
       assert(got == want, "recovered re-run must reproduce the batch-API flags")
 
-      // window B: the writer dies BETWEEN the marker and the pending
-      // clear — manufacture its leftovers (pending + lock siblings of
-      // the meta dir), then a replay must SKIP the ingest, discharge
-      // the moot recovery state, and leave store + flags untouched
-      val metaLoc = StoreGuard.tableLocation(spark, SignatureStore.metaTable(sName))
-      val pendingP = new org.apache.hadoop.fs.Path(metaLoc.getParent, metaLoc.getName + ".pending")
-      val lockP = new org.apache.hadoop.fs.Path(metaLoc.getParent, metaLoc.getName + ".lock")
-      val out = fs.create(pendingP, true)
-      try out.write("bogus-snapshot-line".getBytes("UTF-8")) finally out.close()
-      // a REAL dead writer's lock carries its stamp — the owner gate
-      // refuses an unverifiable one (that's the live-writer protection
-      // tested separately below)
-      locally {
-        val lo = fs.create(lockP, true)
-        try lo.write(StoreGuard.ownerStampFor(deadPid()).getBytes("UTF-8"))
-        finally lo.close()
-      }
-      val tables = Seq(SignatureStore.bandsTable(sName),
-        SignatureStore.shinglesTable(sName), SignatureStore.sizesTable(sName))
+      // window B: the writer dies right AFTER its publish, holding its
+      // lock — a replay must SKIP the ingest, discharge the dead lock,
+      // and leave store + flags untouched
+      deadLockOf(SignatureStore, sName)
       val files0 = tables.map(StoreGuard.dataFileCount(spark, _)).sum
       CorpusStream.ingestBatch(spark, batch, sName, flagsRoot, 7L)
-      assert(!fs.exists(pendingP), "moot pending must be discharged")
       assert(!fs.exists(lockP), "dead writer's lock must be released")
       assert(tables.map(StoreGuard.dataFileCount(spark, _)).sum == files0,
         "skip path must not touch the store")
@@ -491,7 +486,7 @@ class StreamingSpec extends SparkSpec {
       // and the store still accepts the NEXT batch normally
       CorpusStream.ingestBatch(spark, docs.filter(col("doc_id") % 10 === 2),
         sName, flagsRoot, 8L)
-      assert(fs.exists(new org.apache.hadoop.fs.Path(s"$flagsRoot/batch_id=8/_COMMITTED")))
+      assert(committed(8L))
       // every committed text batch carries its band-bucket accounting
       // (the embedding twin's _lsh_audit.json contract)
       val bAudit = new org.apache.hadoop.fs.Path(s"$flagsRoot/batch_id=8/_band_audit.json")
@@ -502,57 +497,28 @@ class StreamingSpec extends SparkSpec {
         assert(j.contains("\"occupied_buckets\":") && j.contains("\"max_bucket\":"), j)
       }
 
-      // window C: the writer dies BETWEEN lock acquisition and the
-      // pending write — lock on disk, no pending, no marker. recover()
-      // has nothing to key off, so without the plain-run arm's
-      // discharge the redelivered ingest would fail fast on the dead
-      // lock on every retry (crash-loop). The stream must verify the
-      // stamped owner is DEAD, discharge the stale lock, and run the
-      // batch to a normal commit. (A real predecessor stamps its lock
-      // at acquisition; fabricate the same state with a genuinely dead
-      // pid — a reaped child process.)
-      fs.createNewFile(lockP)
-      locally {
-        val out = fs.create(lockP, true)
-        try out.write(StoreGuard.ownerStampFor(deadPid()).getBytes("UTF-8"))
-        finally out.close()
-      }
+      // window C: the writer dies between lock acquisition and its
+      // first write — a dead lock and nothing else. The stream must
+      // verify the stamped owner is DEAD, discharge the stale lock, and
+      // run the batch to a normal commit instead of crash-looping on it.
+      deadLockOf(SignatureStore, sName)
       // proof the lock genuinely blocks a direct ingest
       val locked = intercept[RuntimeException](
         SignatureStore.ingest(spark, docs.filter(col("doc_id") % 10 === 3), sName))
       assert(locked.getMessage.contains("locked"), locked.getMessage)
       CorpusStream.ingestBatch(spark, docs.filter(col("doc_id") % 10 === 3),
         sName, flagsRoot, 9L)
-      assert(fs.exists(new org.apache.hadoop.fs.Path(s"$flagsRoot/batch_id=9/_COMMITTED")),
-        "stale pending-less lock must be discharged, not crash-looped on")
+      assert(committed(9L), "stale lock must be discharged, not crash-looped on")
       assert(!fs.exists(lockP), "batch completion releases the discharged lock")
 
-      // pending-proof gate: a replay of a CLEANLY committed batch must
-      // not delete a lock some other (live) writer holds — there is no
-      // pending file, so dischargeCommitted has no proof of a dead
-      // writer and must leave the lock alone
+      // a replay of a committed batch must not delete a lock some other
+      // (live or unverifiable) writer holds
       fs.createNewFile(lockP)
       CorpusStream.ingestBatch(spark, docs.filter(col("doc_id") % 10 === 3),
         sName, flagsRoot, 9L)
       assert(fs.exists(lockP),
         "committed-batch replay must not break a live writer's lock")
       fs.delete(lockP, false)
-
-      // window D (marker + no pending + DEAD lock): the writer died
-      // between its pending clear and its own unlock. The marker is
-      // durable proof the mutation committed, so the replay must
-      // release the dead predecessor's lock — an AvailableNow stream
-      // whose LAST batch died there would otherwise stay locked until
-      // a manual unlock
-      locally {
-        val out = fs.create(lockP, true)
-        try out.write(StoreGuard.ownerStampFor(deadPid()).getBytes("UTF-8"))
-        finally out.close()
-      }
-      CorpusStream.ingestBatch(spark, docs.filter(col("doc_id") % 10 === 3),
-        sName, flagsRoot, 9L)
-      assert(!fs.exists(lockP),
-        "committed-batch replay must release a verifiably-dead predecessor's lock")
     } finally {
       Seq(sName, bName).foreach(SignatureStore.drop(spark, _))
     }
@@ -575,23 +541,22 @@ class StreamingSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(flagsRoot)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val part = s"$flagsRoot/batch_id=7"
-    val marker = new org.apache.hadoop.fs.Path(s"$part/_COMMITTED")
     def flags(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.select("vec_id", "is_dup", "dup_of").collect().map(_.toString).sorted.toSeq
     try {
-      // the writer dies AFTER the appends and gen bump but BEFORE the
-      // commit marker: flags on disk, the store holds the batch, the
-      // pending snapshot still authorizes recovery
-      val e = intercept[RuntimeException](EmbeddingStore.ingest(spark, batch, sName,
-        onFlags = f => f.write.mode("overwrite").parquet(part),
-        onCommitted = () => sys.error("died before the marker")))
-      assert(e.getMessage.contains("died"), e.getMessage)
-      assert(!fs.exists(marker))
-      // the redelivered batch must roll the half-committed appends back
-      // and re-run to the IDENTICAL flags — re-deduping the batch
-      // against its own appended survivors would flag them all
+      // the writer dies after its flags and appends, BEFORE the publish:
+      // flags on disk, its commits and dead lock too, none of it named
+      intercept[RuntimeException](EmbeddingStore.ingest(spark, batch, sName,
+        onFlags = f => { f.write.mode("overwrite").parquet(part); sys.error("died") }))
+      val strays = EmbeddingStore.dataTables(sName).map(strayCommit)
+      deadLockOf(EmbeddingStore, sName)
+      assert(!EmbeddingStore.committed(spark, sName, (flagsRoot, 7L)))
+      // the redelivered batch must clear the dead attempt and re-run to
+      // the IDENTICAL flags — re-deduping the batch against its own
+      // appended survivors would flag them all
       CorpusStream.ingestEmbeddingsBatch(spark, batch, sName, flagsRoot, 7L)
-      assert(fs.exists(marker), "re-run must commit")
+      assert(EmbeddingStore.committed(spark, sName, (flagsRoot, 7L)), "re-run must commit")
+      assert(!strays.exists(fs.exists))
       val got = flags(spark.read.parquet(part))
       val want = flags(EmbeddingStore.ingest(spark, batch, bName))
       assert(got == want, "recovered re-run must reproduce the batch-API flags")
@@ -603,16 +568,11 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("fresh-JVM replay: streaming ingest arbitrates crash state through ensureRegistered EXTERNAL entries; drill seams fire at the real windows") {
-    // pins what the r19 CLI proof drove through 20 fresh JVMs (r18
-    // verdict #2): the streaming wrapper's marker/pending arbitration
-    // working against a fresh JVM's catalog — ensureRegistered EXTERNAL
-    // entries, the state in-JVM specs' MANAGED entries structurally
-    // never see and where the embedding store hid its
-    // saveAsTable-vs-EXTERNAL bug for four rounds. Also pins the
-    // `--inject-crash` drill seams at their REAL windows: onFlagsWritten
-    // must fire before any append reaches the store (so halting there
-    // leaves the mid-mutation state the proof crashed into), and
-    // onMarkerWritten with the marker already durable.
+    // pins what the CLI drills drive through fresh JVMs: the streaming
+    // wrapper's replay decision working against a fresh JVM's catalog
+    // (ensureRegistered entries), and the `--inject-crash` drill seams
+    // at their REAL windows: onFlagsWritten must fire before any append
+    // reaches the store, onCommitted with the batch already published.
     import graft.streaming.CorpusStream
     import graft.dedup.{SignatureStore, StoreGuard}
     val docs = Tables.documents(spark, sfDir)
@@ -622,46 +582,31 @@ class StreamingSpec extends SparkSpec {
     val flagsRoot = java.nio.file.Files.createTempDirectory("graft-xjvm-flags").toString
     val fs = new org.apache.hadoop.fs.Path(flagsRoot)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tables = Seq(SignatureStore.bandsTable(sName), SignatureStore.shinglesTable(sName),
-      SignatureStore.sizesTable(sName), SignatureStore.metaTable(sName))
-    def dataFiles = tables.init.map(StoreGuard.dataFileCount(spark, _)).sum
+    def dataFiles = SignatureStore.dataTables(sName).map(StoreGuard.dataFileCount(spark, _)).sum
+    def committed(b: Long) = SignatureStore.committed(spark, sName, (flagsRoot, b))
     try {
       // batch 0, clean commit — with the seam contract asserted live
-      val marker0 = new org.apache.hadoop.fs.Path(s"$flagsRoot/batch_id=0/_COMMITTED")
       val files0 = dataFiles
       var filesAtFlagsSeam = -1L
-      var markerAtFlagsSeam = true
-      var markerAtMarkerSeam = false
+      var committedAtFlagsSeam = true
+      var committedAtCommitSeam = false
       CorpusStream.ingestBatch(spark, docs.filter(col("doc_id") % 10 === 1),
         sName, flagsRoot, 0L,
         onFlagsWritten = () => {
           filesAtFlagsSeam = dataFiles
-          markerAtFlagsSeam = fs.exists(marker0)
+          committedAtFlagsSeam = committed(0L)
         },
-        onMarkerWritten = () => markerAtMarkerSeam = fs.exists(marker0))
+        onCommitted = () => committedAtCommitSeam = committed(0L))
       assert(filesAtFlagsSeam == files0,
         "after-flags seam must fire before any append reaches the store")
-      assert(!markerAtFlagsSeam, "after-flags seam must fire before the marker")
-      assert(markerAtMarkerSeam, "after-marker seam must fire with the marker durable")
+      assert(!committedAtFlagsSeam, "after-flags seam must fire before the publish")
+      assert(committedAtCommitSeam, "after-marker seam must fire with the batch published")
 
-      // fresh-JVM catalog: stash each table dir aside across DROP (a
-      // managed DROP deletes files), then re-register — EXTERNAL entries
-      val conf = spark.sparkContext.hadoopConfiguration
-      tables.foreach { t =>
-        val loc = StoreGuard.tableLocation(spark, t)
-        val tfs = loc.getFileSystem(conf)
-        val save = new org.apache.hadoop.fs.Path(loc.getParent, loc.getName + ".xjvm")
-        assert(tfs.rename(loc, save), s"stash $t")
-        spark.sql(s"DROP TABLE IF EXISTS `$t`")
-        assert(tfs.rename(save, loc), s"restore $t")
-      }
-      SignatureStore.ensureRegistered(spark, sName)
+      freshRegistration(SignatureStore, sName)
 
       // the after-flags crash window for batch 1 (what --inject-crash
-      // after-flags leaves): flags partition without marker, pending on
-      // disk; the in-process throw releases the claimed lock (the r17
-      // failure-path contract), so restore the hard-halt's stamped
-      // dead-writer lock by hand
+      // after-flags leaves): a flags partition, no publish, and the
+      // hard-halted writer's stamped lock
       val batch1 = docs.filter(col("doc_id") % 10 === 2)
       val part1 = s"$flagsRoot/batch_id=1"
       val e = intercept[RuntimeException](SignatureStore.ingest(spark, batch1, sName,
@@ -671,40 +616,27 @@ class StreamingSpec extends SparkSpec {
         }))
       assert(e.getMessage.contains("halt after flags"), e.getMessage)
       val preCrashFlags = spark.read.parquet(part1).collect().map(_.toString).sorted.toSeq
-      val metaLoc = StoreGuard.tableLocation(spark, SignatureStore.metaTable(sName))
-      val lockP = new org.apache.hadoop.fs.Path(metaLoc.getParent, metaLoc.getName + ".lock")
-      locally {
-        val out = fs.create(lockP, true)
-        try out.write(StoreGuard.ownerStampFor(deadPid()).getBytes("UTF-8"))
-        finally out.close()
-      }
-      // the redelivered batch must arbitrate (dead owner ⇒ recover),
-      // re-run through the EXTERNAL entries, and commit IDENTICAL flags
+      val lockP = deadLockOf(SignatureStore, sName)
+      freshRegistration(SignatureStore, sName)
+      // the redelivered batch must discharge the dead lock, re-run
+      // through the fresh entries, and commit IDENTICAL flags
       CorpusStream.ingestBatch(spark, batch1, sName, flagsRoot, 1L)
-      assert(fs.exists(new org.apache.hadoop.fs.Path(s"$part1/_COMMITTED")))
+      assert(committed(1L))
       assert(spark.read.parquet(part1).collect().map(_.toString).sorted.toSeq
         == preCrashFlags, "replayed flags must be idempotent")
       assert(!fs.exists(lockP), "the dead writer's lock must be released")
 
-      // the marker→pending-clear residue window, still through the
-      // EXTERNAL entries: fabricate the dead writer's pending + lock
-      // beside batch 1's committed marker — the replay must discharge
-      // and SKIP (no store mutation, flags untouched)
-      val pendingP = new org.apache.hadoop.fs.Path(metaLoc.getParent, metaLoc.getName + ".pending")
-      locally {
-        val out = fs.create(pendingP, true)
-        try out.write("bogus-snapshot-line".getBytes("UTF-8")) finally out.close()
-        val lo = fs.create(lockP, true)
-        try lo.write(StoreGuard.ownerStampFor(deadPid()).getBytes("UTF-8"))
-        finally lo.close()
-      }
+      // the after-commit window (what --inject-crash after-marker
+      // leaves): batch 1 published, its writer's dead lock still on
+      // disk — the replay must discharge and SKIP
+      deadLockOf(SignatureStore, sName)
+      freshRegistration(SignatureStore, sName)
       val filesBefore = dataFiles
       CorpusStream.ingestBatch(spark, batch1, sName, flagsRoot, 1L)
-      assert(!fs.exists(pendingP) && !fs.exists(lockP),
-        "moot recovery state must be discharged on the committed replay")
+      assert(!fs.exists(lockP), "the dead lock must be discharged on the committed replay")
       assert(dataFiles == filesBefore, "skip path must not touch the store")
 
-      // the store stays fully usable through the EXTERNAL entries: a
+      // the store stays fully usable through the fresh entries: a
       // replayed doc in the next batch flags dup against the history
       val replayed = docs.filter(col("doc_id") % 10 === 1)
       CorpusStream.ingestBatch(spark, replayed, sName, flagsRoot, 2L)
@@ -726,16 +658,19 @@ class StreamingSpec extends SparkSpec {
     val lockP = new org.apache.hadoop.fs.Path(metaLoc.getParent, metaLoc.getName + ".lock")
     val fs = lockP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val batch = docs.filter(col("doc_id") % 10 === 1)
+    def liveLock(): Unit = {
+      val out = fs.create(lockP, true)
+      try out.write(StoreGuard.ownerStampFor(
+        ProcessHandle.current().pid()).getBytes("UTF-8"))
+      finally out.close()
+    }
+    def rows(): Seq[Seq[String]] = SignatureStore.dataTables(sName).map(t =>
+      spark.table(t).drop("commit").collect().map(_.toString).sorted.toSeq)
     try {
       // a lock stamped by a LIVE pid (this very JVM — what a concurrent
       // maintenance sweep in another session looks like): the batch
       // must FAIL with instructions, never silently delete the lock
-      locally {
-        val out = fs.create(lockP, true)
-        try out.write(StoreGuard.ownerStampFor(
-          ProcessHandle.current().pid()).getBytes("UTF-8"))
-        finally out.close()
-      }
+      liveLock()
       val live = intercept[RuntimeException](
         CorpusStream.ingestBatch(spark, batch, sName, flagsRoot, 0L))
       assert(live.getMessage.contains("STILL ALIVE"), live.getMessage)
@@ -773,113 +708,37 @@ class StreamingSpec extends SparkSpec {
         assert(busy.getMessage.contains("STILL ALIVE"), busy.getMessage)
       } finally { release.countDown(); t.join() }
       CorpusStream.ingestBatch(spark, batch, sName, flagsRoot, 1L)
-      assert(fs.exists(new org.apache.hadoop.fs.Path(s"$flagsRoot/batch_id=1/_COMMITTED")),
+      assert(SignatureStore.committed(spark, sName, (flagsRoot, 1L)),
         "after maintenance releases the lock the stream proceeds normally")
 
-      // a LIVE foreign ingest mid-flight (owner-stamped pending +
-      // live-stamped lock): BOTH replay arms must leave its state
-      // alone. The plain-run arm must not auto-recover (that would roll
-      // back the live writer's in-flight appends) — it fails fast
-      // instead; a committed-batch replay must not clear the live
-      // writer's pending either (its stamp differs from the marker
-      // writer's, and its owner is alive).
-      val pendingP = new org.apache.hadoop.fs.Path(
-        metaLoc.getParent, metaLoc.getName + ".pending")
-      locally {
-        val stamp = StoreGuard.ownerStampFor(ProcessHandle.current().pid())
-        val po = fs.create(pendingP, true)
-        try po.write(s"#owner $stamp\nlive-writer-snapshot".getBytes("UTF-8"))
-        finally po.close()
-        val lo = fs.create(lockP, true)
-        try lo.write(stamp.getBytes("UTF-8"))
-        finally lo.close()
-      }
+      // a LIVE foreign ingest mid-flight (its unpublished commits and
+      // its live lock): BOTH replay arms leave its state alone. The
+      // plain-run arm fails fast instead of deleting the live writer's
+      // commits; a committed-batch replay touches nothing.
+      val rows0 = rows()
+      val strays = SignatureStore.dataTables(sName).map(strayCommit)
+      liveLock()
       val liveRec = intercept[RuntimeException](
         CorpusStream.ingestBatch(spark, batch, sName, flagsRoot, 5L))
-      assert(liveRec.getMessage.contains("refusing automatic recovery"),
-        liveRec.getMessage)
-      assert(fs.exists(pendingP) && fs.exists(lockP),
-        "a live writer's pending and lock must survive the refused recovery")
-      // committed-batch replay (batch 1 committed above): the
-      // pending-gated discharge must ALSO respect the live owner
+      assert(liveRec.getMessage.contains("STILL ALIVE"), liveRec.getMessage)
+      assert(fs.exists(lockP) && strays.forall(fs.exists),
+        "a live writer's commits and lock must survive the refused recovery")
       CorpusStream.ingestBatch(spark, batch, sName, flagsRoot, 1L)
-      assert(fs.exists(pendingP) && fs.exists(lockP),
-        "a committed replay must not discharge a live writer's pending/lock")
-      fs.delete(pendingP, false); fs.delete(lockP, false)
+      assert(fs.exists(lockP) && strays.forall(fs.exists),
+        "a committed replay must not touch a live writer's commits or lock")
+      assert(rows() == rows0, "an in-flight writer's commits are never read")
 
-      // a foreign writer DEAD mid-mutation (stamped pending from a dead
-      // pid ≠ the marker writer, dead lock, partial append on disk):
-      // the committed-batch replay must RECOVER — roll the foreign
-      // writer's partial appends back to ITS snapshot — never treat the
-      // pending as the marker writer's moot residue (which would keep
-      // the partial appends and destroy the rollback authorization)
-      val bandsLoc = StoreGuard.tableLocation(spark, SignatureStore.bandsTable(sName))
-      val junk = new org.apache.hadoop.fs.Path(bandsLoc, "part-foreign-partial.parquet")
-      locally {
-        val snap = SignatureStore.snapshot(spark, sName) // pre-mutation state
-        val stamp = StoreGuard.ownerStampFor(deadPid())
-        val po = fs.create(pendingP, true)
-        try po.write((s"#owner $stamp\n" + snap.mkString("\n")).getBytes("UTF-8"))
-        finally po.close()
-        val jo = fs.create(junk, true) // the foreign writer's partial append
-        try jo.write("partial".getBytes("UTF-8")) finally jo.close()
-        val lo = fs.create(lockP, true)
-        try lo.write(stamp.getBytes("UTF-8")) finally lo.close()
-      }
+      // the same writer found DEAD: the committed replay releases its
+      // lock and still reads none of its commits; the next batch's
+      // recovery deletes them
+      fs.delete(lockP, false)
+      deadLockOf(SignatureStore, sName)
       CorpusStream.ingestBatch(spark, batch, sName, flagsRoot, 1L)
-      assert(!fs.exists(junk),
-        "a dead foreign writer's partial appends must be rolled back, not adopted")
-      assert(!fs.exists(pendingP) && !fs.exists(lockP),
-        "the recovered foreign state must be fully discharged")
-
-      // same-writer residue (pending stamped by the marker writer
-      // itself, lock already gone): the predecessor died between its
-      // pending clear steps — moot residue, discharged without rollback
-      locally {
-        val po = fs.create(pendingP, true)
-        try po.write((s"#owner ${StoreGuard.ownerStamp}\nmoot-residue")
-          .getBytes("UTF-8"))
-        finally po.close()
-      }
-      CorpusStream.ingestBatch(spark, batch, sName, flagsRoot, 1L)
-      assert(!fs.exists(pendingP),
-        "the marker writer's own post-commit pending is moot residue — discharged")
-
-      // same-writer residue with the predecessor's DEAD lock still on
-      // disk (died between marker and pending clear, lock file never
-      // released): the discharge proceeds UNDER that lock — pending
-      // cleared first, lock released after (the reorder that closed the
-      // lock-delete-first TOCTOU window)
-      locally {
-        val po = fs.create(pendingP, true)
-        try po.write((s"#owner ${StoreGuard.ownerStamp}\nmoot-residue")
-          .getBytes("UTF-8"))
-        finally po.close()
-        val lo = fs.create(lockP, true)
-        try lo.write(StoreGuard.ownerStampFor(deadPid()).getBytes("UTF-8"))
-        finally lo.close()
-      }
-      CorpusStream.ingestBatch(spark, batch, sName, flagsRoot, 1L)
-      assert(!fs.exists(pendingP) && !fs.exists(lockP),
-        "same-writer residue under a dead lock must discharge both")
-
-      // same-writer residue under a LIVE lock: the claim is lost to an
-      // owner that cannot be proven dead, so the replay's best-effort
-      // discharge leaves EVERYTHING — pending and lock both survive
-      locally {
-        val po = fs.create(pendingP, true)
-        try po.write((s"#owner ${StoreGuard.ownerStamp}\nmoot-residue")
-          .getBytes("UTF-8"))
-        finally po.close()
-        val lo = fs.create(lockP, true)
-        try lo.write(StoreGuard.ownerStampFor(
-          ProcessHandle.current().pid()).getBytes("UTF-8"))
-        finally lo.close()
-      }
-      CorpusStream.ingestBatch(spark, batch, sName, flagsRoot, 1L)
-      assert(fs.exists(pendingP) && fs.exists(lockP),
-        "a live lock gates the discharge — nothing is touched")
-      fs.delete(pendingP, false); fs.delete(lockP, false)
+      assert(!fs.exists(lockP) && rows() == rows0,
+        "a dead foreign writer's commits must never be adopted")
+      CorpusStream.ingestBatch(spark, docs.filter(col("doc_id") % 10 === 2),
+        sName, flagsRoot, 2L)
+      assert(!strays.exists(fs.exists), "the next batch deletes the dead writer's commits")
     } finally SignatureStore.drop(spark, sName)
   }
 }
