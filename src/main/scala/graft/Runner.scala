@@ -32,10 +32,10 @@ import org.apache.spark.sql.SparkSession
   *   runMain graft.Runner --corpus-stream-emb estore --stream-src /data/in-e \
   *     --flags-root /data/flags-e --checkpoint /data/ckpt-e [--bucket-cap N] --sf ...
   *   runMain graft.Runner --ivf-build /data/idx --nlist 8 \
-  *     [--batch-mod N --batch-rem R] --sf ...    (index day-0 publish)
+  *     [--batch-mod N --batch-rem R] --sf ...    (index day-0 build -> v<N>)
   *   runMain graft.Runner --ivf-append /data/idx --batch-mod N --batch-rem R \
-  *     --sf ...                                  (daily frozen-centroid delta)
-  *   runMain graft.Runner --ivf-retrain /data/idx --sf ...   (monthly fold)
+  *     --sf ...                                  (daily frozen-centroid delta -> v<N>)
+  *   runMain graft.Runner --ivf-retrain /data/idx --sf ...   (monthly fold -> v<N>)
   *   runMain graft.Runner --full-refresh daily_sales --fy-from 1995 --fy-to 1997 \
   *     --confirm-delete --confirm-fy [--dry-run] --sf ...
   */
@@ -118,11 +118,11 @@ object Runner {
       out += s"[maintain-ivf] $root built and published -> v$v"
     }
     opts.get("ivf-append").foreach { root =>
-      val delta = graft.similarity.IvfIndex.append(
+      val v = graft.similarity.IvfIndex.append(
         batchSlice(opts, Tables.embeddings(spark, sfDir), "vec_id"),
         "vec_id", "embedding", root)
-      out += (if (delta == 0) s"[maintain-ivf] $root append: empty batch, nothing published"
-        else s"[maintain-ivf] $root appended frozen-centroid delta $delta")
+      out += (if (v == 0) s"[maintain-ivf] $root append: empty batch, nothing published"
+        else s"[maintain-ivf] $root appended frozen-centroid delta -> v$v")
     }
     opts.get("ivf-retrain").foreach { root =>
       // --nlist 0 (default) keeps the index's own cell count, read
@@ -358,14 +358,14 @@ object Runner {
       // IVF index maintenance: --ivf-retrain <root> [--nlist N] re-runs
       // the coarse quantizer over the index's own contents (base +
       // appended deltas — the index IS the corpus copy), folding the
-      // deltas into one fresh versioned vectors/ dir and re-deriving
+      // deltas into one fresh vectors/ dir and re-deriving
       // centroids for the post-append distribution — the monthly slot
       // that settles frozen-centroid drift, as reband does for the
       // embedding store's geometry.
       // the index lifecycle's other two phases as CLI forms, completing
       // the cron-cadence story (one fresh JVM per run — the index is
-      // file-root-versioned with no catalog entries, so nothing needs
-      // re-registration): --ivf-build <root> [--nlist N --iters I
+      // published by manifest under its root with no catalog entries, so
+      // nothing needs re-registration): --ivf-build <root> [--nlist N --iters I
       // --sample-mod M] [--batch-mod/--batch-rem] trains and publishes
       // v1 from the embeddings table; --ivf-append <root>
       // [--batch-mod/--batch-rem] publishes a frozen-centroid delta —

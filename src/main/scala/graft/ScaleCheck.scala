@@ -225,7 +225,7 @@ object ScaleCheck {
         val n = similarity.IvfIndex.retrain(s, root, nlist = 8, iters = 2,
           sampleMod = 2,
           onStage = (l, t) => System.err.println(f"[s07x] phase $l%-8s $t%6.2f s"))
-        s.range(1).select(lit(n).as("cells"))
+        s.range(1).select(lit(n).as("version"))
       },
       None,
       prepare = Some((s, dir) => { ensureIvfBase(s, dir, "s07x", withDelta = true); () })))

@@ -356,7 +356,7 @@ object SimilarityQueries {
   /** Incremental ANN: the s03 trained index built over a BASE corpus
     * (vec_id % 5 != 0), then the remaining fifth appended via
     * `IvfIndex.append` — batch vectors assigned to the PUBLISHED frozen
-    * centroids and landed in a one-rename `delta` dir, O(batch) I/O
+    * centroids and published as one more manifest-named `vectors` dir, O(batch) I/O
     * with the base `vectors/` untouched (the store cadence of d07/d08,
     * applied to embeddings). The probe then answers top-5 over base +
     * delta with the same probed-cell partition pruning in every vector

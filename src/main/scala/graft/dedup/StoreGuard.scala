@@ -18,7 +18,9 @@ import graft.sinks.ManifestLog
   *    before its publish leaves commit dirs no manifest names; nothing
   *    reads them, and [[recover]] deletes them;
   *  - a [[snapshot]] is a manifest version and its commits, and
-  *    [[rollback]] republishes that list;
+  *    [[rollback]] republishes that list. A publish that replaces a
+  *    table (build, retune, reband, compact) deletes the older
+  *    manifests: no rollback can cross it;
   *  - the lock file (atomic createNewFile, stamped with its owner)
   *    serialises writers: a second concurrent writer fails fast. It is
   *    reentrant per thread, so a caller can bracket snapshot → ingest →
@@ -153,13 +155,19 @@ private[graft] final case class StoreGuard(metaTable: String, tables: Seq[String
       sync(spark)
       onPublished()
       sweep(spark)
+      // a publish that replaced a table ends every rollback to an older
+      // snapshot (its commits are gone), so no older manifest is needed
+      if (c.replaced.nonEmpty) fs(spark).listStatus(manifestDir(spark))
+        .filter(st => ManifestLog.versionOf(st.getPath.getName).exists(_ <= v))
+        .foreach(st => fs(spark).delete(st.getPath, false))
       out
     }
 
   /** Republish `snap`'s commits. Refuses when a commit of the snapshot
-    * is gone (a build, compact or reband since dropped it) or when a
-    * later version was published by another process (rolling back
-    * would drop that writer's work).
+    * is gone (a build, compact or reband since dropped it), when a later
+    * version was pruned (by such a publish), or when a later version was
+    * published by another process (rolling back would drop that
+    * writer's work).
     */
   def rollback(spark: SparkSession, snap: BandedStore.Snapshot): Unit = locked(spark) {
     val (v, cur) = current(spark)
@@ -173,7 +181,13 @@ private[graft] final case class StoreGuard(metaTable: String, tables: Seq[String
         "reband ran since the snapshot was taken, and rollback can only undo " +
         "appends, not restore deleted files; rebuild the store from the source " +
         "corpus instead")
-    ((snap.version + 1) to v).map(manifestAt(spark, _)).find(_.writer != processTag)
+    val later = (snap.version + 1) to v
+    later.find(ver => !fs(spark).exists(ManifestLog.path(manifestDir(spark), ver)))
+      .foreach(ver => sys.error(s"cannot roll back store '$metaTable': version " +
+        s"$ver after the snapshot was pruned by a later build, compact or reband, " +
+        "so what it published cannot be checked; rebuild the store from the " +
+        "source corpus instead"))
+    later.map(manifestAt(spark, _)).find(_.writer != processTag)
       .foreach(m => sys.error(s"stale snapshot for store '$metaTable': a later " +
         s"version was published by another process (${m.writer}) since the " +
         "snapshot was taken — rolling back would drop that writer's commits"))
@@ -352,21 +366,12 @@ private[graft] object StoreGuard {
   private[dedup] def pidAlive(pid: Long): Boolean =
     ProcessHandle.of(pid).map[Boolean](_.isAlive).orElse(false)
 
-  /** Stamp a freshly claimed lock file with this writer's identity: a
-    * temp sibling renamed over it where the FileSystem replaces on
-    * rename, else an overwrite-create of the lock (Hadoop's local FS
-    * refuses a rename onto an existing file, so it takes that branch).
+  /** Stamp a freshly claimed lock file with this writer's identity: one
+    * overwrite-create of the claimed file.
     */
   private[dedup] def stampLock(fs: FileSystem, p: Path): Unit = {
-    val tmp = new Path(p.getParent,
-      p.getName + ".stamp-" + java.util.UUID.randomUUID().toString.take(8))
-    val out = fs.create(tmp, true)
+    val out = fs.create(p, true)
     try out.write(ownerStamp.getBytes("UTF-8")) finally out.close()
-    if (!fs.rename(tmp, p)) {
-      val out2 = fs.create(p, true)
-      try out2.write(ownerStamp.getBytes("UTF-8")) finally out2.close()
-      fs.delete(tmp, false)
-    }
   }
 
   /** The stamp [[StoreGuard.locked]] writes into a claimed lock file. */

@@ -1,9 +1,13 @@
 package graft.similarity
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import graft.functions.StableAgg._
+import graft.sinks.VersionedTable
+import graft.sinks.VersionedTable.Entry
 
 /** Persisted IVF (inverted-file) index for embedding search — the
   * build-once / probe-many form of the s02 in-memory IVF plan.
@@ -13,14 +17,23 @@ import graft.functions.StableAgg._
   *
   * {{{
   * root/
-  *   v00001/                            one immutable dir per build,
-  *     vectors/cell=<c>/part-*.parquet  corpus PARTITIONED by cell,
-  *                                      norms precomputed
-  *     centroids/part-*.parquet         one mean vector + norm per cell
-  *   v00002/                            rebuild = fresh dir + one rename
+  *   manifest-v00000001.txt               newest complete manifest wins
+  *   commits/c-<uuid>/                    a build's commit:
+  *     vectors/cell=<c>/part-*.parquet    corpus PARTITIONED by cell,
+  *                                        norms precomputed
+  *     centroids/part-*.parquet           one mean vector + norm per cell
+  *   commits/c-<uuid>/vectors/cell=<c>/   an append's commit
   * }}}
   *
-  * and a query then (1) broadcasts the tiny centroid table, (2) ranks
+  * The newest manifest alone decides what the index contains: its
+  * `sinks/VersionedTable` lines name one `centroids` dir and the
+  * `vectors` dirs (base, then each append). Every publish goes to the
+  * version its inputs were read from + 1, so a racing writer fails with
+  * "concurrent commit" instead of being lost; a commit no manifest
+  * names is never read, and the `VersionedTable.vacuum` after each
+  * build or retrain deletes it and every version before the previous.
+  *
+  * A query then (1) broadcasts the tiny centroid table, (2) ranks
   * cells per query vector, (3) reads ONLY the probed cells' partitions —
   * the `cell isin (...)` filter prunes at the parquet partition level, so
   * a 2-probe query over an nlist-cell index touches ~2/nlist of the data
@@ -41,50 +54,62 @@ import graft.functions.StableAgg._
   */
 object IvfIndex {
 
-  private val VersionRe = raw"v(\d{5})".r
+  /** Versions a build or retrain keeps: its own and the previous one. */
+  private val RetainVersions = 2
 
-  private def newestVersion(spark: SparkSession, root: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) 0
-    else fs.listStatus(p).flatMap(_.getPath.getName match {
-      case VersionRe(v) => Some(v.toInt)
-      case _ => None
-    }).foldLeft(0)(math.max)
+  /** A published version's manifest entries, with its centroid dir
+    * and its vector dirs: the base first, then each append in order.
+    */
+  private[graft] final case class Live(root: String, version: Int, entries: Seq[Entry]) {
+    private def dirs(rel: String) =
+      entries.filter(_.relPath == rel).map(e => s"$root/${e.commit}/$rel")
+    def centroids: String = dirs("centroids").head
+    def vectors: Seq[String] = dirs("vectors")
   }
 
-  private def versionDir(root: String, v: Int) = f"$root/v$v%05d"
-  private def vectorsPath(root: String, v: Int) = s"${versionDir(root, v)}/vectors"
-  private def centroidsPath(root: String, v: Int) = s"${versionDir(root, v)}/centroids"
+  /** The newest published version of the index at `root`. */
+  private[graft] def live(spark: SparkSession, root: String): Live = {
+    val v = VersionedTable.version(spark, root)
+    require(v > 0, s"no published index at $root (an index built before the " +
+      "manifest layout must be rebuilt with --ivf-build)")
+    val p = new Path(root)
+    Live(root, v, VersionedTable.readManifest(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p, v))
+  }
+
+  /** Write one commit dir with `write` (given the dir, it returns the
+    * sub-dirs it wrote) and publish `keep` plus those as version
+    * `base + 1`. A writer that fails, or loses the publish to a
+    * concurrent one ("concurrent commit"), deletes its commit dir.
+    */
+  private def commit(spark: SparkSession, root: String, base: Int, keep: Seq[Entry])
+      (write: String => Seq[String]): Int = {
+    val rel = s"commits/c-${java.util.UUID.randomUUID()}"
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try VersionedTable.publish(fs, new Path(root), base + 1,
+      keep ++ write(s"$root/$rel").map(Entry(rel, _)))
+    catch { case e: Throwable => fs.delete(new Path(root, rel), true); throw e }
+    base + 1
+  }
 
   /** Build (or rebuild) the index: cell-partitioned corpus with
     * precomputed norms + per-cell mean centroids (decimal-exact means,
-    * so the build is deterministic for any partitioning). Each build
-    * writes a fresh `v<N>` directory and publishes it with one rename —
-    * readers of the previous version are undisturbed (and never see a
-    * stale file listing for an overwritten path), a crash before the
-    * rename leaves the old index intact, and versions older than the
-    * previous one are pruned. Returns the published version.
+    * so the build is deterministic for any partitioning), written as
+    * one commit whose `vectors` and `centroids` are the whole published
+    * manifest. Readers of the previous version are undisturbed and a
+    * crash before the publish leaves it current. Returns the published
+    * version.
     */
   def build(corpus: DataFrame, idCol: String, vecCol: String, cellCol: String,
-      root: String, retainVersions: Int = 2): Int = {
-    require(retainVersions >= 1, "retainVersions must be >= 1")
+      root: String): Int =
+    build(corpus, idCol, vecCol, cellCol, root, VersionedTable.version(corpus.sparkSession, root))
+
+  /** [[build]] as version `base + 1`, `base` being the version read. */
+  private def build(corpus: DataFrame, idCol: String, vecCol: String, cellCol: String,
+      root: String, base: Int): Int = {
     val spark = corpus.sparkSession
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val next = newestVersion(spark, root) + 1
-    val tmp = new org.apache.hadoop.fs.Path(rootP,
-      s"tmp-${java.util.UUID.randomUUID()}")
-    val v = corpus.select(col(idCol).as("vec_id"), col(cellCol).as("cell"),
-      col(vecCol).as("emb"))
+    val v = corpus.select(col(idCol).as("vec_id"), col(cellCol).as("cell"), col(vecCol).as("emb"))
       .withColumn("ns", Similarity.normSq(col("emb")))
-    // repartition on the layout key before the partitioned write: writing
-    // straight from a W-way shuffle emits one file per (task, cell) — up
-    // to W×nlist near-empty files per build (measured 256/version at
-    // sf0.1) — while hash-clustering by cell bounds it at one file per
-    // cell (very large cells split further via
-    // spark.sql.files.maxRecordsPerFile when an operator sets it)
-    v.repartition(col("cell")).write.partitionBy("cell").parquet(s"$tmp/vectors")
     val ex = v.select(col("cell"), posexplode(col("emb")).as(Seq("pos", "val0")))
       .withColumn("val", col("val0").cast("double"))
     val cent = ex.groupBy(col("cell"), col("pos"))
@@ -93,45 +118,43 @@ object IvfIndex {
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("cval")))),
         s => s.getField("cval")).as("cent"))
       .withColumn("cns", Similarity.normSq(col("cent")))
-    // nlist rows — control-plane size, one file
-    centArr.coalesce(1).write.parquet(s"$tmp/centroids")
-    if (!fs.rename(tmp, new org.apache.hadoop.fs.Path(versionDir(root, next)))) {
-      fs.delete(tmp, true) // lost the publish race — don't leak the build
-      sys.error(s"concurrent index build: version $next already published at $root")
+    val published = commit(spark, root, base, Nil) { dir =>
+      // repartition on the layout key before the partitioned write: writing
+      // straight from a W-way shuffle emits one file per (task, cell) — up
+      // to W×nlist near-empty files per build (measured 256/version at
+      // sf0.1) — while hash-clustering by cell bounds it at one file per
+      // cell (very large cells split further via
+      // spark.sql.files.maxRecordsPerFile when an operator sets it)
+      v.repartition(col("cell")).write.partitionBy("cell").parquet(s"$dir/vectors")
+      // nlist rows — control-plane size, one file
+      centArr.coalesce(1).write.parquet(s"$dir/centroids")
+      Seq("vectors", "centroids")
     }
-    // keep `retainVersions` newest builds for pinned/in-flight readers
-    // (consistent with VersionedTable.vacuum's retention contract)
-    (1 to next - retainVersions).foreach(old =>
-      fs.delete(new org.apache.hadoop.fs.Path(versionDir(root, old)), true))
-    next
+    VersionedTable.vacuum(spark, root, RetainVersions)
+    published
   }
 
   /** Incremental append — the O(batch)/day growth path that makes the
     * index a store, not a snapshot: batch vectors are assigned to the
     * PUBLISHED (frozen) centroids — classic IVF ingest; centroids drift
-    * only at the next rebuild/compaction — and land in a `delta-<n>`
-    * dir beside `vectors/`, cell-partitioned the same way. The delta is
-    * staged to a tmp dir and published by ONE rename (the `build`
-    * contract), so readers never see a partial append and a crash
-    * leaves the index exactly as it was. Pre-existing files are never
-    * touched: dropping the delta dir restores the prior state
-    * bit-for-bit (the SignatureStore rollback property).
+    * only at the next rebuild/compaction — and land in a fresh commit's
+    * `vectors/`, cell-partitioned the same way. It publishes the lines
+    * of the version it read plus that dir, as that version + 1: readers
+    * never see a partial append, a crash leaves the index as it was, and
+    * pre-existing files are never touched.
     *
     * Probe cost after appends is unchanged — [[topK]] prunes the same
     * probed-cell partitions in every vector dir — and the accumulated
-    * deltas fold into one `vectors/` at the next [[build]].
+    * dirs fold into one at the next [[retrain]].
     *
-    * Returns the published delta number, or 0 when the batch is empty
-    * (nothing is published — a file-less delta dir would break the
+    * Returns the published version, or 0 when the batch is empty
+    * (nothing is published — a file-less vector dir would break the
     * probe's schema inference).
     */
   def append(batch: DataFrame, idCol: String, vecCol: String, root: String): Int = {
     val spark = batch.sparkSession
-    val ver = newestVersion(spark, root)
-    require(ver > 0, s"no published index at $root to append to")
-    val vd = new org.apache.hadoop.fs.Path(versionDir(root, ver))
-    val fs = vd.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val centEx = spark.read.parquet(centroidsPath(root, ver))
+    val l = live(spark, root)
+    val centEx = spark.read.parquet(l.centroids)
       .select(col("cell"), posexplode(col("cent")).as(Seq("pos", "cval")))
     val ex = batch.select(col(idCol).as("vec_id"),
         posexplode(col(vecCol)).as(Seq("pos", "val0")))
@@ -140,101 +163,13 @@ object IvfIndex {
       .join(assign(ex, centEx), "vec_id")
       .withColumn("ns", Similarity.normSq(col("emb")))
       .select("vec_id", "cell", "emb", "ns")
-    // an empty batch must not publish a file-less delta dir — the next
-    // probe's multi-dir read would fail schema inference on it
     if (v.isEmpty) return 0
-    // RESERVE the delta number before staging any data: an atomic
-    // create-if-absent marker (`_delta-N.reserved`, ignored by parquet
-    // reads and by vectorDirs' exact-name match) makes each writer's
-    // destination unique, so the rename below publishes onto a
-    // never-existing path. Without the reservation, two racing writers
-    // compute the same `next` and the loser's rename MOVES ITS STAGED
-    // DIR INSIDE the winner's delta (POSIX/HDFS rename onto an existing
-    // directory returns true) — and any after-the-fact layout check is
-    // itself racy: the winner can observe the loser's nested dir (or a
-    // cleanup can delete the loser's data after the loser validated),
-    // so detection cannot distinguish winner from loser reliably.
-    // Reservation removes the race instead of detecting it.
-    val DeltaRe = raw"delta-(\d{5})".r
-    // a writer that DIED between reservation and publish can't clean up
-    // after itself (the try/finally below covers every in-process
-    // failure, not process death) — without a GC each such death skips a
-    // number and leaks one marker forever. A marker is provably orphaned
-    // when its number has no published delta dir AND it is older than
-    // the grace period (a LIVE writer's staging never outlives the
-    // grace; [[ReservedGraceMs]] is >> any append). fs.delete on a marker
-    // a racy peer also saw is idempotent — worst case both delete it, and
-    // the reservation loop below re-races cleanly on createNewFile.
-    val nowMs = System.currentTimeMillis()
-    fs.listStatus(vd).foreach { st =>
-      st.getPath.getName match {
-        case ResRe(n) =>
-          // a marker whose delta-N is PUBLISHED is provably redundant —
-          // the dir itself occupies the number for every future `next`
-          // computation — so it is collected immediately (a writer that
-          // died between its rename and its finally-delete would
-          // otherwise leak one marker per death forever; deletion is
-          // idempotent against the publisher's own finally-delete). An
-          // unpublished marker is orphaned only once it outlives the
-          // grace period (a LIVE writer's staging never does).
-          val published = fs.exists(new org.apache.hadoop.fs.Path(vd, s"delta-$n"))
-          if (published || nowMs - st.getModificationTime > ReservedGraceMs)
-            fs.delete(st.getPath, false)
-        case _ => ()
-      }
-    }
-    var next = fs.listStatus(vd).flatMap(_.getPath.getName match {
-      case DeltaRe(n) => Some(n.toInt)
-      case ResRe(n) => Some(n.toInt)
-      case _ => None
-    }).foldLeft(0)(math.max) + 1
-    while (!fs.createNewFile(new org.apache.hadoop.fs.Path(vd, f"_delta-$next%05d.reserved")))
-      next += 1 // another writer holds this number — take the next one
-    // from here the marker is OURS: every exit path below (publish,
-    // refused rename, layout anomaly) must release it — once the delta
-    // dir exists it occupies the number for every future `next`
-    // computation, and on failure the number is simply free again
-    try {
-      val tmp = new org.apache.hadoop.fs.Path(vd, s"tmp-${java.util.UUID.randomUUID()}")
+    commit(spark, root, l.version, l.entries) { dir =>
       // cluster by cell before the partitioned write (the build rule):
       // one file per touched cell, not one per (task, cell)
-      v.repartition(col("cell")).write.partitionBy("cell").parquet(tmp.toString)
-      val dst = new org.apache.hadoop.fs.Path(vd, f"delta-$next%05d")
-      if (!fs.rename(tmp, dst)) {
-        fs.delete(tmp, true)
-        sys.error(s"failed to publish delta $next at $vd (rename refused)")
-      }
-      // belt-and-suspenders: with the number reserved, dst cannot have
-      // pre-existed, so the published dir must hold exactly the
-      // partitioned-write layout — anything else is an FS anomaly worth
-      // failing loudly over rather than serving corrupt partitions
-      val children = fs.listStatus(dst).map(_.getPath.getName)
-      require(children.forall(n => n.startsWith("cell=") || n.startsWith("_")),
-        s"delta $next at $vd has non-partition children after publish: " +
-          children.filterNot(n => n.startsWith("cell=") || n.startsWith("_")).mkString(","))
-    } finally fs.delete(new org.apache.hadoop.fs.Path(vd, f"_delta-$next%05d.reserved"), false)
-    next
-  }
-
-  private val ResRe = raw"_delta-(\d{5})\.reserved".r
-
-  /** Age past which an unpublished delta reservation is a dead writer's
-    * orphan: 6 h, far longer than any append stages.
-    */
-  private val ReservedGraceMs = 6L * 3600 * 1000
-
-  /** All vector dirs of a version — the base `vectors/` plus any
-    * published `delta-<n>` appends, in publish order.
-    */
-  private def vectorDirs(spark: SparkSession, root: String, ver: Int): Seq[String] = {
-    val vd = new org.apache.hadoop.fs.Path(versionDir(root, ver))
-    val fs = vd.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val DeltaRe = raw"delta-(\d{5})".r
-    fs.listStatus(vd).map(_.getPath).collect {
-      case p if p.getName == "vectors" => (0, p.toString)
-      case p if DeltaRe.findFirstIn(p.getName).contains(p.getName) =>
-        (p.getName.drop(6).toInt, p.toString)
-    }.sortBy(_._1).map(_._2).toSeq
+      v.repartition(col("cell")).write.partitionBy("cell").parquet(s"$dir/vectors")
+      Seq("vectors")
+    }
   }
 
   /** Deterministic sampled-Lloyd's coarse quantizer — the in-engine
@@ -272,10 +207,9 @@ object IvfIndex {
     // training DAG re-executes exponentially in `iters` (measured 13 s vs
     // 4 s at sf0.1 for iters=2). Values are exact decimals/doubles, so
     // materializing changes nothing but the plan.
-    def pinned(df: DataFrame): DataFrame = {
-      import scala.jdk.CollectionConverters._
+    import scala.jdk.CollectionConverters._
+    def pinned(df: DataFrame): DataFrame =
       spark.createDataFrame(df.collect().toSeq.asJava, df.schema)
-    }
     val ex = corpus.select(col(idCol).as("vec_id"),
         posexplode(col(vecCol)).as(Seq("pos", "val0")))
       .withColumn("val", col("val0").cast("double")).drop("val0")
@@ -286,14 +220,14 @@ object IvfIndex {
           .cast("long") % sampleMod === 0)
     smp.persist() // scanned twice per Lloyd round (assign + re-mean)
     try {
-      // nlist seeds by salted-md5 rank: limit first, then number the tiny
-      // survivor set (the window sorts nlist rows, not the corpus)
-      val seedW = Window.orderBy(col("__h"), col("vec_id"))
-      val seeds = smp.select("vec_id").distinct()
+      // nlist seeds by salted-md5 rank: the <= nlist survivors of the
+      // limit are collected in rank order and numbered on the driver
+      val top = smp.select("vec_id").distinct()
         .withColumn("__h", md5(concat(lit("seed"), col("vec_id").cast("string"))))
-        .orderBy(col("__h"), col("vec_id")).limit(nlist)
-        .withColumn("cell", (row_number().over(seedW) - 1).cast("int"))
-        .select("vec_id", "cell")
+        .orderBy(col("__h"), col("vec_id")).limit(nlist).select("vec_id")
+      val seeds = spark.createDataFrame(
+        top.collect().toSeq.zipWithIndex.map { case (r, i) => Row(r.get(0), i) }.asJava,
+        StructType(Seq(top.schema("vec_id"), StructField("cell", IntegerType, nullable = false))))
       var cent = pinned(smp.join(broadcast(seeds), "vec_id")
         .select(col("cell"), col("pos"), col("val").as("cval")))
       for (_ <- 1 to iters) {
@@ -333,14 +267,19 @@ object IvfIndex {
     *   called with (phase, seconds) after each of the three cost
     *   phases — "train" (sampled Lloyd iterations), "assign" (the
     *   full-corpus cell assignment, materialized into the cache), and
-    *   "publish" (vectors+centroids writes and the version rename) —
+    *   "publish" (vectors+centroids writes and the manifest publish) —
     *   so the monthly-sweep budget can be split without a drift-prone
     *   reimplementation (the s07x scale rows print it).
     */
   def buildTrained(corpus: DataFrame, idCol: String, vecCol: String, root: String,
       nlist: Int, iters: Int = 2, sampleMod: Int = 1,
-      retainVersions: Int = 2,
-      onStage: (String, Double) => Unit = (_, _) => ()): Int = {
+      onStage: (String, Double) => Unit = (_, _) => ()): Int =
+    buildTrained(corpus, idCol, vecCol, root, nlist, iters, sampleMod, onStage,
+      VersionedTable.version(corpus.sparkSession, root))
+
+  private def buildTrained(corpus: DataFrame, idCol: String, vecCol: String, root: String,
+      nlist: Int, iters: Int, sampleMod: Int, onStage: (String, Double) => Unit,
+      base: Int): Int = {
     def staged[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime()
       val r = f
@@ -351,15 +290,13 @@ object IvfIndex {
       .withColumnRenamed("vec_id", idCol))
     // build runs two actions (vectors write + centroids write) — cache
     // the assignment so the final full-corpus pass runs once, not twice.
-    // The count materializes it as its own measured phase (train's
-    // returned plan is lazy: the Lloyd iterations already ran inside
-    // train() via its pinned collects, but the full-corpus assignment
-    // only runs here).
+    // The count runs that pass as its own measured phase (train's Lloyd
+    // rounds already ran in its pinned collects; its result is lazy).
     cells.persist()
     try {
       staged("assign")(cells.count())
       staged("publish")(
-        build(corpus.join(cells, idCol), idCol, vecCol, "cell", root, retainVersions))
+        build(corpus.join(cells, idCol), idCol, vecCol, "cell", root, base))
     } finally cells.unpersist()
   }
 
@@ -370,33 +307,28 @@ object IvfIndex {
     * cells whose means no longer describe them — probe recall decays as
     * the corpus distribution moves) and delta PROLIFERATION (every
     * append adds one more pruned scan per probe). `retrain` settles
-    * both: it reads the newest version's full contents — base
-    * `vectors/` plus every published delta; the index IS the corpus
-    * copy, so no source rescan — re-runs the coarse quantizer over
-    * them, and publishes a fresh `v<N+1>` with one `vectors/` dir and
-    * means that describe the CURRENT corpus. Publish is [[build]]'s
-    * one-rename contract: readers of v<N> are undisturbed, a crash
-    * leaves v<N> intact and current, and `retainVersions` keeps it for
-    * pinned readers. The result is bit-identical to `buildTrained`
+    * both: it re-runs the coarse quantizer over every vector dir of the
+    * newest version N (the index IS the corpus copy, so no source
+    * rescan) and publishes [[build]]'s one-commit manifest as N + 1. An
+    * append published since N fails that publish rather than being
+    * dropped, and N stays readable with all its appends. Returns the
+    * published version. The result is bit-identical to `buildTrained`
     * over the same union corpus (training is deterministic and the
     * stored vectors are byte-exact), which is exactly what the s07
     * oracle replays in SQL.
     */
   def retrain(spark: SparkSession, root: String, nlist: Int = 0, iters: Int = 2,
-      sampleMod: Int = 1, retainVersions: Int = 2,
+      sampleMod: Int = 1,
       onStage: (String, Double) => Unit = (_, _) => ()): Int = {
-    val ver = newestVersion(spark, root)
-    require(ver > 0, s"no published index at $root to retrain")
+    val l = live(spark, root)
     // nlist = 0 (the maintenance default): keep the index's own cell
     // count — read from the published centroid table, so the scheduled
     // sweep needs no per-index training config
     val n = if (nlist > 0) nlist
-      else spark.read.parquet(centroidsPath(root, ver)).count().toInt
-    val corpus = vectorDirs(spark, root, ver)
-      .map(d => spark.read.parquet(d).select("vec_id", "emb"))
+      else spark.read.parquet(l.centroids).count().toInt
+    val corpus = l.vectors.map(d => spark.read.parquet(d).select("vec_id", "emb"))
       .reduce(_ unionByName _)
-    buildTrained(corpus, "vec_id", "emb", root, n, iters, sampleMod,
-      retainVersions, onStage)
+    buildTrained(corpus, "vec_id", "emb", root, n, iters, sampleMod, onStage, l.version)
   }
 
   /** Top-k by cosine for each query vector, probing the `probes` nearest
@@ -406,9 +338,8 @@ object IvfIndex {
     */
   def topK(spark: SparkSession, root: String, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, probes: Int = 2): DataFrame = {
-    val ver = newestVersion(spark, root)
-    require(ver > 0, s"no published index at $root")
-    val cent = spark.read.parquet(centroidsPath(root, ver))
+    val l = live(spark, root)
+    val cent = spark.read.parquet(l.centroids)
     val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_emb"))
       .withColumn("q_ns", Similarity.normSq(col("q_emb")))
     // probe selection: queries × centroids is (small × small)
@@ -422,9 +353,9 @@ object IvfIndex {
     val cells = probed.select("cell").distinct().collect().map(_.get(0))
     // the isin filter prunes whole cell partitions at the file index —
     // IvfIndexSpec pins PartitionFilters on this scan. Each vector dir
-    // (base + appended deltas) is its own pruned scan; the union is
-    // scan-only, no shuffle.
-    val corpus = vectorDirs(spark, root, ver)
+    // the manifest names (base + appends) is its own pruned scan; the
+    // union is scan-only, no shuffle.
+    val corpus = l.vectors
       .map(d => spark.read.parquet(d).filter(col("cell").isin(cells.toIndexedSeq: _*)))
       .reduce(_ unionByName _)
     val scored = broadcast(probed).join(corpus, "cell")

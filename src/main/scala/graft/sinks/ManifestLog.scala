@@ -5,9 +5,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 /** The numbered manifest files of a Delta-style log (Armbrust et al.,
   * VLDB 2020): `manifest-v00000001.txt`, `manifest-v00000002.txt`, ...
   * under one directory, each a complete list of what is live, and the
-  * highest-numbered one wins. [[VersionedTable]] and the corpus stores'
-  * [[graft.dedup.StoreGuard]] both commit through it; each encodes its
-  * own lines.
+  * highest-numbered one wins. [[VersionedTable]] (and the IVF index,
+  * in its line format) and the corpus stores' [[graft.dedup.StoreGuard]]
+  * commit through it; each encodes its own lines.
   */
 private[graft] object ManifestLog {
 

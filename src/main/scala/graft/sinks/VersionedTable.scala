@@ -75,7 +75,7 @@ object VersionedTable {
       s"${escape(c)}=$vs"
     }.mkString("/")
 
-  private def readManifest(fs: FileSystem, root: Path, version: Int): Seq[Entry] =
+  private[graft] def readManifest(fs: FileSystem, root: Path, version: Int): Seq[Entry] =
     ManifestLog.read(fs, root, version).map { line =>
       line.split('\t') match {
         case Array(c, r) => Entry(c, r)
@@ -84,7 +84,7 @@ object VersionedTable {
       }
     }
 
-  private def publish(fs: FileSystem, root: Path, v: Int, entries: Seq[Entry]): Unit =
+  private[graft] def publish(fs: FileSystem, root: Path, v: Int, entries: Seq[Entry]): Unit =
     ManifestLog.publish(fs, root, v, entries.map(e => s"${e.commit}\t${e.relPath}"))
 
   /** List the live leaf partition directories of a freshly written commit

@@ -32,7 +32,7 @@ class IvfIndexSpec extends SparkSpec {
     assert(plan.contains("PartitionFilters: [cell"), plan.linesIterator
       .filter(_.contains("PartitionFilters")).mkString("\n"))
 
-    // rebuild publishes a fresh immutable version dir — in-flight readers
+    // rebuild publishes a fresh commit as version 2 — in-flight readers
     // of v1 are undisturbed, and the new reader answers identically
     assert(IvfIndex.build(emb, "vec_id", "embedding", "label", root) == 2)
     assert(IvfIndex.topK(spark, root, emb.filter(col("vec_id") < 8),
@@ -108,13 +108,14 @@ class IvfIndexSpec extends SparkSpec {
     // build writes are cell-clustered: one data file per cell (plus one
     // centroids file), NOT one per (writer-task, cell) — the small-files
     // regression guard for the partitioned layout
-    val v2 = new java.io.File(s"$root/v00002/vectors")
-    val dataFiles = v2.listFiles().filter(_.isDirectory).map(d =>
-      d.getName -> d.listFiles().count(f => f.getName.endsWith(".parquet")))
+    val live = IvfIndex.live(spark, root)
+    assert(live.version == 2 && live.vectors.size == 1, live)
+    val dataFiles = new java.io.File(live.vectors.head).listFiles().filter(_.isDirectory)
+      .map(d => d.getName -> d.listFiles().count(f => f.getName.endsWith(".parquet")))
     assert(dataFiles.nonEmpty && dataFiles.forall(_._2 == 1),
       s"per-cell file counts: ${dataFiles.mkString(", ")}")
-    val centFiles = new java.io.File(s"$root/v00002/centroids")
-      .listFiles().count(f => f.getName.endsWith(".parquet"))
+    val centFiles = new java.io.File(live.centroids).listFiles()
+      .count(f => f.getName.endsWith(".parquet"))
     assert(centFiles == 1, s"$centFiles centroid files")
   }
 
@@ -127,25 +128,29 @@ class IvfIndexSpec extends SparkSpec {
     val batch = emb.filter(col("vec_id") % 5 === 0)
     IvfIndex.buildTrained(base, "vec_id", "embedding", root,
       nlist = 8, iters = 2, sampleMod = 2)
-    def baseFiles(): Map[String, Long] = {
+    val v1 = IvfIndex.live(spark, root)
+    def baseFiles(): Map[String, (Long, Seq[Byte])] = {
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(s"$root/v00001/vectors"))
+      walk(new java.io.File(v1.vectors.head))
         .filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getPath -> f.lastModified()).toMap
+        .map(f => f.getPath -> (f.lastModified(),
+          java.nio.file.Files.readAllBytes(f.toPath).toSeq)).toMap
     }
     val before = baseFiles()
-    assert(IvfIndex.append(batch, "vec_id", "embedding", root) == 1)
+    assert(IvfIndex.append(batch, "vec_id", "embedding", root) == 2)
     // append is purely additive: every pre-existing base file survives
-    // byte-identical (same path, same mtime) — dropping the delta dir
-    // would restore the prior index exactly
+    // byte-identical (same path, same mtime, same bytes), and the new
+    // manifest is v1's lines plus the delta's vectors dir
     assert(baseFiles() == before, "append touched base vector files")
-    val delta = new java.io.File(s"$root/v00001/delta-00001")
+    val v2 = IvfIndex.live(spark, root)
+    assert(v2.entries.init == v1.entries && v2.vectors.init == v1.vectors, v2)
+    val delta = new java.io.File(v2.vectors.last)
     assert(delta.isDirectory && delta.listFiles().exists(_.getName.startsWith("cell=")))
 
     // the delta's cell assignment is the argmin over the PUBLISHED
     // centroids (cns − 2·dot, cell tie-break), computed independently
-    val cent = spark.read.parquet(s"$root/v00001/centroids")
+    val cent = spark.read.parquet(v1.centroids)
       .select(col("cell"), posexplode(col("cent")).as(Seq("pos", "cval")))
     val ex = batch.select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "v0")))
       .withColumn("v", col("v0").cast("double"))
@@ -158,7 +163,7 @@ class IvfIndexSpec extends SparkSpec {
           .orderBy((col("cns") - lit(2) * col("dot")).asc, col("cell"))))
       .filter(col("rn") === 1).select("vec_id", "cell")
       .as[(Long, Int)].collect().toSet
-    val stored = spark.read.parquet(s"$root/v00001/delta-00001")
+    val stored = spark.read.parquet(delta.getPath)
       .select("vec_id", "cell").as[(Long, Int)].collect().toSet
     assert(stored == want, "delta cells are not the frozen-centroid argmin")
 
@@ -179,8 +184,10 @@ class IvfIndexSpec extends SparkSpec {
 
     // an empty batch publishes nothing (a file-less delta dir would
     // break the probe's schema inference) and the probe still answers
+    val commitsBefore = commitDirs(root)
     assert(IvfIndex.append(batch.limit(0), "vec_id", "embedding", root) == 0)
-    assert(!new java.io.File(s"$root/v00001/delta-00002").exists())
+    assert(IvfIndex.live(spark, root) == v2, "an empty append published a version")
+    assert(commitDirs(root) == commitsBefore, "an empty append left a commit dir")
     assert(IvfIndex.topK(spark, root, emb.filter(col("vec_id") < 8),
       "vec_id", "embedding", k = 5, probes = 2).count() > 0)
   }
@@ -195,15 +202,12 @@ class IvfIndexSpec extends SparkSpec {
     IvfIndex.buildTrained(base, "vec_id", "embedding", root,
       nlist = 8, iters = 2, sampleMod = 2)
     IvfIndex.append(batch, "vec_id", "embedding", root)
-    // retrain publishes v2 with ONE vectors dir (the delta debt settled)
-    assert(IvfIndex.retrain(spark, root, nlist = 8, iters = 2, sampleMod = 2) == 2)
-    val v2 = new java.io.File(s"$root/v00002")
-    assert(v2.isDirectory)
-    val children = v2.listFiles().map(_.getName).toSet
-    assert(children.contains("vectors") && children.contains("centroids"), children)
-    assert(!children.exists(_.startsWith("delta-")), children)
-    // the previous version survives for pinned readers (retainVersions=2)
-    assert(new java.io.File(s"$root/v00001").isDirectory)
+    // retrain publishes v3 as ONE commit with one vectors dir (the
+    // delta debt settled) and its centroids
+    assert(IvfIndex.retrain(spark, root, nlist = 8, iters = 2, sampleMod = 2) == 3)
+    val v3 = IvfIndex.live(spark, root)
+    assert(v3.entries.map(_.commit).distinct.size == 1 &&
+      v3.entries.map(_.relPath).sorted == Seq("centroids", "vectors"), v3)
     // retrain == buildTrained over the union corpus, probe-for-probe:
     // the index round-trips its own contents, so the retrained
     // centroids are exactly the union-trained ones (the s07 oracle
@@ -218,8 +222,7 @@ class IvfIndexSpec extends SparkSpec {
       "retrained index diverged from a fresh build over the same corpus")
     // drifted batch vectors now live in re-derived cells: the retrained
     // centroid table reflects the union corpus (8 cells, full coverage)
-    val cells = spark.read.parquet(s"$root/v00002/vectors")
-      .select("vec_id").count()
+    val cells = spark.read.parquet(v3.vectors: _*).select("vec_id").count()
     assert(cells == base.count() + batch.count(), "retrain lost vectors")
     // no index -> loud failure
     val e = intercept[IllegalArgumentException](
@@ -227,38 +230,79 @@ class IvfIndexSpec extends SparkSpec {
     assert(e.getMessage.contains("no published index"), e.getMessage)
   }
 
-  test("append reservations: orphans past the grace period are GC'd, live ones " +
-      "are respected, a publish releases its own marker") {
-    val root = java.nio.file.Files.createTempDirectory("graft-ivf-gc").toString + "/idx"
-    val corpus = Seq((1L, Array(1.0f, 0.0f), 0), (2L, Array(0.0f, 1.0f), 1))
-      .toDF("vec_id", "embedding", "cell")
+  /** A 2-d corpus of `n` vectors spread over cells 0 and 1. */
+  private def tiny(n: Int, from: Long = 0L) = (0 until n).map { i =>
+    val a = i * math.Pi / 2 / n
+    (from + i, Array(math.cos(a).toFloat, math.sin(a).toFloat), if (i < n / 2) 0 else 1)
+  }.toDF("vec_id", "embedding", "cell")
+
+  private def commitDirs(root: String): Set[String] =
+    Option(new java.io.File(s"$root/commits").list()).toSet.flatten
+
+  test("dead writer: an unpublished commit is never read, and the next build deletes it") {
+    val root = java.nio.file.Files.createTempDirectory("graft-ivf-dead").toString + "/idx"
+    val corpus = tiny(8)
     IvfIndex.build(corpus, "vec_id", "embedding", "cell", root)
-    val vd = new java.io.File(s"$root/v00001")
-    // a DEAD writer's leftover: a reserved number with no delta dir,
-    // older than the grace period — must be GC'd by the next append
-    val orphan = new java.io.File(vd, "_delta-00007.reserved")
-    assert(orphan.createNewFile())
-    assert(orphan.setLastModified(System.currentTimeMillis() - 10L * 3600 * 1000))
-    // a FRESH marker (a live concurrent writer mid-staging) must survive
-    // the GC and keep its number reserved
-    val live = new java.io.File(vd, "_delta-00009.reserved")
-    assert(live.createNewFile())
-    // a writer that died between its rename and its finally-delete: the
-    // delta IS published, so its fresh marker is provably redundant and
-    // must be GC'd immediately (no grace wait) — the dir itself occupies
-    // the number forever, so the marker would otherwise leak per death
-    val published = new java.io.File(vd, "_delta-00008.reserved")
-    assert(published.createNewFile())
-    assert(new java.io.File(vd, "delta-00008").mkdir())
-    val batch = Seq((3L, Array(1.0f, 0.1f))).toDF("vec_id", "embedding")
-    val n = IvfIndex.append(batch, "vec_id", "embedding", root)
-    assert(!orphan.exists(), "orphaned reservation was not GC'd")
-    assert(!published.exists(), "published delta's leaked marker was not GC'd")
-    assert(live.exists(), "a live (fresh) reservation was GC'd")
-    assert(n == 10, s"append took number $n, expected 10 (past the live reservation)")
-    assert(new java.io.File(vd, "delta-00010").isDirectory)
-    assert(!new java.io.File(vd, "_delta-00010.reserved").exists(),
-      "publish did not release its own reservation marker")
-    live.delete()
+    // what a writer that died before its publish leaves: a commit dir no
+    // manifest names, holding a copy of vector 1 under id 99 — for query
+    // 1 it would rank first with cosine 1
+    val dead = s"$root/commits/c-dead"
+    spark.read.parquet(IvfIndex.live(spark, root).vectors: _*)
+      .filter(col("vec_id") === 1L).withColumn("vec_id", lit(99L))
+      .write.partitionBy("cell").parquet(s"$dead/vectors")
+    def nearest() = IvfIndex.topK(spark, root, corpus.filter(col("vec_id") === 1L),
+      "vec_id", "embedding", k = 3, probes = 2).select("n_id").as[Long].collect().toSet
+    assert(!nearest().contains(99L))
+    IvfIndex.append(tiny(2, from = 50L).drop("cell"), "vec_id", "embedding", root)
+    assert(!nearest().contains(99L), "an append must not publish a dead writer's commit")
+    assert(new java.io.File(dead).isDirectory)
+    assert(IvfIndex.build(corpus, "vec_id", "embedding", "cell", root) == 3)
+    assert(!new java.io.File(dead).exists(), "the next build must delete the dead commit")
+    assert(!nearest().contains(99L))
+  }
+
+  test("race: an append published while a retrain trains fails the retrain; " +
+      "the appended vectors stay served") {
+    val root = java.nio.file.Files.createTempDirectory("graft-ivf-race").toString + "/idx"
+    IvfIndex.build(tiny(8), "vec_id", "embedding", "cell", root)
+    val batch = tiny(4, from = 100L).drop("cell")
+    // the daily append lands after the monthly retrain read the index
+    val e = intercept[RuntimeException](IvfIndex.retrain(spark, root, iters = 1,
+      onStage = (phase, _) =>
+        if (phase == "train") IvfIndex.append(batch, "vec_id", "embedding", root)))
+    assert(e.getMessage.contains("concurrent commit"), e.getMessage)
+    val served = IvfIndex.topK(spark, root, batch, "vec_id", "embedding", k = 20, probes = 2)
+      .select("n_id").as[Long].collect().toSet
+    assert((100L to 103L).forall(served.contains), s"appended ids lost: $served")
+    // the loser deleted its commit: only the build's and the append's remain
+    assert(commitDirs(root).size == 2, commitDirs(root))
+  }
+
+  test("retention: after a retrain the previous version and all its files stay " +
+      "readable; older versions are gone") {
+    import graft.sinks.VersionedTable
+    val root = java.nio.file.Files.createTempDirectory("graft-ivf-keep").toString + "/idx"
+    IvfIndex.build(tiny(8), "vec_id", "embedding", "cell", root)
+    val first = commitDirs(root)
+    IvfIndex.build(tiny(8), "vec_id", "embedding", "cell", root)
+    assert(IvfIndex.append(tiny(4, from = 100L).drop("cell"), "vec_id", "embedding", root) == 3)
+    val v3 = IvfIndex.live(spark, root)
+    assert(IvfIndex.retrain(spark, root, iters = 1) == 4)
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val manifests = new java.io.File(root).list().filter(_.startsWith("manifest-")).sorted
+    assert(manifests.toSeq == Seq("manifest-v00000003.txt", "manifest-v00000004.txt"),
+      manifests.toSeq)
+    // version 3 (base + delta) reads whole from its own manifest
+    val kept = IvfIndex.Live(root, 3,
+      VersionedTable.readManifest(fs, new org.apache.hadoop.fs.Path(root), 3))
+    assert(kept == v3)
+    assert(kept.vectors.map(spark.read.parquet(_).count()).sum == 12)
+    assert(spark.read.parquet(kept.centroids).count() == 2)
+    // the first build's commit is gone; v3's and v4's are all that remain
+    val live = (kept.entries ++ IvfIndex.live(spark, root).entries)
+      .map(_.commit.stripPrefix("commits/")).toSet
+    assert(first.forall(c => !commitDirs(root).contains(c)), first)
+    assert(commitDirs(root) == live, commitDirs(root))
   }
 }

@@ -916,7 +916,7 @@ class OpsSpec extends SparkSpec {
         "healthy store was starved by the locked one")
       // the healthy index was retrained in the same sweep (nlist derived
       // from its own centroid table), despite the bogus root before it
-      assert(new java.io.File(s"$ivfRoot/v00002").isDirectory,
+      assert(IvfIndex.live(spark, ivfRoot).version == 2,
         "healthy ivf index was starved by the bogus root")
     } finally Seq(locked, healthy).foreach(SignatureStore.drop(spark, _))
   }
@@ -959,21 +959,23 @@ class OpsSpec extends SparkSpec {
       "--ivf-build", root, "--nlist", "4", "--iters", "1", "--sample-mod", "2",
       "--batch-mod", "2", "--batch-rem", "0")), sfDir)
     assert(l1 == Seq(s"[maintain-ivf] $root built and published -> v1"), l1)
-    val v1 = spark.read.parquet(s"$root/v00001/vectors")
+    import graft.similarity.IvfIndex
+    val v1 = spark.read.parquet(IvfIndex.live(spark, root).vectors: _*)
     assert(v1.count() == 250 && v1.filter(col("vec_id") % 2 =!= 0).count() == 0,
       "the --batch-mod/--batch-rem slice must scope the build")
     // daily cadence: append the odd half as a frozen-centroid delta
     val l2 = Runner.ivfOps(spark, Runner.parseOpts(Array(
       "--ivf-append", root, "--batch-mod", "2", "--batch-rem", "1")), sfDir)
-    assert(l2 == Seq(s"[maintain-ivf] $root appended frozen-centroid delta 1"), l2)
-    assert(spark.read.parquet(s"$root/v00001/delta-00001").count() == 250)
+    assert(l2 == Seq(s"[maintain-ivf] $root appended frozen-centroid delta -> v2"), l2)
+    assert(spark.read.parquet(IvfIndex.live(spark, root).vectors.last).count() == 250)
     // monthly slot: retrain folds the delta and republishes (default
     // --nlist 0 keeps the index's own cell count)
     val l3 = Runner.ivfOps(spark, Runner.parseOpts(Array(
       "--ivf-retrain", root)), sfDir)
-    assert(l3.head.contains(s"$root retrained -> v2"), l3)
-    val v2 = spark.read.parquet(s"$root/v00002/vectors")
-    assert(v2.count() == 500, "retrain must fold base + delta into v2")
+    assert(l3.head.contains(s"$root retrained -> v3"), l3)
+    val v3 = IvfIndex.live(spark, root).vectors
+    assert(v3.size == 1 && spark.read.parquet(v3: _*).count() == 500,
+      "retrain must fold base + delta into one vectors dir")
     // a half-specified day slice must refuse loudly, not ingest the
     // whole corpus as one 'day' (a wrong-scope store mutation)
     val err = intercept[RuntimeException] {

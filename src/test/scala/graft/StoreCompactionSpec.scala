@@ -327,4 +327,47 @@ class StoreCompactionSpec extends SparkSpec {
       assert(flags == Map(1L -> false), flags)
     } finally EmbeddingStore.drop(spark, name)
   }
+
+  test("a publish that replaces a table prunes the older manifests; the newest " +
+      "snapshot still rolls back, a snapshot across the prune refuses") {
+    def vecs(ids: Seq[Int]) = ids.map { i =>
+      val r = new scala.util.Random(i)
+      (i.toLong, Array.fill(8)(r.nextGaussian().toFloat))
+    }.toDF("vec_id", "embedding")
+    def manifests(name: String): Seq[String] =
+      fs.listStatus(EmbeddingStore.guard(name).manifestDir(spark)).map(_.getPath.getName)
+        .filter(_.startsWith("manifest-")).toSeq.sorted
+    val name = "graft_manifest_prune_spec"
+    EmbeddingStore.drop(spark, name)
+    EmbeddingStore.build(spark, vecs(0 until 40), name)
+    try {
+      EmbeddingStore.ingest(spark, vecs(100 until 104), name)
+      EmbeddingStore.ingest(spark, vecs(200 until 204), name)
+      assert(manifests(name).size == 3, manifests(name))
+      EmbeddingStore.compact(spark, name)
+      assert(manifests(name) == Seq("manifest-v00000004.txt"), manifests(name))
+      val snap = EmbeddingStore.snapshot(spark, name)
+      val rows0 = rows(EmbeddingStore, name)
+      EmbeddingStore.ingest(spark, vecs(300 until 304), name)
+      assert(rows(EmbeddingStore, name) != rows0)
+      EmbeddingStore.rollback(spark, name, snap)
+      assert(rows(EmbeddingStore, name) == rows0)
+      assert(EmbeddingStore.snapshot(spark, name).commits == snap.commits)
+    } finally EmbeddingStore.drop(spark, name)
+
+    // an empty store's snapshot names only its meta commit, which a
+    // compaction keeps — the versions after it are what went
+    val empty = "graft_manifest_prune_empty_spec"
+    EmbeddingStore.drop(spark, empty)
+    EmbeddingStore.build(spark, vecs(Nil), empty)
+    try {
+      val snap = EmbeddingStore.snapshot(spark, empty)
+      EmbeddingStore.ingest(spark, vecs(0 until 4), empty)
+      EmbeddingStore.ingest(spark, vecs(10 until 14), empty)
+      EmbeddingStore.compact(spark, empty)
+      assert(manifests(empty).size == 1, manifests(empty))
+      val e = intercept[RuntimeException](EmbeddingStore.rollback(spark, empty, snap))
+      assert(e.getMessage.contains("pruned by a later build, compact or reband"), e.getMessage)
+    } finally EmbeddingStore.drop(spark, empty)
+  }
 }
