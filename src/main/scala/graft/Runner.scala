@@ -16,7 +16,6 @@ import org.apache.spark.sql.SparkSession
   *   runMain graft.Runner --corpus-init mystore --sf ...
   *   runMain graft.Runner --corpus-ingest mystore --batch-mod 7 --batch-rem 0 \
   *     [--alert-max-bucket N --alert-cap-pct P --alert-consecutive K] --sf ...
-  *   runMain graft.Runner --corpus-recover mystore --sf ...   (dead writer cleanup)
   *   runMain graft.Runner --corpus-retune mystore --rows 3 --bands 16 \
   *     [--corpus-path /data/corpus] --sf ...   (hot-bucket remediation)
   *   runMain graft.Runner --schedule --store mystore --auto-remediate --sf ...
@@ -142,8 +141,7 @@ object Runner {
     "alert-cap-pct", "alert-consecutive", "alert-max-bucket", "auto-remediate", "bands",
     "batch-mod", "batch-rem", "bpe-merges", "bucket-cap", "checkpoint", "confirm-delete",
     "confirm-fy", "corpus-ingest", "corpus-ingest-emb", "corpus-init", "corpus-init-emb",
-    "corpus-path", "corpus-recover", "corpus-recover-emb", "corpus-retune", "corpus-stream",
-    "corpus-stream-emb", "dry-run", "fire-now", "flags-root", "fp", "full-refresh", "fy",
+    "corpus-path", "corpus-retune", "corpus-stream", "corpus-stream-emb", "dry-run", "fire-now", "flags-root", "fp", "full-refresh", "fy",
     "fy-from", "fy-to", "inject-crash", "iters", "ivf-append", "ivf-build", "ivf-index",
     "ivf-retrain", "k", "length", "log-file", "maintain", "maintain-store",
     "maintain-store-emb", "max-df", "max-files", "max-fires", "nlist", "out", "pipeline",
@@ -233,20 +231,6 @@ object Runner {
       return
     }
 
-    if (opts.contains("corpus-recover") || opts.contains("corpus-recover-emb")) {
-      // crashed-writer recovery: delete the commits a dead writer left
-      // unpublished and release its lock (a live writer's lock fails)
-      graft.ops.Orchestrator.storesOf(opts.get("corpus-recover").toSeq,
-          opts.get("corpus-recover-emb").toSeq).foreach { case (st, store) =>
-        st.ensureRegistered(spark, store)
-        println(if (st.recover(spark, store))
-          s"[corpus] $store: unpublished commits deleted, dead lock released"
-        else s"[corpus] $store: nothing to recover — store is clean")
-      }
-      spark.stop()
-      return
-    }
-
     if (opts.contains("corpus-stream") || opts.contains("corpus-stream-emb") ||
         opts.contains("stage-docs") || opts.contains("stage-emb")) {
       // the CONTINUOUS corpus-ingest cadence as a CLI surface — one
@@ -260,10 +244,10 @@ object Runner {
       // the source dir (the harness stand-in for files arriving from an
       // upstream feed). --inject-crash after-flags|after-marker
       // hard-halts the JVM at that point of the NEXT batch — the
-      // operator recovery DRILL: after-flags leaves the lock and flags
-      // of an unpublished batch, after-marker a published batch whose
-      // lock was never released; the following run must replay or
-      // skip, and converge.
+      // operator recovery DRILL: after-flags leaves the flags of an
+      // unpublished batch, after-marker a published batch whose writer
+      // never synced or swept; the following run must replay or skip,
+      // and converge.
       def need(k: String): String =
         opts.getOrElse(k, sys.error(s"--corpus-stream needs --$k <dir>"))
       def crashHook(phase: String): () => Unit =
@@ -323,8 +307,9 @@ object Runner {
       // store maintenance: compact a signature/embedding store's
       // bucketed tables back to ~`buckets` files each (a year of daily
       // ingests is ~365 files/bucket with no remediation — the store
-      // analog of --maintain's versioned-root compaction). Runs under
-      // the store lock, so it fails fast against a live ingest.
+      // analog of --maintain's versioned-root compaction). It publishes
+      // on top of the version it read, so it fails against an ingest
+      // that published first.
       graft.ops.Orchestrator.storesOf(opts.get("maintain-store").toSeq,
           opts.get("maintain-store-emb").toSeq).foreach { case (st, store) =>
         st.ensureRegistered(spark, store)

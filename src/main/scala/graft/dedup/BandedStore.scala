@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** The skeleton of an incremental banded corpus store: a one-row meta
   * table plus bucketed data tables, one of them the `band_key`-bucketed
-  * LSH candidate index, mutated by a single writer under [[StoreGuard]].
+  * LSH candidate index, whose writers commit through [[StoreGuard]].
   * [[SignatureStore]] (MinHash bands, exact-Jaccard verify) and
   * [[graft.similarity.EmbeddingStore]] (sign-bit bands, exact-cosine
   * verify) extend it; everything here is the same for both, and what
@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions._
   * Lifecycle: `build` once over history → `ingest` per batch →
   * [[compact]] (or a rebuild) in the maintenance window. Every table is
   * partitioned by `commit` and keeps its bucket spec; each mutation
-  * writes fresh commits and publishes one manifest ([[StoreGuard]]), so
-  * an unpublished commit is never read.
+  * writes fresh commits and publishes one manifest ([[StoreGuard]]) as
+  * the version it read + 1, so an unpublished commit is never read and
+  * of two racing writers the later publish fails.
   *
   * The ingest contract both stores keep (the tail is
   * [[commitIngest]]): one flag row per batch item, (id, is_dup,
@@ -84,34 +85,16 @@ trait BandedStore {
   protected def bucketsOf(spark: SparkSession, name: String): Int =
     spark.table(metaTable(name)).head().getAs[Int]("buckets")
 
-  /** Crash recovery — see [[StoreGuard.recover]]. */
-  def recover(spark: SparkSession, name: String): Boolean =
-    guard(name).recover(spark)
-
-  /** The streaming replay's recovery; the same verb as [[recover]]. */
-  def recoverArbitrated(spark: SparkSession, name: String): Boolean =
-    recover(spark, name)
-
   /** Whether the streaming batch `tag` (flag root, batch id) is committed
     * — see [[StoreGuard.committed]].
     */
   def committed(spark: SparkSession, name: String, tag: (String, Long)): Boolean =
     guard(name).committed(spark, tag)
 
-  /** Release a crashed writer's lock — see [[StoreGuard.unlock]]. */
-  def unlock(spark: SparkSession, name: String): Unit =
-    guard(name).unlock(spark)
-
-  /** Discharge the store's lock only when its stamped owner is
-    * verifiably dead — see [[StoreGuard.dischargeDeadLock]].
+  /** Runs `f` and takes no lock: every mutation publishes optimistically
+    * ([[StoreGuard]]). perfbench's traced ingest still calls it.
     */
-  def dischargeDeadLock(spark: SparkSession, name: String,
-      strict: Boolean): Boolean =
-    guard(name).dischargeDeadLock(spark, strict)
-
-  /** Run `f` as the store's single writer — see [[StoreGuard.locked]]. */
-  def locked[A](spark: SparkSession, name: String)(f: => A): A =
-    guard(name).locked(spark)(f)
+  def locked[A](spark: SparkSession, name: String)(f: => A): A = f
 
   /** The published manifest version and its live commits. */
   def snapshot(spark: SparkSession, name: String): BandedStore.Snapshot =
@@ -121,13 +104,13 @@ trait BandedStore {
   def rollback(spark: SparkSession, name: String, snap: BandedStore.Snapshot): Unit =
     guard(name).rollback(spark, snap)
 
-  /** Durable audit-alert breach streak — see [[StoreGuard.readStreak]]. */
+  /** Durable audit-alert breach streak — see [[StoreGuard.streak]]. */
   def readAuditStreak(spark: SparkSession, name: String): Int =
-    guard(name).readStreak(spark)
+    guard(name).streak(spark)
   def writeAuditStreak(spark: SparkSession, name: String, n: Int): Unit =
-    guard(name).writeStreak(spark, n)
+    guard(name).updateStreak(spark, _ => n)
   def clearAuditStreak(spark: SparkSession, name: String): Unit =
-    guard(name).clearStreak(spark)
+    writeAuditStreak(spark, name, 0)
 
   /** Register the store's tables in THIS session's catalog and make
     * their partitions the newest manifest's commits. The catalog is
@@ -137,7 +120,8 @@ trait BandedStore {
     * declared from [[layout]] with the bucket count of the meta row, so
     * re-registered reads keep their shuffle-free bucketed joins. The
     * partition sync runs on every call, so a long-running process sees
-    * what another JVM published.
+    * what another JVM published, and its next ingest publishes on top of
+    * the version synced.
     */
   def ensureRegistered(spark: SparkSession, name: String): Unit = {
     val g = guard(name)
@@ -170,12 +154,14 @@ trait BandedStore {
     guard(name).sync(spark)
   }
 
-  /** One mutation of store `name` — see [[StoreGuard.mutate]]. */
-  protected def mutate[A](spark: SparkSession, name: String,
+  /** One mutation of store `name` from version `base` — see
+    * [[StoreGuard.mutate]].
+    */
+  protected def mutate[A](spark: SparkSession, name: String, base: Int,
       batchTag: Option[(String, Long)] = None, onCommitted: () => Unit = () => ())
       (write: StoreGuard.Commit => A): A = {
     val g = guard(name)
-    g.mutate(spark, batchTag, onCommitted,
+    g.mutate(spark, base, batchTag, onCommitted,
       () => if (g.version(spark) > 0) ensureRegistered(spark, name))(write)
   }
 
@@ -190,7 +176,7 @@ trait BandedStore {
     * a store pinned by an older engine.
     */
   private[graft] def pinMeta(spark: SparkSession, name: String, row: DataFrame): Unit =
-    mutate(spark, name) { c =>
+    mutate(spark, name, guard(name).version(spark)) { c =>
       c.replace(metaTable(name))
       writeMeta(spark, name, row, c.id)
     }
@@ -198,15 +184,17 @@ trait BandedStore {
   /** Maintenance compaction: rewrite each data table holding more than
     * one commit into one commit of ~`buckets` files WITHOUT changing
     * content (a year of daily ingests is ~365 files per bucket
-    * otherwise), all in one publish. Pre-compaction snapshots then
-    * refuse to roll back: their commits are gone.
+    * otherwise), all in one publish as the version after the snapshot it
+    * rewrites. Pre-compaction snapshots then refuse to roll back: their
+    * commits are gone.
     */
-  def compact(spark: SparkSession, name: String): Unit = locked(spark, name) {
-    val live = snapshot(spark, name).commits
+  def compact(spark: SparkSession, name: String): Unit = {
+    val snap = snapshot(spark, name)
+    val live = snap.commits
     val todo = layout.filter { case (suffix, _, _) => live.getOrElse(name + suffix, Nil).size > 1 }
     if (todo.nonEmpty) {
       val buckets = bucketsOf(spark, name)
-      mutate(spark, name) { c =>
+      mutate(spark, name, snap.version) { c =>
         todo.foreach { case (suffix, bucketCol, _) =>
           val t = name + suffix
           c.replace(t)
@@ -247,7 +235,7 @@ trait BandedStore {
     BandedStore.builtSnaps.getOrElseUpdate(name, snapshot(spark, name))
   }
 
-  /** Drop the store's tables, manifests and streak (idempotent). */
+  /** Drop the store's tables and manifests (idempotent). */
   def drop(spark: SparkSession, name: String): Unit = guard(name).drop(spark)
 
   /** The ingest tail from the two dedup steps to the commit: assemble
@@ -256,10 +244,11 @@ trait BandedStore {
     * `onFlags`, then append the keepers as one commit —
     * `keepers(keepIds)` lists (frame, table, bucket column), written
     * concurrently through [[Overlap.overlappedAll]] — published with
-    * `batchTag`, and call `onCommitted`. `onStage` times "flags" and
+    * `batchTag` as the version after `base`, the one the ingest's store
+    * joins read, and call `onCommitted`. `onStage` times "flags" and
     * "appends".
     */
-  protected def commitIngest(spark: SparkSession, name: String, buckets: Int,
+  protected def commitIngest(spark: SparkSession, name: String, base: Int, buckets: Int,
       ids: DataFrame, histDup: DataFrame, comp: DataFrame,
       onStage: (String, Double) => Unit, onFlags: DataFrame => Unit,
       onCommitted: () => Unit, batchTag: Option[(String, Long)])
@@ -277,7 +266,7 @@ trait BandedStore {
     }
     onFlags(flags) // before any append
     val keepIds = flags.filter(!col("is_dup")).select(idCol)
-    mutate(spark, name, batchTag, onCommitted) { c =>
+    mutate(spark, name, base, batchTag, onCommitted) { c =>
       BandedStore.staged(onStage, "appends") {
         Overlap.overlappedAll(keepers(keepIds).map { case (df, t, bucketCol) =>
           () => BandedStore.writeBucketed(df, t, bucketCol, buckets, c.id)

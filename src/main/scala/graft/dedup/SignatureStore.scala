@@ -32,7 +32,7 @@ import Overlap.{overlapped, overlapped2}
   * standard incremental approximation, replayed exactly by the d07
   * oracle.
   *
-  * Lifecycle and writer safety are [[BandedStore]]'s; the periodic
+  * Lifecycle and the commit protocol are [[BandedStore]]'s; the periodic
   * [[build]] rebuild in the maintenance window also re-applies the df
   * cap corpus-wide.
   */
@@ -93,13 +93,14 @@ object SignatureStore extends BandedStore {
     * not re-shingle the corpus.
     */
   def build(spark: SparkSession, history: DataFrame, name: String,
-      spec: Spec = Spec(), buckets: Int = 16): Unit = locked(spark, name) {
-    // locked like every mutator: a rebuild never interleaves with a live
-    // ingest; it replaces every table's commits in one publish
+      spec: Spec = Spec(), buckets: Int = 16): Unit = {
     import spark.implicits._
     require(spec.rows >= 1 && spec.bands >= 1, s"invalid banding geometry $spec")
+    // one publish replaces every table's commits, as the version after the
+    // one found here: a racing ingest or rebuild makes one of them fail
+    val from = guard(name).version(spark)
     declare(spark, name, Some(buckets))
-    mutate(spark, name) { c =>
+    mutate(spark, name, from) { c =>
       allTables(name).foreach(c.replace)
       BandedStore.writeBucketed(
         Dedup.minhashBands(history, spec.k, spec.bands, spec.rows)
@@ -136,18 +137,16 @@ object SignatureStore extends BandedStore {
     * the same monthly slot as the corpus-wide df-cap refresh — O(2×
     * corpus), the floor for any re-signing maintenance. The default
     * geometry — and with it every d-query oracle — is untouched.
+    *
+    * The retune IS the remediation the AUDIT ALERT names, whichever path
+    * invoked it (manual --corpus-retune or the sweep's opt-in arm), so
+    * the build's publish resets the breach streak with the new geometry:
+    * otherwise the next single breach would alert claiming "N
+    * consecutive" and an opted-in sweep would rebuild again.
     */
   def retune(spark: SparkSession, history: DataFrame, name: String,
-      spec: Spec, buckets: Int = 16): Unit = locked(spark, name) {
+      spec: Spec, buckets: Int = 16): Unit =
     build(spark, history, name, spec, buckets)
-    // the retune IS the remediation the AUDIT ALERT names, whichever
-    // path invoked it (manual --corpus-retune or the sweep's opt-in
-    // arm): the escalation condition was acted on, so the persisted
-    // breach streak resets here — otherwise the next single breach
-    // under the NEW geometry would alert claiming "N consecutive"
-    // and an opted-in sweep would redundantly rebuild again
-    guard(name).clearStreak(spark)
-  }
 
   /** One full cycle of the daily cadence ([[BandedStore]] has the dup
     * resolution order and the hook contract): flag the batch's
@@ -176,9 +175,11 @@ object SignatureStore extends BandedStore {
       onFlags: DataFrame => Unit = _ => (),
       onCommitted: () => Unit = () => (),
       onAudit: IngestAudit => Unit = _ => (),
-      batchTag: Option[(String, Long)] = None): DataFrame =
-    locked(spark, name) { // single-writer: a concurrent ingest fails fast
+      batchTag: Option[(String, Long)] = None): DataFrame = {
     def staged[A](label: String)(f: => A): A = BandedStore.staged(onStage, label)(f)
+    // the version the store joins below read; a publish on top of it by
+    // another writer in the meantime makes this ingest's publish fail
+    val from = guard(name).registered(spark)
     val meta = spark.table(metaTable(name)).head()
     val spec = specOf(meta)
     val buckets = meta.getAs[Int]("buckets")
@@ -251,7 +252,7 @@ object SignatureStore extends BandedStore {
           Dedup.indexFromShingles(ssh, spec.maxDf), threshold),
         survIds)
     }
-    commitIngest(spark, name, buckets, ids, histDup, comp,
+    commitIngest(spark, name, from, buckets, ids, histDup, comp,
         onStage, onFlags, onCommitted, batchTag) { keepIds =>
       // the keepers' index feeds two appends — pinned once
       val index = Dedup.indexFromShingles(bsh.join(keepIds, "doc_id"), spec.maxDf)
@@ -262,7 +263,7 @@ object SignatureStore extends BandedStore {
         (index, shinglesTable(name), "doc_id"),
         (index.groupBy("doc_id").agg(count(lit(1)).as("n_sh")), sizesTable(name), "doc_id"))
     }
-    }
+  }
 
   /** Cross-corpus near-dup pairs of a new batch against the store:
     * (hist_id, new_id, jaccard ≥ threshold). Only the batch is hashed

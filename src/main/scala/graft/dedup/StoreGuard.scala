@@ -5,29 +5,31 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.TableIdentifier
 import graft.sinks.ManifestLog
 
-/** Single-writer discipline and commit protocol of a mutable table
-  * store (the signature store, the embedding store). Every store table
-  * is partitioned by `commit`. A mutation writes its rows into a fresh
-  * `commit=c-<uuid>` partition of each table it touches, then publishes
-  * one manifest naming every table's live commits, and that manifest
-  * alone decides what the store contains — the Delta log design
-  * `sinks/VersionedTable` uses, through the same [[ManifestLog]]:
+/** Commit protocol of a mutable table store (the signature store, the
+  * embedding store). Every store table is partitioned by `commit`. A
+  * mutation writes its rows into a fresh `commit=c-v<base>-<uuid>`
+  * partition of each table it touches, then publishes one manifest
+  * naming every table's live commits, and that manifest alone decides
+  * what the store contains — the Delta log design `sinks/VersionedTable`
+  * uses, through the same [[ManifestLog]], and its optimistic
+  * concurrency control (Kung & Robinson, TODS 1981):
   *
-  *  - readers see the newest manifest: [[sync]] makes its commits, and
-  *    only those, the tables' catalog partitions. A writer that dies
-  *    before its publish leaves commit dirs no manifest names; nothing
-  *    reads them, and [[recover]] deletes them;
+  *  - a mutation publishes to the version its inputs came from (its
+  *    `base`) + 1; when another writer took that version first, it
+  *    deletes its commit and fails with "concurrent commit";
+  *  - readers see the catalog partitions [[sync]] made from a manifest.
+  *    A writer that dies before its publish leaves commit dirs no
+  *    manifest names: nothing reads them, and the first publish past
+  *    their base deletes them, as such a writer can no longer win;
   *  - a [[snapshot]] is a manifest version and its commits, and
   *    [[rollback]] republishes that list. A publish that replaces a
-  *    table (build, retune, reband, compact) deletes the older
-  *    manifests: no rollback can cross it;
-  *  - the lock file (atomic createNewFile, stamped with its owner)
-  *    serialises writers: a second concurrent writer fails fast. It is
-  *    reentrant per thread, so a caller can bracket snapshot → ingest →
-  *    publish → rollback-on-failure as one critical section.
+  *    table (build, retune, reband, compact) empties the older
+  *    manifests: no rollback can cross it. Each emptied file stays as a
+  *    tombstone, so its version stays taken and a writer still working
+  *    from an older version loses its publish.
   *
-  * The manifests, the lock and the audit-streak file live beside the
-  * meta table's directory, so no table rewrite can delete them.
+  * The manifests, which also carry the audit-alert [[streak]], live
+  * beside the meta table's directory, so no table rewrite deletes them.
   */
 private[graft] final case class StoreGuard(metaTable: String, tables: Seq[String]) {
   import StoreGuard._
@@ -35,14 +37,11 @@ private[graft] final case class StoreGuard(metaTable: String, tables: Seq[String
   private def fs(spark: SparkSession): FileSystem =
     tableLocation(spark, metaTable).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** `<meta-dir><suffix>`: a sibling of the meta table's directory. */
-  private def sibling(spark: SparkSession, suffix: String): Path = {
+  /** `<meta-dir>.manifest`: a sibling of the meta table's directory. */
+  private[graft] def manifestDir(spark: SparkSession): Path = {
     val m = tableLocation(spark, metaTable)
-    new Path(m.getParent, m.getName + suffix)
+    new Path(m.getParent, m.getName + ".manifest")
   }
-  private def lockPath(spark: SparkSession) = sibling(spark, ".lock")
-  private def streakPath(spark: SparkSession) = sibling(spark, ".streak")
-  private[graft] def manifestDir(spark: SparkSession): Path = sibling(spark, ".manifest")
 
   private[graft] def commitDir(spark: SparkSession, table: String, commit: String): Path =
     new Path(tableLocation(spark, table), s"commit=$commit")
@@ -51,13 +50,26 @@ private[graft] final case class StoreGuard(metaTable: String, tables: Seq[String
   def version(spark: SparkSession): Int =
     ManifestLog.currentVersion(fs(spark), manifestDir(spark))
 
-  private def manifestAt(spark: SparkSession, v: Int): Manifest =
-    if (v == 0) Manifest.Empty
-    else Manifest.parse(ManifestLog.read(fs(spark), manifestDir(spark), v))
+  /** Version `v`'s manifest; `None` once a replacing publish pruned it
+    * (a tombstone, or a file an older engine deleted).
+    */
+  private def manifestAt(spark: SparkSession, v: Int): Option[Manifest] =
+    if (v == 0) Some(Manifest.Empty)
+    else
+      try Some(ManifestLog.read(fs(spark), manifestDir(spark), v))
+        .filter(_.nonEmpty).map(Manifest.parse)
+      catch { case _: java.io.FileNotFoundException => None }
 
+  /** The newest version and its manifest. A replacing publish prunes
+    * the versions below it right after it lands, so a read that a newer
+    * version overtook may have seen a pruned file and is read again.
+    */
+  @annotation.tailrec
   private def current(spark: SparkSession): (Int, Manifest) = {
     val v = version(spark)
-    (v, manifestAt(spark, v))
+    val m = scala.util.Try(manifestAt(spark, v))
+    if (version(spark) != v) current(spark)
+    else (v, m.get.getOrElse(sys.error(s"newest manifest v$v of store '$metaTable' is empty")))
   }
 
   def snapshot(spark: SparkSession): BandedStore.Snapshot = {
@@ -72,14 +84,25 @@ private[graft] final case class StoreGuard(metaTable: String, tables: Seq[String
   def committed(spark: SparkSession, tag: (String, Long)): Boolean =
     current(spark)._2.batches.get(tag._1).exists(_ >= tag._2)
 
+  private def registryKey(spark: SparkSession): (String, String) =
+    (spark.sparkContext.applicationId, manifestDir(spark).toString)
+
+  /** The version whose commits [[sync]] last made this application's
+    * catalog partitions: what an ingest's or reband's store joins read.
+    */
+  def registered(spark: SparkSession): Int =
+    registeredVersions.getOrElse(registryKey(spark),
+      sys.error(s"store '$metaTable' is not registered in this session — ensureRegistered first"))
+
   /** Make each declared table's catalog partitions exactly the newest
     * manifest's commits for it, and its size statistic their data bytes:
     * the planner sizes a partitioned table without statistics as
     * unbounded and never broadcasts it, so the store joins would shuffle
     * the batch side where the unpartitioned tables were broadcast.
+    * Records the synced version as [[registered]].
     */
   def sync(spark: SparkSession): Unit = {
-    val (f, m) = (fs(spark), current(spark)._2)
+    val (f, (v, m)) = (fs(spark), current(spark))
     tables.filter(spark.catalog.tableExists).foreach { t =>
       val have = spark.sessionState.catalog.listPartitions(TableIdentifier(t))
         .map(_.spec("commit")).toSet
@@ -96,80 +119,98 @@ private[graft] final case class StoreGuard(metaTable: String, tables: Seq[String
       spark.sessionState.catalog.alterTableStats(TableIdentifier(t),
         Some(org.apache.spark.sql.catalyst.catalog.CatalogStatistics(BigInt(bytes))))
     }
+    registeredVersions.put(registryKey(spark), v)
   }
 
-  /** Delete everything in the tables' directories that the newest
-    * manifest does not name (a dead or failed writer's commit, the
-    * commits a publish dropped) and any stray temp manifest. The caller
-    * holds the lock. Returns how many commit dirs went.
+  /** Delete the commit dirs the newest manifest (version P) does not
+    * name whose base is below P (a writer from P may still win), and the
+    * temp manifests older than P's. What a racing publish hides from the
+    * sweep, the next one deletes.
     */
-  private def sweep(spark: SparkSession): Int = {
-    val (f, m) = (fs(spark), current(spark)._2)
-    def ls(p: Path): Seq[Path] = if (f.exists(p)) f.listStatus(p).map(_.getPath).toSeq else Nil
-    val stray = tables.flatMap { t =>
-      val live = m.of(t).map(c => s"commit=$c").toSet
-      ls(tableLocation(spark, t)).filterNot(p => live(p.getName))
-    } ++ ls(manifestDir(spark)).filter(_.getName.startsWith("tmp-manifest-"))
-    stray.foreach(f.delete(_, true))
-    stray.count(_.getName.startsWith("commit="))
-  }
+  private def sweep(spark: SparkSession): Unit =
+    try {
+      val (f, (v, m)) = (fs(spark), current(spark))
+      // P pruned since the read: its mtime is the prune's, not the publish's
+      val published = Some(f.getFileStatus(ManifestLog.path(manifestDir(spark), v)))
+        .filter(_.getLen > 0).fold(0L)(_.getModificationTime)
+      def ls(p: Path) = if (f.exists(p)) f.listStatus(p).toSeq else Nil
+      val stray = tables.flatMap { t =>
+        val live = m.of(t).toSet
+        ls(tableLocation(spark, t)).map(_.getPath).filter(_.getName match {
+          case CommitDir(id) => !live(id) && baseOf(id) < v
+          case _ => false
+        })
+      } ++ ls(manifestDir(spark)).filter(st => st.getPath.getName.startsWith("tmp-manifest-") &&
+        st.getModificationTime < published).map(_.getPath)
+      stray.foreach(f.delete(_, true))
+    } catch { case _: java.io.FileNotFoundException => () }
 
   private def publish(spark: SparkSession, v: Int, m: Manifest): Unit =
     ManifestLog.publish(fs(spark), manifestDir(spark), v, m.lines)
 
-  /** One mutation as the store's single writer. `write` puts its rows
-    * into the fresh commit `c.id` of the tables it touches and marks,
-    * with `c.replace`, the tables whose earlier commits the mutation
-    * drops; then one manifest publishes the result, tagged with the
-    * streaming `batch` if there is one. `onPublished` runs right after
-    * the publish, and the dropped commits are deleted last. A failure
-    * before the publish deletes this mutation's commit and re-registers
-    * the store (`reregister`) from the manifest it left untouched.
+  /** One mutation from version `base`. `write` puts its rows into the
+    * fresh commit `c.id` of the tables it touches and marks, with
+    * `c.replace`, the tables whose earlier commits the mutation drops;
+    * then one manifest publishes the result as version `base` + 1,
+    * tagged with the streaming `batch` if there is one; replacing the
+    * meta table resets the streak, and a build that writes no data
+    * leaves an empty store, which holds no streaming batch. `onPublished`
+    * runs right after the publish, then the sweep. A failure before the
+    * publish, a lost race included, deletes this mutation's commit and
+    * re-registers the store (`reregister`) from the newest manifest.
     */
-  def mutate[A](spark: SparkSession, batch: Option[(String, Long)],
-      onPublished: () => Unit, reregister: () => Unit)(write: Commit => A): A =
-    locked(spark) {
-      val (v, prev) = current(spark)
-      val c = new Commit(s"c-${java.util.UUID.randomUUID().toString.replace("-", "")}")
-      val out =
-        try {
-          val r = write(c)
-          val next = Manifest(tables.map { t =>
-            t -> ((if (c.replaced(t)) Nil else prev.of(t)) ++
-              Seq(c.id).filter(id => fs(spark).exists(commitDir(spark, t, id))))
-          }.filter(_._2.nonEmpty).toMap, processTag, prev.batches ++ batch)
-          publish(spark, v + 1, next)
-          r
-        } catch {
-          case e: Throwable =>
-            try {
-              tables.foreach { t =>
-                fs(spark).delete(commitDir(spark, t, c.id), true)
-                // entries are EXTERNAL: dropping one keeps its files
-                spark.sql(s"DROP TABLE IF EXISTS `$t`")
-              }
-              reregister()
-            } catch { case a: Throwable => e.addSuppressed(a) }
-            throw e
-        }
-      sync(spark)
-      onPublished()
-      sweep(spark)
-      // a publish that replaced a table ends every rollback to an older
-      // snapshot (its commits are gone), so no older manifest is needed
-      if (c.replaced.nonEmpty) fs(spark).listStatus(manifestDir(spark))
-        .filter(st => ManifestLog.versionOf(st.getPath.getName).exists(_ <= v))
-        .foreach(st => fs(spark).delete(st.getPath, false))
-      out
-    }
+  def mutate[A](spark: SparkSession, base: Int, batch: Option[(String, Long)],
+      onPublished: () => Unit, reregister: () => Unit)(write: Commit => A): A = {
+    val prev = manifestAt(spark, base).getOrElse(
+      sys.error(s"concurrent commit: a later publish pruned version $base of '$metaTable'"))
+    val c = new Commit(s"c-v$base-${java.util.UUID.randomUUID().toString.replace("-", "")}")
+    val out =
+      try {
+        val r = write(c)
+        val commits = tables.map { t =>
+          t -> ((if (c.replaced(t)) Nil else prev.of(t)) ++
+            Seq(c.id).filter(id => fs(spark).exists(commitDir(spark, t, id))))
+        }.filter(_._2.nonEmpty).toMap
+        val empty = tables.forall(c.replaced) && commits.keySet == Set(metaTable)
+        val next = Manifest(commits, processTag,
+          (if (empty) Map.empty[String, Long] else prev.batches) ++ batch,
+          if (c.replaced(metaTable)) 0 else prev.streak)
+        publish(spark, base + 1, next)
+        r
+      } catch {
+        case e: Throwable =>
+          try {
+            tables.foreach { t =>
+              fs(spark).delete(commitDir(spark, t, c.id), true)
+              // entries are EXTERNAL: dropping one keeps its files
+              spark.sql(s"DROP TABLE IF EXISTS `$t`")
+            }
+            reregister()
+          } catch { case a: Throwable => e.addSuppressed(a) }
+          throw e
+      }
+    sync(spark)
+    onPublished()
+    sweep(spark)
+    // a publish that replaced a table ends every rollback to an older
+    // snapshot (its commits are gone), so no older manifest is needed;
+    // each is emptied, not deleted, so no late writer can publish into
+    // its version and be read by nobody
+    if (c.replaced.nonEmpty) fs(spark).listStatus(manifestDir(spark))
+      .filter(st => st.getLen > 0 && ManifestLog.versionOf(st.getPath.getName).exists(_ <= base))
+      .foreach(st => fs(spark).create(st.getPath, true).close())
+    out
+  }
 
-  /** Republish `snap`'s commits. Refuses when a commit of the snapshot
-    * is gone (a build, compact or reband since dropped it), when a later
-    * version was pruned (by such a publish), or when a later version was
-    * published by another process (rolling back would drop that
+  /** Republish `snap`'s commits as the version after the one it checks,
+    * undoing what this process published since the snapshot. A no-op
+    * when this process published nothing since. Refuses when a commit
+    * of the snapshot is gone (a build, compact or reband since dropped
+    * it), when a later version was pruned (by such a publish), or when
+    * another process also published since (rolling back would drop that
     * writer's work).
     */
-  def rollback(spark: SparkSession, snap: BandedStore.Snapshot): Unit = locked(spark) {
+  def rollback(spark: SparkSession, snap: BandedStore.Snapshot): Unit = {
     val (v, cur) = current(spark)
     val missing = for {
       (t, cs) <- snap.commits.toSeq; c <- cs
@@ -181,138 +222,61 @@ private[graft] final case class StoreGuard(metaTable: String, tables: Seq[String
         "reband ran since the snapshot was taken, and rollback can only undo " +
         "appends, not restore deleted files; rebuild the store from the source " +
         "corpus instead")
-    val later = (snap.version + 1) to v
-    later.find(ver => !fs(spark).exists(ManifestLog.path(manifestDir(spark), ver)))
+    val later = ((snap.version + 1) to v).map(ver => ver -> manifestAt(spark, ver))
+    later.collectFirst { case (ver, None) => ver }
       .foreach(ver => sys.error(s"cannot roll back store '$metaTable': version " +
         s"$ver after the snapshot was pruned by a later build, compact or reband, " +
         "so what it published cannot be checked; rebuild the store from the " +
         "source corpus instead"))
-    later.map(manifestAt(spark, _)).find(_.writer != processTag)
-      .foreach(m => sys.error(s"stale snapshot for store '$metaTable': a later " +
-        s"version was published by another process (${m.writer}) since the " +
+    val (mine, foreign) = later.flatMap(_._2).partition(_.writer == processTag)
+    if (mine.nonEmpty) {
+      foreign.headOption.foreach(m => sys.error(s"stale snapshot for store '$metaTable': " +
+        s"a later version was published by another process (${m.writer}) since the " +
         "snapshot was taken — rolling back would drop that writer's commits"))
-    if (cur.commits != snap.commits) {
-      publish(spark, v + 1, cur.copy(commits = snap.commits, writer = processTag))
-      sync(spark)
-      sweep(spark)
+      if (cur.commits != snap.commits) {
+        publish(spark, v + 1, cur.copy(commits = snap.commits, writer = processTag))
+        sync(spark)
+        sweep(spark)
+      }
     }
   }
 
-  /** Crash recovery: delete the commit dirs no manifest names — what a
-    * writer that died before its publish left — under a lock this call
-    * claims (or this thread already holds), after discharging a lock
-    * whose owner is verifiably dead (a live or unverifiable owner fails
-    * fast, see [[dischargeDeadLock]]), then release the lock. Returns
-    * whether anything was recovered.
-    */
-  def recover(spark: SparkSession): Boolean = {
-    val discharged = !heldLocks.get.contains(lockPath(spark).toString) &&
-      dischargeDeadLock(spark, strict = true)
-    locked(spark)(sweep(spark) > 0) || discharged
-  }
-
-  /** Drop the store: catalog entries, table dirs, manifests, streak. */
-  def drop(spark: SparkSession): Unit = locked(spark) {
+  /** Drop the store: catalog entries, table dirs, manifests. */
+  def drop(spark: SparkSession): Unit = {
     tables.foreach { t =>
       spark.sql(s"DROP TABLE IF EXISTS `$t`")
       fs(spark).delete(tableLocation(spark, t), true)
     }
     fs(spark).delete(manifestDir(spark), true)
-    clearStreak(spark)
+    registeredVersions.remove(registryKey(spark))
   }
 
-  /** The store's durable consecutive-breach streak (the audit-alert
-    * counter). Durable because the production cadence is one fresh JVM
-    * per daily `Runner --corpus-ingest`: a process-lifetime counter
-    * would reset every run and "K breaches in a row" would be
-    * unreachable. Read-modify-written inside the ingest's critical
-    * section. Absent or garbled reads as 0.
+  /** The durable audit-alert breach streak of the newest manifest. The
+    * production cadence is one fresh JVM per daily `Runner
+    * --corpus-ingest`, where a process-lifetime counter would never
+    * reach "K breaches in a row".
     */
-  def readStreak(spark: SparkSession): Int = readText(spark, streakPath(spark))
-    .flatMap(_.trim.toIntOption).getOrElse(0)
+  def streak(spark: SparkSession): Int = current(spark)._2.streak
 
-  def writeStreak(spark: SparkSession, n: Int): Unit = {
-    val out = fs(spark).create(streakPath(spark), true)
-    try out.write(n.toString.getBytes("UTF-8")) finally out.close()
-  }
-
-  def clearStreak(spark: SparkSession): Unit = { fs(spark).delete(streakPath(spark), false); () }
-
-  /** Text of `p`, `None` when it is absent (or vanishes mid-read). */
-  private def readText(spark: SparkSession, p: Path): Option[String] =
-    try {
-      val in = fs(spark).open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString) finally in.close()
-    } catch { case _: java.io.FileNotFoundException => None }
-
-  /** Release a crashed writer's lock unconditionally (manual step). */
-  def unlock(spark: SparkSession): Unit = { fs(spark).delete(lockPath(spark), false); () }
-
-  /** The stamped owner of the current lock: `None` when there is no lock
-    * or it carries no parseable stamp (a pre-stamp writer, an external
-    * tool, or a writer dead inside the create→stamp window).
+  /** Set the streak to `f` of the newest one and return the new value,
+    * with a streak-only publish: it changes no commit, so it neither
+    * syncs nor sweeps, and an unchanged streak publishes nothing. On a
+    * lost race it re-reads and re-applies `f`, so no update is lost.
     */
-  def lockOwner(spark: SparkSession): Option[LockOwner] =
-    readText(spark, lockPath(spark)).flatMap(s => parseOwner(s.trim))
-
-  /** Discharge the store's lock only when its stamped owner is
-    * verifiably dead (same host, pid gone): the writer can then never
-    * release it itself, and discharging cannot break mutual exclusion.
-    * True when a dead lock was discharged, false when there is no lock.
-    * A lock that cannot be proven dead (live pid, foreign host, no
-    * stamp) fails fast when `strict` — for callers that need the lock
-    * next — and is left alone (false) otherwise.
-    */
-  def dischargeDeadLock(spark: SparkSession, strict: Boolean): Boolean = {
-    val p = lockPath(spark)
-    if (!fs(spark).exists(p)) return false
-    def refuse(why: String): Boolean =
-      if (strict) sys.error(s"store '$metaTable' is locked ($p) and the lock " +
-        s"cannot be safely discharged: $why — verify the writer is dead, then " +
-        "unlock(...) manually")
-      else false
-    lockOwner(spark) match {
-      case None =>
-        refuse("the lock carries no owner stamp. Every claim path in this " +
-          "engine version stamps, so an unstamped lock is either (a) a PRE-STAMP " +
-          "LEGACY store's — taken by an older engine version; confirm no " +
-          "old-version writer is running, then unlock(...) — or (b) a writer " +
-          "dead inside the two-FS-call create→stamp window — its pid is gone, so " +
-          "after ruling out (a), unlock(...) is safe; to tell them apart: a " +
-          "legacy writer holds the lock for its whole mutation (minutes), a " +
-          "crashed-mid-claim lock never gains a stamp however long you re-probe")
-      case Some(o) if o.host != localHost =>
-        refuse(s"owner pid ${o.pid} lives on host '${o.host}' — liveness is not " +
-          s"checkable from '$localHost'")
-      case Some(o) if pidAlive(o.pid) =>
-        refuse(s"owner pid ${o.pid} on this host is STILL ALIVE (a live ingest, " +
-          "build, or maintenance sweep)")
-      case Some(_) =>
-        fs(spark).delete(p, false)
-        true
+  @annotation.tailrec
+  def updateStreak(spark: SparkSession, f: Int => Int): Int = {
+    val (v, m) = current(spark)
+    require(v > 0, s"no store '$metaTable' on disk at ${manifestDir(spark)}")
+    val n = f(m.streak)
+    val lost = n != m.streak &&
+      (try { publish(spark, v + 1, m.copy(writer = processTag, streak = n)); false }
+       catch { case _: RuntimeException if version(spark) > v => true })
+    if (lost) updateStreak(spark, f)
+    else {
+      // the catalog partitions still hold version v's commits
+      if (n != m.streak) registeredVersions.replace(registryKey(spark), v, v + 1)
+      n
     }
-  }
-
-  /** Run `f` as the store's single writer. Reentrant within a thread;
-    * a concurrent writer fails fast instead of interleaving commits.
-    */
-  def locked[A](spark: SparkSession)(f: => A): A = {
-    val p = lockPath(spark)
-    val key = p.toString
-    if (heldLocks.get.contains(key)) return f
-    val lfs = fs(spark)
-    lfs.mkdirs(p.getParent) // first-ever build: the warehouse dir may not exist yet
-    if (!lfs.createNewFile(p))
-      sys.error(s"store '$metaTable' is locked by a concurrent writer ($p); if " +
-        "that writer crashed, recover(...) deletes its unpublished commits and " +
-        "releases the lock")
-    // stamp the claim with this writer's identity so a later process can
-    // tell a dead predecessor's lock from a live writer's. A writer dead
-    // between the claim and the stamp leaves an unstamped lock, which
-    // dischargers treat as not verifiably dead.
-    stampLock(lfs, p)
-    heldLocks.get += key
-    try f finally { heldLocks.get -= key; lfs.delete(p, false) }
   }
 }
 
@@ -327,22 +291,24 @@ private[graft] object StoreGuard {
   }
 
   /** One published store state: each table's live commits in commit
-    * order, the process tag of its publisher, and each stream's last
-    * committed batch (flag root → batch id). Lines are tab-separated.
+    * order, the process tag of its publisher, each stream's last
+    * committed batch (flag root → batch id) and the audit streak. Lines
+    * are tab-separated; a manifest without a `streak` line reads 0.
     */
   private final case class Manifest(commits: Map[String, Seq[String]], writer: String,
-      batches: Map[String, Long]) {
+      batches: Map[String, Long], streak: Int) {
     def of(t: String): Seq[String] = commits.getOrElse(t, Nil)
-    def lines: Seq[String] = s"writer\t$writer" +:
-      (batches.toSeq.sorted.map { case (root, b) => s"batch\t$b\t$root" } ++
-        commits.toSeq.sortBy(_._1).flatMap { case (t, cs) => cs.map(c => s"commit\t$t\t$c") })
+    def lines: Seq[String] = Seq(s"writer\t$writer", s"streak\t$streak") ++
+      batches.toSeq.sorted.map { case (root, b) => s"batch\t$b\t$root" } ++
+      commits.toSeq.sortBy(_._1).flatMap { case (t, cs) => cs.map(c => s"commit\t$t\t$c") }
   }
 
   private object Manifest {
-    val Empty: Manifest = Manifest(Map.empty, "", Map.empty)
+    val Empty: Manifest = Manifest(Map.empty, "", Map.empty, 0)
     def parse(lines: Seq[String]): Manifest = lines.foldLeft(Empty) { (m, l) =>
       l.split("\t", 3) match {
         case Array("writer", w) => m.copy(writer = w)
+        case Array("streak", n) => m.copy(streak = n.toInt)
         case Array("batch", b, root) => m.copy(batches = m.batches + (root -> b.toLong))
         case Array("commit", t, c) => m.copy(commits = m.commits + (t -> (m.of(t) :+ c)))
         case _ => sys.error(s"corrupt store manifest line: $l")
@@ -350,53 +316,21 @@ private[graft] object StoreGuard {
     }
   }
 
-  /** A stamped lock's owner identity, as written at acquisition. */
-  final case class LockOwner(pid: Long, host: String, proc: String, epochMs: Long)
-
-  /** One tag per JVM: tells apart two processes that recycle a pid, and
-    * marks the manifests this process published.
-    */
+  /** One tag per JVM: marks the manifests this process published. */
   private val processTag: String =
     java.util.UUID.randomUUID().toString.replace("-", "").take(8)
 
-  private[dedup] lazy val localHost: String =
-    try java.net.InetAddress.getLocalHost.getHostName
-    catch { case _: java.net.UnknownHostException => "localhost" }
+  /** [[StoreGuard.registered]], per (application, manifest dir). */
+  private val registeredVersions = scala.collection.concurrent.TrieMap.empty[(String, String), Int]
 
-  private[dedup] def pidAlive(pid: Long): Boolean =
-    ProcessHandle.of(pid).map[Boolean](_.isAlive).orElse(false)
+  private val CommitDir = raw"commit=(.+)".r
+  private val Based = raw"c-v(\d+)-.*".r
 
-  /** Stamp a freshly claimed lock file with this writer's identity: one
-    * overwrite-create of the claimed file.
+  /** The version a commit was written from: `c-v<base>-<uuid>`, and 0 for
+    * the `c-<uuid>` commits of stores written before bases were named.
     */
-  private[dedup] def stampLock(fs: FileSystem, p: Path): Unit = {
-    val out = fs.create(p, true)
-    try out.write(ownerStamp.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** The stamp [[StoreGuard.locked]] writes into a claimed lock file. */
-  private[graft] def ownerStamp: String =
-    s"pid=${ProcessHandle.current().pid()} host=$localHost " +
-      s"proc=$processTag epoch=${System.currentTimeMillis()}"
-
-  /** Stamp text for an arbitrary pid — test seam for fabricating a dead
-    * or live foreign writer's lock without forking a real writer.
-    */
-  private[graft] def ownerStampFor(pid: Long): String =
-    s"pid=$pid host=$localHost proc=deadbeef epoch=${System.currentTimeMillis()}"
-
-  private val OwnerRe =
-    raw"pid=(\d+) host=(\S+) proc=([0-9a-f]+) epoch=(\d+)".r
-
-  private[graft] def parseOwner(s: String): Option[LockOwner] = s match {
-    case OwnerRe(pid, host, proc, epoch) =>
-      Some(LockOwner(pid.toLong, host, proc, epoch.toLong))
-    case _ => None
-  }
-
-  /** Lock paths held by the CURRENT thread (reentrancy). */
-  private val heldLocks = ThreadLocal.withInitial[scala.collection.mutable.Set[String]](
-    () => scala.collection.mutable.Set.empty[String])
+  private def baseOf(commit: String): Int =
+    commit match { case Based(b) => b.toInt; case _ => 0 }
 
   /** Default warehouse location of a store table (per-process catalog,
     * durable dir — the one path every store mutator keys off).

@@ -364,9 +364,9 @@ object Orchestrator {
       runFull = () =>
         runAll(spark, sfDir, Full, notifier, sink).foreach(onResult),
       runMaintenance = Some(() => {
-        // each unit is isolated: one locked store (a concurrent manual
-        // ingest makes compact fail FAST by design) or one broken
-        // pipeline must not starve every remaining unit of its monthly
+        // each unit is isolated: one store whose compaction loses its
+        // publish to a concurrent ingest, or one broken pipeline, must
+        // not starve every remaining unit of its monthly
         // slot — the failure is reported and the sweep continues (the
         // scheduler-level catch would otherwise abort the whole fire).
         // Reporting goes through the SAME channels every other failure
@@ -424,7 +424,7 @@ object Orchestrator {
 
   /** The sweep's opt-in alert→action pass (runs BEFORE routine store
     * maintenance — see the call site): when a store's PERSISTED breach
-    * streak (written by the daily ingests under the store lock) is in
+    * streak (published by the daily ingests in the store manifest) is in
     * breach at sweep time, the bound remediation runs in the same
     * monthly slot — the reference's ops story is unattended cron, and
     * an alert a human must read is weaker than a sweep that acts. The
@@ -434,8 +434,8 @@ object Orchestrator {
     * the condition armed for next month. Each run is isolated per
     * store like every other unit. The streak is read from the store
     * kind the name appears under — names ambiguous across the two
-    * lists are refused up front (the text and embedding sidecars are
-    * different files).
+    * lists are refused up front (the text and embedding stores keep
+    * different manifests).
     */
   private def remediationPass(spark: SparkSession,
       remediations: Map[String, () => Unit],
@@ -461,7 +461,7 @@ object Orchestrator {
           // this pass runs FIRST in the sweep, so in a fresh JVM (the
           // cron cadence) no other unit has registered the store's
           // catalog entries yet — register from disk before acting
-          // (the streak read above is file-based and needs no catalog)
+          // (the streak read above is manifest-based and needs no catalog)
           st.ensureRegistered(spark, s)
           act()
           onMaintain(MaintainResult(
@@ -537,12 +537,14 @@ object Orchestrator {
   /** Create an EMPTY signature store so EVERY batch — including the
     * first — flows through the one [[corpusIngest]] path: the first
     * ingest dedupes the day-one batch within itself against the empty
-    * history and appends its survivors, exactly like day two will.
+    * history and appends its survivors, exactly like day two will. On an
+    * existing store the build replaces every table in one publish, so a
+    * racing ingest loses its publish instead of writing into a deleted
+    * store, and the empty store it publishes records no streaming batch.
     */
   def corpusInit(spark: SparkSession, store: String,
       spec: graft.dedup.SignatureStore.Spec = graft.dedup.SignatureStore.Spec()): Unit = {
     import spark.implicits._
-    graft.dedup.SignatureStore.drop(spark, store)
     graft.dedup.SignatureStore.build(spark,
       Seq.empty[(Long, String)].toDF("doc_id", "text"), store, spec)
   }
@@ -589,12 +591,11 @@ object Orchestrator {
     */
   def corpusInitEmbeddings(spark: SparkSession, store: String): Unit = {
     import spark.implicits._
-    graft.similarity.EmbeddingStore.drop(spark, store)
     graft.similarity.EmbeddingStore.build(spark,
       Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding"), store)
   }
 
-  /** The embedding twin of [[corpusIngest]] — same single-writer unit,
+  /** The embedding twin of [[corpusIngest]] — same ingest unit,
     * same commit-together semantics, flags MERGE by vec-id business
     * key. The ingest's LSH bucket audit rides the result and the
     * notification: cap drops are recall loss, and this cadence is where
@@ -619,17 +620,17 @@ object Orchestrator {
         bucketCap = bucketCap, onAudit = a => audit.set(Some(a))))
   }
 
-  /** The store-agnostic ingest unit both corpus cadences share: the
-    * WHOLE snapshot → ingest → publish → rollback-on-failure sequence
-    * runs as the store's single writer (the store locks are reentrant,
-    * so the inner ingest/rollback join this critical section — a
-    * snapshot taken outside the lock could bracket another writer's
-    * completed ingest, and rolling back to it would delete that
-    * writer's appends). Any failure rolls the store back; a rollback
-    * failure rides along as suppressed instead of replacing the root
-    * cause (the partial appends then still exist — the error says so).
-    * `finish` attaches the ingest's audit to the result; `runIngest` is
-    * the store's ingest of the batch.
+  /** The store-agnostic ingest unit both corpus cadences share:
+    * snapshot → ingest → flag merge → rollback on failure. The ingest
+    * publishes on top of the version `ensureRegistered` synced, or fails
+    * if another writer published first. Any failure rolls back what this
+    * process published since the snapshot. When another process
+    * published on top of this ingest before a failed flag merge, the
+    * rollback refuses rather than drop that writer's work; its failure
+    * rides along as suppressed instead of replacing the root cause (the
+    * appends then still exist — the error says so). `finish` attaches
+    * the ingest's audit to the result; `runIngest` is the store's ingest
+    * of the batch.
     */
   private def runStoreIngest(spark: SparkSession, st: graft.dedup.BandedStore,
       store: String, jobLabel: String,
@@ -638,6 +639,7 @@ object Orchestrator {
       policy: AuditPolicy,
       finish: CorpusResult => CorpusResult)(runIngest: => DataFrame): CorpusResult = {
     val t0 = System.nanoTime()
+    var rollbackFailure: Option[Throwable] = None
     val result =
       try {
         // a missing/never-built store must surface as a formatted
@@ -645,36 +647,32 @@ object Orchestrator {
         // exception that skips the monitoring path — so the cross-JVM
         // re-registration runs INSIDE this try
         st.ensureRegistered(spark, store)
-        st.locked(spark, store) {
-          val snap = st.snapshot(spark, store)
-          try {
-            val flags = runIngest
-            val batchRows = flags.count()
-            if (batchRows == 0) sys.error("Empty batch — nothing to ingest")
-            val dups = flags.filter(col("is_dup")).count()
-            val out = flags.select(
-              col(st.idCol).cast("string").as("business_key"),
-              col(st.idCol), col("is_dup"), col("dup_of"))
-              .withColumn("refreshed_at", current_timestamp())
-            sink.merge(spark, corpusPipeline(store), out)
-            // the escalation verdict is stamped INSIDE the critical
-            // section: the durable streak's read-modify-write shares
-            // the ingest's single-writer lock, so two cadences on the
-            // same store can never interleave counter updates
-            recordAuditAlert(finish(
-              CorpusResult(store, batchRows, dups, batchRows - dups,
-                (System.nanoTime() - t0) / 1e9, None)),
-              policy, durableStreak(spark, st, store))
-          } catch {
-            case e: Throwable =>
-              try st.rollback(spark, store, snap) // store unchanged
-              catch { case rb: Throwable => e.addSuppressed(rb) }
-              throw e
-          }
+        val snap = st.snapshot(spark, store)
+        try {
+          val flags = runIngest
+          val batchRows = flags.count()
+          if (batchRows == 0) sys.error("Empty batch — nothing to ingest")
+          val dups = flags.filter(col("is_dup")).count()
+          val out = flags.select(
+            col(st.idCol).cast("string").as("business_key"),
+            col(st.idCol), col("is_dup"), col("dup_of"))
+            .withColumn("refreshed_at", current_timestamp())
+          sink.merge(spark, corpusPipeline(store), out)
+          recordAuditAlert(finish(
+            CorpusResult(store, batchRows, dups, batchRows - dups,
+              (System.nanoTime() - t0) / 1e9, None)),
+            policy, durableStreak(spark, st, store))
+        } catch {
+          case e: Throwable =>
+            try st.rollback(spark, store, snap) // store unchanged
+            catch { case rb: Throwable => rollbackFailure = Some(rb); e.addSuppressed(rb) }
+            throw e
         }
       } catch {
         case e: Exception =>
-          val rbNote = e.getSuppressed.headOption
+          // not `e.getSuppressed`: Spark attaches its caller's stack trace
+          // to its own exceptions as a suppressed one
+          val rbNote = rollbackFailure
             .map(rb => s" (ROLLBACK ALSO FAILED — partial appends remain: ${rb.getMessage})")
             .getOrElse("")
           // a failed ingest's mutation rolled back: its audits (landed
@@ -732,36 +730,48 @@ object Orchestrator {
       consecutive: Int = 3)
 
   /** One store's consecutive-breach counter. The corpus cadences keep
-    * it DURABLE, in a per-store sidecar ([[durableStreak]]), because the
-    * production mode is one fresh JVM per daily `Runner --corpus-ingest`
-    * (cron), where a process-lifetime counter would reset every run and
-    * "K breaches in a row" would be unreachable.
+    * it DURABLE, in the store's manifest ([[durableStreak]]), because
+    * the production mode is one fresh JVM per daily `Runner
+    * --corpus-ingest` (cron), where a process-lifetime counter would
+    * reset every run and "K breaches in a row" would be unreachable.
     */
   trait StreakStore {
     def read(): Int
     def write(n: Int): Unit
     def clear(): Unit
+
+    /** Set the counter to `f` of its value and return the new value. A
+      * counter other processes update overrides this with one atomic
+      * step.
+      */
+    def update(f: Int => Int): Int = {
+      val n = f(read())
+      if (n == 0) clear() else write(n)
+      n
+    }
   }
 
-  /** The corpus cadences' durable streak: the store's sidecar file,
-    * read-modify-written inside the ingest's single-writer lock (the
-    * reentrant `locked` bracket in [[runStoreIngest]]).
+  /** The corpus cadences' durable streak: the `streak` line of the
+    * store's manifest, updated by a streak-only publish that re-applies
+    * its change when another writer published first, so two cadences on
+    * the same store never lose each other's updates.
     */
   private def durableStreak(spark: SparkSession, st: graft.dedup.BandedStore,
       store: String): StreakStore = new StreakStore {
     def read(): Int = st.readAuditStreak(spark, store)
     def write(n: Int): Unit = st.writeAuditStreak(spark, store, n)
     def clear(): Unit = st.clearAuditStreak(spark, store)
+    override def update(f: Int => Int): Int = st.guard(store).updateStreak(spark, f)
   }
 
   /** Record this ingest against the store's breach streak and stamp the
     * escalation verdict into the result — called exactly ONCE per
-    * SUCCESSFUL ingest (by [[runStoreIngest]], inside the store's
-    * single-writer critical section so the streak read-modify-write
-    * can never race a concurrent cadence); formatters must read
-    * `result.auditAlert`, never re-derive it. The alert fires only
-    * after [[AuditPolicy.consecutive]] breaching ingests IN A ROW for
-    * the same store, and names the remediation the audit points at —
+    * SUCCESSFUL ingest (by [[runStoreIngest]], through the streak's one
+    * `update`, so a concurrent cadence never loses this change);
+    * formatters must read `result.auditAlert`, never re-derive it. The
+    * alert fires only after [[AuditPolicy.consecutive]] breaching
+    * ingests IN A ROW for the same store, and names the remediation the
+    * audit points at —
     * [[graft.similarity.EmbeddingStore.reband]] for the embedding
     * store, [[graft.dedup.SignatureStore.retune]] (more rows per band)
     * for the text store. It rides [[lshAuditLines]] and with them the
@@ -782,11 +792,10 @@ object Orchestrator {
     val textBreach = result.bandAudit.exists(_.maxBucket >= policy.textMaxBucket)
     val hasAudit = result.lshAudit.isDefined || result.bandAudit.isDefined
     if (result.error.isDefined || !hasAudit) result // untouched — see doc
-    else if (!embBreach && !textBreach) { streak.clear(); result }
     else {
-      val n = streak.read() + 1
-      streak.write(n)
-      if (n < policy.consecutive) result
+      val breach = embBreach || textBreach
+      val n = streak.update(k => if (breach) k + 1 else 0)
+      if (!breach || n < policy.consecutive) result
       else result.copy(auditAlert =
         Some(s"AUDIT ALERT: store '${result.store}' breached its bucket " +
           s"threshold on $n consecutive ingests — " +

@@ -27,7 +27,7 @@ import graft.dedup.{BandedStore, Dedup, Overlap}
   * exactly what full-corpus LSH would produce, with no stored
   * projection state beyond the spec row.
   *
-  * Lifecycle and writer safety are [[graft.dedup.BandedStore]]'s, as
+  * Lifecycle and the commit protocol are [[graft.dedup.BandedStore]]'s, as
   * for the signature store.
   */
 object EmbeddingStore extends BandedStore {
@@ -145,8 +145,15 @@ object EmbeddingStore extends BandedStore {
     * reader ever sees bands and meta on different geometries; a
     * rebander that dies before it leaves the store as it was.
     * Pre-reband snapshots then refuse to roll back, as after a `build`.
+    *
+    * A geometry change is the remediation the AUDIT ALERT names for this
+    * store, so the publish that re-pins the meta also resets the breach
+    * streak: old breach evidence describes bands that no longer exist. A
+    * no-op reband leaves the alert armed, because a new geometry cannot
+    * fix it and the remaining remedy (raise bucketCap) is the caller's.
     */
-  def reband(spark: SparkSession, name: String): Boolean = locked(spark, name) {
+  def reband(spark: SparkSession, name: String): Boolean = {
+    val from = guard(name).registered(spark) // what the reads below see
     val meta = spark.table(metaTable(name)).head()
     val spec = specOf(meta)
     val buckets = meta.getAs[Int]("buckets")
@@ -157,7 +164,7 @@ object EmbeddingStore extends BandedStore {
     // both are cured by the same vectors-to-bands rewrite
     val outdated = spec2 != spec || kernelOf(meta) != Similarity.LshKernelVersion
     if (outdated) {
-      mutate(spark, name) { c =>
+      mutate(spark, name, from) { c =>
         // an EMPTY store has no bands to rewrite: re-pin the meta only
         if (n > 0) {
           c.replace(bandsTable(name))
@@ -168,13 +175,6 @@ object EmbeddingStore extends BandedStore {
         c.replace(metaTable(name))
         writeMeta(spark, name, metaRow(spark, spec2, buckets, meta.getAs[Int]("dims")), c.id)
       }
-      // a geometry change is the remediation the AUDIT ALERT names for
-      // this store: old breach evidence describes bands that no longer
-      // exist, so the persisted streak resets WITH the reband — and only
-      // then; a no-op reband leaves the alert condition armed, because a
-      // new geometry cannot fix it and the remaining remedy (raise
-      // bucketCap) is the caller's knob
-      clearAuditStreak(spark, name)
     }
     outdated
   }
@@ -264,7 +264,8 @@ object EmbeddingStore extends BandedStore {
     */
   def build(spark: SparkSession, history: DataFrame, name: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      spec: Spec = Spec(), buckets: Int = 16): Unit = locked(spark, name) {
+      spec: Spec = Spec(), buckets: Int = 16): Unit = {
+    val from = guard(name).version(spark)
     declare(spark, name, Some(buckets))
     val base = baseOf(history, idCol, vecCol).localCheckpoint(true)
     // one control-plane probe: history size (drives the adaptive band
@@ -274,7 +275,7 @@ object EmbeddingStore extends BandedStore {
       if (probeRow.isNullAt(1)) -1 // empty history: first ingest sets dims
       else probeRow.getInt(1)
     val spec0 = spec.resolve(probeRow.getLong(0))
-    mutate(spark, name) { c =>
+    mutate(spark, name, from) { c =>
       allTables(name).foreach(c.replace)
       // an empty history writes no data commit: the declared tables
       // read empty and the first ingest appends
@@ -317,7 +318,8 @@ object EmbeddingStore extends BandedStore {
       onCommitted: () => Unit = () => (),
       bucketCap: Int = 1000,
       onAudit: IngestAudit => Unit = _ => (),
-      batchTag: Option[(String, Long)] = None): DataFrame = locked(spark, name) {
+      batchTag: Option[(String, Long)] = None): DataFrame = {
+    val from = guard(name).registered(spark) // what the store joins read
     val meta = spark.table(metaTable(name)).head()
     requireCurrentKernel(name, meta)
     val spec = specOf(meta)
@@ -417,7 +419,7 @@ object EmbeddingStore extends BandedStore {
         .select(col("new_id").as("doc_a"), col("other_id").as("doc_b"))
       val comp = Dedup.clusters(selfPairs, survIds.select(col("vec_id").as("doc_id")))
 
-      commitIngest(spark, name, buckets, ids, histDup, comp,
+      commitIngest(spark, name, from, buckets, ids, histDup, comp,
           (_, _) => (), onFlags, onCommitted, batchTag) { keepIds =>
         Seq(
           (bBands.join(keepIds, "vec_id").select("vec_id", "band", "band_hash", "band_key"),

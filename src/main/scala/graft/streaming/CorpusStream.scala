@@ -26,16 +26,14 @@ import graft.similarity.EmbeddingStore
   *  - the store publishes the batch's appends in one manifest that also
   *    records the batch's tag (flag root, batch id).
   *
-  * Replay decision at batch start, two arms: the manifest records the
-  * batch → it is committed, flags included: SKIP. Otherwise the batch
-  * is not in the store — an attempt that died before its publish left
-  * only commits no manifest names — so the batch runs again from the
-  * same published state, and overwrites its flag partition with
-  * identical content. Before it runs, [[BandedStore.recoverArbitrated]]
-  * deletes the dead attempt's commits and discharges its lock — only
-  * when that lock's stamped owner is verifiably dead; a live or
-  * unverifiable owner (a manual ingest, the monthly maintenance sweep)
-  * fails the batch fast instead of losing its mutual exclusion.
+  * Replay decision at batch start, one rule: a batch the manifest
+  * records is committed, flags included, and is skipped. Any other
+  * batch runs again from the newest published state and overwrites its
+  * flag partition; an attempt that died before its publish left only
+  * commits no manifest names, which are never read and which the next
+  * publish deletes. A batch that loses its publish to another writer (a
+  * manual ingest, the monthly maintenance sweep) fails, and its
+  * redelivery runs it again on top of that writer's version.
   */
 object CorpusStream {
 
@@ -68,13 +66,7 @@ object CorpusStream {
       : Unit = {
     store.ensureRegistered(spark, storeName)
     val tag = (flagsRoot, batchId)
-    if (store.committed(spark, storeName, tag)) {
-      // a writer dead right after its publish still holds the lock:
-      // release it when its owner is verifiably dead, else leave it
-      store.dischargeDeadLock(spark, storeName, strict = false)
-      return
-    }
-    store.recoverArbitrated(spark, storeName)
+    if (store.committed(spark, storeName, tag)) return
     val part = new Path(s"$flagsRoot/batch_id=$batchId")
     val fs = part.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val audit = new java.util.concurrent.atomic.AtomicReference[

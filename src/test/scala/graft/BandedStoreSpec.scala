@@ -5,12 +5,15 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 import graft.dedup.{BandedStore, SignatureStore, StoreGuard}
+import graft.ops.Orchestrator
 import graft.similarity.EmbeddingStore
+import graft.sinks.ManifestLog
 
 /** The lifecycle verbs both corpus stores share, driven for each store
-  * kind through its public API: the single-writer lock, recovery of a
-  * dead writer's unpublished commits, the lock discharges, the rollback
-  * refusal after a compaction, and cross-process re-registration.
+  * kind through its public API: the optimistic publish against a stale
+  * registration and a racing compaction, a dead writer's unpublished
+  * commits, the audit streak in the manifest, the rollback refusals, and
+  * cross-process re-registration.
   */
 class BandedStoreSpec extends SparkSpec {
 
@@ -23,21 +26,26 @@ class BandedStoreSpec extends SparkSpec {
     /** (table, bucket column) of each bucketed data table. */
     def tables: Seq[(String, String)]
     def build(buckets: Int): Unit
-    /** Ingest the day-1 batch (ids ≡ 1 mod 5) against the day-0 build. */
-    def ingest(): Unit
-    def locked(f: => Unit): Unit
-    def recoverArbitrated(): Boolean
-    def unlock(): Unit
-    def dischargeDeadLock(strict: Boolean): Boolean
-    def snapshot(): BandedStore.Snapshot
-    def rollback(snap: BandedStore.Snapshot): Unit
-    def compact(): Unit
-    def ensureRegistered(): Unit
-    def drop(): Unit
+    /** Ingest the day-`d` batch (ids ≡ d mod 5) and return its flags,
+      * sorted.
+      */
+    def ingest(d: Int = 1, onFlags: DataFrame => Unit = _ => ()): Seq[String]
+    /** The same ingest through the ops surface, flags merged into `sink`. */
+    def opsIngest(sink: Orchestrator.VersionedSink): Orchestrator.CorpusResult
+    /** The audit's geometry remediation, asserted to be one publish. */
+    def regeometry(): Unit
+    def snapshot(): BandedStore.Snapshot = store.snapshot(spark, name)
+    def rollback(snap: BandedStore.Snapshot): Unit = store.rollback(spark, name, snap)
+    def compact(): Unit = store.compact(spark, name)
+    def ensureRegistered(): Unit = store.ensureRegistered(spark, name)
+    def drop(): Unit = store.drop(spark, name)
   }
 
   private def day(df: DataFrame, idCol: String, d: Int): DataFrame =
     df.filter(col(idCol) % 5 === d)
+
+  private def sorted(flags: DataFrame): Seq[String] =
+    flags.collect().map(_.toString).sorted.toSeq
 
   private val text: Kind = new Kind {
     val label = "signature store"
@@ -50,20 +58,16 @@ class BandedStoreSpec extends SparkSpec {
       SignatureStore.sizesTable(name) -> "doc_id")
     def build(buckets: Int): Unit =
       SignatureStore.build(spark, day(docs, "doc_id", 0), name, buckets = buckets)
-    def ingest(): Unit = {
-      SignatureStore.ingest(spark, day(docs, "doc_id", 1), name)
-      ()
+    def ingest(d: Int, onFlags: DataFrame => Unit): Seq[String] =
+      sorted(SignatureStore.ingest(spark, day(docs, "doc_id", d), name, onFlags = onFlags))
+    def opsIngest(sink: Orchestrator.VersionedSink): Orchestrator.CorpusResult =
+      Orchestrator.corpusIngest(spark, name, day(docs, "doc_id", 1), sink = sink)
+    def regeometry(): Unit = {
+      val v = snapshot().version
+      SignatureStore.retune(spark, day(docs, "doc_id", 0), name,
+        SignatureStore.Spec(bands = 16, rows = 3), buckets = 4)
+      assert(snapshot().version == v + 1, "the retune is one publish")
     }
-    def locked(f: => Unit): Unit = SignatureStore.locked(spark, name)(f)
-    def recoverArbitrated(): Boolean = SignatureStore.recoverArbitrated(spark, name)
-    def unlock(): Unit = SignatureStore.unlock(spark, name)
-    def dischargeDeadLock(strict: Boolean): Boolean =
-      SignatureStore.dischargeDeadLock(spark, name, strict)
-    def snapshot(): BandedStore.Snapshot = SignatureStore.snapshot(spark, name)
-    def rollback(snap: BandedStore.Snapshot): Unit = SignatureStore.rollback(spark, name, snap)
-    def compact(): Unit = SignatureStore.compact(spark, name)
-    def ensureRegistered(): Unit = SignatureStore.ensureRegistered(spark, name)
-    def drop(): Unit = SignatureStore.drop(spark, name)
   }
 
   private val emb: Kind = new Kind {
@@ -76,43 +80,32 @@ class BandedStoreSpec extends SparkSpec {
       EmbeddingStore.vecsTable(name) -> "vec_id")
     def build(buckets: Int): Unit =
       EmbeddingStore.build(spark, day(vecs, "vec_id", 0), name, buckets = buckets)
-    def ingest(): Unit = {
-      EmbeddingStore.ingest(spark, day(vecs, "vec_id", 1), name)
-      ()
+    def ingest(d: Int, onFlags: DataFrame => Unit): Seq[String] =
+      sorted(EmbeddingStore.ingest(spark, day(vecs, "vec_id", d), name, onFlags = onFlags))
+    def opsIngest(sink: Orchestrator.VersionedSink): Orchestrator.CorpusResult =
+      Orchestrator.corpusIngestEmbeddings(spark, name, day(vecs, "vec_id", 1), sink = sink)
+    /** A reband from a meta pinned one plane off the derived geometry;
+      * the streak the pin reset is put back first.
+      */
+    def regeometry(): Unit = {
+      val streak = EmbeddingStore.readAuditStreak(spark, name)
+      EmbeddingStore.pinMeta(spark, name, spark.table(metaTable).drop("commit")
+        .withColumn("planes", col("planes") + 1))
+      EmbeddingStore.writeAuditStreak(spark, name, streak)
+      val v = snapshot().version
+      assert(EmbeddingStore.reband(spark, name))
+      assert(snapshot().version == v + 1, "the reband is one publish")
     }
-    def locked(f: => Unit): Unit = EmbeddingStore.locked(spark, name)(f)
-    def recoverArbitrated(): Boolean = EmbeddingStore.recoverArbitrated(spark, name)
-    def unlock(): Unit = EmbeddingStore.unlock(spark, name)
-    def dischargeDeadLock(strict: Boolean): Boolean =
-      EmbeddingStore.dischargeDeadLock(spark, name, strict)
-    def snapshot(): BandedStore.Snapshot = EmbeddingStore.snapshot(spark, name)
-    def rollback(snap: BandedStore.Snapshot): Unit = EmbeddingStore.rollback(spark, name, snap)
-    def compact(): Unit = EmbeddingStore.compact(spark, name)
-    def ensureRegistered(): Unit = EmbeddingStore.ensureRegistered(spark, name)
-    def drop(): Unit = EmbeddingStore.drop(spark, name)
   }
 
   private lazy val fs = StoreGuard.tableLocation(spark, "any")
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** The lock file, a sibling of the meta dir. */
-  private def lockOf(k: Kind): Path = {
-    val m = StoreGuard.tableLocation(spark, k.metaTable)
-    new Path(m.getParent, m.getName + ".lock")
-  }
-
-  /** Claim `k`'s lock as the process with owner stamp `stamp` would. */
-  private def fakeLock(k: Kind, stamp: String): Unit = {
-    val out = fs.create(lockOf(k), true)
-    try out.write(stamp.getBytes("UTF-8")) finally out.close()
-  }
-
   /** A fresh store of kind `k` with `buckets` buckets, dropped after `f`. */
   private def withStore(k: Kind, buckets: Int = 16)(f: => Unit): Unit = {
-    fs.delete(lockOf(k), false)
     k.drop()
     k.build(buckets)
-    try f finally { fs.delete(lockOf(k), false); k.drop() }
+    try f finally k.drop()
   }
 
   /** The data columns of every data table of `k`, sorted. */
@@ -121,66 +114,174 @@ class BandedStoreSpec extends SparkSpec {
       spark.table(t).drop("commit").collect().map(_.toString).sorted.toSeq
     }
 
+  /** The commit dirs of `k`'s data tables written from version `base`. */
+  private def commitsFrom(k: Kind, base: Int): Seq[Path] =
+    k.tables.flatMap { case (t, _) =>
+      fs.listStatus(StoreGuard.tableLocation(spark, t)).map(_.getPath)
+        .filter(_.getName.startsWith(s"commit=c-v$base-"))
+    }
+
   Seq(text, emb).foreach { k =>
 
-    test(s"${k.label}: a second writer fails fast against locked") {
+    test(s"${k.label}: an ingest over a stale registration loses its publish; after a fresh registration it re-runs to the serial flags") {
       withStore(k) {
-        k.locked {
-          var err: Option[Throwable] = None
-          val th = new Thread(() =>
-            try k.compact() catch { case e: Throwable => err = Some(e) })
-          th.start(); th.join()
-          assert(err.exists(_.getMessage.contains("locked by a concurrent writer")), err)
-        }
-        assert(!fs.exists(lockOf(k)), "locked releases the lock")
+        val snap = k.snapshot()
+        val serial = k.ingest()
+        k.rollback(snap)
+        // registered at v; a second JVM publishes v+1 inside the ingest's
+        // window, and the ingest's joins never saw it
+        val v = k.store.guard(k.name).registered(spark)
+        assert(v == k.snapshot().version)
+        assert(foreignPublish(k.store, k.name) == v + 1)
+        val e = intercept[RuntimeException](k.ingest())
+        assert(e.getMessage.contains("concurrent commit"), e.getMessage)
+        assert(k.snapshot().version == v + 1, "the foreign version stays the newest")
+        assert(commitsFrom(k, v).isEmpty, "the loser deletes its commit")
+        freshRegistration(k.store, k.name)
+        assert(k.ingest() == serial, "the re-run flags as a serial run does")
+        assert(k.snapshot().version == v + 2)
       }
     }
 
-    test(s"${k.label}: recoverArbitrated restores the pending snapshot when the lock owner is dead") {
+    test(s"${k.label}: a dead writer's commits are never read; the next publish deletes those below its version and keeps the rest") {
       withStore(k) {
         k.ingest()
         val snap0 = k.snapshot()
         val rows0 = content(k)
-        // a writer died after its appends, before its publish: its
-        // commits are on disk, its stamped lock too, and no manifest
-        // names the commits — they are never read, here or in a fresh
-        // registration
-        val strays = k.tables.map { case (t, _) => strayCommit(t) }
+        val v = snap0.version
+        // writers that died before their publish, from version v (the next
+        // publish, v+1, beats them) and from v+1 (it could still publish)
+        val beaten = k.tables.map { case (t, _) => strayCommit(t, v) }
+        val pending = k.tables.map { case (t, _) => strayCommit(t, v + 1) }
         assert(k.snapshot() == snap0 && content(k) == rows0)
         freshRegistration(k.store, k.name)
         assert(content(k) == rows0, "a fresh registration reads the published commits only")
-        // a LIVE owner's lock is never discharged, its commits never deleted
-        fakeLock(k, StoreGuard.ownerStamp)
-        val live = intercept[RuntimeException](k.recoverArbitrated())
-        assert(live.getMessage.contains("STILL ALIVE"), live.getMessage)
-        assert(fs.exists(lockOf(k)) && strays.forall(fs.exists))
-        fakeLock(k, StoreGuard.ownerStampFor(deadPid()))
-        assert(k.recoverArbitrated(), "a dead owner's unpublished commits must be recovered")
-        assert(!strays.exists(fs.exists), "recovery deletes the unpublished commits")
-        assert(k.snapshot() == snap0 && content(k) == rows0)
-        assert(!fs.exists(lockOf(k)), "recovery releases the dead lock")
-        assert(!k.recoverArbitrated(), "nothing left after recovery")
+        k.ingest()
+        assert(k.snapshot().version == v + 1)
+        assert(!beaten.exists(fs.exists), "the publish deletes the commits it beat")
+        assert(pending.forall(fs.exists), "a commit from the published version survives")
+        k.ingest()
+        assert(!pending.exists(fs.exists), "the publish after it deletes it")
       }
     }
 
-    test(s"${k.label}: unlock and dischargeDeadLock, strict and non-strict") {
+    test(s"${k.label}: a compaction inside an ingest's window wins; the ingest fails and the compacted store reads back intact") {
+      withStore(k, buckets = 2) {
+        k.ingest()
+        val rows0 = content(k)
+        val v = k.snapshot().version
+        val e = intercept[RuntimeException](k.ingest(2, onFlags = _ => k.compact()))
+        assert(e.getMessage.contains("concurrent commit"), e.getMessage)
+        val won = k.snapshot()
+        assert(won.version == v + 1)
+        assert(k.tables.forall { case (t, _) => won.commits(t).size == 1 },
+          "the newest version is the compaction's")
+        assert(commitsFrom(k, v).map(_.getName).toSet ==
+          k.tables.map { case (t, _) => s"commit=${won.commits(t).head}" }.toSet,
+          "the ingest's commit is gone, the compaction's stays")
+        assert(content(k) == rows0)
+        freshRegistration(k.store, k.name)
+        assert(content(k) == rows0, "a fresh registration reads the compaction")
+      }
+    }
+
+    test(s"${k.label}: a replacing publish that prunes an ingest's target version inside its window keeps that version taken; the ingest loses") {
+      withStore(k, buckets = 2) {
+        k.ingest()
+        val rows0 = content(k)
+        val v = k.store.guard(k.name).registered(spark)
+        // while the ingest appends from v, a second JVM publishes v+1 and a
+        // compaction on top of it publishes v+2, pruning every version up
+        // to v+1
+        val e = intercept[RuntimeException](withRacing(k.store, k.name) {
+          assert(foreignPublish(k.store, k.name) == v + 1)
+          k.compact()
+        }(k.ingest(2)))
+        assert(e.getMessage.contains("concurrent commit"), e.getMessage)
+        val won = k.snapshot()
+        assert(won.version == v + 2)
+        assert(k.tables.forall { case (t, _) => won.commits(t).size == 1 },
+          "the newest version is the compaction's")
+        assert(commitsFrom(k, v).isEmpty, "the loser deletes its commit")
+        val dir = k.store.guard(k.name).manifestDir(spark)
+        assert((1 to v + 1).forall(ver => ManifestLog.read(fs, dir, ver).isEmpty),
+          "every pruned version stays as an empty file")
+        assert(content(k) == rows0)
+        freshRegistration(k.store, k.name)
+        assert(content(k) == rows0, "a fresh registration reads the compaction")
+        k.ingest(2)
+        assert(k.snapshot().version == v + 3)
+      }
+    }
+
+    test(s"${k.label}: the audit streak is a manifest line: a lost race re-applies the breach, a geometry publish resets it, a manifest without it reads 0") {
       withStore(k) {
-        assert(!k.dischargeDeadLock(strict = true), "no lock: nothing to discharge")
-        assert(!k.dischargeDeadLock(strict = false))
-        // a live owner: strict refuses loudly, non-strict leaves it
-        fakeLock(k, StoreGuard.ownerStamp)
-        val e = intercept[RuntimeException](k.dischargeDeadLock(strict = true))
-        assert(e.getMessage.contains("STILL ALIVE"), e.getMessage)
-        assert(!k.dischargeDeadLock(strict = false))
-        assert(fs.exists(lockOf(k)), "a live owner's lock is left alone")
-        k.unlock()
-        assert(!fs.exists(lockOf(k)), "unlock releases any lock")
-        // a dead owner: both modes discharge
-        Seq(true, false).foreach { strict =>
-          fakeLock(k, StoreGuard.ownerStampFor(deadPid()))
-          assert(k.dischargeDeadLock(strict), s"strict=$strict")
-          assert(!fs.exists(lockOf(k)), s"strict=$strict")
-        }
+        val g = k.store.guard(k.name)
+        val v0 = k.snapshot().version
+        k.store.clearAuditStreak(spark, k.name)
+        assert(k.snapshot().version == v0, "resetting a streak of 0 publishes nothing")
+        k.store.writeAuditStreak(spark, k.name, 1)
+        assert(k.snapshot().version == v0 + 1)
+        // a breach whose publish loses to a foreign one: it re-reads the
+        // newest streak and counts the breach on top of it
+        var raced = false
+        val n = g.updateStreak(spark, s => {
+          if (!raced) { raced = true; foreignPublish(k.store, k.name) }
+          s + 1
+        })
+        assert(n == 2 && k.store.readAuditStreak(spark, k.name) == 2)
+        assert(k.snapshot().version == v0 + 3, "the foreign publish, then the breach")
+        // a streak-only publish leaves the registration usable
+        freshRegistration(k.store, k.name)
+        k.store.writeAuditStreak(spark, k.name, 3)
+        k.ingest()
+        assert(k.store.readAuditStreak(spark, k.name) == 3, "an ingest keeps the streak")
+        // the geometry remediation resets it in its own publish
+        k.regeometry()
+        assert(k.store.readAuditStreak(spark, k.name) == 0)
+        // a store written before the streak moved into the manifest
+        k.store.writeAuditStreak(spark, k.name, 2)
+        foreignPublish(k.store, k.name, _.filterNot(_.startsWith("streak\t")))
+        assert(k.store.readAuditStreak(spark, k.name) == 0)
+      }
+    }
+
+    test(s"${k.label}: an ingest that loses its publish has nothing to roll back; a foreign publish on top of an ingest whose flag merge fails makes the rollback refuse, and the result says so") {
+      withStore(k) {
+        val root = java.nio.file.Files.createTempDirectory("graft-banded-flags").toString
+        def sink(beforePublish: => Unit) = Orchestrator.VersionedSink(
+          rootFor = p => s"$root/$p", onBeforePublish = () => beforePublish)
+        // alone, a failed flag merge rolls the ingest back; a suppressed
+        // exception the error carries (Spark's caller stack trace) is no
+        // rollback failure
+        val w = k.snapshot()
+        val undone = k.opsIngest(sink {
+          val e = new RuntimeException("flag merge died")
+          e.addSuppressed(new RuntimeException("the caller's stack trace"))
+          throw e
+        })
+        assert(undone.error.exists(e => e.contains("flag merge died") && !e.contains("ROLLBACK")),
+          undone.error)
+        assert(k.snapshot().commits == w.commits)
+        // a second JVM publishes while the ingest appends: the ingest's
+        // publish fails, and the rollback finds nothing of its own to undo
+        val u = k.snapshot().version
+        val lost = withRacingPublish(k.store, k.name)(k.opsIngest(sink(())))
+        assert(lost.error.exists(e => e.contains("concurrent commit") && !e.contains("ROLLBACK")),
+          lost.error)
+        assert(k.snapshot().version == u + 1 && k.snapshot().commits == w.commits)
+        // a second JVM publishes on top of the ingest before its flag merge
+        // fails: rolling back would drop that writer's version
+        val v = k.snapshot().version
+        val failed = k.opsIngest(sink {
+          foreignPublish(k.store, k.name)
+          sys.error("flag merge died")
+        })
+        val err = failed.error.getOrElse(fail("the ingest must fail"))
+        assert(err.contains("flag merge died") && err.contains("ROLLBACK ALSO FAILED") &&
+          err.contains("stale snapshot"), err)
+        assert(k.snapshot().version == v + 2, "the ingest and the foreign version stay")
+        assert(k.snapshot().commits != w.commits, "the ingest's appends remain")
       }
     }
 

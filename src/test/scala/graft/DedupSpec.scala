@@ -555,64 +555,14 @@ class DedupSpec extends SparkSpec {
     } finally SignatureStore.drop(spark, name)
   }
 
-  test("writer guard: concurrent ingest fails fast; rollback refuses a stale snapshot") {
-    import graft.dedup.SignatureStore
-    def doc(i: Int): String = (0 until 24).map(w => s"g${i}_$w").mkString(" ")
-    val hist = Seq((1L, doc(1))).toDF("doc_id", "text")
-    val batch = Seq((21L, doc(21))).toDF("doc_id", "text")
-    val name = "graft_guard_spec"
-    SignatureStore.drop(spark, name)
-    SignatureStore.build(spark, hist, name)
-    val metaLoc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.defaultTablePath(
-        org.apache.spark.sql.catalyst.TableIdentifier(SignatureStore.metaTable(name))))
-    val fs = metaLoc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lockFile = new org.apache.hadoop.fs.Path(
-      metaLoc.getParent, metaLoc.getName + ".lock")
-    val manifests = new org.apache.hadoop.fs.Path(
-      metaLoc.getParent, metaLoc.getName + ".manifest")
-    try {
-      // a held lock (another writer mid-ingest) must fail FAST, not
-      // interleave commits — and the error must name the recovery path
-      fs.createNewFile(lockFile)
-      val e = intercept[RuntimeException](SignatureStore.ingest(spark, batch, name))
-      assert(e.getMessage.contains("locked by a concurrent writer"))
-      assert(e.getMessage.contains("recover"))
-      SignatureStore.unlock(spark, name)
-      // after recovery the same ingest proceeds
-      val snap = SignatureStore.snapshot(spark, name)
-      SignatureStore.ingest(spark, batch, name)
-      // our OWN completed trial ingest stays undoable (the d08 pattern)…
-      SignatureStore.rollback(spark, name, snap)
-      assert(SignatureStore.snapshot(spark, name).commits == snap.commits)
-      // …but a version published by ANOTHER process since the snapshot
-      // (simulated by republishing the newest manifest under a writer
-      // tag this process never had) must make rollback refuse:
-      // republishing snap would drop that writer's commits
-      val v = SignatureStore.snapshot(spark, name).version
-      val in = fs.open(new org.apache.hadoop.fs.Path(manifests, f"manifest-v$v%08d.txt"))
-      val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      val out = fs.create(new org.apache.hadoop.fs.Path(manifests, f"manifest-v${v + 1}%08d.txt"))
-      try out.write(text.linesIterator
-        .map(l => if (l.startsWith("writer\t")) "writer\tfeedf00d" else l)
-        .mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-      val stale = intercept[RuntimeException](SignatureStore.rollback(spark, name, snap))
-      assert(stale.getMessage.contains("stale snapshot"))
-      // and the refusal must not leave the lock behind
-      assert(!fs.exists(lockFile))
-    } finally SignatureStore.drop(spark, name)
-  }
-
-  test("recover deletes a DEAD writer's unpublished commits and releases its lock; the store reads its last publish") {
+  test("a failed or dead writer's unpublished commits are never read; the store reads its last publish and the next publish deletes them") {
     import graft.dedup.{SignatureStore, StoreGuard}
     def doc(i: Int): String = (0 until 24).map(w => s"r${i}_$w").mkString(" ")
     val name = "graft_recover_spec"
     SignatureStore.drop(spark, name)
     SignatureStore.build(spark, Seq((1L, doc(1))).toDF("doc_id", "text"), name)
-    val metaLoc = StoreGuard.tableLocation(spark, SignatureStore.metaTable(name))
-    val fs = metaLoc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lockFile = new org.apache.hadoop.fs.Path(metaLoc.getParent, metaLoc.getName + ".lock")
+    val fs = StoreGuard.tableLocation(spark, SignatureStore.metaTable(name))
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tables = SignatureStore.dataTables(name)
     def rows(): Seq[Seq[String]] = tables.map(t =>
       spark.table(t).drop("commit").collect().map(_.toString).sorted.toSeq)
@@ -629,159 +579,15 @@ class DedupSpec extends SparkSpec {
       assert(SignatureStore.snapshot(spark, name) == preSnap && rows() == rows0)
       assert(tables.forall(t => fs.listStatus(StoreGuard.tableLocation(spark, t))
         .count(_.getPath.getName.startsWith("commit=")) == 1), "the failed commit must be gone")
-      assert(!fs.exists(lockFile))
-      // a writer that DIED (hard halt) after its appends: its commits and
-      // its stamped lock stay on disk, and no manifest names the commits
-      val strays = tables.map(strayCommit)
-      locally {
-        val lo = fs.create(lockFile, true)
-        try lo.write(StoreGuard.ownerStampFor(deadPid()).getBytes("UTF-8"))
-        finally lo.close()
-      }
+      // a writer that DIED (hard halt) after its appends: its commits stay
+      // on disk, and no manifest names them
+      val strays = tables.map(strayCommit(_, preSnap.version))
       assert(rows() == rows0)
       freshRegistration(SignatureStore, name)
       assert(rows() == rows0, "a fresh registration reads the last publish only")
-      // a live writer cannot get in while the corpse holds the lock
-      intercept[RuntimeException](
-        SignatureStore.ingest(spark, Seq((3L, doc(3))).toDF("doc_id", "text"), name))
-      // recover: deletes the unpublished commits, releases the lock
-      assert(SignatureStore.recover(spark, name))
-      assert(!strays.exists(fs.exists) && !fs.exists(lockFile))
-      assert(SignatureStore.snapshot(spark, name) == preSnap && rows() == rows0)
-      // and the store works again
+      // the store works on, and its next publish deletes the dead commits
       SignatureStore.ingest(spark, Seq((3L, doc(3))).toDF("doc_id", "text"), name)
-      // recover with nothing to recover is a no-op
-      assert(!SignatureStore.recover(spark, name))
-    } finally SignatureStore.drop(spark, name)
-  }
-
-  test("recover judges the FENCED state: live-writer lock refuses, own lock proceeds") {
-    // between a caller's dead-writer judgment and the cleanup, a FRESH
-    // writer can claim the free lock and start writing its commit —
-    // recover must fail fast on that verifiably live owner instead of
-    // deleting its unpublished commit. Under this thread's OWN lock
-    // (a caller bracketing recovery inside its critical section) it
-    // proceeds.
-    import graft.dedup.{SignatureStore, StoreGuard}
-    def doc(i: Int): String = (0 until 24).map(w => s"t${i}_$w").mkString(" ")
-    val name = "graft_recover_live_spec"
-    SignatureStore.drop(spark, name)
-    SignatureStore.build(spark, Seq((1L, doc(1))).toDF("doc_id", "text"), name)
-    val metaLoc = StoreGuard.tableLocation(spark, SignatureStore.metaTable(name))
-    val fs = metaLoc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lockFile = new org.apache.hadoop.fs.Path(metaLoc.getParent, metaLoc.getName + ".lock")
-    try {
-      val preSnap = SignatureStore.snapshot(spark, name)
-      val strays = SignatureStore.dataTables(name).map(strayCommit)
-      // a lock stamped by a LIVE pid with a foreign per-JVM uuid — what
-      // a concurrent writer that claimed since the caller's probe looks
-      // like. Deleting the unnamed commits now could delete its work.
-      locally {
-        val out = fs.create(lockFile, true)
-        try out.write(StoreGuard.ownerStampFor(
-          ProcessHandle.current().pid()).getBytes("UTF-8"))
-        finally out.close()
-      }
-      val live = intercept[RuntimeException](SignatureStore.recover(spark, name))
-      assert(live.getMessage.contains("ALIVE"), live.getMessage)
-      assert(fs.exists(lockFile) && strays.forall(fs.exists),
-        "the refused recovery must leave the live writer's lock and commits alone")
-      fs.delete(lockFile, false)
-      // under this thread's own lock the recovery proceeds
-      SignatureStore.locked(spark, name) {
-        assert(SignatureStore.recover(spark, name))
-        assert(fs.exists(lockFile), "recover must not release a lock it joined")
-      }
-      assert(!strays.exists(fs.exists) && !fs.exists(lockFile))
-      assert(SignatureStore.snapshot(spark, name) == preSnap)
-    } finally SignatureStore.drop(spark, name)
-  }
-
-  test("recover claim discipline: claims are stamped, unstamped survivors refuse, post-claim failures release the lock") {
-    import graft.dedup.{SignatureStore, StoreGuard}
-    def doc(i: Int): String = (0 until 24).map(w => s"c${i}_$w").mkString(" ")
-    val name = "graft_recover_claim_spec"
-    SignatureStore.drop(spark, name)
-    SignatureStore.build(spark, Seq((1L, doc(1))).toDF("doc_id", "text"), name)
-    val metaLoc = StoreGuard.tableLocation(spark, SignatureStore.metaTable(name))
-    val fs = metaLoc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lockFile = new org.apache.hadoop.fs.Path(metaLoc.getParent, metaLoc.getName + ".lock")
-    val manifests = new org.apache.hadoop.fs.Path(metaLoc.getParent, metaLoc.getName + ".manifest")
-    def strays(): Seq[org.apache.hadoop.fs.Path] = SignatureStore.dataTables(name).map(strayCommit)
-    try {
-      SignatureStore.ingest(spark, Seq((2L, doc(2))).toDF("doc_id", "text"), name)
-      val preSnap = SignatureStore.snapshot(spark, name)
-
-      // arm 1 — an UNSTAMPED lock refuses: its owner's deadness cannot
-      // be verified. The refusal leaves lock AND commits untouched, and
-      // carries the legacy-vs-crashed guidance.
-      val s1 = strays()
-      fs.create(lockFile, true).close() // bare, unstamped
-      val unstamped = intercept[RuntimeException](SignatureStore.recover(spark, name))
-      assert(unstamped.getMessage.contains("no owner stamp"), unstamped.getMessage)
-      assert(unstamped.getMessage.contains("PRE-STAMP LEGACY"), unstamped.getMessage)
-      assert(fs.exists(lockFile) && s1.forall(fs.exists),
-        "a refused recovery must leave the unverifiable state alone")
-      fs.delete(lockFile, false)
-
-      // arm 2 — recovery claims a free lock the way every writer does,
-      // and that claim carries this process's stamp before any cleanup:
-      // a recoverer that dies mid-way leaves a lock a successor can
-      // verify dead, and a concurrent recoverer reads a LIVE owner
-      var stampSeen: Option[StoreGuard.LockOwner] = None
-      SignatureStore.locked(spark, name) {
-        stampSeen = SignatureStore.guard(name).lockOwner(spark)
-        assert(SignatureStore.recover(spark, name))
-      }
-      assert(stampSeen.exists(_.pid == ProcessHandle.current().pid()),
-        s"the claim must carry this process's stamp, saw $stampSeen")
-      assert(!s1.exists(fs.exists) && !fs.exists(lockFile))
-      assert(SignatureStore.snapshot(spark, name) == preSnap)
-
-      // arm 3 — the crashed-recoverer state (its stamped lock, the
-      // commits it did not get to): a successor's recover() verifies the
-      // stamp dead and proceeds — no manual-unlock dead end remains
-      val s3 = strays()
-      locally {
-        val out = fs.create(lockFile, true)
-        try out.write(StoreGuard.ownerStampFor(deadPid()).getBytes("UTF-8"))
-        finally out.close()
-      }
-      assert(SignatureStore.recover(spark, name))
-      assert(!s3.exists(fs.exists) && !fs.exists(lockFile))
-      assert(SignatureStore.snapshot(spark, name) == preSnap)
-
-      // arm 4 — a failure AFTER a successful claim releases the lock: an
-      // unreadable newest manifest makes the cleanup throw
-      val s4 = strays()
-      val bad = new org.apache.hadoop.fs.Path(manifests,
-        f"manifest-v${preSnap.version + 1}%08d.txt")
-      locally {
-        val out = fs.create(bad, true)
-        try out.write("not a manifest line".getBytes("UTF-8")) finally out.close()
-      }
-      intercept[Exception](SignatureStore.recover(spark, name))
-      assert(!fs.exists(lockFile),
-        "a post-claim failure must release the claimed lock, not strand it")
-      fs.delete(bad, false)
-
-      // arm 5 — the same failure after discharging a dead predecessor's
-      // lock leaves nothing a fresh writer can trip on: the commits it
-      // left are never read, and the next publish deletes them
-      locally {
-        val out = fs.create(lockFile, true)
-        try out.write(StoreGuard.ownerStampFor(deadPid()).getBytes("UTF-8"))
-        finally out.close()
-        val b = fs.create(bad, true)
-        try b.write("not a manifest line".getBytes("UTF-8")) finally b.close()
-      }
-      intercept[Exception](SignatureStore.recover(spark, name))
-      assert(!fs.exists(lockFile))
-      fs.delete(bad, false)
-      assert(SignatureStore.snapshot(spark, name) == preSnap)
-      SignatureStore.ingest(spark, Seq((5L, doc(5))).toDF("doc_id", "text"), name)
-      assert(!s4.exists(fs.exists), "the next publish deletes the unnamed commits")
-      assert(!SignatureStore.recover(spark, name))
+      assert(!strays.exists(fs.exists))
     } finally SignatureStore.drop(spark, name)
   }
 

@@ -105,15 +105,19 @@ class EmbeddingStoreSpec extends SparkSpec {
       val pairs = EmbeddingStore.incrementalPairs(spark, empty, name)
       assert(pairs.columns.toSeq == Seq("hist_id", "new_id", "cosine"))
       assert(pairs.count() == 0)
-      // an empty-batch ingest mutates nothing: no publish, and a later
-      // recover() on the clean store is a no-op, not a false
-      // crashed-ingest report
+      // an empty-batch ingest mutates nothing: no publish, and no commit
+      // dir beside the published ones
       val before = EmbeddingStore.snapshot(spark, name)
       val flags = EmbeddingStore.ingest(spark, empty, name)
       assert(flags.count() == 0)
       assert(EmbeddingStore.snapshot(spark, name) == before)
-      assert(!EmbeddingStore.recover(spark, name),
-        "empty-batch ingest left something to recover")
+      EmbeddingStore.dataTables(name).foreach { t =>
+        val loc = graft.dedup.StoreGuard.tableLocation(spark, t)
+        val dirs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(loc)
+          .map(_.getPath.getName).filter(_.startsWith("commit=")).toSet
+        assert(dirs == before.commits.getOrElse(t, Nil).map("commit=" + _).toSet,
+          s"empty-batch ingest left an unnamed commit in $t: $dirs")
+      }
       // and the store still answers a real probe afterwards
       val live = EmbeddingStore.incrementalPairs(spark,
         Seq((11L, nearDup(1))).toDF("vec_id", "embedding"), name)
@@ -136,7 +140,7 @@ class EmbeddingStoreSpec extends SparkSpec {
         Seq((3L, vec(3))).toDF("vec_id", "embedding"), name)
       val e = intercept[RuntimeException](EmbeddingStore.rollback(spark, name, snap))
       assert(e.getMessage.contains("can only undo appends"), e.getMessage)
-      // the refusal left the rebuilt store fully intact and unlocked
+      // the refusal left the rebuilt store fully intact and writable
       assert(spark.table(EmbeddingStore.vecsTable(name)).count() == 1)
       EmbeddingStore.ingest(spark,
         Seq((4L, vec(4))).toDF("vec_id", "embedding"), name)

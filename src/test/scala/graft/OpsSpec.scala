@@ -539,8 +539,8 @@ class OpsSpec extends SparkSpec {
           bucketCap = cap)
       // the daily cron cadence runs one process per ingest, so nothing
       // of the process may carry the streak: the engine keeps no
-      // in-memory counter, and the DURABLE sidecar read below is the
-      // only state the alert can fire from
+      // in-memory counter, and the store manifest's streak read below is
+      // the only state the alert can fire from
       ingest(99L, cap = 1000) // seed so later twins share buckets
       assert(EmbeddingStore.readAuditStreak(spark, store) == 0)
       val b1 = ingest(100L, cap = 1)
@@ -573,34 +573,6 @@ class OpsSpec extends SparkSpec {
       org.apache.commons.io.FileUtils.deleteQuietly(
         new java.io.File(root.stripPrefix("file:")))
     }
-  }
-
-  test("streak sidecar robustness: absent and garbled files read as 0; write/clear round-trip; survives a catalog re-registration") {
-    import graft.dedup.{SignatureStore, StoreGuard}
-    val docs = (1L to 5L).map(i => (i, s"alpha$i beta$i gamma$i")).toDF("doc_id", "text")
-    val store = "graft_streak_robust_spec"
-    SignatureStore.drop(spark, store); SignatureStore.build(spark, docs, store)
-    try {
-      assert(SignatureStore.readAuditStreak(spark, store) == 0, "absent file is 0")
-      SignatureStore.writeAuditStreak(spark, store, 2)
-      assert(SignatureStore.readAuditStreak(spark, store) == 2)
-      // a garbled sidecar (torn write, manual edit) must read as 0, not
-      // throw in the middle of an ingest's critical section
-      val metaLoc = StoreGuard.tableLocation(spark, SignatureStore.metaTable(store))
-      val p = new org.apache.hadoop.fs.Path(metaLoc.getParent, metaLoc.getName + ".streak")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val out = fs.create(p, true)
-      try out.write("not-a-number".getBytes("UTF-8")) finally out.close()
-      assert(SignatureStore.readAuditStreak(spark, store) == 0, "garbled file is 0")
-      SignatureStore.writeAuditStreak(spark, store, 7)
-      assert(SignatureStore.readAuditStreak(spark, store) == 7, "overwrite recovers")
-      SignatureStore.clearAuditStreak(spark, store)
-      assert(SignatureStore.readAuditStreak(spark, store) == 0)
-      // drop clears the sidecar with the store
-      SignatureStore.writeAuditStreak(spark, store, 3)
-      SignatureStore.drop(spark, store)
-      assert(!fs.exists(p), "drop must clear the streak sidecar")
-    } finally SignatureStore.drop(spark, store)
   }
 
   test("monthly sweep opt-in remediation: breached store retuned + streak reset, non-breached untouched, failure isolated") {
@@ -873,28 +845,23 @@ class OpsSpec extends SparkSpec {
     assert(maints.forall(!_.skipped), maints)
   }
 
-  test("maintenance sweep isolates failures: a locked store cannot starve the others' compaction") {
+  test("maintenance sweep isolates failures: a store whose compaction loses a publish race cannot starve the others' compaction") {
     import graft.dedup.SignatureStore
     import graft.ops.Orchestrator
     import spark.implicits._
     val docs = (1L to 20L).map(i =>
       (i, s"alpha$i beta$i gamma$i delta$i epsilon$i zeta$i eta$i theta$i " +
         s"iota$i kappa$i lambda$i mu$i")).toDF("doc_id", "text")
-    val (locked, healthy) = ("graft_maint_locked", "graft_maint_healthy")
-    Seq(locked, healthy).foreach { n =>
+    val (racing, healthy) = ("graft_maint_racing", "graft_maint_healthy")
+    Seq(racing, healthy).foreach { n =>
       SignatureStore.drop(spark, n); SignatureStore.build(spark, docs, n)
     }
     try {
-      // a day's ingest puts the healthy store above its compaction floor
-      SignatureStore.ingest(spark,
-        Seq((100L, "nu nu xi omicron pi rho sigma tau upsilon")).toDF("doc_id", "text"), healthy)
+      // a day's ingest puts both stores above their compaction floor
+      Seq(racing, healthy).foreach(n => SignatureStore.ingest(spark,
+        Seq((100L, "nu nu xi omicron pi rho sigma tau upsilon")).toDF("doc_id", "text"), n))
       val before = SignatureStore.snapshot(spark, healthy)
-      val entered = new java.util.concurrent.CountDownLatch(1)
-      val release = new java.util.concurrent.CountDownLatch(1)
-      val writer = new Thread(() => SignatureStore.locked(spark, locked) {
-        entered.countDown(); release.await()
-      })
-      writer.start(); entered.await()
+      val racingV = SignatureStore.snapshot(spark, racing).version
       // the IVF units ride the same sweep: a healthy index after a
       // BOGUS root (whose retrain fails fast) must still get its slot
       import graft.similarity.IvfIndex
@@ -902,23 +869,33 @@ class OpsSpec extends SparkSpec {
         .toString + "/idx"
       IvfIndex.buildTrained(Tables.embeddings(spark, sfDir), "vec_id", "embedding",
         ivfRoot, nlist = 4, iters = 1, sampleMod = 2)
-      try {
-        // the locked store is FIRST in the sweep: its fail-fast must be
-        // contained, and the healthy store must still get its slot
-        val jobs = Orchestrator.scheduledJobs(spark, sfDir,
-          corpusStores = Seq(locked, healthy),
-          ivfIndexRoots = Seq("/tmp/graft-no-such-ivf-index", ivfRoot))
+      // the racing store is FIRST in the sweep: another writer publishes
+      // while its compaction rewrites, so the compaction fails; that
+      // failure must be contained, and the healthy store must still get
+      // its slot
+      val maint = new java.util.concurrent.ConcurrentLinkedQueue[Orchestrator.MaintainResult]()
+      val jobs = Orchestrator.scheduledJobs(spark, sfDir,
+        onMaintain = m => { maint.add(m); () },
+        corpusStores = Seq(racing, healthy),
+        ivfIndexRoots = Seq("/tmp/graft-no-such-ivf-index", ivfRoot))
+      withRacingPublish(SignatureStore, racing) {
         jobs.find(_.name == "monthly_maintenance").get.run()
-      } finally { release.countDown(); writer.join() }
+      }
+      assert(maint.toArray(Array.empty[Orchestrator.MaintainResult]).exists(m =>
+        m.pipeline.contains(racing) && m.error.exists(_.contains("concurrent commit"))),
+        maint)
+      val lost = SignatureStore.snapshot(spark, racing)
+      assert(lost.version == racingV + 1 && lost.commits.values.exists(_.size > 1),
+        "the racing writer's version stays the newest, uncompacted")
       // the healthy store's compaction published new commits, proving
       // it was reached
       assert(SignatureStore.snapshot(spark, healthy).commits != before.commits,
-        "healthy store was starved by the locked one")
+        "healthy store was starved by the racing one")
       // the healthy index was retrained in the same sweep (nlist derived
       // from its own centroid table), despite the bogus root before it
       assert(IvfIndex.live(spark, ivfRoot).version == 2,
         "healthy ivf index was starved by the bogus root")
-    } finally Seq(locked, healthy).foreach(SignatureStore.drop(spark, _))
+    } finally Seq(racing, healthy).foreach(SignatureStore.drop(spark, _))
   }
 
   test("Runner rejects a flag no branch reads; every documented flag parses") {
@@ -927,6 +904,10 @@ class OpsSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](Runner.parseOpts(Array(
       "--pipeline", "inventory", "--length", "2wk", "--sink", "managed", "--sf", sfDir)))
     assert(e.getMessage.contains("--sink"), e.getMessage)
+    Seq("--corpus-recover", "--corpus-recover-emb").foreach { f =>
+      val r = intercept[IllegalArgumentException](Runner.parseOpts(Array(f, "s", "--sf", sfDir)))
+      assert(r.getMessage.contains(f), r.getMessage)
+    }
     // every flag the CLI documents parses: Runner's scaladoc usage
     // block and README's `runMain graft.Runner` lines (with their
     // backslash-continued lines)

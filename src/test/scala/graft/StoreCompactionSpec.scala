@@ -8,10 +8,10 @@ import org.apache.hadoop.fs.Path
 /** Store-compaction and reband lifecycle: N daily ingests → `compact`
   * → file count back to the bucket floor with byte-identical probe
   * results in ONE publish; pre-compaction snapshots refuse to roll back;
-  * a live writer's lock makes compaction fail fast; and a compaction or
-  * reband that dies before or after its publish leaves a store that
-  * reads the same content, here and in a fresh registration, and that
-  * the next run completes.
+  * a compaction that loses its publish to another writer fails; and a
+  * compaction or reband that dies before or after its publish leaves a
+  * store that reads the same content, here and in a fresh registration,
+  * and that the next run completes.
   */
 class StoreCompactionSpec extends SparkSpec {
   import spark.implicits._
@@ -20,21 +20,12 @@ class StoreCompactionSpec extends SparkSpec {
   private lazy val fs =
     loc("any").getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Leave the lock a dead writer of `store` would leave. */
-  private def deadLock(store: BandedStore, name: String): Path = {
-    val m = loc(store.metaTable(name))
-    val p = new Path(m.getParent, m.getName + ".lock")
-    val out = fs.create(p, true)
-    try out.write(StoreGuard.ownerStampFor(deadPid()).getBytes("UTF-8")) finally out.close()
-    p
-  }
-
   /** Each data table's rows (data columns only), sorted. */
   private def rows(store: BandedStore, name: String): Seq[Seq[String]] =
     store.dataTables(name).map(t =>
       spark.table(t).drop("commit").collect().map(_.toString).sorted.toSeq)
 
-  test("signature store: ingests -> compact -> file floor, identical probe, one gen bump, stale snapshot refused, live lock fails fast") {
+  test("signature store: ingests -> compact -> file floor, identical probe, one publish, stale snapshot refused, a compaction that loses its publish fails") {
     val docs = Tables.documents(spark, sfDir)
     val name = "graft_compact_spec"
     SignatureStore.drop(spark, name)
@@ -67,18 +58,25 @@ class StoreCompactionSpec extends SparkSpec {
       SignatureStore.rollback(spark, name, preSnap))
     assert(e.getMessage.contains("cannot roll back"), e.getMessage)
 
-    // a live ingest's lock: compaction fails FAST, never interleaves
-    val entered = new java.util.concurrent.CountDownLatch(1)
-    val release = new java.util.concurrent.CountDownLatch(1)
-    val writer = new Thread(() => SignatureStore.locked(spark, name) {
-      entered.countDown(); release.await()
-    })
-    writer.start(); entered.await()
-    try {
-      val le = intercept[RuntimeException](SignatureStore.compact(spark, name))
-      assert(le.getMessage.contains("locked by a concurrent writer"), le.getMessage)
-    } finally { release.countDown(); writer.join() }
-    assert(probe() == p0)
+    // another writer publishes while the compaction rewrites: the
+    // compaction loses its publish, deletes its commits and fails, and
+    // the winner's version reads back intact
+    SignatureStore.ingest(spark, Seq((100000L, (0 until 24).map(w => s"late_$w")
+      .mkString(" "))).toDF("doc_id", "text"), name)
+    val v = SignatureStore.snapshot(spark, name).version
+    val rows1 = rows(SignatureStore, name)
+    val le = intercept[RuntimeException](
+      withRacingPublish(SignatureStore, name)(SignatureStore.compact(spark, name)))
+    assert(le.getMessage.contains("concurrent commit"), le.getMessage)
+    val won = SignatureStore.snapshot(spark, name)
+    assert(won.version == v + 1 && won.commits.values.exists(_.size > 1),
+      "the newest version is the racing writer's, uncompacted")
+    assert(tables.forall(t => fs.listStatus(loc(t)).map(_.getPath.getName)
+      .filter(_.startsWith("commit=")).toSet == won.commits(t).map(c => s"commit=$c").toSet),
+      "the loser's commits are gone")
+    assert(rows(SignatureStore, name) == rows1 && probe() == p0)
+    freshRegistration(SignatureStore, name)
+    assert(rows(SignatureStore, name) == rows1)
     SignatureStore.drop(spark, name)
   }
 
@@ -99,19 +97,21 @@ class StoreCompactionSpec extends SparkSpec {
     val bucketCols = Seq("band_key", "doc_id", "doc_id")
 
     // window 1: a compactor dead before its publish — its rewritten
-    // commits and its lock are on disk, no manifest names the commits.
-    // The next maintenance run registers the store (like Runner
-    // --maintain-store), recovers, and compacts.
+    // commits are on disk, no manifest names them. The next maintenance
+    // run registers the store (like Runner --maintain-store) and
+    // compacts, and its publish deletes them.
     tables.zip(bucketCols).foreach { case (t, c) =>
       BandedStore.writeBucketed(spark.table(t).drop("commit"), t, c, 16, "c-deadcompactor")
     }
-    val lock = deadLock(SignatureStore, name)
     freshRegistration(SignatureStore, name)
     assert(probe() == p0 && rows(SignatureStore, name) == rows0,
       "an unpublished compaction must never be read")
-    assert(SignatureStore.recover(spark, name))
-    assert(!fs.exists(lock))
+    SignatureStore.compact(spark, name)
     assert(tables.forall(t => !fs.exists(new Path(loc(t), "commit=c-deadcompactor"))))
+    assert(probe() == p0 && rows(SignatureStore, name) == rows0)
+    SignatureStore.ingest(spark, docs.filter(col("doc_id") % 5 === 3), name)
+    val p1 = probe()
+    val rows1 = rows(SignatureStore, name)
     val live = SignatureStore.snapshot(spark, name).commits
 
     // window 2: a compactor dead right after its publish, before it
@@ -129,13 +129,13 @@ class StoreCompactionSpec extends SparkSpec {
     SignatureStore.compact(spark, name)
     copies.foreach { case (dst, src) => assert(fs.rename(dst, src), s"restore $src") }
     fs.delete(aside, true)
-    assert(probe() == p0 && rows(SignatureStore, name) == rows0)
+    assert(probe() == p1 && rows(SignatureStore, name) == rows1)
     freshRegistration(SignatureStore, name)
-    assert(probe() == p0 && rows(SignatureStore, name) == rows0,
+    assert(probe() == p1 && rows(SignatureStore, name) == rows1,
       "the dropped commits are never read again")
-    assert(SignatureStore.recover(spark, name), "recover deletes the dropped commits")
-    assert(copies.forall { case (_, src) => !fs.exists(src) })
-    assert(probe() == p0)
+    SignatureStore.ingest(spark, docs.filter(col("doc_id") % 5 === 4), name)
+    assert(copies.forall { case (_, src) => !fs.exists(src) },
+      "the next publish deletes the dropped commits")
     SignatureStore.drop(spark, name)
   }
 
@@ -212,21 +212,21 @@ class StoreCompactionSpec extends SparkSpec {
       .collect().map(_.toString).sorted.toSeq
 
     // crash window: a rebander dead before its publish — its bands
-    // commit and its lock are on disk, no manifest names the commit.
-    // Bands and meta are still both on the old geometry, and the store
-    // answers exactly as before, here and in a fresh registration.
+    // commit is on disk, no manifest names it. Bands and meta are still
+    // both on the old geometry, and the store answers exactly as before,
+    // here and in a fresh registration.
     val before = probeOf(name)
     assert(before.nonEmpty)
-    val stray = strayCommit(EmbeddingStore.bandsTable(name))
-    val lock = deadLock(EmbeddingStore, name)
+    val stray = strayCommit(EmbeddingStore.bandsTable(name),
+      EmbeddingStore.snapshot(spark, name).version)
     freshRegistration(EmbeddingStore, name)
     assert(metaSpec() == Similarity.lshSpecFor(100) && probeOf(name) == before)
-    assert(EmbeddingStore.recover(spark, name))
-    assert(!fs.exists(stray) && !fs.exists(lock))
 
-    // the re-run heals: bands and meta move together
+    // the re-run heals: bands and meta move together, and its publish
+    // deletes the dead rebander's commit
     assert(EmbeddingStore.reband(spark, name))
     assert(metaSpec() == Similarity.lshSpecFor(n))
+    assert(!fs.exists(stray))
     // the re-banded store answers probes exactly like a FRESH build of
     // the same corpus (geometry and bands agree by construction)
     val fresh = "graft_reband_fresh"
@@ -257,16 +257,15 @@ class StoreCompactionSpec extends SparkSpec {
       // a rebander dead anywhere before its publish: whatever it wrote
       // is unnamed, so bands and meta still agree and the twin still
       // matches — no window where banding silently misses
-      val stray = strayCommit(EmbeddingStore.bandsTable(name))
-      val lock = deadLock(EmbeddingStore, name)
+      val v0 = EmbeddingStore.snapshot(spark, name).version
+      val stray = strayCommit(EmbeddingStore.bandsTable(name), v0)
       freshRegistration(EmbeddingStore, name)
       assert(pairs() == p0)
-      assert(EmbeddingStore.recover(spark, name))
-      assert(!fs.exists(stray) && !fs.exists(lock))
-      // the completed reband moves bands and meta in one publish
-      val v0 = EmbeddingStore.snapshot(spark, name).version
+      // the completed reband moves bands and meta in one publish, which
+      // deletes the dead rebander's commit
       assert(EmbeddingStore.reband(spark, name))
       assert(EmbeddingStore.snapshot(spark, name).version == v0 + 1)
+      assert(!fs.exists(stray))
       val m = spark.table(EmbeddingStore.metaTable(name)).head()
       assert((m.getAs[Int]("planes"), m.getAs[Int]("band_bits")) == Similarity.lshSpecFor(50))
       assert(pairs().contains((1L, 1000L)), "an exact twin matches on any geometry")
@@ -285,7 +284,8 @@ class StoreCompactionSpec extends SparkSpec {
     try {
       val rows0 = rows(EmbeddingStore, name)
       // what any dead writer leaves: commit dirs beside the live ones
-      val strays = EmbeddingStore.dataTables(name).map(strayCommit)
+      val v = EmbeddingStore.snapshot(spark, name).version
+      val strays = EmbeddingStore.dataTables(name).map(strayCommit(_, v))
       assert(rows(EmbeddingStore, name) == rows0)
       freshRegistration(EmbeddingStore, name)
       assert(rows(EmbeddingStore, name) == rows0, "a fresh registration ignores them too")
@@ -334,8 +334,11 @@ class StoreCompactionSpec extends SparkSpec {
       val r = new scala.util.Random(i)
       (i.toLong, Array.fill(8)(r.nextGaussian().toFloat))
     }.toDF("vec_id", "embedding")
-    def manifests(name: String): Seq[String] =
-      fs.listStatus(EmbeddingStore.guard(name).manifestDir(spark)).map(_.getPath.getName)
+    // the live manifests; a pruned one stays as an empty file, so its
+    // version stays taken
+    def manifests(name: String, pruned: Boolean = false): Seq[String] =
+      fs.listStatus(EmbeddingStore.guard(name).manifestDir(spark))
+        .filter(st => (st.getLen == 0) == pruned).map(_.getPath.getName)
         .filter(_.startsWith("manifest-")).toSeq.sorted
     val name = "graft_manifest_prune_spec"
     EmbeddingStore.drop(spark, name)
@@ -346,6 +349,7 @@ class StoreCompactionSpec extends SparkSpec {
       assert(manifests(name).size == 3, manifests(name))
       EmbeddingStore.compact(spark, name)
       assert(manifests(name) == Seq("manifest-v00000004.txt"), manifests(name))
+      assert(manifests(name, pruned = true).size == 3, manifests(name, pruned = true))
       val snap = EmbeddingStore.snapshot(spark, name)
       val rows0 = rows(EmbeddingStore, name)
       EmbeddingStore.ingest(spark, vecs(300 until 304), name)

@@ -308,6 +308,16 @@ class StreamingSpec extends SparkSpec {
       val after = spark.read.parquet(s"$flagsRoot/batch_id=$b0")
         .collect().map(_.toString).sorted.toSeq
       assert(after == before, "replayed flag partition must be identical")
+
+      // a re-initialised store is empty and holds no batch: the same
+      // batch runs again and its survivors land in the new store
+      graft.ops.Orchestrator.corpusInit(spark, sName)
+      assert(!SignatureStore.committed(spark, sName, (flagsRoot, b0)))
+      assert(spark.table(SignatureStore.sizesTable(sName)).count() == 0)
+      CorpusStream.ingestBatch(spark, b0docs, sName, flagsRoot, b0)
+      assert(SignatureStore.committed(spark, sName, (flagsRoot, b0)))
+      val kept = spark.read.parquet(s"$flagsRoot/batch_id=$b0").filter(!col("is_dup")).count()
+      assert(kept > 0 && spark.table(SignatureStore.sizesTable(sName)).count() == kept)
     } finally {
       Seq(sName, bName).foreach(SignatureStore.drop(spark, _))
     }
@@ -371,6 +381,16 @@ class StreamingSpec extends SparkSpec {
       val after = spark.read.parquet(s"$flagsRoot/batch_id=$b0")
         .collect().map(_.toString).sorted.toSeq
       assert(after == before, "replayed flag partition must be identical")
+
+      // a re-initialised store is empty and holds no batch: the same
+      // batch runs again and its survivors land in the new store
+      graft.ops.Orchestrator.corpusInitEmbeddings(spark, sName)
+      assert(!EmbeddingStore.committed(spark, sName, (flagsRoot, b0)))
+      assert(spark.table(EmbeddingStore.vecsTable(sName)).count() == 0)
+      CorpusStream.ingestEmbeddingsBatch(spark, b0vecs, sName, flagsRoot, b0)
+      assert(EmbeddingStore.committed(spark, sName, (flagsRoot, b0)))
+      val kept = spark.read.parquet(s"$flagsRoot/batch_id=$b0").filter(!col("is_dup")).count()
+      assert(kept > 0 && spark.table(EmbeddingStore.vecsTable(sName)).count() == kept)
     } finally {
       Seq(sName, bName).foreach(EmbeddingStore.drop(spark, _))
     }
@@ -422,17 +442,6 @@ class StreamingSpec extends SparkSpec {
     } finally EmbeddingStore.drop(spark, sName)
   }
 
-  /** Leave the lock a dead writer of store `name` would leave. */
-  private def deadLockOf(store: graft.dedup.BandedStore, name: String)
-      : org.apache.hadoop.fs.Path = {
-    import graft.dedup.StoreGuard
-    val m = StoreGuard.tableLocation(spark, store.metaTable(name))
-    val p = new org.apache.hadoop.fs.Path(m.getParent, m.getName + ".lock")
-    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
-    try out.write(StoreGuard.ownerStampFor(deadPid()).getBytes("UTF-8")) finally out.close()
-    p
-  }
-
   test("corpus ingest crash windows: death after appends recovers and re-runs identically; death before pending-clear discharges and skips") {
     import graft.streaming.CorpusStream
     import graft.dedup.{SignatureStore, StoreGuard}
@@ -452,33 +461,28 @@ class StreamingSpec extends SparkSpec {
     def committed(b: Long) = SignatureStore.committed(spark, sName, (flagsRoot, b))
     try {
       // window A: the writer dies AFTER the appends, BEFORE the publish
-      // — flags are on disk, its commits and its dead lock too, and no
-      // manifest names the commits
+      // — flags are on disk, its commits too, and no manifest names them
       val e = intercept[RuntimeException](SignatureStore.ingest(spark, batch, sName,
         onFlags = f => f.write.mode("overwrite").parquet(part),
         onStage = (label, _) => if (label == "appends") sys.error("died before the publish")))
       assert(e.getMessage.contains("died"), e.getMessage)
-      val strays = tables.map(strayCommit)
-      val lockP = deadLockOf(SignatureStore, sName)
+      val strays = tables.map(strayCommit(_, SignatureStore.snapshot(spark, sName).version))
       assert(!committed(7L))
-      // the redelivered batch must clear the dead attempt and re-run to
-      // the IDENTICAL flags — never re-dedupe the batch against its own
-      // survivors
+      // the redelivered batch re-runs to the IDENTICAL flags — never
+      // re-dedupes the batch against its own survivors — and its publish
+      // deletes the dead attempt's commits
       CorpusStream.ingestBatch(spark, batch, sName, flagsRoot, 7L)
       assert(committed(7L), "re-run must commit")
-      assert(!strays.exists(fs.exists) && !fs.exists(lockP))
+      assert(!strays.exists(fs.exists))
       val got = spark.read.parquet(part).collect().map(_.toString).sorted.toSeq
       val want = SignatureStore.ingest(spark, batch, bName)
         .collect().map(_.toString).sorted.toSeq
       assert(got == want, "recovered re-run must reproduce the batch-API flags")
 
-      // window B: the writer dies right AFTER its publish, holding its
-      // lock — a replay must SKIP the ingest, discharge the dead lock,
-      // and leave store + flags untouched
-      deadLockOf(SignatureStore, sName)
+      // window B: the writer dies right AFTER its publish — a replay
+      // must SKIP the ingest and leave store + flags untouched
       val files0 = tables.map(StoreGuard.dataFileCount(spark, _)).sum
       CorpusStream.ingestBatch(spark, batch, sName, flagsRoot, 7L)
-      assert(!fs.exists(lockP), "dead writer's lock must be released")
       assert(tables.map(StoreGuard.dataFileCount(spark, _)).sum == files0,
         "skip path must not touch the store")
       assert(spark.read.parquet(part).collect().map(_.toString).sorted.toSeq == got,
@@ -496,29 +500,6 @@ class StreamingSpec extends SparkSpec {
         val j = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
         assert(j.contains("\"occupied_buckets\":") && j.contains("\"max_bucket\":"), j)
       }
-
-      // window C: the writer dies between lock acquisition and its
-      // first write — a dead lock and nothing else. The stream must
-      // verify the stamped owner is DEAD, discharge the stale lock, and
-      // run the batch to a normal commit instead of crash-looping on it.
-      deadLockOf(SignatureStore, sName)
-      // proof the lock genuinely blocks a direct ingest
-      val locked = intercept[RuntimeException](
-        SignatureStore.ingest(spark, docs.filter(col("doc_id") % 10 === 3), sName))
-      assert(locked.getMessage.contains("locked"), locked.getMessage)
-      CorpusStream.ingestBatch(spark, docs.filter(col("doc_id") % 10 === 3),
-        sName, flagsRoot, 9L)
-      assert(committed(9L), "stale lock must be discharged, not crash-looped on")
-      assert(!fs.exists(lockP), "batch completion releases the discharged lock")
-
-      // a replay of a committed batch must not delete a lock some other
-      // (live or unverifiable) writer holds
-      fs.createNewFile(lockP)
-      CorpusStream.ingestBatch(spark, docs.filter(col("doc_id") % 10 === 3),
-        sName, flagsRoot, 9L)
-      assert(fs.exists(lockP),
-        "committed-batch replay must not break a live writer's lock")
-      fs.delete(lockP, false)
     } finally {
       Seq(sName, bName).foreach(SignatureStore.drop(spark, _))
     }
@@ -545,15 +526,15 @@ class StreamingSpec extends SparkSpec {
       df.select("vec_id", "is_dup", "dup_of").collect().map(_.toString).sorted.toSeq
     try {
       // the writer dies after its flags and appends, BEFORE the publish:
-      // flags on disk, its commits and dead lock too, none of it named
+      // flags on disk, its commits too, none of it named
       intercept[RuntimeException](EmbeddingStore.ingest(spark, batch, sName,
         onFlags = f => { f.write.mode("overwrite").parquet(part); sys.error("died") }))
-      val strays = EmbeddingStore.dataTables(sName).map(strayCommit)
-      deadLockOf(EmbeddingStore, sName)
+      val strays = EmbeddingStore.dataTables(sName)
+        .map(strayCommit(_, EmbeddingStore.snapshot(spark, sName).version))
       assert(!EmbeddingStore.committed(spark, sName, (flagsRoot, 7L)))
-      // the redelivered batch must clear the dead attempt and re-run to
-      // the IDENTICAL flags — re-deduping the batch against its own
-      // appended survivors would flag them all
+      // the redelivered batch re-runs to the IDENTICAL flags —
+      // re-deduping the batch against its own appended survivors would
+      // flag them all — and its publish deletes the dead attempt's commits
       CorpusStream.ingestEmbeddingsBatch(spark, batch, sName, flagsRoot, 7L)
       assert(EmbeddingStore.committed(spark, sName, (flagsRoot, 7L)), "re-run must commit")
       assert(!strays.exists(fs.exists))
@@ -605,8 +586,7 @@ class StreamingSpec extends SparkSpec {
       freshRegistration(SignatureStore, sName)
 
       // the after-flags crash window for batch 1 (what --inject-crash
-      // after-flags leaves): a flags partition, no publish, and the
-      // hard-halted writer's stamped lock
+      // after-flags leaves): a flags partition and no publish
       val batch1 = docs.filter(col("doc_id") % 10 === 2)
       val part1 = s"$flagsRoot/batch_id=1"
       val e = intercept[RuntimeException](SignatureStore.ingest(spark, batch1, sName,
@@ -616,24 +596,19 @@ class StreamingSpec extends SparkSpec {
         }))
       assert(e.getMessage.contains("halt after flags"), e.getMessage)
       val preCrashFlags = spark.read.parquet(part1).collect().map(_.toString).sorted.toSeq
-      val lockP = deadLockOf(SignatureStore, sName)
       freshRegistration(SignatureStore, sName)
-      // the redelivered batch must discharge the dead lock, re-run
-      // through the fresh entries, and commit IDENTICAL flags
+      // the redelivered batch re-runs through the fresh entries and
+      // commits IDENTICAL flags
       CorpusStream.ingestBatch(spark, batch1, sName, flagsRoot, 1L)
       assert(committed(1L))
       assert(spark.read.parquet(part1).collect().map(_.toString).sorted.toSeq
         == preCrashFlags, "replayed flags must be idempotent")
-      assert(!fs.exists(lockP), "the dead writer's lock must be released")
 
       // the after-commit window (what --inject-crash after-marker
-      // leaves): batch 1 published, its writer's dead lock still on
-      // disk — the replay must discharge and SKIP
-      deadLockOf(SignatureStore, sName)
+      // leaves): batch 1 published — the replay must SKIP
       freshRegistration(SignatureStore, sName)
       val filesBefore = dataFiles
       CorpusStream.ingestBatch(spark, batch1, sName, flagsRoot, 1L)
-      assert(!fs.exists(lockP), "the dead lock must be discharged on the committed replay")
       assert(dataFiles == filesBefore, "skip path must not touch the store")
 
       // the store stays fully usable through the fresh entries: a
@@ -646,99 +621,68 @@ class StreamingSpec extends SparkSpec {
     } finally SignatureStore.drop(spark, sName)
   }
 
-  test("owner-stamped locks: a LIVE foreign writer's lock fails the batch fast; maintenance and a stream interleave safely") {
+  test("a batch that loses its publish to another writer fails, and its redelivery commits on top of that writer; maintenance and a stream interleave safely") {
     import graft.streaming.CorpusStream
-    import graft.dedup.{SignatureStore, StoreGuard}
+    import graft.dedup.SignatureStore
     val docs = Tables.documents(spark, sfDir)
     val sName = "graft_cstream_owner_spec"
-    SignatureStore.drop(spark, sName)
-    SignatureStore.build(spark, docs.filter(col("doc_id") % 10 === 0), sName)
-    val flagsRoot = java.nio.file.Files.createTempDirectory("graft-owner-flags").toString
-    val metaLoc = StoreGuard.tableLocation(spark, SignatureStore.metaTable(sName))
-    val lockP = new org.apache.hadoop.fs.Path(metaLoc.getParent, metaLoc.getName + ".lock")
-    val fs = lockP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val batch = docs.filter(col("doc_id") % 10 === 1)
-    def liveLock(): Unit = {
-      val out = fs.create(lockP, true)
-      try out.write(StoreGuard.ownerStampFor(
-        ProcessHandle.current().pid()).getBytes("UTF-8"))
-      finally out.close()
+    val bName = "graft_cbatch_owner_spec"
+    Seq(sName, bName).foreach { n =>
+      SignatureStore.drop(spark, n)
+      SignatureStore.build(spark, docs.filter(col("doc_id") % 10 === 0), n)
     }
+    val flagsRoot = java.nio.file.Files.createTempDirectory("graft-owner-flags").toString
+    val fs = new org.apache.hadoop.fs.Path(flagsRoot)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def committed(b: Long) = SignatureStore.committed(spark, sName, (flagsRoot, b))
+    def flagsOf(b: Long): Seq[String] = spark.read.parquet(s"$flagsRoot/batch_id=$b")
+      .select("doc_id", "is_dup", "dup_of").collect().map(_.toString).sorted.toSeq
+    def serial(d: Int): Seq[String] = SignatureStore.ingest(spark,
+      docs.filter(col("doc_id") % 10 === d), bName).collect().map(_.toString).sorted.toSeq
     def rows(): Seq[Seq[String]] = SignatureStore.dataTables(sName).map(t =>
       spark.table(t).drop("commit").collect().map(_.toString).sorted.toSeq)
     try {
-      // a lock stamped by a LIVE pid (this very JVM — what a concurrent
-      // maintenance sweep in another session looks like): the batch
-      // must FAIL with instructions, never silently delete the lock
-      liveLock()
-      val live = intercept[RuntimeException](
-        CorpusStream.ingestBatch(spark, batch, sName, flagsRoot, 0L))
-      assert(live.getMessage.contains("STILL ALIVE"), live.getMessage)
-      assert(fs.exists(lockP), "a live foreign writer's lock must survive the failed batch")
+      // another JVM publishes inside the batch's window (after its flags,
+      // before its publish): the batch fails and is not committed
+      val batch0 = docs.filter(col("doc_id") % 10 === 1)
+      val v = SignatureStore.snapshot(spark, sName).version
+      val lost = intercept[RuntimeException](CorpusStream.ingestBatch(spark, batch0, sName,
+        flagsRoot, 0L, onFlagsWritten = () => foreignPublish(SignatureStore, sName)))
+      assert(lost.getMessage.contains("concurrent commit"), lost.getMessage)
+      assert(!committed(0L) && SignatureStore.snapshot(spark, sName).version == v + 1)
+      // its redelivery runs on top of the foreign version
+      CorpusStream.ingestBatch(spark, batch0, sName, flagsRoot, 0L)
+      assert(committed(0L) && flagsOf(0L) == serial(1))
 
-      // an UNSTAMPED lock (external tool, pre-stamp writer): deadness
-      // is unverifiable, so the batch must also fail fast
-      locally {
-        val out = fs.create(lockP, true)
-        try out.write(Array.emptyByteArray) finally out.close()
-      }
-      val unk = intercept[RuntimeException](
-        CorpusStream.ingestBatch(spark, batch, sName, flagsRoot, 0L))
-      assert(unk.getMessage.contains("no owner stamp"), unk.getMessage)
-      // the refusal carries the operator's disambiguation guidance:
-      // every engine claim path stamps, so an unstamped lock is a
-      // pre-stamp legacy writer's or a crash inside the create→stamp
-      // window — the message must say which and how to tell
-      assert(unk.getMessage.contains("PRE-STAMP LEGACY"), unk.getMessage)
-      assert(unk.getMessage.contains("create→stamp window"), unk.getMessage)
-      fs.delete(lockP, false)
+      // live interleave: the monthly compaction runs while a micro-batch
+      // is in flight — the compaction publishes first, the batch fails,
+      // and its redelivery commits on top of the compacted store
+      val batch1 = docs.filter(col("doc_id") % 10 === 2)
+      val busy = intercept[RuntimeException](CorpusStream.ingestBatch(spark, batch1, sName,
+        flagsRoot, 1L, onFlagsWritten = () => SignatureStore.compact(spark, sName)))
+      assert(busy.getMessage.contains("concurrent commit"), busy.getMessage)
+      assert(SignatureStore.snapshot(spark, sName).commits.values.forall(_.size == 1),
+        "the compaction's version is the newest")
+      CorpusStream.ingestBatch(spark, batch1, sName, flagsRoot, 1L)
+      assert(committed(1L) && flagsOf(1L) == serial(2),
+        "after the compaction the stream proceeds normally")
 
-      // live interleave: maintenance (compact) holds the real lock in
-      // another thread while a micro-batch arrives — the batch fails
-      // fast; once maintenance releases, the SAME batch commits
-      val hold = new java.util.concurrent.CountDownLatch(1)
-      val release = new java.util.concurrent.CountDownLatch(1)
-      val t = new Thread(() => SignatureStore.locked(spark, sName) {
-        hold.countDown(); release.await()
-      })
-      t.start(); hold.await()
-      try {
-        val busy = intercept[RuntimeException](
-          CorpusStream.ingestBatch(spark, batch, sName, flagsRoot, 1L))
-        assert(busy.getMessage.contains("STILL ALIVE"), busy.getMessage)
-      } finally { release.countDown(); t.join() }
-      CorpusStream.ingestBatch(spark, batch, sName, flagsRoot, 1L)
-      assert(SignatureStore.committed(spark, sName, (flagsRoot, 1L)),
-        "after maintenance releases the lock the stream proceeds normally")
-
-      // a LIVE foreign ingest mid-flight (its unpublished commits and
-      // its live lock): BOTH replay arms leave its state alone. The
-      // plain-run arm fails fast instead of deleting the live writer's
-      // commits; a committed-batch replay touches nothing.
+      // a foreign ingest mid-flight (its unpublished commits, written
+      // from the newest version): a committed-batch replay publishes
+      // nothing and touches none of it, and none of it is ever read
       val rows0 = rows()
-      val strays = SignatureStore.dataTables(sName).map(strayCommit)
-      liveLock()
-      val liveRec = intercept[RuntimeException](
-        CorpusStream.ingestBatch(spark, batch, sName, flagsRoot, 5L))
-      assert(liveRec.getMessage.contains("STILL ALIVE"), liveRec.getMessage)
-      assert(fs.exists(lockP) && strays.forall(fs.exists),
-        "a live writer's commits and lock must survive the refused recovery")
-      CorpusStream.ingestBatch(spark, batch, sName, flagsRoot, 1L)
-      assert(fs.exists(lockP) && strays.forall(fs.exists),
-        "a committed replay must not touch a live writer's commits or lock")
+      val strays = SignatureStore.dataTables(sName)
+        .map(strayCommit(_, SignatureStore.snapshot(spark, sName).version))
+      CorpusStream.ingestBatch(spark, batch1, sName, flagsRoot, 1L)
+      assert(strays.forall(fs.exists) && rows() == rows0,
+        "a committed replay must not touch an in-flight writer's commits")
+      freshRegistration(SignatureStore, sName)
       assert(rows() == rows0, "an in-flight writer's commits are never read")
-
-      // the same writer found DEAD: the committed replay releases its
-      // lock and still reads none of its commits; the next batch's
-      // recovery deletes them
-      fs.delete(lockP, false)
-      deadLockOf(SignatureStore, sName)
-      CorpusStream.ingestBatch(spark, batch, sName, flagsRoot, 1L)
-      assert(!fs.exists(lockP) && rows() == rows0,
-        "a dead foreign writer's commits must never be adopted")
-      CorpusStream.ingestBatch(spark, docs.filter(col("doc_id") % 10 === 2),
+      // the next batch's publish beats that writer and deletes its commits
+      CorpusStream.ingestBatch(spark, docs.filter(col("doc_id") % 10 === 3),
         sName, flagsRoot, 2L)
-      assert(!strays.exists(fs.exists), "the next batch deletes the dead writer's commits")
-    } finally SignatureStore.drop(spark, sName)
+      assert(committed(2L) && !strays.exists(fs.exists),
+        "the next batch deletes the beaten writer's commits")
+    } finally Seq(sName, bName).foreach(SignatureStore.drop(spark, _))
   }
 }
