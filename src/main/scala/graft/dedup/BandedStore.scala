@@ -4,8 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The skeleton of an incremental banded corpus store: a one-row meta
-  * table plus bucketed data tables, one of them the `band_key`-bucketed
-  * LSH candidate index, whose writers commit through [[StoreGuard]].
+  * table plus bucketed data tables, one of them the (id, `band_key`)
+  * LSH candidate index bucketed by `band_key`, whose writers commit
+  * through [[StoreGuard]]. A data table holds only the columns the
+  * store's reads use.
   * [[SignatureStore]] (MinHash bands, exact-Jaccard verify) and
   * [[graft.similarity.EmbeddingStore]] (sign-bit bands, exact-cosine
   * verify) extend it; everything here is the same for both, and what
@@ -316,8 +318,8 @@ object BandedStore {
       .write.mode("append").insertInto(table)
   }
 
-  /** `band:band_hash`, the LSH candidate join key every band table is
-    * bucketed by.
+  /** `band:band_hash` of a signature row, the LSH candidate join key
+    * every band table stores and is bucketed by.
     */
   def bandKey: org.apache.spark.sql.Column = concat_ws(":", col("band"), col("band_hash"))
 

@@ -14,15 +14,14 @@ import Overlap.{overlapped, overlapped2}
   * (same discipline as the bucketed MERGE in
   * [[graft.sinks.TableManager]], where only the updates side shuffles).
   *
-  * Three bucketed managed tables per store (plus a one-row spec table
+  * Two bucketed managed tables per store (plus a one-row spec table
   * so probes can never drift from the build parameters):
-  *  - `<name>_bands`    (doc_id, band, band_hash, band_key) bucketed by
-  *    `band_key` — the LSH candidate join key.
+  *  - `<name>_bands`    (doc_id, band_key) bucketed by `band_key` — the
+  *    LSH candidate join key.
   *  - `<name>_shingles` (doc_id, shingle) df-capped inverted index
-  *    bucketed by `doc_id` — the exact-Jaccard re-verify side.
-  *  - `<name>_sizes`    (doc_id, n_sh) — per-doc surviving-shingle
-  *    counts for the Jaccard denominator, bucketed by `doc_id` (one row
-  *    per historical document — at scale this is as big as the corpus).
+  *    bucketed by `doc_id` — the exact-Jaccard re-verify side; the join
+  *    that reads a candidate's shingles also counts them, which is the
+  *    Jaccard denominator's stored-side size.
   *
   * Semantics note: MinHash signatures depend only on a document's own
   * shingles, so band signatures are corpus-independent and cross-corpus
@@ -73,7 +72,6 @@ object SignatureStore extends BandedStore {
 
   def bandsTable(name: String): String = s"${name}_bands"
   def shinglesTable(name: String): String = s"${name}_shingles"
-  def sizesTable(name: String): String = s"${name}_sizes"
 
   def kind: String = "signature"
   def idCol: String = "doc_id"
@@ -83,14 +81,12 @@ object SignatureStore extends BandedStore {
   protected def metaSchema: String =
     "`k` INT, `bands` INT, `max_df` INT, `buckets` INT, `rows` INT"
   protected def layout: Seq[(String, String, String)] = Seq(
-    ("_bands", "band_key", "`doc_id` BIGINT, `band` INT, `band_hash` STRING, `band_key` STRING"),
-    ("_shingles", "doc_id", "`shingle` STRING, `doc_id` BIGINT"),
-    ("_sizes", "doc_id", "`doc_id` BIGINT, `n_sh` BIGINT"))
+    ("_bands", "band_key", "`doc_id` BIGINT, `band_key` STRING"),
+    ("_shingles", "doc_id", "`shingle` STRING, `doc_id` BIGINT"))
 
   /** Hash, band, and index the historical corpus into the store's
-    * bucketed tables. One pass over `history` for signatures and one for
-    * the inverted index; the index is pinned so its sizes aggregate does
-    * not re-shingle the corpus.
+    * bucketed tables: one pass over `history` for signatures and one for
+    * the inverted index.
     */
   def build(spark: SparkSession, history: DataFrame, name: String,
       spec: Spec = Spec(), buckets: Int = 16): Unit = {
@@ -106,13 +102,8 @@ object SignatureStore extends BandedStore {
         Dedup.minhashBands(history, spec.k, spec.bands, spec.rows)
           .withColumn("band_key", BandedStore.bandKey),
         bandsTable(name), "band_key", buckets, c.id)
-      val index = Dedup.shingleIndex(history, spec.k, spec.maxDf)
-        .repartition(buckets, col("doc_id")).persist()
-      try {
-        BandedStore.saveBucketed(index, shinglesTable(name), c.id)
-        BandedStore.writeBucketed(index.groupBy("doc_id").agg(count(lit(1)).as("n_sh")),
-          sizesTable(name), "doc_id", buckets, c.id)
-      } finally index.unpersist()
+      BandedStore.writeBucketed(Dedup.shingleIndex(history, spec.k, spec.maxDf),
+        shinglesTable(name), "doc_id", buckets, c.id)
       writeMeta(spark, name, Seq((spec.k, spec.bands, spec.maxDf, buckets, spec.rows))
         .toDF("k", "bands", "max_df", "buckets", "rows"), c.id)
     }
@@ -150,7 +141,7 @@ object SignatureStore extends BandedStore {
 
   /** One full cycle of the daily cadence ([[BandedStore]] has the dup
     * resolution order and the hook contract): flag the batch's
-    * duplicates, APPEND the survivors' bands, shingles and sizes to the
+    * duplicates, APPEND the survivors' bands and shingles to the
     * store (so the next batch dedupes against them — history grows),
     * and return one row per batch doc: (doc_id, is_dup, dup_of).
     *
@@ -254,14 +245,11 @@ object SignatureStore extends BandedStore {
     }
     commitIngest(spark, name, from, buckets, ids, histDup, comp,
         onStage, onFlags, onCommitted, batchTag) { keepIds =>
-      // the keepers' index feeds two appends — pinned once
-      val index = Dedup.indexFromShingles(bsh.join(keepIds, "doc_id"), spec.maxDf)
-        .localCheckpoint(true)
       Seq(
         (bBands.join(keepIds, "doc_id").withColumn("band_key", BandedStore.bandKey),
           bandsTable(name), "band_key"),
-        (index, shinglesTable(name), "doc_id"),
-        (index.groupBy("doc_id").agg(count(lit(1)).as("n_sh")), sizesTable(name), "doc_id"))
+        (Dedup.indexFromShingles(bsh.join(keepIds, "doc_id"), spec.maxDf),
+          shinglesTable(name), "doc_id"))
     }
   }
 
@@ -288,8 +276,13 @@ object SignatureStore extends BandedStore {
   }
 
   /** The store-join core of [[incrementalPairs]] over precomputed batch
-    * signatures and index. `batchIndex` feeds two branches (common +
-    * sizes) — callers pin it.
+    * signatures and index. `batchIndex` feeds two branches (the shingle
+    * match + the batch sizes) — callers pin it.
+    *
+    * Each candidate's stored shingles are LEFT-joined to the batch
+    * index, so one aggregate counts both Jaccard terms from the store
+    * side: every stored shingle of `hist_id` (`n_a`) and the ones the
+    * batch doc shares (`n_common`); a pair sharing none is dropped.
     */
   private def pairsAgainstStore(spark: SparkSession, name: String,
       batchBands: DataFrame, batchIndex: DataFrame,
@@ -304,15 +297,13 @@ object SignatureStore extends BandedStore {
       .agg(count(lit(1)).as("n_b"))
     val histShingles = spark.table(shinglesTable(name))
       .select(col("doc_id").as("hist_id"), col("shingle").as("sh_h"))
-    val common = cand
+    cand
       .join(histShingles, "hist_id")
       .join(batchIndex.select(col("doc_id").as("new_id2"), col("shingle").as("sh_b")),
-        col("new_id") === col("new_id2") && col("sh_h") === col("sh_b"))
+        col("new_id") === col("new_id2") && col("sh_h") === col("sh_b"), "left")
       .groupBy("hist_id", "new_id")
-      .agg(count(lit(1)).as("n_common"))
-    common
-      .join(spark.table(sizesTable(name))
-        .select(col("doc_id").as("hist_id"), col("n_sh").as("n_a")), "hist_id")
+      .agg(count(lit(1)).as("n_a"), count(col("sh_b")).as("n_common"))
+      .filter(col("n_common") > 0)
       .join(batchSizes, "new_id")
       .withColumn("jaccard", col("n_common") / (col("n_a") + col("n_b") - col("n_common")))
       .filter(col("jaccard") >= threshold)

@@ -14,8 +14,8 @@ import graft.dedup.{BandedStore, Dedup, Overlap}
   *
   * Two bucketed managed tables per store (plus a one-row spec table so
   * probes can never drift from the build parameters):
-  *  - `<name>_ebands` (vec_id, band, band_hash, band_key) bucketed by
-  *    `band_key` — the LSH candidate join key;
+  *  - `<name>_ebands` (vec_id, band_key) bucketed by `band_key` — the
+  *    LSH candidate join key;
   *  - `<name>_evecs`  (vec_id, emb array<double>, ns) bucketed by
   *    `vec_id` — the exact decimal-cosine re-verify side (vectors kept
   *    full-precision: LSH proposes, the exact cosine disposes, same
@@ -94,7 +94,7 @@ object EmbeddingStore extends BandedStore {
   protected def metaSchema: String =
     "`planes` INT, `band_bits` INT, `buckets` INT, `dims` INT, `kernel` INT"
   protected def layout: Seq[(String, String, String)] = Seq(
-    ("_ebands", "band_key", "`vec_id` BIGINT, `band` INT, `band_hash` INT, `band_key` STRING"),
+    ("_ebands", "band_key", "`vec_id` BIGINT, `band_key` STRING"),
     ("_evecs", "vec_id", "`vec_id` BIGINT, `emb` ARRAY<DOUBLE>, `ns` DOUBLE"))
 
   /** LSH kernel version the store's bands were hashed with. Stores
@@ -194,14 +194,14 @@ object EmbeddingStore extends BandedStore {
     df.select(col(idCol).cast("long").as("vec_id"),
       transform(col(vecCol), x => x.cast("double")).as("emb"))
 
-  /** Band + band_key signatures of a canonical base. The width is
+  /** (vec_id, band_key) signatures of a canonical base. The width is
     * implicit in each row's array (the kernel derives weights per
     * (planes, dims)); callers still probe dims for the store's own
     * width checks.
     */
   private def bandsOf(base: DataFrame, spec: Spec): DataFrame =
     Similarity.signBitBands(base, spec.planes, spec.bandBits)
-      .withColumn("band_key", BandedStore.bandKey)
+      .select(col("vec_id"), BandedStore.bandKey.as("band_key"))
 
   /** Band-bucket candidates of `bBands` against the store, re-verified
     * with the exact decimal cosine against the stored full-precision
@@ -422,9 +422,8 @@ object EmbeddingStore extends BandedStore {
       commitIngest(spark, name, from, buckets, ids, histDup, comp,
           (_, _) => (), onFlags, onCommitted, batchTag) { keepIds =>
         Seq(
-          (bBands.join(keepIds, "vec_id").select("vec_id", "band", "band_hash", "band_key"),
-            bandsTable(name), "band_key"),
-          (v.join(keepIds, "vec_id").select("vec_id", "emb", "ns"), vecsTable(name), "vec_id"))
+          (bBands.join(keepIds, "vec_id"), bandsTable(name), "band_key"),
+          (v.join(keepIds, "vec_id"), vecsTable(name), "vec_id"))
       }
     }
   }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import graft.functions.StableAgg._
+import graft.dedup.BandedStore
 import graft.sinks.VersionedTable
 import graft.sinks.VersionedTable.Entry
 
@@ -77,21 +78,6 @@ object IvfIndex {
       p.getFileSystem(spark.sparkContext.hadoopConfiguration), p, v))
   }
 
-  /** Write one commit dir with `write` (given the dir, it returns the
-    * sub-dirs it wrote) and publish `keep` plus those as version
-    * `base + 1`. A writer that fails, or loses the publish to a
-    * concurrent one ("concurrent commit"), deletes its commit dir.
-    */
-  private def commit(spark: SparkSession, root: String, base: Int, keep: Seq[Entry])
-      (write: String => Seq[String]): Int = {
-    val rel = s"commits/c-${java.util.UUID.randomUUID()}"
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try VersionedTable.publish(fs, new Path(root), base + 1,
-      keep ++ write(s"$root/$rel").map(Entry(rel, _)))
-    catch { case e: Throwable => fs.delete(new Path(root, rel), true); throw e }
-    base + 1
-  }
-
   /** Build (or rebuild) the index: cell-partitioned corpus with
     * precomputed norms + per-cell mean centroids (decimal-exact means,
     * so the build is deterministic for any partitioning), written as
@@ -118,7 +104,7 @@ object IvfIndex {
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("cval")))),
         s => s.getField("cval")).as("cent"))
       .withColumn("cns", Similarity.normSq(col("cent")))
-    val published = commit(spark, root, base, Nil) { dir =>
+    val published = VersionedTable.commit(spark, new Path(root), base, Nil) { dir =>
       // repartition on the layout key before the partitioned write: writing
       // straight from a W-way shuffle emits one file per (task, cell) — up
       // to W×nlist near-empty files per build (measured 256/version at
@@ -164,7 +150,7 @@ object IvfIndex {
       .withColumn("ns", Similarity.normSq(col("emb")))
       .select("vec_id", "cell", "emb", "ns")
     if (v.isEmpty) return 0
-    commit(spark, root, l.version, l.entries) { dir =>
+    VersionedTable.commit(spark, new Path(root), l.version, l.entries) { dir =>
       // cluster by cell before the partitioned write (the build rule):
       // one file per touched cell, not one per (task, cell)
       v.repartition(col("cell")).write.partitionBy("cell").parquet(s"$dir/vectors")
@@ -280,22 +266,16 @@ object IvfIndex {
   private def buildTrained(corpus: DataFrame, idCol: String, vecCol: String, root: String,
       nlist: Int, iters: Int, sampleMod: Int, onStage: (String, Double) => Unit,
       base: Int): Int = {
-    def staged[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      onStage(label, (System.nanoTime() - t0) / 1e9)
-      r
-    }
-    val cells = staged("train")(train(corpus, idCol, vecCol, nlist, iters, sampleMod)
-      .withColumnRenamed("vec_id", idCol))
+    val cells = BandedStore.staged(onStage, "train")(
+      train(corpus, idCol, vecCol, nlist, iters, sampleMod).withColumnRenamed("vec_id", idCol))
     // build runs two actions (vectors write + centroids write) — cache
     // the assignment so the final full-corpus pass runs once, not twice.
     // The count runs that pass as its own measured phase (train's Lloyd
     // rounds already ran in its pinned collects; its result is lazy).
     cells.persist()
     try {
-      staged("assign")(cells.count())
-      staged("publish")(
+      BandedStore.staged(onStage, "assign")(cells.count())
+      BandedStore.staged(onStage, "publish")(
         build(corpus.join(cells, idCol), idCol, vecCol, "cell", root, base))
     } finally cells.unpersist()
   }

@@ -84,14 +84,37 @@ object VersionedTable {
       }
     }
 
-  private[graft] def publish(fs: FileSystem, root: Path, v: Int, entries: Seq[Entry]): Unit =
+  private def publish(fs: FileSystem, root: Path, v: Int, entries: Seq[Entry]): Unit =
     ManifestLog.publish(fs, root, v, entries.map(e => s"${e.commit}\t${e.relPath}"))
 
-  /** List the live leaf partition directories of a freshly written commit
-    * (depth = number of partition columns; "" when unpartitioned).
+  /** Write one fresh commit dir `commits/c-<uuid>` under `root` with
+    * `write` (given the dir, it returns the partition paths it wrote),
+    * run `onBeforePublish`, and publish `keep` plus those entries as
+    * version `base + 1`, `base` being the version the inputs were read
+    * from. A write or publish that fails — a lost race ("concurrent
+    * commit") included — deletes the commit dir, so only a crash leaves
+    * one no manifest names. Returns the published version.
     */
-  private def listEntries(fs: FileSystem, commitAbs: Path, commitRel: String,
-      depth: Int): Seq[Entry] = {
+  private[graft] def commit(spark: SparkSession, root: Path, base: Int, keep: Seq[Entry],
+      onBeforePublish: () => Unit = () => ())(write: Path => Seq[String]): Int = {
+    val rel = s"commits/c-${java.util.UUID.randomUUID()}"
+    val fs = fsOf(spark, root)
+    try {
+      val entries = keep ++ write(new Path(root, rel)).map(Entry(rel, _))
+      onBeforePublish()
+      publish(fs, root, base + 1, entries)
+    } catch { case e: Throwable => fs.delete(new Path(root, rel), true); throw e }
+    base + 1
+  }
+
+  /** Write `data` as parquet into the fresh commit dir `dir`, partitioned
+    * by `partitionCols`, and list the leaf partition paths written (""
+    * when unpartitioned).
+    */
+  private def writeParquet(fs: FileSystem, dir: Path, data: DataFrame,
+      partitionCols: Seq[String]): Seq[String] = {
+    val w = data.write.mode("errorifexists")
+    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(dir.toString)
     def walk(p: Path, d: Int): Seq[String] =
       if (d == 0) Seq("")
       else fs.listStatus(p).toSeq.filter(_.isDirectory).flatMap { st =>
@@ -99,7 +122,7 @@ object VersionedTable {
           if (tail.isEmpty) st.getPath.getName else s"${st.getPath.getName}/$tail"
         }
       }
-    walk(commitAbs, depth).map(Entry(commitRel, _))
+    walk(dir, partitionCols.size)
   }
 
   private def readEntries(spark: SparkSession, root: Path, entries: Seq[Entry]): DataFrame = {
@@ -157,22 +180,15 @@ object VersionedTable {
       onBeforePublish: () => Unit = () => ()): Unit = {
     val root = new Path(rootDir)
     val fs = fsOf(spark, root)
-    val v = ManifestLog.currentVersion(fs, root)
-    val commitRel = s"commits/c-${java.util.UUID.randomUUID()}"
-    val commitAbs = new Path(root, commitRel)
-    val w = data.write.mode("errorifexists")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(commitAbs.toString)
-    val entries = listEntries(fs, commitAbs, commitRel, partitionCols.size)
-    onBeforePublish()
-    publish(fs, root, v + 1, entries)
+    commit(spark, root, ManifestLog.currentVersion(fs, root), Nil, onBeforePublish)(
+      writeParquet(fs, _, data, partitionCols))
   }
 
   /** MERGE `updates` by `businessKey` — insert-or-replace, partition-
     * scoped, atomically published. `updates` must already be deduped by
-    * key (`MergeWriter.latestPerKey`). `onBeforePublish` is a test seam:
-    * crash-consistency tests throw from it to simulate dying between the
-    * data write and the manifest publish.
+    * key (`MergeWriter.latestPerKey`). `onBeforePublish` is a test seam
+    * between the data write and the manifest publish: a throw from it
+    * fails the merge as a lost publish does, deleting the commit dir.
     *
     * '''Schema evolution''' (`mergeSchema = true`): columns present only
     * in `updates` are ADDED to the table — rewritten partitions carry
@@ -191,20 +207,11 @@ object VersionedTable {
     val root = new Path(rootDir)
     val fs = fsOf(spark, root)
     val v = ManifestLog.currentVersion(fs, root)
-    val commitRel = s"commits/c-${java.util.UUID.randomUUID()}"
-    val commitAbs = new Path(root, commitRel)
-
-    def writeCommit(df: DataFrame): Seq[Entry] = {
-      val w = df.write.mode("errorifexists")
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(commitAbs.toString)
-      listEntries(fs, commitAbs, commitRel, partitionCols.size)
-    }
+    def publishCommit(keep: Seq[Entry], df: DataFrame): Unit =
+      commit(spark, root, v, keep, onBeforePublish)(writeParquet(fs, _, df, partitionCols))
 
     if (v == 0) {
-      val entries = writeCommit(updates)
-      onBeforePublish()
-      publish(fs, root, 1, entries)
+      publishCommit(Nil, updates)
       return
     }
 
@@ -254,9 +261,7 @@ object VersionedTable {
             align(updates, target).select(cols.map(col): _*), Seq(businessKey))
         }
       }
-    val entries = keep ++ writeCommit(merged)
-    onBeforePublish()
-    publish(fs, root, v + 1, entries)
+    publishCommit(keep, merged)
   }
 
   /** Compact small-file partitions — the read-amplification bound of the
@@ -322,27 +327,24 @@ object VersionedTable {
         if (dataFiles.size > nTarget) Some((relPath, dirs, nTarget)) else None
     }
     if (plans.isEmpty) return 0
-    val commitRel = s"commits/c-${java.util.UUID.randomUUID()}"
-    val commitAbs = new Path(root, commitRel)
-    plans.foreach { case (relPath, dirs, nTarget) =>
-      // raw parquet read of the partition's data files: partition values
-      // stay encoded in the dir name only, exactly as written. mergeSchema:
-      // a partition's live dirs may span commits written before and after
-      // a schema evolution — taking one file's schema would silently drop
-      // the evolved columns from the rewrite (data loss)
-      val data = spark.read.option("mergeSchema", "true")
-        .parquet(dirs.map(_.toString): _*)
-      val packed =
-        if (sortCols.isEmpty) data.repartition(nTarget)
-        else data.repartitionByRange(nTarget, sortCols.map(col): _*)
-          .sortWithinPartitions(sortCols.map(col): _*)
-      packed.write.mode("errorifexists")
-        .parquet(sub(commitAbs, relPath).toString)
-    }
     val compacted = plans.map(_._1).toSet
-    val keep = current.filterNot(e => compacted.contains(e.relPath))
-    val entries = keep ++ plans.map(p => Entry(commitRel, p._1))
-    publish(fs, root, v + 1, entries)
+    commit(spark, root, v, current.filterNot(e => compacted.contains(e.relPath))) { dir =>
+      plans.map { case (relPath, dirs, nTarget) =>
+        // raw parquet read of the partition's data files: partition values
+        // stay encoded in the dir name only, exactly as written. mergeSchema:
+        // a partition's live dirs may span commits written before and after
+        // a schema evolution — taking one file's schema would silently drop
+        // the evolved columns from the rewrite (data loss)
+        val data = spark.read.option("mergeSchema", "true")
+          .parquet(dirs.map(_.toString): _*)
+        val packed =
+          if (sortCols.isEmpty) data.repartition(nTarget)
+          else data.repartitionByRange(nTarget, sortCols.map(col): _*)
+            .sortWithinPartitions(sortCols.map(col): _*)
+        packed.write.mode("errorifexists").parquet(sub(dir, relPath).toString)
+        relPath
+      }
+    }
     plans.size
   }
 

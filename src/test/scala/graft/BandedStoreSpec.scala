@@ -54,8 +54,7 @@ class BandedStoreSpec extends SparkSpec {
     private lazy val docs = Tables.documents(spark, sfDir)
     def metaTable = SignatureStore.metaTable(name)
     def tables = Seq(SignatureStore.bandsTable(name) -> "band_key",
-      SignatureStore.shinglesTable(name) -> "doc_id",
-      SignatureStore.sizesTable(name) -> "doc_id")
+      SignatureStore.shinglesTable(name) -> "doc_id")
     def build(buckets: Int): Unit =
       SignatureStore.build(spark, day(docs, "doc_id", 0), name, buckets = buckets)
     def ingest(d: Int, onFlags: DataFrame => Unit): Seq[String] =
@@ -121,7 +120,85 @@ class BandedStoreSpec extends SparkSpec {
         .filter(_.getName.startsWith(s"commit=c-v$base-"))
     }
 
+  /** Rewrite `k`'s store as an engine before the two-column band tables
+    * laid it out: its band rows in one commit whose files also carry
+    * `band` and `band_hash`, and for the text store a `_sizes` table (one
+    * (doc_id, n_sh) row per indexed doc), both named by the manifest.
+    * Returns the dirs of the tables the current layout does not declare.
+    */
+  private def olderLayout(k: Kind, buckets: Int): Seq[Path] = {
+    val (bandT, _) = k.tables.head
+    val id = s"c-v${k.snapshot().version}-older"
+    def declare(t: String, cols: String, key: String): Unit = {
+      val loc = StoreGuard.tableLocation(spark, t)
+      fs.mkdirs(loc)
+      spark.sql(s"DROP TABLE IF EXISTS `$t`")
+      spark.sql(s"CREATE TABLE `$t` ($cols, `commit` STRING) USING parquet " +
+        s"PARTITIONED BY (`commit`) CLUSTERED BY (`$key`) SORTED BY (`$key`) " +
+        s"INTO $buckets BUCKETS LOCATION '$loc'")
+    }
+    val isText = k.store == SignatureStore
+    val hashType = if (isText) "STRING" else "INT"
+    val bands = spark.table(bandT).select(col(k.store.idCol),
+      substring_index(col("band_key"), ":", 1).cast("int").as("band"),
+      substring_index(col("band_key"), ":", -1).cast(hashType).as("band_hash"),
+      col("band_key")).localCheckpoint(true)
+    declare(bandT, s"`${k.store.idCol}` BIGINT, `band` INT, `band_hash` $hashType, " +
+      "`band_key` STRING", "band_key")
+    BandedStore.writeBucketed(bands, bandT, "band_key", buckets, id)
+    assert(spark.read.parquet(k.store.guard(k.name).commitDir(spark, bandT, id).toString)
+      .columns.toSeq == Seq(k.store.idCol, "band", "band_hash", "band_key"))
+    val sizes = Option.when(isText)(k.name + "_sizes")
+    sizes.foreach { t =>
+      val n = spark.table(SignatureStore.shinglesTable(k.name))
+        .groupBy("doc_id").agg(count(lit(1)).as("n_sh")).localCheckpoint(true)
+      declare(t, "`doc_id` BIGINT, `n_sh` BIGINT", "doc_id")
+      BandedStore.writeBucketed(n, t, "doc_id", buckets, id)
+      spark.sql(s"DROP TABLE `$t`")
+    }
+    foreignPublish(k.store, k.name, lines =>
+      lines.filterNot(_.startsWith(s"commit\t$bandT\t")) ++
+        (bandT +: sizes.toSeq).map(t => s"commit\t$t\t$id"))
+    sizes.toSeq.map(StoreGuard.tableLocation(spark, _))
+  }
+
   Seq(text, emb).foreach { k =>
+
+    test(s"${k.label}: a store in the older layout registers, ingests, rolls back and compacts to a fresh store's flags and rows") {
+      // snapshot, ingest, roll back, ingest again, compact, ingest the next day
+      def lifecycle(): Seq[Seq[String]] = {
+        val s0 = k.snapshot()
+        val f1 = k.ingest()
+        k.rollback(s0)
+        val f1again = k.ingest()
+        k.compact()
+        Seq(f1, f1again, k.ingest(2))
+      }
+      def columns: Seq[Seq[String]] = k.tables.map { case (t, _) => spark.table(t).columns.toSeq }
+      var want: (Seq[Seq[String]], Seq[Seq[String]]) = null
+      withStore(k) {
+        assert(columns.head == Seq(k.store.idCol, "band_key", "commit"), columns)
+        assert(k.snapshot().commits.keySet == (k.tables.map(_._1) :+ k.metaTable).toSet)
+        assert(!fs.exists(StoreGuard.tableLocation(spark, k.name + "_sizes")),
+          "a fresh store writes only its layout's tables")
+        want = (lifecycle(), content(k))
+      }
+      withStore(k) {
+        val columns0 = columns
+        val leftover = olderLayout(k, 16)
+        try {
+          freshRegistration(k.store, k.name)
+          assert(columns == columns0, "the catalog declares the current columns")
+          val olderTables = k.snapshot().commits.keySet
+          assert(leftover.forall(d => olderTables(d.getName)), olderTables)
+          assert(lifecycle() == want._1)
+          assert(content(k) == want._2)
+          assert(k.snapshot().commits.keySet == (k.tables.map(_._1) :+ k.metaTable).toSet,
+            "the compaction's publish names only the layout's tables")
+          assert(leftover.forall(fs.exists), "a leftover table dir is ignored, not deleted")
+        } finally leftover.foreach(fs.delete(_, true))
+      }
+    }
 
     test(s"${k.label}: an ingest over a stale registration loses its publish; after a fresh registration it re-runs to the serial flags") {
       withStore(k) {

@@ -416,8 +416,53 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("signature store: a band candidate that shares no surviving shingle is never a pair, even at threshold 0") {
+    import graft.dedup.{BandedStore, SignatureStore}
+    // docs 1, 2 and 4 share a 30-token body with batch doc 3, so every
+    // one of them band-collides with it; the df cap of 1 drops the
+    // body's shingles from the history index. Docs 1 and 2 then keep
+    // only shingles of their own tails, and share none with doc 3, while
+    // doc 4 repeats doc 3's tail
+    val body = (0 until 30).map(i => s"body$i").mkString(" ")
+    def doc(tail: String): String = s"$body ${tail}1 ${tail}2 ${tail}3"
+    val hist = Seq((1L, doc("one")), (2L, doc("two")), (4L, doc("new"))).toDF("doc_id", "text")
+    val batch = Seq((3L, doc("new"))).toDF("doc_id", "text")
+    val name = "graft_sigstore_nocommon_spec"
+    val spec = SignatureStore.Spec(maxDf = 1)
+    SignatureStore.drop(spark, name)
+    SignatureStore.build(spark, hist, name, spec)
+    try {
+      val cands = spark.table(SignatureStore.bandsTable(name))
+        .select(col("band_key"), col("doc_id").as("hist_id"))
+        .join(Dedup.minhashBands(batch, spec.k, spec.bands, spec.rows)
+          .select(BandedStore.bandKey.as("band_key")), "band_key")
+        .select("hist_id").distinct().as[Long].collect().toSet
+      assert(cands == Set(1L, 2L, 4L), s"every history doc must band-collide: $cands")
+      val bIdx = Dedup.shingleIndex(batch, spec.k, spec.maxDf).select("shingle")
+      val shared = spark.table(SignatureStore.shinglesTable(name))
+        .join(bIdx, "shingle").select("doc_id").distinct().as[Long].collect().toSet
+      assert(shared == Set(4L), s"only doc 4 keeps a shingle doc 3 has: $shared")
+      val prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try {
+        val pairs = SignatureStore.incrementalPairs(spark, batch, name, threshold = 0.0)
+        // doc 4's surviving shingles are the 3 tail ones, doc 3 indexes all 31
+        val got = pairs.as[(Long, Long, Double)].collect().toSet
+        assert(got == Set((4L, 3L, 3.0 / 31)), s"$got")
+        // the store side reads the band and shingle tables only, each
+        // through its bucketing
+        val scans = pairs.queryExecution.executedPlan.toString.linesIterator
+          .filter(_.contains("FileScan")).toSeq
+        assert(scans.flatMap(raw"default\.(\w+)\[".r.findFirstMatchIn(_).map(_.group(1))).toSet ==
+          Set(SignatureStore.bandsTable(name), SignatureStore.shinglesTable(name)),
+          scans.mkString("\n"))
+        assert(scans.forall(_.contains("SelectedBucketsCount: 16 out of 16")), scans.mkString("\n"))
+      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
+    } finally SignatureStore.drop(spark, name)
+  }
+
   test("ingest cycle: dup flags vs store and within batch; store grows by survivors") {
-    import graft.dedup.SignatureStore
+    import graft.dedup.{BandedStore, SignatureStore}
     // 24-token docs; a near-dup differs in the final token only →
     // 22 shingles, 19 shared, J = 19/25 = 0.76 (deterministic md5
     // signatures: the band collision either happens or not, fixed at
@@ -481,10 +526,11 @@ class DedupSpec extends SparkSpec {
       val survivors = hist.unionByName(day1.filter(col("doc_id").isin(102L, 104L, 105L)))
         .unionByName(day2.filter(col("doc_id") === 203L))
       val got = spark.table(SignatureStore.bandsTable(name))
-        .select("doc_id", "band", "band_hash")
-        .as[(Long, Int, String)].collect().toSet
+        .select("doc_id", "band_key")
+        .as[(Long, String)].collect().toSet
       val want = Dedup.minhashBands(survivors)
-        .as[(Long, Int, String)].collect().toSet
+        .select(col("doc_id"), BandedStore.bandKey)
+        .as[(Long, String)].collect().toSet
       assert(got == want)
       // appends preserved the bucketed layout: a probe against the
       // grown store still reads through the bucket index
@@ -533,8 +579,9 @@ class DedupSpec extends SparkSpec {
       assert(f1 == Map(11L -> ((true, Some(1L))), 12L -> ((false, None))), s"$f1")
       // the ingest appended the survivor — the store visibly grew
       assert(SignatureStore.snapshot(spark, name).commits != snap.commits)
-      assert(spark.table(SignatureStore.sizesTable(name))
-        .filter(col("doc_id") === 12L).count() == 1)
+      def indexed(id: Long): Long = spark.table(SignatureStore.shinglesTable(name))
+        .filter(col("doc_id") === id).select("doc_id").distinct().count()
+      assert(indexed(12L) == 1)
       SignatureStore.rollback(spark, name, snap)
       // bit-for-bit: exactly the pre-ingest commits, nothing extra
       assert(SignatureStore.snapshot(spark, name).commits == snap.commits)
@@ -542,13 +589,11 @@ class DedupSpec extends SparkSpec {
       // files per table (one per bucket), not one per (task, bucket) —
       // the small-files regression guard; the rolled-back commit's files
       // are gone
-      Seq(SignatureStore.bandsTable(name), SignatureStore.shinglesTable(name),
-        SignatureStore.sizesTable(name)).foreach { t =>
+      SignatureStore.dataTables(name).foreach { t =>
         val parts = StoreGuard.dataFileCount(spark, t)
         assert(parts <= 16, s"$t has $parts data files after build (buckets=16)")
       }
-      assert(spark.table(SignatureStore.sizesTable(name))
-        .filter(col("doc_id") === 12L).count() == 0)
+      assert(indexed(12L) == 0)
       // a second ingest against the restored store flags identically —
       // the d08 bench/Verify idempotence contract
       assert(run() == f1)
@@ -613,8 +658,7 @@ class DedupSpec extends SparkSpec {
       // the files, so move each dir aside across the DROP (the
       // fresh-JVM simulation pattern)
       val conf = spark.sparkContext.hadoopConfiguration
-      Seq(SignatureStore.bandsTable(name), SignatureStore.shinglesTable(name),
-          SignatureStore.sizesTable(name), SignatureStore.metaTable(name)).foreach { t =>
+      (SignatureStore.dataTables(name) :+ SignatureStore.metaTable(name)).foreach { t =>
         val loc = StoreGuard.tableLocation(spark, t)
         val fs = loc.getFileSystem(conf)
         val save = new org.apache.hadoop.fs.Path(loc.getParent, loc.getName + ".xjvm")

@@ -272,7 +272,9 @@ class OpsSpec extends SparkSpec {
         .select("doc_id", "is_dup", "dup_of").as[(Long, Boolean, Option[Long])]
         .collect().map { case (k, v, d) => k -> ((v, d)) }.toMap
       assert(f1 == Map(1L -> ((false, None)), 2L -> ((false, None)), 3L -> ((true, Some(1L)))), f1)
-      assert(spark.table(SignatureStore.sizesTable(store)).count() == 2)
+      def indexedDocs: Long = spark.table(SignatureStore.shinglesTable(store))
+        .select("doc_id").distinct().count()
+      assert(indexedDocs == 2)
       // day 2: a cross-batch dup against day 1's survivor + a fresh doc
       val day2 = Seq((11L, nearDup(2)), (12L, doc(12))).toDF("doc_id", "text")
       val r2 = Orchestrator.corpusIngest(spark, store, day2, None, sink)
@@ -280,7 +282,7 @@ class OpsSpec extends SparkSpec {
       val f2 = VersionedTable.read(spark, root)
       assert(f2.count() == 5)
       assert(f2.filter(col("doc_id") === 11L).select("dup_of").as[Long].head() == 2L)
-      assert(spark.table(SignatureStore.sizesTable(store)).count() == 3)
+      assert(indexedDocs == 3)
       // a batch that crashes at the flag publish must undo BOTH halves:
       // the store snapshot and the flag table are exactly as before
       val preSnap = SignatureStore.snapshot(spark, store)

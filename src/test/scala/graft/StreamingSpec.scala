@@ -293,8 +293,7 @@ class StreamingSpec extends SparkSpec {
       // checkpoint-replay contract: the store's manifest records every
       // committed batch, so a replay SKIPS the ingest entirely — appends
       // nothing, flags byte-identical
-      val tables = Seq(SignatureStore.bandsTable(sName),
-        SignatureStore.shinglesTable(sName), SignatureStore.sizesTable(sName))
+      val tables = SignatureStore.dataTables(sName)
       val b0 = batchIds.head
       assert(batchIds.forall(b => SignatureStore.committed(spark, sName, (flagsRoot, b))),
         "every completed batch must be recorded in the store's manifest")
@@ -313,11 +312,13 @@ class StreamingSpec extends SparkSpec {
       // batch runs again and its survivors land in the new store
       graft.ops.Orchestrator.corpusInit(spark, sName)
       assert(!SignatureStore.committed(spark, sName, (flagsRoot, b0)))
-      assert(spark.table(SignatureStore.sizesTable(sName)).count() == 0)
+      def indexedDocs: Long = spark.table(SignatureStore.shinglesTable(sName))
+        .select("doc_id").distinct().count()
+      assert(indexedDocs == 0)
       CorpusStream.ingestBatch(spark, b0docs, sName, flagsRoot, b0)
       assert(SignatureStore.committed(spark, sName, (flagsRoot, b0)))
       val kept = spark.read.parquet(s"$flagsRoot/batch_id=$b0").filter(!col("is_dup")).count()
-      assert(kept > 0 && spark.table(SignatureStore.sizesTable(sName)).count() == kept)
+      assert(kept > 0 && indexedDocs == kept)
     } finally {
       Seq(sName, bName).foreach(SignatureStore.drop(spark, _))
     }

@@ -62,6 +62,34 @@ class VersionedTableSpec extends SparkSpec {
     assert(healed == Map(1 -> "a2", 2 -> "b"))
   }
 
+  test("a write that fails before or at its publish deletes its commit dir") {
+    import graft.sinks.ManifestLog
+    val root = tmp("graft-vt-failed")
+    val dir = new org.apache.hadoop.fs.Path(root)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def unnamed(): Set[String] = {
+      val named = VersionedTable.readManifest(fs, dir,
+        VersionedTable.version(spark, root)).map(_.commit).toSet
+      new java.io.File(s"$root/commits").listFiles().map(f => s"commits/${f.getName}")
+        .toSet -- named
+    }
+    val v1 = Seq((1, "2024", "a"), (2, "2025", "b")).toDF("k", "fy", "v")
+    VersionedTable.merge(spark, root, v1, "k", Seq("fy"))
+    val e = intercept[RuntimeException](VersionedTable.merge(spark, root,
+      Seq((1, "2024", "x")).toDF("k", "fy", "v"), "k", Seq("fy"),
+      onBeforePublish = () => sys.error("died before publish")))
+    assert(e.getMessage == "died before publish")
+    assert(unnamed().isEmpty, s"a failed merge left ${unnamed()}")
+    // an overwrite that loses its publish to a concurrent writer
+    val lost = intercept[RuntimeException](VersionedTable.overwrite(spark, root, v1,
+      Seq("fy"), onBeforePublish = () => ManifestLog.publish(fs, dir, 2,
+        ManifestLog.read(fs, dir, 1))))
+    assert(lost.getMessage.contains("concurrent commit"), lost.getMessage)
+    assert(unnamed().isEmpty, s"a lost overwrite left ${unnamed()}")
+    assert(VersionedTable.read(spark, root).select("k", "v").as[(Int, String)]
+      .collect().toMap == Map(1 -> "a", 2 -> "b"))
+  }
+
   test("unpartitioned table: full-rewrite merge, still atomic") {
     val root = tmp("graft-vt-flat")
     VersionedTable.merge(spark, root, Seq((1, "a"), (2, "b")).toDF("k", "v"), "k")
