@@ -345,6 +345,27 @@ object Bench {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = add(qe)
       override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = add(qe)
     })
+    // Spark jobs started per job group (`once` runs each query in its
+    // own), for the progress line's per-run job count. Listener events
+    // arrive asynchronously, so `jobsOf` first runs a one-task marker
+    // job and waits for its start event: the bus delivers it after the
+    // start events of every job submitted before it.
+    val jobsByGroup = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => jobsByGroup.merge(g, 1, (a, b) => a + b))
+    })
+    def jobsOf(group: String): Int = {
+      val marker = s"drain-$group"
+      spark.sparkContext.setJobGroup(marker, "listener drain")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.clearJobGroup()
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (!jobsByGroup.containsKey(marker) && System.nanoTime() < deadline) Thread.sleep(5)
+      jobsByGroup.remove(marker)
+      jobsByGroup.getOrDefault(group, 0)
+    }
 
     // noop sink: full evaluation of every output column (count() would
     // let Catalyst prune unreferenced aggregates and understate work).
@@ -449,7 +470,9 @@ object Bench {
       // arrives later, but this sample can. Sampled AFTER each run so
       // the JMX usage window covers exactly the run's execution.
       var loadSeen = 0.0
+      var timedRuns = 0
       def timed(): Either[String, Double] = {
+        timedRuns += 1
         guardLoad() // reset the usage window to the run about to start
         val (r, tickMax) = once(name,
           () => fn(spark, sfDir).write.mode("overwrite").format("noop").save())
@@ -544,6 +567,7 @@ object Bench {
       results(name) = r
       // listener-bus drain grace before reading the advisory metrics
       Thread.sleep(150)
+      val jobsPerRun = jobsOf(s"bench-$name").toDouble / math.max(1, timedRuns)
       val m = metricSums.get()
       def mib(k: String): Long = m.getOrElse(k, 0L) / (1024 * 1024)
       val shown = r.fold(identity[String], t => f"$t%.3fs")
@@ -551,7 +575,7 @@ object Bench {
       System.err.println(
         f"[bench] $name%-28s $shown%-10s runs=[$raws] elapsed=${elapsedSec}%.0fs " +
         f"scan=${mib("filesSize")}MiB shuffle=${mib("shuffleBytesWritten")}MiB " +
-        f"spill=${mib("spillSize")}MiB actions=${actionCount.get()} " +
+        f"spill=${mib("spillSize")}MiB actions=${actionCount.get()} jobs=$jobsPerRun%.1f " +
         f"ext=$loadSeen%.1f") // max external+steal cores seen — post-mortem aid
     }
 

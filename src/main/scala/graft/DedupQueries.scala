@@ -468,7 +468,7 @@ object DedupQueries {
         JOIN h_sh a ON a.doc_id = c.hist_id
         JOIN b_sh b ON b.doc_id = c.new_id AND b.shingle = a.shingle
         GROUP BY 1, 2),
-      histdup AS (
+      histdup AS MATERIALIZED (
         SELECT new_id AS doc_id, MIN(hist_id) AS hist_dup_of
         FROM xcommon
         JOIN h_sizes sa ON sa.doc_id = hist_id

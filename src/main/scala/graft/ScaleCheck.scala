@@ -122,6 +122,9 @@ object ScaleCheck {
     *    ~half the chain length (~150 at sf0.1 base): the adversarial
     *    topology for iterative components, where rounds would track
     *    diameter without [[dedup.Dedup.clusters]]'s pointer jumping.
+    *    Up to 100K pairs `clusters` takes its driver union-find path
+    *    instead (9,340 pairs at sf0.1, 93,330 at ×10), so the
+    *    `_dist` row forces propagation over the same pairs.
     */
   private def clusteredCorpus(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir).select("doc_id")
@@ -180,14 +183,27 @@ object ScaleCheck {
       prepare = Some((s, dir) => { DedupQueries.dedupStore(s, dir); () })),
 
     // d06's engine (LSH pairs -> components) over the controlled
-    // cluster-structure corpus: measures per-round shuffle ~ |edges| and
-    // the pointer-jumped round count on BOTH the clique-heavy realistic
-    // case and the long-chain adversarial one in a single run
+    // cluster-structure corpus: the clique-heavy realistic case and the
+    // long-chain adversarial one in a single run. Under the driver bound
+    // of `clusters`, so its union-find path at base and ×10
     "d06x_cluster_scale" -> QueryDef(
       "d06x_cluster_scale",
       (s, dir) => {
         val docs = clusteredCorpus(s, dir)
         dedup.Dedup.clusters(dedup.Dedup.minhashLshPairs(docs), docs)
+      },
+      None),
+
+    // the same graph on the distributed path (label propagation with
+    // pointer jumping): per-round shuffle ~ |edges| and the round count
+    // against the chain's diameter, printed to stderr
+    "d06x_cluster_scale_dist" -> QueryDef(
+      "d06x_cluster_scale_dist",
+      (s, dir) => {
+        val docs = clusteredCorpus(s, dir)
+        dedup.Dedup.clustersBounded(dedup.Dedup.minhashLshPairs(docs), docs,
+          driverPairs = -1L,
+          onRounds = r => System.err.println(s"[d06x_dist] rounds $r"))
       },
       None),
 

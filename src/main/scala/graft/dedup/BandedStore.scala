@@ -249,21 +249,20 @@ trait BandedStore {
     * `batchTag` as the version after `base`, the one the ingest's store
     * joins read, and call `onCommitted`. `onStage` times "flags" and
     * "appends".
+    *
+    * `histDup` and `comp` partition the batch: every item is either a
+    * history dup or a survivor with one component row. So the flags are
+    * their union, and no join back to the batch ids is needed.
     */
   protected def commitIngest(spark: SparkSession, name: String, base: Int, buckets: Int,
-      ids: DataFrame, histDup: DataFrame, comp: DataFrame,
+      histDup: DataFrame, comp: DataFrame,
       onStage: (String, Double) => Unit, onFlags: DataFrame => Unit,
       onCommitted: () => Unit, batchTag: Option[(String, Long)])
       (keepers: DataFrame => Seq[(DataFrame, String, String)]): DataFrame = {
     val flags = BandedStore.staged(onStage, "flags") {
-      ids
-        .join(histDup, Seq(idCol), "left")
-        .join(comp.select(col("doc_id").as(idCol), col("cluster"), col("is_rep")),
-          Seq(idCol), "left")
-        .select(col(idCol),
-          (col("hist_dup_of").isNotNull || col("is_rep") === false).as("is_dup"),
-          coalesce(col("hist_dup_of"),
-            when(col("is_rep") === false, col("cluster"))).as("dup_of"))
+      histDup.select(col(idCol), lit(true).as("is_dup"), col("hist_dup_of").as("dup_of"))
+        .unionByName(comp.select(col("doc_id").as(idCol), (!col("is_rep")).as("is_dup"),
+          when(!col("is_rep"), col("cluster")).as("dup_of")))
         .localCheckpoint(true) // returned to the caller — must not pin the cache manager
     }
     onFlags(flags) // before any append

@@ -18,9 +18,10 @@ import graft.text.TextFunctions._
   */
 object Dedup {
 
-  /** Unique suffix for per-round convergence observations in
-    * [[clusters]] — observation names are matched per query execution,
-    * and a reused name across concurrent queries could cross-wire.
+  /** Unique suffix for the edge-count and per-round convergence
+    * observations in [[clusters]] — observation names are matched per
+    * query execution, and a reused name across concurrent queries could
+    * cross-wire.
     */
   private val ccObsId = new java.util.concurrent.atomic.AtomicLong(0L)
 
@@ -217,13 +218,109 @@ object Dedup {
       .select("doc_a", "doc_b", "jaccard")
   }
 
-  /** Resolve a near-dup pair set into duplicate clusters: connected
-    * components by min-label propagation, so a corpus can actually be
-    * deduplicated (keep one representative per component) rather than
-    * just enumerate pairs. Returns one row per document in `docs`:
-    * (id, cluster, is_rep) where `cluster` is the smallest doc id in the
-    * component (the id itself for singletons) and `is_rep` marks the
-    * surviving representative.
+  /** Pairs [[clusters]] resolves on the driver at most: 100K. A fixed
+    * driver-memory bound, like Spark's broadcast threshold: it does not
+    * depend on the corpus, and it is no larger than the biggest graph
+    * measured on both paths (see [[clusters]]). The text store's ingest
+    * broadcasts its history-dup table, also two longs a row, under the
+    * same bound.
+    */
+  private[dedup] val DriverPairs = 100000L
+
+  /** Resolve a near-dup pair set into duplicate clusters (connected
+    * components), so a corpus can actually be deduplicated (keep one
+    * representative per component) rather than just enumerate pairs.
+    * Returns one row per document in `docs`: (id, cluster, is_rep)
+    * where `cluster` is the smallest doc id in the component (the id
+    * itself for singletons) and `is_rep` marks the surviving
+    * representative.
+    *
+    * The algorithm is picked from the size the graph actually has. One
+    * job checkpoints the pair list as (src, dst) longs and observes its
+    * count; both paths read that checkpoint.
+    *
+    *  - '''Driver path''' (at most [[DriverPairs]] pairs): the pairs are
+    *    collected and union-find (min-id root, path halving) labels them
+    *    on the driver; the label table of every non-root vertex is
+    *    broadcast-joined to `docs`. A day-batch's survivor pair list is
+    *    a few dozen edges (dup ratio ~0.04), and the distributed path
+    *    spent most of the store ingest's survivor stage on job launches
+    *    for it. Driver heap at 100K random pairs (measured, one JVM,
+    *    2 cores): the collected rows hold 11 MB (~110 B a pair), the
+    *    sorted ids 1 MB, and the label table ~45 B a label as tuples
+    *    plus ~190 B as the local relation: about 60 MB at the bound
+    *    with its at most 200K labels. The labeling took 1.1-2.5 s there.
+    *    On ScaleCheck's `d06x_cluster_scale` at ×10 (93,330 pairs, a
+    *    150-diameter chain among 5-cliques) the whole query took 7.7 s
+    *    on this path and 13.6 s on the distributed one (9 rounds).
+    *  - '''Distributed path''' (above the bound): min-label propagation
+    *    with pointer jumping over the checkpointed pairs
+    *    ([[propagateLabels]]), rounds O(log diameter).
+    *
+    * Both paths give the same labels (DedupSpec's property spec pins
+    * it on random graphs).
+    *
+    * @param onRounds accounting hook: called once with the number of
+    *   label-propagation rounds the labeling took (0 on the driver
+    *   path) — the observable the O(log diameter) claim is spec-pinned
+    *   on (DedupSpec drives a diameter-1000 chain and asserts the count
+    *   stays logarithmic).
+    */
+  def clusters(pairs: DataFrame, docs: DataFrame, idCol: String = "doc_id",
+      aCol: String = "doc_a", bCol: String = "doc_b",
+      maxRounds: Int = 50, onRounds: Int => Unit = _ => ()): DataFrame =
+    clustersBounded(pairs, docs, DriverPairs, idCol, aCol, bCol, maxRounds, onRounds)
+
+  /** [[clusters]] with the driver path's pair bound as a parameter: a
+    * negative `driverPairs` always takes the distributed path.
+    */
+  private[graft] def clustersBounded(pairs: DataFrame, docs: DataFrame, driverPairs: Long,
+      idCol: String = "doc_id", aCol: String = "doc_a", bCol: String = "doc_b",
+      maxRounds: Int = 50, onRounds: Int => Unit = _ => ()): DataFrame = {
+    val obs = org.apache.spark.sql.Observation(s"graft_cc_${ccObsId.incrementAndGet()}")
+    val edges = pairs
+      .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
+      .observe(obs, count(lit(1)).as("n"))
+      .localCheckpoint(true) // the count picks the path; both read these edges
+    val n = Overlap.observedRow(obs, edges.agg(count(lit(1))).head()).getLong(0)
+    val labels =
+      if (n <= driverPairs) { onRounds(0); driverLabels(edges) }
+      else propagateLabels(edges, maxRounds, onRounds)
+    docs.select(col(idCol).cast("long").as(idCol))
+      .join(labels.withColumnRenamed("id", idCol), Seq(idCol), "left")
+      .select(col(idCol),
+        coalesce(col("lbl"), col(idCol)).as("cluster"))
+      .withColumn("is_rep", col("cluster") === col(idCol))
+  }
+
+  /** Union-find over a small (src, dst) edge list, on the driver: the
+    * broadcast (id, lbl) table of every vertex whose component min `lbl`
+    * is not itself. Vertices are indexed in id order, so the min-index
+    * root every union keeps is the component's min id; repeated,
+    * reversed and self edges change nothing.
+    */
+  private def driverLabels(edges: DataFrame): DataFrame = {
+    val rows = edges.collect()
+    val ids = rows.flatMap(r => Array(r.getLong(0), r.getLong(1))).distinct.sorted
+    val parent = Array.range(0, ids.length)
+    def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    def index(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
+    rows.foreach { r =>
+      val (a, b) = (find(index(r.getLong(0))), find(index(r.getLong(1))))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    val labels = ids.indices.collect { case i if find(i) != i => (ids(i), ids(find(i))) }
+    broadcast(edges.sparkSession.createDataFrame(labels).toDF("id", "lbl"))
+  }
+
+  /** The distributed path of [[clusters]]: min-label propagation over
+    * the checkpointed (src, dst) `pairs`, returning the (id, lbl) table
+    * of every vertex in them. The edges are the symmetric view of that
+    * checkpoint, so no second copy of the graph is materialized.
     *
     * Scale shape: each round is one shuffle-join of the symmetric edge
     * list against the label table keyed on vertex id plus a min
@@ -257,26 +354,19 @@ object Dedup {
     * cluster a reliable `checkpoint()` (HDFS dir) trades executor-loss
     * tolerance for the same truncation. Convergence is `require`d,
     * never silently partial.
-    *
-    * @param onRounds accounting hook: called once with the number of
-    *   label-propagation rounds the labeling took — the observable the
-    *   O(log diameter) claim is spec-pinned on (DedupSpec drives a
-    *   diameter-1000 chain and asserts the count stays logarithmic).
     */
-  def clusters(pairs: DataFrame, docs: DataFrame, idCol: String = "doc_id",
-      aCol: String = "doc_a", bCol: String = "doc_b",
-      maxRounds: Int = 50, onRounds: Int => Unit = _ => ()): DataFrame = {
-    val edges = pairs
-      .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-      .unionByName(pairs.select(col(bCol).cast("long").as("src"), col(aCol).cast("long").as("dst")))
-      .distinct()
-      .persist()
+  private def propagateLabels(pairs: DataFrame, maxRounds: Int,
+      onRounds: Int => Unit): DataFrame = {
+    // the symmetric view of the checkpointed pairs: each round reads the
+    // checkpoint twice, and no second copy of the edges is held.
+    // Repeated edges are kept; they only repeat join rows, which the
+    // map-side min collapses
+    val edges = pairs.unionByName(pairs.select(col("dst").as("src"), col("src").as("dst")))
     // the INITIAL label table stays LAZY (r20): the fused first job's
     // checkpoint below is the first lineage truncation, and the initial
     // table's consumers inside that plan re-derive it from the
-    // PERSISTED edge list — one cheap recomputation instead of a whole
-    // separate checkpoint job, in a code path whose cost is job-launch
-    // latency (d08/s06 run this per 500-doc batch).
+    // checkpointed pairs — one cheap recomputation instead of a whole
+    // separate checkpoint job
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("lbl", col("id"))
     // one plain hop over the current labels. The convergence check
@@ -356,12 +446,7 @@ object Dedup {
     }
     require(converged, s"component labeling did not converge in $maxRounds rounds")
     onRounds(round)
-    edges.unpersist()
-    docs.select(col(idCol).cast("long").as(idCol))
-      .join(labels.withColumnRenamed("id", idCol), Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("lbl"), col(idCol)).as("cluster"))
-      .withColumn("is_rep", col("cluster") === col(idCol))
+    labels
   }
 
   /** 64-bit SimHash per document (token-multiset majority vote per bit,

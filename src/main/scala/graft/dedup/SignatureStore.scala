@@ -224,26 +224,31 @@ object SignatureStore extends BandedStore {
           .agg(min(col("hist_id")).as("hist_dup_of"))
           .localCheckpoint(true)
       } catch { case t: Throwable => Overlap.drain(auditRow); throw t }
-    staged("bucket audit (await)") {
+    val nBatchDocs = staged("bucket audit (await)") {
       val row = auditRow()
       onAudit(IngestAudit(row.getLong(2), spec.bands,
         row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1)))
+      row.getLong(2)
     }
-    val survIds = ids.join(histDup, Seq("doc_id"), "left_anti")
+    // histDup holds at most one row per batch doc, so the batch count
+    // bounds its broadcast (4 fewer jobs per ingest in a traced run)
+    val survIds = ids.join(
+      if (nBatchDocs <= Dedup.DriverPairs) broadcast(histDup) else histDup,
+      Seq("doc_id"), "left_anti")
     val ssh = bsh.join(survIds, "doc_id")
     val comp = staged("survivor LSH + components") {
-      // r19 probe note: eagerly pinning the survivor index (consumed 3×
-      // inside lshPairsFrom) was measured break-even-to-worse here
-      // (2.95 s vs 2.67 s stage time) — the index subtree is identical
-      // across its consumers, so ReuseExchange already shares its
-      // shuffles and the blocking checkpoint only adds a
-      // materialization. Left un-pinned deliberately.
+      // one job computes and checkpoints the survivor pairs; a
+      // day-batch's few dozen pairs then resolve on the driver
+      // (Dedup.clusters). The survivor index (consumed 3× inside
+      // lshPairsFrom) stays un-pinned: its subtree is identical across
+      // its consumers, so ReuseExchange already shares its shuffles,
+      // and pinning it measured break-even-to-worse (2.95 s vs 2.67 s).
       Dedup.clusters(
         Dedup.lshPairsFrom(bBands.join(survIds, "doc_id"),
           Dedup.indexFromShingles(ssh, spec.maxDf), threshold),
         survIds)
     }
-    commitIngest(spark, name, from, buckets, ids, histDup, comp,
+    commitIngest(spark, name, from, buckets, histDup, comp,
         onStage, onFlags, onCommitted, batchTag) { keepIds =>
       Seq(
         (bBands.join(keepIds, "doc_id").withColumn("band_key", BandedStore.bandKey),

@@ -408,7 +408,9 @@ object EmbeddingStore extends BandedStore {
         .agg(min(col("other_id")).as("hist_dup_of"))
         .localCheckpoint(true)
 
-      // 2. within the batch, among history-survivors only
+      // 2. within the batch, among history-survivors only; their
+      // components resolve on the driver while their edge list is small
+      // (Dedup.clusters)
       val survIds = ids.join(histDup, Seq("vec_id"), "left_anti")
       val sBands = bBandsOk.join(survIds, "vec_id")
       val selfCand = sBands.select(col("band_key"), col("vec_id").as("new_id"))
@@ -419,7 +421,7 @@ object EmbeddingStore extends BandedStore {
         .select(col("new_id").as("doc_a"), col("other_id").as("doc_b"))
       val comp = Dedup.clusters(selfPairs, survIds.select(col("vec_id").as("doc_id")))
 
-      commitIngest(spark, name, from, buckets, ids, histDup, comp,
+      commitIngest(spark, name, from, buckets, histDup, comp,
           (_, _) => (), onFlags, onCommitted, batchTag) { keepIds =>
         Seq(
           (bBands.join(keepIds, "vec_id"), bandsTable(name), "band_key"),

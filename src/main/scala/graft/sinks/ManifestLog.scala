@@ -38,12 +38,29 @@ private[graft] object ManifestLog {
   /** Publish `lines` as version `version` — the single atomic step. The
     * temp file is complete and flushed before the rename; rename onto a
     * fresh versioned name either fully succeeds or fully fails.
+    *
+    * Every writer publishes the version it read + 1, so versions appear
+    * in order, and a version newer than `version - 1` means the read is
+    * stale. That is checked right before the rename, because a vacuum
+    * may have deleted the manifest `version` names: without the check a
+    * stale writer would publish into the freed number, below the newest,
+    * and report a success no reader sees. A newer version published
+    * after the check needs `version` itself first, so the rename fails
+    * then — unless, between the listing and the rename, `version` and
+    * enough versions after it to push it out of a vacuum's window are
+    * published and that vacuum runs. The check narrows the race to that
+    * window; it does not make the listing and the rename one step.
     */
   def publish(fs: FileSystem, dir: Path, version: Int, lines: Seq[String]): Unit = {
     val tmp = new Path(dir, s"tmp-manifest-${java.util.UUID.randomUUID()}")
     val out = fs.create(tmp, false)
     try out.write(lines.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
+    val newest = currentVersion(fs, dir)
+    if (newest >= version) {
+      fs.delete(tmp, false)
+      sys.error(s"concurrent commit: version $newest already published at $dir")
+    }
     val target = path(dir, version)
     if (!fs.rename(tmp, target)) {
       fs.delete(tmp, false)

@@ -353,7 +353,9 @@ object VersionedTable {
     * partition dirs inside live commits. A reader pinned (`readAt`) to
     * any retained version survives; versions older than the window lose
     * their manifests AND any data only they referenced — the retention
-    * discipline of any table format's VACUUM.
+    * discipline of any table format's VACUUM. A writer that read a
+    * version since vacuumed cannot publish into its freed number:
+    * [[ManifestLog.publish]] refuses any version at or below the newest.
     *
     * This is also the manifest "checkpoint": each manifest is a COMPLETE
     * snapshot (one line per live (commit, partition) — never a delta

@@ -251,7 +251,7 @@ class DedupSpec extends SparkSpec {
     val pairs = (Seq((1L, 2L), (2L, 3L), (10L, 11L)) ++
       (20L until 31L).map(i => (i, i + 1))).toDF("doc_a", "doc_b")
     val docs = (Seq(1L, 2L, 3L, 10L, 11L, 40L) ++ (20L to 31L)).toDF("doc_id")
-    val out = Dedup.clusters(pairs, docs).collect()
+    val out = Dedup.clustersBounded(pairs, docs, driverPairs = -1L).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
     assert(out.size == 18)
     Seq(1L, 2L, 3L).foreach(i => assert(out(i) == ((1L, i == 1L))))
@@ -267,7 +267,7 @@ class DedupSpec extends SparkSpec {
     // adversarial topology for any iterative components algorithm.
     val pairs = (1000L until 1199L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val docs = (1000L to 1199L).toDF("doc_id")
-    val out = Dedup.clusters(pairs, docs).collect()
+    val out = Dedup.clustersBounded(pairs, docs, driverPairs = -1L).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
     assert(out.size == 200)
     (1000L to 1199L).foreach(i =>
@@ -284,12 +284,62 @@ class DedupSpec extends SparkSpec {
     val pairs = (0L until 1000L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val docs = (0L to 1000L).toDF("doc_id")
     var rounds = -1
-    val out = Dedup.clusters(pairs, docs, onRounds = rounds = _).collect()
+    val out = Dedup.clustersBounded(pairs, docs, driverPairs = -1L,
+        onRounds = rounds = _).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
     assert(out.size == 1001)
     (0L to 1000L).foreach(i => assert(out(i) == ((0L, i == 0L)), s"node $i"))
     assert(rounds >= 1 && rounds <= 15,
       s"diameter-1000 chain took $rounds rounds — the jump's O(log d) claim broke")
+  }
+
+  test("clusters: the driver and distributed paths give identical labels on random graphs") {
+    // each graph: sparse random ids, random edges among some of them
+    // (so some docs are in no pair), every tenth edge repeated, every
+    // seventh also given reversed and every thirteenth a self edge on
+    // its first end; plus the empty pair set
+    def graph(seed: Int): (Seq[(Long, Long)], Seq[Long]) = {
+      val rnd = new scala.util.Random(seed)
+      val docs = rnd.shuffle((0L until 400L).toList).take(60 + rnd.nextInt(60))
+      val linked = docs.take(docs.size * 2 / 3).toIndexedSeq
+      val edges = Seq.fill(rnd.nextInt(linked.size))(
+        (linked(rnd.nextInt(linked.size)), linked(rnd.nextInt(linked.size))))
+        .filter { case (a, b) => a != b }
+      val extra = edges.zipWithIndex.collect {
+        case (e, i) if i % 10 == 0 => e
+        case ((a, b), i) if i % 7 == 0 => (b, a)
+        case ((a, _), i) if i % 13 == 0 => (a, a)
+      }
+      (rnd.shuffle(edges ++ extra), docs)
+    }
+    // the min-id component of every doc, by a plain flood fill
+    def expected(edges: Seq[(Long, Long)], docs: Seq[Long]): Seq[(Long, Long, Boolean)] = {
+      val adj = (edges ++ edges.map(_.swap)).groupMap(_._1)(_._2)
+      docs.map { d =>
+        var seen = Set(d); var frontier = Set(d)
+        while (frontier.nonEmpty) {
+          frontier = frontier.flatMap(adj.getOrElse(_, Nil)) -- seen
+          seen ++= frontier
+        }
+        (d, seen.min, seen.min == d)
+      }.sorted
+    }
+    ((1 to 4).map(graph) :+ ((Seq.empty[(Long, Long)], Seq(5L, 3L)))).foreach {
+      case (edges, docs) =>
+        val pairs = edges.toDF("doc_a", "doc_b")
+        val d = docs.toDF("doc_id")
+        def run(bound: Long) = {
+          var rounds = -1
+          val out = Dedup.clustersBounded(pairs, d, bound, onRounds = rounds = _).collect()
+            .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq.sorted
+          (out, rounds)
+        }
+        val (onDriver, driverRounds) = run(Long.MaxValue)
+        val (distributed, rounds) = run(-1L)
+        assert(driverRounds == 0 && rounds >= 2, (driverRounds, rounds))
+        assert(onDriver == expected(edges, docs), edges)
+        assert(distributed == onDriver, edges)
+    }
   }
 
   test("clusters are consistent with the pair set on the real corpus") {

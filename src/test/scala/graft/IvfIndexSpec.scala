@@ -278,6 +278,34 @@ class IvfIndexSpec extends SparkSpec {
     assert(commitDirs(root).size == 2, commitDirs(root))
   }
 
+  test("race: an append that read a version since vacuumed fails; " +
+      "the newest version stays served") {
+    import graft.sinks.VersionedTable
+    val root = java.nio.file.Files.createTempDirectory("graft-ivf-vac").toString + "/idx"
+    IvfIndex.build(tiny(8), "vec_id", "embedding", "cell", root)
+    val batch = tiny(4, from = 100L).drop("cell")
+    // while the append of `batch` writes what it read from v1, three
+    // other appends publish v2..v4 and a vacuum keeps v3 and v4: v1 and
+    // v2 are deleted, and the append's publish into the freed number 2
+    // is refused because v4 is newer
+    val racing = Seq(200L, 210L, 220L)
+    val e = intercept[RuntimeException](withRacingWrite(
+        _.outputPath.toString.contains(root), s"index $root") {
+        racing.foreach(from =>
+          IvfIndex.append(tiny(2, from).drop("cell"), "vec_id", "embedding", root))
+        VersionedTable.vacuum(spark, root, retainVersions = 2)
+      }(IvfIndex.append(batch, "vec_id", "embedding", root)))
+    assert(e.getMessage.contains("concurrent commit"), e.getMessage)
+    assert(IvfIndex.live(spark, root).version == 4)
+    val served = IvfIndex.topK(spark, root, tiny(8).drop("cell"), "vec_id", "embedding",
+      k = 20, probes = 2).select("n_id").as[Long].collect().toSet
+    assert(racing.flatMap(f => Seq(f, f + 1)).forall(served.contains), served)
+    assert(!served.exists(id => id >= 100L && id < 104L), served)
+    intercept[IllegalArgumentException](VersionedTable.readAt(spark, root, 2))
+    // the loser deleted its commit: the build's and the three appends' remain
+    assert(commitDirs(root).size == 4, commitDirs(root))
+  }
+
   test("retention: after a retrain the previous version and all its files stay " +
       "readable; older versions are gone") {
     import graft.sinks.VersionedTable

@@ -55,19 +55,28 @@ trait SparkSpec extends AnyFunSuite {
     * flight; the writes `race` makes itself pass.
     */
   def withRacing[A](store: graft.dedup.BandedStore, name: String)(race: => Unit)(f: => A): A = {
+    val tables = store.dataTables(name).map(_.toLowerCase).toSet
+    withRacingWrite(_.catalogTable.exists(t => tables(t.identifier.table.toLowerCase)),
+      s"store '$name'")(race)(f)
+  }
+
+  /** [[withRacing]] for any file write: `race` runs as soon as `f` plans
+    * its first write `into` accepts, described as `what`.
+    */
+  def withRacingWrite[A](
+      into: org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand => Boolean,
+      what: String)(race: => Unit)(f: => A): A = {
     import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
     import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
-    val tables = store.dataTables(name).map(_.toLowerCase).toSet
     val racer = new java.util.concurrent.atomic.AtomicReference[Thread](null)
     val raced = new java.util.concurrent.CountDownLatch(1)
     val rule = new org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
       def apply(plan: LogicalPlan): LogicalPlan = {
-        val intoStore = plan.exists {
-          case w: InsertIntoHadoopFsRelationCommand =>
-            w.catalogTable.exists(t => tables(t.identifier.table.toLowerCase))
+        val intoTarget = plan.exists {
+          case w: InsertIntoHadoopFsRelationCommand => into(w)
           case _ => false
         }
-        if (intoStore) {
+        if (intoTarget) {
           if (racer.compareAndSet(null, Thread.currentThread)) try race finally raced.countDown()
           else if (racer.get ne Thread.currentThread) raced.await()
         }
@@ -79,7 +88,7 @@ trait SparkSpec extends AnyFunSuite {
     ex.extraOptimizations = before :+ rule
     try {
       val r = f
-      assert(racer.get != null, s"f wrote nothing into store '$name'")
+      assert(racer.get != null, s"f wrote nothing into $what")
       r
     } finally ex.extraOptimizations = before
   }
