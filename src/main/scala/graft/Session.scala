@@ -18,15 +18,15 @@ object Session {
     * (ScaleCheck): shuffles start 16× wide and AQE coalesces them down to
     * byte-sized partitions. At production scale a core-count-pinned
     * shuffle holds GBs per partition and sort-spills. At CLI scale AQE
-    * coalesces most shuffles straight back down, but not all of them, so
-    * the width is not free:
-    *  - an exchange that repartitions by number
-    *    (`Tables.fanOut`/`fanOutBy`, the csv fixture in `SourceQueries`)
-    *    asks for `numShufflePartitions`, which is `initialPartitionNum`
-    *    under this posture, and runs 16×cpus tasks;
-    *  - a cached frame keeps the width it was planned with, because the
-    *    cache plans without AQE's final-stage coalescing (each later
-    *    write of it runs, and writes files from, that many tasks).
+    * coalesces most shuffles straight back down, but not all of them:
+    * a cached frame keeps the width it was planned with, because the
+    * cache plans without AQE's final-stage coalescing (each later write
+    * of it runs, and writes files from, that many tasks), so
+    * `Orchestrator.source` coalesces its frame to the cores. An exchange
+    * that repartitions by number is never coalesced by AQE either, so
+    * those (`Tables.fanOut`/`fanOutBy`, the csv fixture in
+    * `SourceQueries`) ask for `defaultNumShufflePartitions`, the cores,
+    * under both postures.
     * The advisory target stays at Spark's default: it should track the
     * deployment's per-task memory (ScaleCheck sets its own measured
     * local target).

@@ -95,10 +95,11 @@ object SourceQueries {
       // fan-out (r19): the fixture is written by a serial plan into few
       // csv part files, so the mapping layer (multi-format date parse per
       // row) otherwise runs 1-2 cores wide. The fixture is this query's
-      // pinned input at every scale, so an unconditional conf-sized
-      // repartition is the honest shape (pure projection downstream).
+      // pinned input at every scale, so an unconditional cores-wide
+      // repartition is the honest shape (pure projection downstream);
+      // cores wide under every posture, as `Tables.fanOut`.
       val raw = Connectors.csv(s, tmp)
-        .repartition(s.sessionState.conf.numShufflePartitions)
+        .repartition(s.sessionState.conf.defaultNumShufflePartitions)
       val spec = PipelineSpec(
         name = "csv_load",
         fields = Seq(

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Table loader over the driver-provided star schema
   * (`/root/testdata/sf*` — see TESTDATA.md). All engine queries read
@@ -14,8 +16,54 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    readParquet(spark, layoutKey(spark, path))(_.parquet(path))
+  }
+
+  // ---- parquet reads without a schema-inference job ----
+
+  private val schemaCache = scala.collection.concurrent.TrieMap.empty[String, StructType]
+
+  /** A parquet read that names no schema runs a one-task Spark job to
+    * infer it (`mergeSchemasInParallel`, over one footer). `read` is
+    * given a reader that carries the schema an earlier read under `key`
+    * inferred, partition columns included, so only the first read per
+    * key runs that job and every read gets the types Spark would infer.
+    * `key` must name the exact files read: [[layoutKey]] for a path that
+    * can be rewritten, the partition dirs read for an immutable commit.
+    * The session's parquet confs (e.g. `nanosAsLong`) are part of the
+    * key. The cache is dropped whole at 4096 entries.
+    */
+  private[graft] def readParquet(spark: SparkSession, key: String)(
+      read: DataFrameReader => DataFrame): DataFrame = {
+    val confs = spark.conf.getAll.collect { case (k, v) if k.contains("parquet") => s"$k=$v" }
+    val k = (key +: confs.toSeq.sorted).mkString("|")
+    schemaCache.get(k) match {
+      case Some(schema) => read(spark.read.schema(schema))
+      case None =>
+        val df = read(spark.read)
+        if (schemaCache.size >= 4096) schemaCache.clear()
+        schemaCache.put(k, df.schema)
+        df
+    }
+  }
+
+  /** `path` with the status (name, size, mtime) of its root and of every
+    * top-level entry: a rewrite in place names new part files or changes
+    * a partition dir's mtime, so the key changes with the files even
+    * inside one mtime tick of the root. A path that cannot be listed
+    * keys on a fresh value, so nothing about it is cached.
+    */
+  private[graft] def layoutKey(spark: SparkSession, path: String): String =
+    try {
+      val root = new Path(path)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val st = fs.getFileStatus(root)
+      val entries = if (st.isFile) Array(st) else st +: fs.listStatus(root)
+      entries.map(e => s"${e.getPath.getName}:${e.getLen}:${e.getModificationTime}")
+        .mkString(s"$path@", ",", "")
+    } catch { case _: java.io.IOException => s"$path@${java.util.UUID.randomUUID()}" }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "orders")
@@ -146,7 +194,7 @@ object Tables {
     * `sf0.1` table is one file with one row group; q11's 49-function
     * partial aggregate measured 8.3 s serial vs 1.6 s fanned at 32
     * cores). Counted from the parquet footers — metadata only, cached
-    * per (path, root mtime), one open per file; a layout with at least
+    * per layout, one open per file; a layout with at least
     * as many data files as the session has cores is healthy without
     * opening any footer, so at production scale this never reads a
     * footer at all. A directory with NO top-level data files (e.g. a
@@ -157,7 +205,7 @@ object Tables {
     * inject a permanent full-table repartition at production scale.
     * Probe failures also report healthy, and are NOT cached (a probe
     * that ran before the file existed must not pin a stale verdict);
-    * the mtime cache key re-probes a rewritten layout.
+    * the [[layoutKey]] cache key re-probes a rewritten layout.
     */
   private[graft] def effectiveScanParallelism(spark: SparkSession, path: String): Int =
     try {
@@ -166,8 +214,8 @@ object Tables {
       val conf = spark.sparkContext.hadoopConfiguration
       val root = new org.apache.hadoop.fs.Path(path)
       val fs = root.getFileSystem(conf)
-      val rootStatus = fs.getFileStatus(root)
-      scanParCache.getOrElseUpdate(s"$path@${rootStatus.getModificationTime}", {
+      scanParCache.getOrElseUpdate(layoutKey(spark, path), {
+        val rootStatus = fs.getFileStatus(root)
         val files =
           if (rootStatus.isFile) Array(root)
           else fs.listStatus(root).map(_.getPath)
@@ -187,21 +235,25 @@ object Tables {
       spark.sparkContext.defaultParallelism
 
   /** Round-robin fan-out of a frame read from `dir/table` to the
-    * session's shuffle parallelism — applied ONLY when the source's
-    * row-group layout caps the scan below the session's cores
+    * session's cores — applied ONLY when the source's row-group layout
+    * caps the scan below the session's cores
     * ([[effectiveScanParallelism]]); the identity on healthy layouts,
     * so at production scale no extra exchange ever appears. For
     * operators whose downstream is order-insensitive (aggregates over
     * exact decimal sums / counts / min-max, set-semantics joins,
     * explode→aggregate chains): a keyless repartition redistributes and
-    * reorders rows, which such consumers cannot observe. The partition
-    * count comes from the session conf (scale-adaptive), never a
-    * constant.
+    * reorders rows, which such consumers cannot observe.
+    *
+    * The width is `spark.sql.shuffle.partitions`
+    * (`defaultNumShufflePartitions`), never AQE's initial width: AQE
+    * does not coalesce a repartition by number, so under the Deploy
+    * posture `numShufflePartitions` would run 16×cpus tasks over an
+    * input that fits fewer row groups than cores.
     */
   def fanOut(spark: SparkSession, dir: String, table: String,
       df: DataFrame): DataFrame =
     if (underParallel(spark, dir, table))
-      df.repartition(spark.sessionState.conf.numShufflePartitions)
+      df.repartition(spark.sessionState.conf.defaultNumShufflePartitions)
     else df
 
   /** Keyed fan-out: like [[fanOut]] but hash-repartitions on `keys` so a
@@ -215,6 +267,6 @@ object Tables {
   def fanOutBy(spark: SparkSession, dir: String, table: String,
       df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame =
     if (underParallel(spark, dir, table))
-      df.repartition(spark.sessionState.conf.numShufflePartitions, keys: _*)
+      df.repartition(spark.sessionState.conf.defaultNumShufflePartitions, keys: _*)
     else df
 }

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import graft.cube.FiscalCalendar
+import graft.cube.{DateWindow, FiscalCalendar}
 import graft.etl.{Pipeline, SpecLoader}
 import graft.sinks.VersionedTable
 
@@ -18,9 +18,10 @@ import graft.sinks.VersionedTable
   *
   * `--length 1wk|2wk` maps to the reference's MyView IDs (81 = 7 days,
   * 82 = 14 days, `modules/mdx_queries.py:14-18`): a rolling window
-  * anchored at the fact's max date (broadcast one-row anchor, q04's
-  * shape). `--fy/--fp` map to the 13-4 calendar for offers/sales_channel
-  * and the Calendar hierarchy otherwise (`olap_sync.py:263-283`).
+  * anchored at the fact's max date, collected to the driver as a
+  * literal (see [[window]]). `--fy/--fp` map to the 13-4 calendar for
+  * offers/sales_channel and the Calendar hierarchy otherwise
+  * (`olap_sync.py:263-283`).
   */
 object Orchestrator {
 
@@ -79,48 +80,66 @@ object Orchestrator {
     case Full => "(full_bi_data: no slicer)"
   }
 
-  /** Apply the slice BELOW the aggregate: rolling windows anchor on the
-    * fact's max date via a broadcast one-row cross join (no collect, the
-    * q04 shape); fiscal slices filter on the calendar expressions, which
-    * prune partitions when the fact is calendar-partitioned.
+  /** The fact a pipeline aggregates and the column its slice reads. */
+  private def factOf(pipeline: String): (String, String) =
+    if (pipeline == "clock_in_out") ("events", "ts") else ("lineitem", "l_shipdate")
+
+  /** The dates `slice` keeps of `pipeline`'s fact, as a literal window.
+    * A rolling window ends at the fact's latest date (the MyView
+    * anchor), one `max` aggregate of the fact collected to the driver
+    * (one row). A fact with no dates keeps nothing. Fiscal slices
+    * filter on the calendar expressions, which prune partitions when the
+    * fact is calendar-partitioned.
     */
-  def applySlice(df: DataFrame, dateCol: Column, pipeline: String, slice: Slice): DataFrame =
+  def window(spark: SparkSession, sfDir: String, pipeline: String, slice: Slice): DateWindow =
     slice match {
-      case Full => df
+      case Full => DateWindow.All
       case Rolling(days) =>
-        val anchor = df.agg(max(to_date(dateCol)).as("__graft_anchor"))
-        df.crossJoin(broadcast(anchor))
-          .filter(datediff(col("__graft_anchor"), to_date(dateCol)) < days)
-          .drop("__graft_anchor")
+        val (table, c) = factOf(pipeline)
+        val fact = if (table == "events") graft.Tables.events(spark, sfDir)
+          else graft.Tables(spark, sfDir, table)
+        val anchor = Option(fact.agg(unix_date(max(to_date(col(c))))).head().get(0))
+          .map(d => java.time.LocalDate.ofEpochDay(d.asInstanceOf[Int].toLong))
+        anchor.fold[DateWindow](DateWindow.Calendar(_ => lit(false))) { a =>
+          DateWindow.Days(a.minusDays(days - 1L), a,
+            java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone))
+        }
       case Fiscal(y, p) =>
-        val d = to_date(dateCol)
-        val base =
-          if (thirteenFour(pipeline)) df.filter(FiscalCalendar.fiscalYearAnchored(d) === y)
-          else df.filter(FiscalCalendar.fiscalYear(d) === y)
-        p.fold(base)(fp => base.filter(FiscalCalendar.fiscalPeriodAnchored(d) === fp))
+        val fy: Column => Column =
+          if (thirteenFour(pipeline)) FiscalCalendar.fiscalYearAnchored
+          else FiscalCalendar.fiscalYear
+        DateWindow.Calendar(d =>
+          p.fold(fy(d) === y)(fp => fy(d) === y && FiscalCalendar.fiscalPeriodAnchored(d) === fp))
     }
+
+  /** Keep the rows of `df` whose `dateCol` falls in `w`: the slice,
+    * applied BELOW the aggregate.
+    */
+  def applySlice(df: DataFrame, dateCol: String, w: DateWindow): DataFrame =
+    df.filter(w.keep(col(dateCol), df.schema(dateCol).dataType))
 
   /** The pipeline's source aggregation with the slice pushed below it,
     * compiled through its shipped mapping YAML. daily_sales binds the
     * 47 oracle-verified q11 measures positionally to the mapping's 47
     * captions (the real cube measures aren't derivable from TPC-H — the
     * aggregate set is the engine's, the mapping surface the reference's).
+    * sales_channel slices only its TY side: its LY side reads the rows
+    * one retail year (364 days) before the window.
     *
     * `onPersist` receives each intermediate frame the plan persists
-    * (sales_channel's TY aggregate). A caller must unpersist them once
+    * (sales_channel's TY/LY aggregate). A caller must unpersist them once
     * done, or the next sync in the same session reads them by plan match
     * and publishes the old fact's numbers.
     */
   def source(spark: SparkSession, sfDir: String, pipeline: String, slice: Slice,
       onPersist: DataFrame => Unit = _ => ()): DataFrame = {
     import graft.{CubeQueries, PipelineQueries, Tables}
-    val pre: DataFrame => DataFrame = df =>
-      applySlice(df, if (pipeline == "clock_in_out") col("ts") else col("l_shipdate"),
-        pipeline, slice)
     val spec = SpecLoader.fromResource(pipeline)
+    val w = window(spark, sfDir, pipeline, slice)
+    val pre: DataFrame => DataFrame = applySlice(_, factOf(pipeline)._2, w)
     val agg = pipeline match {
       case "sales_channel" =>
-        PipelineQueries.salesChannelAgg(spark, sfDir, pre, onPersist = onPersist)
+        PipelineQueries.salesChannelAgg(spark, sfDir, window = w, onPersist = onPersist)
       case "offers" => PipelineQueries.offersAgg(spark, sfDir, pre)
       case "inventory" => PipelineQueries.inventoryAgg(spark, sfDir, pre)
       case "clock_in_out" => PipelineQueries.clockInOutAgg(spark, sfDir, pre)

@@ -1,5 +1,6 @@
 package graft.similarity
 
+import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -120,6 +121,12 @@ object IvfIndex {
     published
   }
 
+  /** `df` collected to the driver and re-planned from a literal: for
+    * the control-plane-small centroid tables (nlist × dims rows).
+    */
+  private def pinned(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(df.collect().toSeq.asJava, df.schema)
+
   /** Incremental append — the O(batch)/day growth path that makes the
     * index a store, not a snapshot: batch vectors are assigned to the
     * PUBLISHED (frozen) centroids — classic IVF ingest; centroids drift
@@ -140,8 +147,18 @@ object IvfIndex {
   def append(batch: DataFrame, idCol: String, vecCol: String, root: String): Int = {
     val spark = batch.sparkSession
     val l = live(spark, root)
-    val centEx = spark.read.parquet(l.centroids)
-      .select(col("cell"), posexplode(col("cent")).as(Seq("pos", "cval")))
+    // the centroids of the version read, on the driver (nlist × dims)
+    // before the write. A vacuum after later publishes may delete that
+    // version before or during this read: that is a lost race, reported
+    // as the publish would report it, not as a missing file
+    val cent =
+      try pinned(spark.read.parquet(l.centroids))
+      catch {
+        case e: Exception if live(spark, root).version != l.version =>
+          throw new RuntimeException(
+            s"concurrent commit: a later publish pruned version ${l.version} of index $root", e)
+      }
+    val centEx = cent.select(col("cell"), posexplode(col("cent")).as(Seq("pos", "cval")))
     val ex = batch.select(col(idCol).as("vec_id"),
         posexplode(col(vecCol)).as(Seq("pos", "val0")))
       .withColumn("val", col("val0").cast("double")).drop("val0")
@@ -193,9 +210,6 @@ object IvfIndex {
     // training DAG re-executes exponentially in `iters` (measured 13 s vs
     // 4 s at sf0.1 for iters=2). Values are exact decimals/doubles, so
     // materializing changes nothing but the plan.
-    import scala.jdk.CollectionConverters._
-    def pinned(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.collect().toSeq.asJava, df.schema)
     val ex = corpus.select(col(idCol).as("vec_id"),
         posexplode(col(vecCol)).as(Seq("pos", "val0")))
       .withColumn("val", col("val0").cast("double")).drop("val0")

@@ -125,12 +125,20 @@ object VersionedTable {
     walk(dir, partitionCols.size)
   }
 
+  /** Read the live `entries`, one parquet read per commit. Commit dirs
+    * are immutable once written, so a read of the same partitions of a
+    * commit infers the same schema, partition types included: it is
+    * inferred once per process ([[graft.Tables.readParquet]]).
+    */
   private def readEntries(spark: SparkSession, root: Path, entries: Seq[Entry]): DataFrame = {
     val perCommit = entries.groupBy(_.commit).toSeq.sortBy(_._1).map { case (commit, es) =>
       val base = new Path(root, commit)
-      if (es.exists(_.relPath.isEmpty)) spark.read.parquet(base.toString)
-      else spark.read.option("basePath", base.toString)
-        .parquet(es.map(e => new Path(base, e.relPath).toString): _*)
+      val rels = es.map(_.relPath).distinct.sorted
+      graft.Tables.readParquet(spark, rels.mkString(s"$base:", ",", "")) { r =>
+        if (rels.contains("")) r.parquet(base.toString)
+        else r.option("basePath", base.toString)
+          .parquet(rels.map(new Path(base, _).toString): _*)
+      }
     }
     // allowMissingColumns: after a schema-evolving merge (mergeSchema),
     // untouched partitions still carry the old column set — the evolved
@@ -271,11 +279,11 @@ object VersionedTable {
     * of the read-back target rows and the updates, so a partition gains
     * up to one file per task of that union per rewrite: the read-back's
     * file splits plus the updates' partitions. The Orchestrator's syncs
-    * coalesce their frame to `spark.sql.shuffle.partitions`; an
-    * uncoalesced cached frame keeps its last exchange's width,
-    * `initialPartitionNum` (16×cpus) under the Deploy posture. Either
-    * way a daily-sync or streaming-micro-batch table gathers hundreds of
-    * small files per hot partition over time, and every reader pays a
+    * coalesce their frame to `spark.sql.shuffle.partitions`, so each
+    * merge adds a few files per touched partition, not the 16×cpus an
+    * uncoalesced cached frame would under the Deploy posture. Even so a
+    * daily-sync or streaming-micro-batch table gathers hundreds of
+    * small files per hot partition over a year, and every reader pays a
     * file-open + footer-parse per file. `compact` rewrites each
     * partition whose live file count exceeds its bin-packed target
     * (`ceil(bytes / targetFileBytes)`, min 1) into a fresh commit and

@@ -306,6 +306,60 @@ class IvfIndexSpec extends SparkSpec {
     assert(commitDirs(root).size == 4, commitDirs(root))
   }
 
+  test("race: an append whose version's centroids a build's vacuum deleted fails " +
+      "with a concurrent commit, not a missing file") {
+    val root = java.nio.file.Files.createTempDirectory("graft-ivf-cent").toString + "/idx"
+    IvfIndex.build(tiny(8), "vec_id", "embedding", "cell", root)
+    val batch = tiny(4, from = 100L).drop("cell")
+    // while the append writes what it read from v1, three builds publish
+    // v2..v4 and each vacuums to the newest two versions: v1's centroids
+    // are gone before the append's write would read them
+    val e = intercept[RuntimeException](withRacingWrite(
+        _.outputPath.toString.contains(root), s"index $root") {
+        (1 to 3).foreach(_ => IvfIndex.build(tiny(8), "vec_id", "embedding", "cell", root))
+      }(IvfIndex.append(batch, "vec_id", "embedding", root)))
+    assert(e.getMessage.contains("concurrent commit"), e.getMessage)
+    assert(IvfIndex.live(spark, root).version == 4)
+    val served = IvfIndex.topK(spark, root, tiny(8).drop("cell"), "vec_id", "embedding",
+      k = 20, probes = 2).select("n_id").as[Long].collect().toSet
+    assert(!served.exists(_ >= 100L), served)
+  }
+
+  test("race: an append whose version's centroids a build's vacuum deleted while the " +
+      "append read them fails with a concurrent commit, not a missing file") {
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val root = java.nio.file.Files.createTempDirectory("graft-ivf-cread").toString + "/idx"
+    IvfIndex.build(tiny(8), "vec_id", "embedding", "cell", root)
+    val v1 = IvfIndex.live(spark, root).centroids
+    // the append has listed v1's centroid files; as their read is planned,
+    // three builds publish v2..v4 and vacuum v1 away
+    val raced = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val rule = new org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = {
+        val readsV1 = plan.exists {
+          case l: LogicalRelation => l.relation match {
+            case r: HadoopFsRelation =>
+              r.location.rootPaths.exists(_.toString.endsWith(v1.stripPrefix("file:")))
+            case _ => false
+          }
+          case _ => false
+        }
+        if (readsV1 && raced.compareAndSet(false, true))
+          (1 to 3).foreach(_ => IvfIndex.build(tiny(8), "vec_id", "embedding", "cell", root))
+        plan
+      }
+    }
+    val before = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = before :+ rule
+    val e = try intercept[RuntimeException](
+        IvfIndex.append(tiny(4, from = 100L).drop("cell"), "vec_id", "embedding", root))
+      finally spark.experimental.extraOptimizations = before
+    assert(raced.get, "the append never read v1's centroids")
+    assert(e.getMessage.contains("concurrent commit"), e.getMessage)
+    assert(IvfIndex.live(spark, root).version == 4)
+  }
+
   test("retention: after a retrain the previous version and all its files stay " +
       "readable; older versions are gone") {
     import graft.sinks.VersionedTable

@@ -236,7 +236,7 @@ class TablesSpec extends SparkSpec {
     assert(Tables.effectiveScanParallelism(spark, s"$sfDir/lineitem.parquet") == 1)
     val fanned = Tables.fanOut(spark, sfDir, "lineitem", Tables.lineitem(spark, sfDir))
     assert(fanned.rdd.getNumPartitions ==
-      spark.sessionState.conf.numShufflePartitions)
+      spark.sessionState.conf.defaultNumShufflePartitions)
     // ...and the KEYED form must satisfy a downstream aggregate's
     // clustering so the plan holds exactly ONE exchange (the fan
     // itself, below the scan) — the property every fanOutBy call site
@@ -259,6 +259,36 @@ class TablesSpec extends SparkSpec {
       assert(Tables.fanOut(spark, dir, "fat", df) eq df)
       assert(Tables.fanOutBy(spark, dir, "fat", df, col("id")) eq df)
       assert(Tables.effectiveScanParallelism(spark, s"$dir/fat.parquet") >= 8)
+    }
+  }
+
+  test("scan-layout fan-out: cores wide under the Deploy shuffle width") {
+    // AQE never coalesces a repartition by number, so a fan sized to
+    // the initial width would run 16 tasks per core
+    val n = spark.sessionState.conf.defaultNumShufflePartitions
+    val prev = spark.conf.getOption(Session.InitialPartitionNum)
+    spark.conf.set(Session.InitialPartitionNum, (16 * n).toString)
+    try {
+      assert(spark.sessionState.conf.numShufflePartitions == 16 * n)
+      val li = Tables.lineitem(spark, sfDir)
+      assert(Tables.fanOut(spark, sfDir, "lineitem", li).rdd.getNumPartitions == n)
+      assert(Tables.fanOutBy(spark, sfDir, "lineitem", li, col("l_suppkey"))
+        .rdd.getNumPartitions == n)
+    } finally prev match {
+      case Some(v) => spark.conf.set(Session.InitialPartitionNum, v)
+      case None => spark.conf.unset(Session.InitialPartitionNum)
+    }
+  }
+
+  test("a parquet dir rewritten in place with an added column reads back with the new schema") {
+    withTmp { dir =>
+      spark.range(3).write.parquet(s"$dir/t.parquet")
+      assert(Tables(spark, dir, "t").columns.toSeq == Seq("id"))
+      spark.range(3).withColumn("extra", col("id") * 2)
+        .write.mode("overwrite").parquet(s"$dir/t.parquet")
+      val again = Tables(spark, dir, "t")
+      assert(again.columns.toSeq == Seq("id", "extra"))
+      assert(again.agg(sum("extra")).head().getLong(0) == 6L)
     }
   }
 
